@@ -149,9 +149,7 @@ final class Engine(
       val cands = Templates.candidates(slice, fks, analysis, question, valueDomains, fullSlice)
       val ranked = Ranker.rank(cands, slice.tables.keySet)
       ranked.view.map { case (c, _) =>
-        Validator.validate(spark, c.sql, tables.toSet)
-          .flatMap(v => Executor.run(spark, v, limit))
-          .map(res => res.copy(lineage = lineageOf(c.sql)))
+        Validator.validate(spark, c.sql, tables.toSet).flatMap(answer(_, limit, Executor.DefaultTimeoutMs))
       }.collectFirst { case Right(res) => Right(res) }
         .getOrElse(ask(question, limit))
     } catch {
@@ -159,20 +157,27 @@ final class Engine(
     }
   }
 
+  /** Guarded execution of an admitted statement, enriched with its
+    * plan-derived explanation and per-column lineage. Both read plans
+    * already built: the validated parse and the executed frame's
+    * analyzed plan. */
+  private def answer(v: Validator.Validated, limit: Int,
+      timeoutMs: Long): Either[EngineError, QueryResult] =
+    Executor.execute(spark, v, limit, timeoutMs).map { case (df, r) =>
+      r.copy(explanation = Explainer.explain(v.plan), lineage = lineageOf(df))
+    }
+
   /** Per-column provenance for the answer envelope — guarded: lineage
     * is an enrichment, never a reason to fail an answered question
     * (always-answer, V13). */
-  private def lineageOf(sql: String): Seq[(String, Seq[String])] =
-    try graft.explain.Lineage.of(spark, sql).map(c => (c.column, c.sources))
+  private def lineageOf(df: org.apache.spark.sql.DataFrame): Seq[(String, Seq[String])] =
+    try graft.explain.Lineage.of(df).map(c => (c.column, c.sources))
     catch { case scala.util.control.NonFatal(_) => Nil }
 
   /** Direct SQL execution with the full safety chain (ref main.py:298-331). */
   def run(sql: String, limit: Int = Executor.DefaultLimit,
       timeoutMs: Long = Executor.DefaultTimeoutMs): Either[EngineError, QueryResult] =
-    Validator.validate(spark, sql, tables.toSet)
-      .flatMap(v => Executor.run(spark, v, limit, timeoutMs))
-      .map(r => r.copy(explanation = Validator.parse(spark, sql).toOption
-        .map(Explainer.explain).getOrElse(""), lineage = lineageOf(sql)))
+    Validator.validate(spark, sql, tables.toSet).flatMap(answer(_, limit, timeoutMs))
 
   /** Column-level lineage of an ADMITTED statement: the Validator's
     * full safety chain runs first (denylist / table allow-list), then
@@ -321,10 +326,8 @@ final class Engine(
     var lastErr: EngineError = SqlSafetyError("No candidate validated")
     for ((c, _) <- ranked) {
       Validator.validate(spark, c.sql, tables.toSet, needsAgg, wantsDistinct)
-        .flatMap(v => Executor.run(spark, v, limit, timeoutMs)) match {
-        case Right(r) =>
-          return Right(r.copy(explanation = Validator.parse(spark, c.sql).toOption
-            .map(Explainer.explain).getOrElse(""), lineage = lineageOf(c.sql)))
+        .flatMap(answer(_, limit, timeoutMs)) match {
+        case r @ Right(_) => return r
         case Left(err) => lastErr = err
       }
     }

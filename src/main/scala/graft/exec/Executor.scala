@@ -3,6 +3,8 @@ package graft.exec
 import java.util.concurrent.{Executors, TimeUnit, TimeoutException => JTimeoutException}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.internal.SQLConf
 import graft.core._
 import graft.safety.Validator
 import graft.safety.Validator.Validated
@@ -17,6 +19,13 @@ import graft.safety.Validator.Validated
  * hard ceiling `maxRows` 500 — ref README.md:113-118). The cost gate reads
  * optimizer statistics off the already-built plan — no extra cluster
  * round-trip (unlike the reference's separate EXPLAIN connection).
+ * A query whose estimated input (the summed leaf `sizeInBytes` of that
+ * same optimized plan, subquery plans included) is below
+ * [[InterpretedMaxInputBytes]] runs interpreted: whole-stage codegen off
+ * and interpreted expression factories, for that one execution only.
+ * Compiling a query's generated classes with Janino costs more than it
+ * saves when the query reads a few thousand rows, and a fresh question
+ * compiles all of its own. Larger inputs keep the compiled path.
  */
 object Executor {
 
@@ -26,6 +35,23 @@ object Executor {
   val MaxRows = 500
   val DefaultTimeoutMs = 5000L
   val ExplainGateRows = 100000L
+
+  /** Inputs below this many estimated bytes run interpreted. Set from a
+    * sweep over the 21 pilot questions on sf0.1 parquet (customer
+    * 316 KB, orders 2.7 MB, lineitem 10.8 MB), median of ten steady-state
+    * asks on a 4-core VM: at 1 MiB the 21 took 2142 ms together against
+    * 2641 ms with every query compiled, and no question's median rose by
+    * more than 5 ms; at 16 MiB the `orders` questions
+    * (150k rows) ran slower than at 1 MiB (pilot/14 116 → 166 ms,
+    * pilot/17 130 → 208 ms) and the `lineitem` one tripled (pilot/5
+    * 166 → 502 ms), as per-row interpretation overtook the compile time
+    * it saves. */
+  val InterpretedMaxInputBytes: Long = 1L << 20
+
+  /** The per-execution settings of the interpreted path. */
+  private val InterpretedConf = Seq(
+    SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false",
+    SQLConf.CODEGEN_FACTORY_MODE.key -> "NO_CODEGEN")
 
   /** Build the capped DataFrame for validated SQL: execute the validated
     * text and inject `limit(n)` when the plan had no top-level LIMIT —
@@ -55,16 +81,34 @@ object Executor {
     else Right(())
   }
 
+  /** Estimated input of a plan: the summed `sizeInBytes` of its leaves,
+    * the leaves of every subquery plan included. */
+  private[exec] def inputBytes(plan: LogicalPlan): BigInt =
+    (plan +: plan.subqueriesAll).flatMap(_.collectLeaves()).map(_.stats.sizeInBytes).sum
+
   /** Timed collect with job-group cancellation — the Spark analogue of
-    * `SET LOCAL statement_timeout` (V10, ref nl2sql.py:332-342). */
+    * `SET LOCAL statement_timeout` (V10, ref nl2sql.py:332-342). A small
+    * input ([[InterpretedMaxInputBytes]]) is collected interpreted. The
+    * settings live only on the single-use worker thread: a clone of the
+    * session conf for the driver-side planning, and local properties the
+    * thread's jobs hand to their tasks. The session conf is never written,
+    * since a set/restore on it would race with concurrent work. */
   def collectWithTimeout(spark: SparkSession, df: DataFrame, timeoutMs: Long): Either[EngineError, Array[Row]] = {
     val group = s"graft-exec-${System.nanoTime()}"
     val pool = Executors.newSingleThreadExecutor()
     try {
       val fut = pool.submit(new java.util.concurrent.Callable[Array[Row]] {
         override def call(): Array[Row] = {
-          spark.sparkContext.setJobGroup(group, "graft timed execution", interruptOnCancel = true)
-          try df.collect() finally spark.sparkContext.clearJobGroup()
+          val sc = spark.sparkContext
+          sc.setJobGroup(group, "graft timed execution", interruptOnCancel = true)
+          try {
+            if (inputBytes(df.queryExecution.optimizedPlan) >= InterpretedMaxInputBytes) df.collect()
+            else {
+              val conf = df.sparkSession.sessionState.conf.clone()
+              InterpretedConf.foreach { case (k, v) => conf.setConfString(k, v); sc.setLocalProperty(k, v) }
+              SQLConf.withExistingConf(conf)(df.collect())
+            }
+          } finally sc.clearJobGroup()
         }
       })
       try Right(fut.get(timeoutMs, TimeUnit.MILLISECONDS))
@@ -116,6 +160,15 @@ object Executor {
       v: Validated,
       limit: Int = DefaultLimit,
       timeoutMs: Long = DefaultTimeoutMs): Either[EngineError, QueryResult] =
+    execute(spark, v, limit, timeoutMs).map(_._2)
+
+  /** [[run]], also handing back the executed frame, so a caller reads its
+    * analyzed plan instead of parsing and analysing the SQL again. */
+  private[graft] def execute(
+      spark: SparkSession,
+      v: Validated,
+      limit: Int,
+      timeoutMs: Long): Either[EngineError, (DataFrame, QueryResult)] =
     // Planning itself can throw (analysis errors, ANSI cast failures
     // surfacing through constant folding in the cost gate's optimized
     // plan) — the always-answer contract (V13) requires an error
@@ -144,12 +197,12 @@ object Executor {
                .toLeft(())
         _ <- costGate(df)
         rows <- collectWithTimeout(spark, df, timeoutMs)
-      } yield QueryResult(
+      } yield (df, QueryResult(
         sql = v.sql,
         columns = df.columns.toSeq,
         rows = rows.toSeq.map(_.toSeq.map(jsonSafe)),
         rowcount = rows.length,
-        explain = df.queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode))
+        explain = df.queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)))
     } catch {
       case scala.util.control.NonFatal(e) =>
         Left(ExecutionError(Option(e.getMessage).getOrElse(e.getClass.getName).take(1000)))

@@ -159,16 +159,15 @@ object Graphs {
     // reproducible (integer depths, no float accumulation). The
     // distributed loop below remains the at-scale path (force-scaled in
     // ProbeReachScale; pass smallGraphThreshold = 0 to pin it).
-    if (e.count() <= smallGraphThreshold) {
-      // the fast path collects SOURCES too, so it must also be bounded
-      // on the source count (r18 ADVICE: a tiny edge list paired with a
-      // huge sources frame would otherwise collect unbounded) — an
-      // oversized source set falls through to the distributed loop
-      val src = sources.select(col(nodeCol).as("node")).distinct()
-        .localCheckpoint()
-      if (src.count() <= smallGraphThreshold)
-        return reachabilityLocal(e, src, maxDepth)
-    }
+    // The fast path collects SOURCES too, so it must also be bounded on
+    // the source count (r18 ADVICE: a tiny edge list paired with a huge
+    // sources frame would otherwise collect unbounded) — an oversized
+    // source set falls through to the distributed loop, which starts
+    // from the same checkpointed sources.
+    lazy val src = sources.select(col(nodeCol).as("node")).distinct()
+      .localCheckpoint()
+    if (e.count() <= smallGraphThreshold && src.count() <= smallGraphThreshold)
+      return reachabilityLocal(e, src, maxDepth)
     // visited is the LAZY union of checkpointed per-level frames:
     // only each level's NEW nodes are ever materialized, so the total
     // write cost is O(|reached|), not O(levels × |visited|) — the
@@ -176,9 +175,7 @@ object Graphs {
     // re-checkpointing the accumulated set every level. The anti-join
     // still reads the full union per level (that read is what keeps
     // levels disjoint).
-    val levels = scala.collection.mutable.ListBuffer(
-      sources.select(col(nodeCol).as("node")).distinct()
-        .withColumn("depth", lit(0)).localCheckpoint())
+    val levels = scala.collection.mutable.ListBuffer(src.withColumn("depth", lit(0)))
     var frontier = levels.head
     var d = 0
     while (d < maxDepth && !frontier.isEmpty) {

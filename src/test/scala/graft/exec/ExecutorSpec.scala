@@ -1,13 +1,21 @@
 package graft.exec
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import graft.SparkSpec
 import graft.core.PlanTooLargeError
+import graft.eval.SchoolFixture
 import graft.safety.Validator
 import graft.sources.Sources
 
-class ExecutorSpec extends SparkSpec {
+class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   lazy val tables: Set[String] = Sources.register(spark, sfDir).toSet
+  lazy val school: Set[String] = SchoolFixture.register(spark).toSet
+
+  private def compiledStages(df: org.apache.spark.sql.DataFrame): Int =
+    collect(df.queryExecution.executedPlan) { case w: WholeStageCodegenExec => w }.size
 
   test("unbounded select gets LIMIT injected (cap 100)") {
     val r = Executor.runSql(spark, "SELECT l_orderkey FROM lineitem", tables)
@@ -92,8 +100,17 @@ class ExecutorSpec extends SparkSpec {
     // set/restore window would race with concurrent work on a shared
     // session (round-16 self-review)
     spark.conf.unset("spark.graft.readOnly")
+    // nor does the interpreted path leak its settings into the session
+    // conf or the calling thread's local properties
+    val confBefore = spark.conf.getAll
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode",
+      "spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    def props = keys.map(spark.sparkContext.getLocalProperty)
+    val propsBefore = props
     assert(Executor.runSql(spark, "SELECT n_name FROM nation LIMIT 3", tables).isRight)
     assert(spark.conf.get("spark.graft.readOnly", "unset") == "unset")
+    assert(spark.conf.getAll == confBefore)
+    assert(props == propsBefore)
     // a caller-pinned value is untouched either way
     spark.conf.set("spark.graft.readOnly", "true")
     try {
@@ -126,5 +143,70 @@ class ExecutorSpec extends SparkSpec {
     val df = spark.sql(v.sql)
     val r = Executor.collectWithTimeout(spark, df, timeoutMs = 900)
     assert(r.isLeft)
+  }
+
+  /** Template shapes on the school fixture: small inputs, so each runs
+    * interpreted, and each must return what the compiled path returns. */
+  test("a small query runs interpreted and returns the compiled path's rows") {
+    val shapes = Seq(
+      "SELECT student_name, age FROM students WHERE age > 15 ORDER BY student_id LIMIT 10",
+      "SELECT grade, COUNT(*) AS n, AVG(score) AS avg_score FROM scores GROUP BY grade HAVING COUNT(*) > 10",
+      "SELECT student_id, course_id, score, LAG(score) OVER (PARTITION BY student_id ORDER BY course_id) AS prev " +
+        "FROM scores WHERE student_id <= 5",
+      "SELECT * FROM (SELECT course_id, student_id, score, ROW_NUMBER() OVER " +
+        "(PARTITION BY course_id ORDER BY score DESC, student_id) AS rn FROM scores) t WHERE rn <= 3",
+      "WITH per_course AS (SELECT course_id, AVG(score) AS avg_score FROM scores GROUP BY course_id) " +
+        "SELECT c.course_name, p.avg_score FROM per_course p JOIN courses c ON c.course_id = p.course_id",
+      "SELECT student_id, score FROM scores WHERE course_id = 3 AND score > (SELECT AVG(score) FROM scores)",
+      "SELECT student_name FROM students WHERE student_id IN (SELECT student_id FROM scores WHERE score >= 99)",
+      "SELECT DISTINCT c.dept, s.grade_level FROM scores x JOIN students s ON s.student_id = x.student_id " +
+        "JOIN courses c ON c.course_id = x.course_id WHERE x.grade = 'A'",
+      "SELECT student_id FROM scores WHERE grade = 'A' INTERSECT SELECT student_id FROM scores WHERE grade = 'F'",
+      "SELECT student_id, CASE WHEN age > 16 THEN 'older' END AS band FROM students WHERE student_id <= 20")
+    def sorted(rows: Seq[Seq[Any]]) = rows.map(_.mkString("|")).sorted
+    shapes.foreach { sql =>
+      val v = Validator.validate(spark, sql, school).fold(e => fail(s"$sql: ${e.message}"), identity)
+      val (df, r) = Executor.execute(spark, v, Executor.DefaultLimit, Executor.DefaultTimeoutMs)
+        .fold(e => fail(s"$sql: ${e.message}"), identity)
+      assert(Executor.inputBytes(df.queryExecution.optimizedPlan) < Executor.InterpretedMaxInputBytes, sql)
+      assert(compiledStages(df) == 0, sql)
+      val expected = spark.sql(sql).collect().toSeq.map(_.toSeq.map(Executor.jsonSafe))
+      assert(expected.size <= Executor.DefaultLimit, sql)
+      assert(sorted(r.rows) == sorted(expected), sql)
+    }
+    // ORDER BY + LIMIT keeps its order
+    val ordered = Executor.runSql(spark,
+      "SELECT student_id FROM students ORDER BY age DESC, student_id LIMIT 5", school).toOption.get
+    assert(ordered.rows == spark.sql(
+      "SELECT student_id FROM students ORDER BY age DESC, student_id LIMIT 5").collect().toSeq.map(_.toSeq))
+  }
+
+  /** The gain itself: a query never seen before compiles no class. The
+    * interpreted factory mode is a Spark-internal setting, so this also
+    * catches an upgrade that silently stops honouring it. (A few helpers
+    * generate code whatever the mode, keyed by schema only: orderings for
+    * ORDER BY + LIMIT, row joiners, and a broadcast build side's key
+    * projection, which Spark builds on a thread of its own.) */
+  test("a fresh small query compiles no generated code") {
+    school
+    val warm = "SELECT grade, SUM(score) AS total FROM scores WHERE year > 2000 GROUP BY grade"
+    assert(Executor.runSql(spark, warm, school).isRight) // schema-keyed helpers
+    val salt = System.nanoTime() % 100000 + 100000 // a literal no earlier query compiled
+    val sql = s"SELECT grade, SUM(score * $salt) AS total FROM scores WHERE year > 2000 GROUP BY grade"
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val r = Executor.runSql(spark, sql, school)
+    assert(r.exists(_.rowcount > 0))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == before)
+  }
+
+  test("a query whose input exceeds the bound keeps whole-stage codegen") {
+    val rows = Executor.InterpretedMaxInputBytes / 8 * 2 // 8 bytes per range id
+    spark.range(0, rows).createOrReplaceTempView("big_input")
+    val v = Validator.validate(spark,
+      "SELECT id FROM big_input WHERE id % 1000 = 7 ORDER BY id LIMIT 10", Set("big_input")).toOption.get
+    val (df, r) = Executor.execute(spark, v, Executor.DefaultLimit, Executor.DefaultTimeoutMs).toOption.get
+    assert(Executor.inputBytes(df.queryExecution.optimizedPlan) >= Executor.InterpretedMaxInputBytes)
+    assert(r.rows.map(_.head) == (0 until 10).map(i => 7L + 1000L * i))
+    assert(compiledStages(df) > 0)
   }
 }

@@ -117,6 +117,11 @@ class GraphsSpec extends SparkSpec {
       smallGraphThreshold = 0L))
     val local1 = asMap(Graphs.reachability(g, src, maxDepth = 1))
     assert(local1 === dist1)
+    // a small edge list with more sources than the threshold falls
+    // through to the distributed loop, which starts from the same sources
+    val many = (Seq("a") ++ (1 to 6).map("z" + _)).toDF("node")
+    assert(asMap(Graphs.reachability(g, many, maxDepth = 10, smallGraphThreshold = 6L)) ===
+      asMap(Graphs.reachability(g, many, maxDepth = 10)))
     // long-id graphs (the x_graph_reach shape) keep their column type
     val gl = Seq((0L, 1L), (1L, 2L)).toDF("src", "dst")
     val rl = Graphs.reachability(gl, Seq(0L).toDF("node"), maxDepth = 10)
