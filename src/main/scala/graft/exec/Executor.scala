@@ -3,7 +3,10 @@ package graft.exec
 import java.util.concurrent.{Executors, TimeUnit, TimeoutException => JTimeoutException}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, Join, JoinHint, LeafNode, LocalRelation,
+  LogicalPlan, OneRowRelation, Repartition, SHUFFLE_HASH}
+import org.apache.spark.sql.graft.interop
 import org.apache.spark.sql.internal.SQLConf
 import graft.core._
 import graft.safety.Validator
@@ -21,11 +24,17 @@ import graft.safety.Validator.Validated
  * round-trip (unlike the reference's separate EXPLAIN connection).
  * A query whose estimated input (the summed leaf `sizeInBytes` of that
  * same optimized plan, subquery plans included) is below
- * [[InterpretedMaxInputBytes]] runs interpreted: whole-stage codegen off
- * and interpreted expression factories, for that one execution only.
- * Compiling a query's generated classes with Janino costs more than it
- * saves when the query reads a few thousand rows, and a fresh question
- * compiles all of its own. Larger inputs keep the compiled path.
+ * [[SmallInputMaxBytes]] runs interpreted and in one partition, for that
+ * one execution only. Interpreted: whole-stage codegen off and
+ * interpreted expression factories, because compiling a query's generated
+ * classes with Janino costs more than it saves when the query reads a few
+ * thousand rows, and a fresh question compiles all of its own. One
+ * partition: every leaf sits behind a narrow coalesce and every equi-join
+ * is a local hash join ([[onePartition]]), so the planner inserts no
+ * exchange and the query typically runs as one job of one task, where
+ * scheduling the jobs of a shuffle, a range-partition sample or a
+ * broadcast would cost more than the rows. Larger inputs keep the
+ * compiled, partitioned path.
  */
 object Executor {
 
@@ -36,17 +45,18 @@ object Executor {
   val DefaultTimeoutMs = 5000L
   val ExplainGateRows = 100000L
 
-  /** Inputs below this many estimated bytes run interpreted. Set from a
-    * sweep over the 21 pilot questions on sf0.1 parquet (customer
-    * 316 KB, orders 2.7 MB, lineitem 10.8 MB), median of ten steady-state
-    * asks on a 4-core VM: at 1 MiB the 21 took 2142 ms together against
-    * 2641 ms with every query compiled, and no question's median rose by
-    * more than 5 ms; at 16 MiB the `orders` questions
-    * (150k rows) ran slower than at 1 MiB (pilot/14 116 → 166 ms,
-    * pilot/17 130 → 208 ms) and the `lineitem` one tripled (pilot/5
-    * 166 → 502 ms), as per-row interpretation overtook the compile time
-    * it saves. */
-  val InterpretedMaxInputBytes: Long = 1L << 20
+  /** Inputs below this many estimated bytes run interpreted and in one
+    * partition. Set from a sweep over the 21 pilot questions on sf0.1
+    * parquet (customer 316 KB, orders 2.7 MB, lineitem 10.8 MB), median of
+    * ten steady-state asks on a 4-core VM, before the one-partition
+    * rewrite: at 1 MiB the 21 took 2142 ms together against 2641 ms with
+    * every query compiled, and no question's median rose by more than
+    * 5 ms; at 16 MiB the `orders` questions (150k rows) ran slower than at
+    * 1 MiB (pilot/14 116 → 166 ms, pilot/17 130 → 208 ms) and the
+    * `lineitem` one tripled (pilot/5 166 → 502 ms), as per-row
+    * interpretation overtook the compile time it saves. One task over
+    * 1 MiB is still a few milliseconds of work. */
+  val SmallInputMaxBytes: Long = 1L << 20
 
   /** The per-execution settings of the interpreted path. */
   private val InterpretedConf = Seq(
@@ -86,9 +96,37 @@ object Executor {
   private[exec] def inputBytes(plan: LogicalPlan): BigInt =
     (plan +: plan.subqueriesAll).flatMap(_.collectLeaves()).map(_.stats.sizeInBytes).sum
 
+  private def isSmall(df: DataFrame): Boolean =
+    inputBytes(df.queryExecution.optimizedPlan) < SmallInputMaxBytes
+
+  private val ShuffleHash = Some(HintInfo(strategy = Some(SHUFFLE_HASH)))
+
+  /** The frame a small input runs as: the validated query's analyzed plan
+    * with every leaf, subquery plans included, behind a narrow
+    * coalesce to one partition (`Repartition(1, shuffle = false)`, no
+    * shuffle), and every equi-join hinted SHUFFLE_HASH on both sides. A
+    * child in one partition satisfies every distribution that a sort, an
+    * aggregate, a window or a join requires, so the planner inserts no
+    * exchange; the hint makes a join of two such children a local hash
+    * join instead of a broadcast, which would run a job of its own. The
+    * rows are the same: a coalesce moves no row, a hint changes only the
+    * join's strategy. `OneRowRelation` is left bare: it is one row
+    * already, and the optimizer's rewrite of a subquery over it matches on
+    * it directly. A plan the optimizer folds into a local relation runs
+    * with no job at all, and a wrapped leaf would block that fold, so it
+    * keeps the frame it has. */
+  private[exec] def onePartition(df: DataFrame): DataFrame =
+    if (df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) df
+    else interop.ofRows(df.sparkSession, df.queryExecution.analyzed.transformUpWithSubqueries {
+      case leaf: LeafNode if !leaf.isInstanceOf[OneRowRelation] =>
+        Repartition(1, shuffle = false, leaf)
+      case j: Join if ExtractEquiJoinKeys.unapply(j).isDefined =>
+        j.copy(hint = JoinHint(ShuffleHash, ShuffleHash))
+    })
+
   /** Timed collect with job-group cancellation — the Spark analogue of
     * `SET LOCAL statement_timeout` (V10, ref nl2sql.py:332-342). A small
-    * input ([[InterpretedMaxInputBytes]]) is collected interpreted. The
+    * input ([[SmallInputMaxBytes]]) is collected interpreted. The
     * settings live only on the single-use worker thread: a clone of the
     * session conf for the driver-side planning, and local properties the
     * thread's jobs hand to their tasks. The session conf is never written,
@@ -102,7 +140,7 @@ object Executor {
           val sc = spark.sparkContext
           sc.setJobGroup(group, "graft timed execution", interruptOnCancel = true)
           try {
-            if (inputBytes(df.queryExecution.optimizedPlan) >= InterpretedMaxInputBytes) df.collect()
+            if (!isSmall(df)) df.collect()
             else {
               val conf = df.sparkSession.sessionState.conf.clone()
               InterpretedConf.foreach { case (k, v) => conf.setConfString(k, v); sc.setLocalProperty(k, v) }
@@ -163,7 +201,9 @@ object Executor {
     execute(spark, v, limit, timeoutMs).map(_._2)
 
   /** [[run]], also handing back the executed frame, so a caller reads its
-    * analyzed plan instead of parsing and analysing the SQL again. */
+    * analyzed plan instead of parsing and analysing the SQL again. A small
+    * input runs as [[onePartition]] of the validated query's frame, whose
+    * analyzed plan adds only coalesces and join hints. */
   private[graft] def execute(
       spark: SparkSession,
       v: Validated,
@@ -176,37 +216,40 @@ object Executor {
     try {
       val df = frame(spark, v, limit)
       for {
-        // Second layer on the RESOLVED plan (r15 ADVICE high+medium):
-        // before round 16 nothing on the default path ever consulted
-        // the resolved-expression guard — exactly what let `try_reflect`
-        // (a registry alias the parse-time NAME denylist didn't know)
-        // run end-to-end. The scan is applied DIRECTLY to this query's
-        // analyzed plan rather than by toggling spark.graft.readOnly
-        // around execution: the conf is session-global, so a per-query
-        // set/restore races with concurrent work on a shared session
-        // (another thread's legitimate write failing inside the window,
-        // or an overlapping run restoring the flag away mid-analysis).
-        // The direct check is per-query, race-free, and independent of
-        // whether GraftExtensions is registered; sessions that want the
-        // analyzer-rule layer on EVERYTHING (not just engine queries)
-        // still opt in via the conf.
-        _ <- graft.plans.ReadOnlyGuard
-               .firstOffenseDeep(df.queryExecution.analyzed)
-               .map(what => SqlSafetyError(
-                 s"Statically un-vettable construct: $what is not allowed"))
-               .toLeft(())
+        _ <- readOnly(df)
         _ <- costGate(df)
-        rows <- collectWithTimeout(spark, df, timeoutMs)
-      } yield (df, QueryResult(
+        toRun = if (isSmall(df)) onePartition(df) else df
+        // the frame that runs is vetted too, not only the one it came from
+        _ <- readOnly(toRun)
+        rows <- collectWithTimeout(spark, toRun, timeoutMs)
+      } yield (toRun, QueryResult(
         sql = v.sql,
-        columns = df.columns.toSeq,
+        columns = toRun.columns.toSeq,
         rows = rows.toSeq.map(_.toSeq.map(jsonSafe)),
         rowcount = rows.length,
-        explain = df.queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)))
+        explain = toRun.queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)))
     } catch {
       case scala.util.control.NonFatal(e) =>
         Left(ExecutionError(Option(e.getMessage).getOrElse(e.getClass.getName).take(1000)))
     }
+
+  /** Read-only guard on the RESOLVED plan, subquery plans included: the
+    * parse-time NAME denylist can miss a registry alias (`try_reflect`
+    * resolves to the same reflection call as `reflect`), the analyzed
+    * plan cannot. The scan is applied DIRECTLY to this query's analyzed
+    * plan rather than by toggling spark.graft.readOnly around execution:
+    * the conf is session-global, so a per-query set/restore races with
+    * concurrent work on a shared session (another thread's legitimate
+    * write failing inside the window, or an overlapping run restoring the
+    * flag away mid-analysis). The direct check is per-query, race-free,
+    * and independent of whether GraftExtensions is registered; sessions
+    * that want the analyzer-rule layer on EVERYTHING (not just engine
+    * queries) still opt in via the conf. */
+  private def readOnly(df: DataFrame): Either[EngineError, Unit] =
+    graft.plans.ReadOnlyGuard
+      .firstOffenseDeep(df.queryExecution.analyzed)
+      .map(what => SqlSafetyError(s"Statically un-vettable construct: $what is not allowed"))
+      .toLeft(())
 
   /** Validate + execute raw SQL in one call. */
   def runSql(

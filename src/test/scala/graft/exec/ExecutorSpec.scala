@@ -1,10 +1,17 @@
 package graft.exec
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import graft.SparkSpec
-import graft.core.PlanTooLargeError
+import graft.core.{PlanTooLargeError, QueryResult, SqlSafetyError}
 import graft.eval.SchoolFixture
 import graft.safety.Validator
 import graft.sources.Sources
@@ -16,6 +23,53 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def compiledStages(df: org.apache.spark.sql.DataFrame): Int =
     collect(df.queryExecution.executedPlan) { case w: WholeStageCodegenExec => w }.size
+
+  private def exchanges(df: DataFrame): Int =
+    collect(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e
+      case e: BroadcastExchangeExec => e
+    }.size
+
+  private def coalesces(df: DataFrame): Int =
+    df.queryExecution.analyzed.collectWithSubqueries { case r: Repartition => r }.size
+
+  private def executeOn(sql: String, tables: Set[String]): (DataFrame, QueryResult) = {
+    val v = Validator.validate(spark, sql, tables).fold(e => fail(s"$sql: ${e.message}"), identity)
+    Executor.execute(spark, v, Executor.DefaultLimit, Executor.DefaultTimeoutMs)
+      .fold(e => fail(s"$sql: ${e.message}"), identity)
+  }
+
+  /** `f`'s result and the number of jobs it ran in Executor's job groups.
+    * The listener bus delivers events in order but on its own thread, so
+    * the count is read once a marker job run after `f` has been seen (and
+    * started once one run before `f` has, so no earlier job is counted). */
+  private def withExecJobs[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    @volatile var marker = ""
+    @volatile var seen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = Option(e.properties).foreach { p =>
+        if (Option(p.getProperty("spark.jobGroup.id")).exists(_.startsWith("graft-exec-"))) jobs.incrementAndGet()
+        if (p.getProperty("spark.job.description") == marker) seen.countDown()
+      }
+    }
+    def barrier(): Unit = {
+      seen = new CountDownLatch(1)
+      marker = s"exec-jobs-barrier-${System.nanoTime()}"
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(seen.await(60, TimeUnit.SECONDS), "listener never saw the marker job")
+    }
+    sc.addSparkListener(listener)
+    try {
+      barrier()
+      jobs.set(0)
+      val a = f
+      barrier()
+      (a, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 
   test("unbounded select gets LIMIT injected (cap 100)") {
     val r = Executor.runSql(spark, "SELECT l_orderkey FROM lineitem", tables)
@@ -168,7 +222,7 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val v = Validator.validate(spark, sql, school).fold(e => fail(s"$sql: ${e.message}"), identity)
       val (df, r) = Executor.execute(spark, v, Executor.DefaultLimit, Executor.DefaultTimeoutMs)
         .fold(e => fail(s"$sql: ${e.message}"), identity)
-      assert(Executor.inputBytes(df.queryExecution.optimizedPlan) < Executor.InterpretedMaxInputBytes, sql)
+      assert(Executor.inputBytes(df.queryExecution.optimizedPlan) < Executor.SmallInputMaxBytes, sql)
       assert(compiledStages(df) == 0, sql)
       val expected = spark.sql(sql).collect().toSeq.map(_.toSeq.map(Executor.jsonSafe))
       assert(expected.size <= Executor.DefaultLimit, sql)
@@ -200,13 +254,111 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("a query whose input exceeds the bound keeps whole-stage codegen") {
-    val rows = Executor.InterpretedMaxInputBytes / 8 * 2 // 8 bytes per range id
+    val rows = Executor.SmallInputMaxBytes / 8 * 2 // 8 bytes per range id
     spark.range(0, rows).createOrReplaceTempView("big_input")
     val v = Validator.validate(spark,
       "SELECT id FROM big_input WHERE id % 1000 = 7 ORDER BY id LIMIT 10", Set("big_input")).toOption.get
     val (df, r) = Executor.execute(spark, v, Executor.DefaultLimit, Executor.DefaultTimeoutMs).toOption.get
-    assert(Executor.inputBytes(df.queryExecution.optimizedPlan) >= Executor.InterpretedMaxInputBytes)
+    assert(Executor.inputBytes(df.queryExecution.optimizedPlan) >= Executor.SmallInputMaxBytes)
     assert(r.rows.map(_.head) == (0 until 10).map(i => 7L + 1000L * i))
     assert(compiledStages(df) > 0)
+  }
+
+  /** Every shape the templates emit, on small inputs: the answer runs the
+    * one-partition frame and has the rows `spark.sql` returns, in the same
+    * order where the ORDER BY is total. */
+  test("a small answer runs in one partition and returns spark.sql's rows") {
+    school
+    val shapes = Seq( // (sql, ORDER BY is total)
+      "SELECT student_name, age FROM students WHERE age > 15 ORDER BY age DESC, student_id LIMIT 10" -> true,
+      "SELECT grade, COUNT(*) AS n, AVG(score) AS avg_score FROM scores GROUP BY grade " +
+        "HAVING COUNT(*) > 10 ORDER BY grade" -> true,
+      "SELECT s.student_name, x.course_id, x.score FROM scores x JOIN students s " +
+        "ON s.student_id = x.student_id WHERE x.score > 95 ORDER BY x.score_id" -> true,
+      "SELECT c.course_name, COUNT(x.score_id) AS n FROM courses c LEFT JOIN scores x " +
+        "ON x.course_id = c.course_id AND x.score > 99 GROUP BY c.course_name" -> false,
+      "SELECT student_id, course_id, score, RANK() OVER (PARTITION BY course_id ORDER BY score DESC) AS r " +
+        "FROM scores WHERE student_id <= 10 ORDER BY course_id, r, student_id" -> true,
+      "WITH per_student AS (SELECT student_id, AVG(score) AS avg_score FROM scores GROUP BY student_id) " +
+        "SELECT p.student_id, p.avg_score FROM per_student p " +
+        "WHERE p.avg_score > (SELECT AVG(avg_score) + 5 FROM per_student)" -> false,
+      "SELECT student_id, score FROM scores WHERE course_id = 3 AND score > (SELECT AVG(score) FROM scores)" -> false,
+      "SELECT student_name FROM students WHERE student_id IN (SELECT student_id FROM scores WHERE score >= 99)" -> false,
+      "SELECT student_id FROM scores WHERE grade = 'A' UNION SELECT student_id FROM scores WHERE grade = 'F'" -> false,
+      "SELECT s.student_id, c.course_id FROM students s JOIN courses c ON c.course_id > s.age - 10 " +
+        "WHERE s.student_id <= 5" -> false)
+    def sorted(rows: Seq[Seq[Any]]) = rows.map(_.mkString("|")).sorted
+    shapes.foreach { case (sql, total) =>
+      val (df, r) = executeOn(sql, school)
+      assert(coalesces(df) > 0, sql)
+      val expected = spark.sql(sql).collect().toSeq.map(_.toSeq.map(Executor.jsonSafe))
+      assert(expected.nonEmpty && expected.size <= Executor.DefaultLimit, sql)
+      if (total) assert(r.rows == expected, sql)
+      else assert(sorted(r.rows) == sorted(expected), sql)
+    }
+  }
+
+  test("sort, aggregate, window and equi-join answers plan no exchange and run one job") {
+    school
+    Seq(
+      "SELECT student_id, age FROM students ORDER BY age DESC, student_id",
+      "SELECT grade, COUNT(*) AS n FROM scores GROUP BY grade ORDER BY n DESC",
+      "SELECT student_id, course_id, LAG(score) OVER (PARTITION BY student_id ORDER BY course_id) AS prev " +
+        "FROM scores WHERE student_id <= 20",
+      "SELECT s.student_name, x.score FROM scores x JOIN students s ON s.student_id = x.student_id " +
+        "WHERE x.score > 90",
+      "SELECT s.student_name, x.score FROM students s LEFT JOIN scores x ON x.student_id = s.student_id " +
+        "AND x.course_id = 1"
+    ).foreach { sql =>
+      val ((df, r), jobs) = withExecJobs(executeOn(sql, school))
+      assert(r.rowcount > 0, sql)
+      assert(exchanges(df) == 0, s"$sql\n${r.explain}")
+      assert(jobs == 1, s"$sql ran $jobs jobs\n${r.explain}")
+    }
+  }
+
+  test("an answer the optimizer folds into a local relation still runs no job") {
+    school
+    val ((df, r), jobs) = withExecJobs(executeOn("SELECT student_name, age FROM students WHERE age > 15", school))
+    assert(r.rowcount > 0)
+    assert(coalesces(df) == 0)
+    assert(jobs == 0, r.explain)
+  }
+
+  test("COUNT(*) over a filter that keeps no row answers one row, 0") {
+    school
+    tables
+    Seq("SELECT COUNT(*) AS n FROM scores WHERE score > 1000" -> school,
+        "SELECT COUNT(*) AS n FROM nation WHERE n_nationkey < 0" -> tables).foreach { case (sql, ts) =>
+      val (_, r) = executeOn(sql, ts)
+      assert(r.rows == Seq(Seq(0L)), sql)
+    }
+  }
+
+  test("an input above the bound keeps its exchanges and no coalesce") {
+    val rows = Executor.SmallInputMaxBytes / 8 * 2 // 8 bytes per range id
+    spark.range(0, rows).createOrReplaceTempView("big_agg_input")
+    val (df, r) = executeOn(
+      "SELECT id % 7 AS k, COUNT(*) AS n FROM big_agg_input GROUP BY id % 7 ORDER BY k", Set("big_agg_input"))
+    assert(r.rows.map(_.head) == (0 until 7).map(_.toLong))
+    assert(coalesces(df) == 0)
+    assert(exchanges(df) > 0, r.explain)
+  }
+
+  /** The guard reads the plan that runs, not only the one it came from. */
+  test("the read-only guard vets the one-partition frame that runs") {
+    tables
+    val smuggled = Validator.Validated(
+      "SELECT try_reflect('java.lang.System', 'getenv', 'PATH') AS v, n_name FROM nation " +
+        "ORDER BY n_nationkey LIMIT 1",
+      spark.sessionState.sqlParser.parsePlan("SELECT 1"), needsLimit = false)
+    val ran = Executor.onePartition(Executor.frame(spark, smuggled))
+    assert(coalesces(ran) > 0)
+    assert(graft.plans.ReadOnlyGuard.firstOffenseDeep(ran.queryExecution.analyzed).isDefined)
+    assert(Executor.run(spark, smuggled).left.exists(_.isInstanceOf[SqlSafetyError]))
+    // an admitted small answer's frame passes the same guard
+    val (df, _) = executeOn("SELECT n_name FROM nation ORDER BY n_regionkey, n_nationkey", tables)
+    assert(coalesces(df) > 0)
+    assert(graft.plans.ReadOnlyGuard.firstOffenseDeep(df.queryExecution.analyzed).isEmpty)
   }
 }

@@ -103,6 +103,25 @@ class MvRewriteSpec extends SparkSpec {
     }
   }
 
+  /** A small input runs as the executor's one-partition frame, whose
+    * leaves sit behind a coalesce: the served answer must still read the
+    * state, not the base table. */
+  test("an engine answer over a small materialized table does not scan the base relation") {
+    setup
+    withMv {
+      val engine = graft.api.Engine.forFixtures(spark, sfDir)
+      val sql = "SELECT c_mktsegment, COUNT(*) AS n, SUM(c_acctbal) AS s FROM customer " +
+        "GROUP BY c_mktsegment ORDER BY c_mktsegment"
+      val direct = engine.run(sql).toOption.get
+      assert(direct.explain.contains("customer.parquet"), direct.explain)
+      assert(direct.explain.contains("Coalesce 1"), direct.explain)
+      engine.materialize("customer", Seq("c_mktsegment"), "c_acctbal")
+      val served = engine.run(sql).toOption.get
+      assert(!served.explain.contains("customer.parquet"), served.explain)
+      assert(served.rows == direct.rows)
+    }
+  }
+
   test("Engine.materialize registers and serves in one call") {
     setup
     withMv {
