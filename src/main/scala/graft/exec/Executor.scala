@@ -1,12 +1,17 @@
 package graft.exec
 
 import java.util.concurrent.{Executors, TimeUnit, TimeoutException => JTimeoutException}
+import java.util.concurrent.atomic.AtomicBoolean
 
+import org.apache.spark.NarrowDependency
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+import org.apache.spark.sql.catalyst.plans.InnerLike
 import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, Join, JoinHint, LeafNode, LocalRelation,
-  LogicalPlan, OneRowRelation, Repartition, SHUFFLE_HASH}
-import org.apache.spark.sql.graft.interop
+  LogicalPlan, OneRowRelation, Repartition, SHUFFLE_HASH, SHUFFLE_REPLICATE_NL}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.graft.{interop, localTask}
 import org.apache.spark.sql.internal.SQLConf
 import graft.core._
 import graft.safety.Validator
@@ -24,17 +29,28 @@ import graft.safety.Validator.Validated
  * round-trip (unlike the reference's separate EXPLAIN connection).
  * A query whose estimated input (the summed leaf `sizeInBytes` of that
  * same optimized plan, subquery plans included) is below
- * [[SmallInputMaxBytes]] runs interpreted and in one partition, for that
- * one execution only. Interpreted: whole-stage codegen off and
- * interpreted expression factories, because compiling a query's generated
- * classes with Janino costs more than it saves when the query reads a few
- * thousand rows, and a fresh question compiles all of its own. One
- * partition: every leaf sits behind a narrow coalesce and every equi-join
- * is a local hash join ([[onePartition]]), so the planner inserts no
- * exchange and the query typically runs as one job of one task, where
- * scheduling the jobs of a shuffle, a range-partition sample or a
- * broadcast would cost more than the rows. Larger inputs keep the
- * compiled, partitioned path.
+ * [[SmallInputMaxBytes]] runs interpreted, in one partition and in
+ * process, for that one execution only. Interpreted: whole-stage codegen
+ * off and interpreted expression factories, because compiling a query's
+ * generated classes with Janino costs more than it saves when the query
+ * reads a few thousand rows, and a fresh question compiles all of its
+ * own. One partition: every leaf and join sits behind a narrow coalesce
+ * and joins are hinted not to broadcast ([[onePartition]]), so the
+ * planner inserts no exchange, where scheduling the jobs of a shuffle, a
+ * range-partition sample or a broadcast would cost more than the rows.
+ * In process: such a plan's RDD is one partition whose dependencies are
+ * narrow all the way down, and that partition is computed in this process
+ * as a task of its own, with no Spark job ([[collectSmall]]), since a
+ * job's fixed cost (scheduling, closure cleaning, task set-up) is most of
+ * a small answer's time. What still needs a job runs one: an
+ * uncorrelated scalar subquery (its own job), and a join the optimizer
+ * makes itself (the semi or anti join of EXISTS, IN or EXCEPT, a
+ * correlated scalar subquery's join), which carries no hint and
+ * broadcasts. The narrow-lineage guard is a correctness rule, not a
+ * tuning one: a shuffle's map side runs only as a stage the scheduler
+ * runs first, and a plan that shuffles, computed in process where nothing
+ * had run that stage, returned wrong rows with no error. Larger inputs
+ * keep the compiled, partitioned path and its jobs.
  */
 object Executor {
 
@@ -45,23 +61,28 @@ object Executor {
   val DefaultTimeoutMs = 5000L
   val ExplainGateRows = 100000L
 
-  /** Inputs below this many estimated bytes run interpreted and in one
-    * partition. Set from a sweep over the 21 pilot questions on sf0.1
+  /** Inputs below this many estimated bytes run interpreted, in one partition
+    * and in process. Set from a sweep over the 21 pilot questions on sf0.1
     * parquet (customer 316 KB, orders 2.7 MB, lineitem 10.8 MB), median of
-    * ten steady-state asks on a 4-core VM, before the one-partition
-    * rewrite: at 1 MiB the 21 took 2142 ms together against 2641 ms with
-    * every query compiled, and no question's median rose by more than
-    * 5 ms; at 16 MiB the `orders` questions (150k rows) ran slower than at
-    * 1 MiB (pilot/14 116 → 166 ms, pilot/17 130 → 208 ms) and the
-    * `lineitem` one tripled (pilot/5 166 → 502 ms), as per-row
-    * interpretation overtook the compile time it saves. One task over
-    * 1 MiB is still a few milliseconds of work. */
+    * ten steady-state asks on a 4-core VM, before the one-partition rewrite:
+    * at 1 MiB the 21 took 2142 ms together against 2641 ms with every query
+    * compiled, and no question's median rose by more than 5 ms; at 16 MiB the
+    * `orders` questions (150k rows) ran slower than at 1 MiB (pilot/14 116 →
+    * 166 ms, pilot/17 130 → 208 ms) and the `lineitem` one tripled (pilot/5
+    * 166 → 502 ms), as per-row interpretation overtook the compile time it
+    * saves. One task over 1 MiB is still a few milliseconds of work. */
   val SmallInputMaxBytes: Long = 1L << 20
 
-  /** The per-execution settings of the interpreted path. */
-  private val InterpretedConf = Seq(
+  /** The per-execution settings of a small input: interpreted (whole-stage
+    * codegen off, interpreted expression factories), and no size limit on
+    * a join side in one partition, which the planner otherwise shuffles
+    * once its *estimated* size passes `spark.sql.maxSinglePartitionBytes`
+    * (128 MB): a join's estimate multiplies its sides' estimates, so a
+    * join over a join of tiny tables can pass it. */
+  private val SmallInputConf = Seq(
     SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false",
-    SQLConf.CODEGEN_FACTORY_MODE.key -> "NO_CODEGEN")
+    SQLConf.CODEGEN_FACTORY_MODE.key -> "NO_CODEGEN",
+    SQLConf.MAX_SINGLE_PARTITION_BYTES.key -> Long.MaxValue.toString)
 
   /** Build the capped DataFrame for validated SQL: execute the validated
     * text and inject `limit(n)` when the plan had no top-level LIMIT —
@@ -100,17 +121,23 @@ object Executor {
     inputBytes(df.queryExecution.optimizedPlan) < SmallInputMaxBytes
 
   private val ShuffleHash = Some(HintInfo(strategy = Some(SHUFFLE_HASH)))
+  private val ReplicateNl = Some(HintInfo(strategy = Some(SHUFFLE_REPLICATE_NL)))
 
   /** The frame a small input runs as: the validated query's analyzed plan
-    * with every leaf, subquery plans included, behind a narrow
-    * coalesce to one partition (`Repartition(1, shuffle = false)`, no
-    * shuffle), and every equi-join hinted SHUFFLE_HASH on both sides. A
-    * child in one partition satisfies every distribution that a sort, an
-    * aggregate, a window or a join requires, so the planner inserts no
-    * exchange; the hint makes a join of two such children a local hash
-    * join instead of a broadcast, which would run a job of its own. The
-    * rows are the same: a coalesce moves no row, a hint changes only the
-    * join's strategy. `OneRowRelation` is left bare: it is one row
+    * with every leaf and every join, subquery plans included, behind a
+    * narrow coalesce to one partition (`Repartition(1, shuffle = false)`,
+    * no shuffle). A child in one partition satisfies every distribution
+    * that a sort, an aggregate, a window or a join requires, so the planner
+    * inserts no exchange. A join's own output is not one partition to the
+    * planner (it is the pair of its sides' partitionings), so a join over a
+    * join would shuffle both sides without the coalesce above the inner
+    * one. Joins are hinted so that none broadcasts, which would run a job
+    * of its own: an equi-join as a local hash join (SHUFFLE_HASH on both
+    * sides), an inner join with no equality as a cartesian product
+    * (SHUFFLE_REPLICATE_NL, which reads both one-partition sides in place);
+    * an outer join with no equality has no such plan and still broadcasts.
+    * The rows are the same: a coalesce moves no row, a hint changes only
+    * the join's strategy. `OneRowRelation` is left bare: it is one row
     * already, and the optimizer's rewrite of a subquery over it matches on
     * it directly. A plan the optimizer folds into a local relation runs
     * with no job at all, and a wrapped leaf would block that fold, so it
@@ -118,22 +145,34 @@ object Executor {
   private[exec] def onePartition(df: DataFrame): DataFrame =
     if (df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) df
     else interop.ofRows(df.sparkSession, df.queryExecution.analyzed.transformUpWithSubqueries {
-      case leaf: LeafNode if !leaf.isInstanceOf[OneRowRelation] =>
-        Repartition(1, shuffle = false, leaf)
+      case leaf: LeafNode if !leaf.isInstanceOf[OneRowRelation] => coalesced(leaf)
       case j: Join if ExtractEquiJoinKeys.unapply(j).isDefined =>
-        j.copy(hint = JoinHint(ShuffleHash, ShuffleHash))
+        coalesced(j.copy(hint = JoinHint(ShuffleHash, ShuffleHash)))
+      case j: Join if j.joinType.isInstanceOf[InnerLike] =>
+        coalesced(j.copy(hint = JoinHint(ReplicateNl, ReplicateNl)))
+      case j: Join => coalesced(j)
     })
+
+  private def coalesced(plan: LogicalPlan): LogicalPlan = Repartition(1, shuffle = false, plan)
 
   /** Timed collect with job-group cancellation — the Spark analogue of
     * `SET LOCAL statement_timeout` (V10, ref nl2sql.py:332-342). A small
-    * input ([[SmallInputMaxBytes]]) is collected interpreted. The
-    * settings live only on the single-use worker thread: a clone of the
-    * session conf for the driver-side planning, and local properties the
-    * thread's jobs hand to their tasks. The session conf is never written,
-    * since a set/restore on it would race with concurrent work. */
+    * input ([[SmallInputMaxBytes]]) is collected interpreted, and in
+    * process where its plan allows ([[collectSmall]]); on timeout an
+    * in-process task is killed at the next row a scan hands it, as
+    * cancelling the job group kills a job's tasks. The settings live only
+    * on the single-use worker thread: a clone of the session conf for the
+    * planning, and local properties the thread's jobs hand to
+    * their tasks (and the in-process task to itself). The session conf is
+    * never written, since a set/restore on it would race with concurrent
+    * work. */
   def collectWithTimeout(spark: SparkSession, df: DataFrame, timeoutMs: Long): Either[EngineError, Array[Row]] = {
     val group = s"graft-exec-${System.nanoTime()}"
-    val pool = Executors.newSingleThreadExecutor()
+    val timedOut = new AtomicBoolean(false)
+    // a daemon: a query still computing after its timeout must not hold the JVM open
+    val pool = Executors.newSingleThreadExecutor { (r: Runnable) =>
+      val t = new Thread(r, group); t.setDaemon(true); t
+    }
     try {
       val fut = pool.submit(new java.util.concurrent.Callable[Array[Row]] {
         override def call(): Array[Row] = {
@@ -143,8 +182,8 @@ object Executor {
             if (!isSmall(df)) df.collect()
             else {
               val conf = df.sparkSession.sessionState.conf.clone()
-              InterpretedConf.foreach { case (k, v) => conf.setConfString(k, v); sc.setLocalProperty(k, v) }
-              SQLConf.withExistingConf(conf)(df.collect())
+              SmallInputConf.foreach { case (k, v) => conf.setConfString(k, v); sc.setLocalProperty(k, v) }
+              SQLConf.withExistingConf(conf)(collectSmall(df, timedOut))
             }
           } finally sc.clearJobGroup()
         }
@@ -152,6 +191,7 @@ object Executor {
       try Right(fut.get(timeoutMs, TimeUnit.MILLISECONDS))
       catch {
         case _: JTimeoutException =>
+          timedOut.set(true)
           spark.sparkContext.cancelJobGroup(group)
           fut.cancel(true)
           Left(TimeoutError(s"Execution exceeded ${timeoutMs}ms"))
@@ -159,6 +199,37 @@ object Executor {
           Left(ExecutionError(Option(e.getCause).getOrElse(e).getMessage.take(1000)))
       }
     } finally pool.shutdownNow()
+  }
+
+  /** A small frame's rows, in one SQL execution (so SQL listeners see
+    * it). When the final plan's RDD is one partition whose dependencies
+    * are narrow all the way down, that partition is computed as a task of
+    * its own ([[localTask]]), with no job; otherwise the plan runs as
+    * `df.collect()` runs it. Planning (`execute`) has already run whatever
+    * the plan needs first as jobs of their own: subqueries, broadcasts, and
+    * under adaptive execution the shuffle stages. Under adaptive execution
+    * both happen on the thread that runs its result stage
+    * ([[interop.onFinalPlan]]), which frees the plan's sorters as soon as
+    * the stage returns. `killed` stops the task at its next row. */
+  private def collectSmall(df: DataFrame, killed: AtomicBoolean): Array[Row] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      qe.executedPlan.resetMetrics()
+      val rows = interop.onFinalPlan(qe.executedPlan) { plan =>
+        val rdd = plan.execute()
+        if (rdd.getNumPartitions == 1 && narrow(rdd))
+          localTask.run(df.sparkSession.sparkContext, killed) { task =>
+            rdd.iterator(rdd.partitions.head, task).map(_.copy()).toArray
+          }
+        else plan.executeCollect()
+      }
+      interop.fromInternal(df, qe.executedPlan.output, rows)
+    }
+  }
+
+  private def narrow(rdd: RDD[_]): Boolean = rdd.dependencies.forall {
+    case d: NarrowDependency[_] => narrow(d.rdd)
+    case _ => false
   }
 
   /** JSON-safe coercion at the sink (ref nl2sql.py:325-330): Decimal →

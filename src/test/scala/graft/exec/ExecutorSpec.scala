@@ -3,6 +3,9 @@ package graft.exec
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.SparkEnv
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
@@ -11,7 +14,7 @@ import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import graft.SparkSpec
-import graft.core.{PlanTooLargeError, QueryResult, SqlSafetyError}
+import graft.core.{ExecutionError, PlanTooLargeError, QueryResult, SqlSafetyError, TimeoutError}
 import graft.eval.SchoolFixture
 import graft.safety.Validator
 import graft.sources.Sources
@@ -189,6 +192,43 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(!r.exists(_.rows.exists(_.exists(v => v != null && v.toString.contains("/")))))
   }
 
+  /** The in-process path keeps the timeout: the timed-out task is killed
+    * at the next row a scan hands it, and its memory (here the
+    * aggregation's hash map) goes back to the pool. It runs before the
+    * next test, whose timed-out job keeps its executor task (and that
+    * task's memory) until the task's next check for a kill. */
+  test("a timed-out answer computed in process stops and releases its memory") {
+    school
+    val memory = SparkEnv.get.memoryManager
+    def workers = Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith("graft-exec-"))
+    def settled(within: Long)(cond: => Boolean): Boolean = {
+      val end = System.nanoTime() + within * 1000000
+      while (!cond && System.nanoTime() < end) Thread.sleep(10)
+      cond
+    }
+    val before = memory.executionMemoryUsed
+    @volatile var peak = before
+    @volatile var polling = true
+    val poller = new Thread(() => while (polling) { peak = math.max(peak, memory.executionMemoryUsed); Thread.sleep(5) })
+    poller.start()
+    // ~3·10⁸ rows: minutes of work, so only a kill stops it within the waits below
+    val sql = "SELECT a.student_id, COUNT(*) AS n FROM scores a CROSS JOIN scores b CROSS JOIN scores c " +
+      "GROUP BY a.student_id"
+    val t0 = System.nanoTime()
+    val r = Executor.runSql(spark, sql, school, timeoutMs = 1500)
+    val ms = (System.nanoTime() - t0) / 1000000
+    assert(r.left.exists(_.isInstanceOf[TimeoutError]), r)
+    assert(ms < 1500 + 2000, s"answered after $ms ms")
+    val stuck = workers // may be empty: the worker can have stopped already
+    stuck.foreach(_.join(10000))
+    assert(stuck.forall(!_.isAlive), "the worker kept running")
+    assert(settled(10000)(memory.executionMemoryUsed == before), "the task kept its memory")
+    polling = false
+    poller.join()
+    assert(peak > before, "the aggregation held no execution memory")
+    assert(Executor.runSql(spark, "SELECT COUNT(*) AS n FROM students", school).exists(_.rows == Seq(Seq(100L))))
+  }
+
   test("timeout cancels a long-running query") {
     tables
     val v = Validator.validate(spark,
@@ -202,23 +242,23 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   /** Template shapes on the school fixture: small inputs, so each runs
     * interpreted, and each must return what the compiled path returns. */
   test("a small query runs interpreted and returns the compiled path's rows") {
-    val shapes = Seq(
-      "SELECT student_name, age FROM students WHERE age > 15 ORDER BY student_id LIMIT 10",
-      "SELECT grade, COUNT(*) AS n, AVG(score) AS avg_score FROM scores GROUP BY grade HAVING COUNT(*) > 10",
+    val shapes = Seq( // (sql, ORDER BY is total)
+      "SELECT student_name, age FROM students WHERE age > 15 ORDER BY student_id LIMIT 10" -> true,
+      "SELECT grade, COUNT(*) AS n, AVG(score) AS avg_score FROM scores GROUP BY grade HAVING COUNT(*) > 10" -> false,
       "SELECT student_id, course_id, score, LAG(score) OVER (PARTITION BY student_id ORDER BY course_id) AS prev " +
-        "FROM scores WHERE student_id <= 5",
+        "FROM scores WHERE student_id <= 5" -> false,
       "SELECT * FROM (SELECT course_id, student_id, score, ROW_NUMBER() OVER " +
-        "(PARTITION BY course_id ORDER BY score DESC, student_id) AS rn FROM scores) t WHERE rn <= 3",
+        "(PARTITION BY course_id ORDER BY score DESC, student_id) AS rn FROM scores) t WHERE rn <= 3" -> false,
       "WITH per_course AS (SELECT course_id, AVG(score) AS avg_score FROM scores GROUP BY course_id) " +
-        "SELECT c.course_name, p.avg_score FROM per_course p JOIN courses c ON c.course_id = p.course_id",
-      "SELECT student_id, score FROM scores WHERE course_id = 3 AND score > (SELECT AVG(score) FROM scores)",
-      "SELECT student_name FROM students WHERE student_id IN (SELECT student_id FROM scores WHERE score >= 99)",
+        "SELECT c.course_name, p.avg_score FROM per_course p JOIN courses c ON c.course_id = p.course_id" -> false,
+      "SELECT student_id, score FROM scores WHERE course_id = 3 AND score > (SELECT AVG(score) FROM scores)" -> false,
+      "SELECT student_name FROM students WHERE student_id IN (SELECT student_id FROM scores WHERE score >= 99)" -> false,
       "SELECT DISTINCT c.dept, s.grade_level FROM scores x JOIN students s ON s.student_id = x.student_id " +
-        "JOIN courses c ON c.course_id = x.course_id WHERE x.grade = 'A'",
-      "SELECT student_id FROM scores WHERE grade = 'A' INTERSECT SELECT student_id FROM scores WHERE grade = 'F'",
-      "SELECT student_id, CASE WHEN age > 16 THEN 'older' END AS band FROM students WHERE student_id <= 20")
+        "JOIN courses c ON c.course_id = x.course_id WHERE x.grade = 'A'" -> false,
+      "SELECT student_id FROM scores WHERE grade = 'A' INTERSECT SELECT student_id FROM scores WHERE grade = 'F'" -> false,
+      "SELECT student_id, CASE WHEN age > 16 THEN 'older' END AS band FROM students WHERE student_id <= 20" -> false)
     def sorted(rows: Seq[Seq[Any]]) = rows.map(_.mkString("|")).sorted
-    shapes.foreach { sql =>
+    shapes.foreach { case (sql, total) =>
       val v = Validator.validate(spark, sql, school).fold(e => fail(s"$sql: ${e.message}"), identity)
       val (df, r) = Executor.execute(spark, v, Executor.DefaultLimit, Executor.DefaultTimeoutMs)
         .fold(e => fail(s"$sql: ${e.message}"), identity)
@@ -226,7 +266,8 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(compiledStages(df) == 0, sql)
       val expected = spark.sql(sql).collect().toSeq.map(_.toSeq.map(Executor.jsonSafe))
       assert(expected.size <= Executor.DefaultLimit, sql)
-      assert(sorted(r.rows) == sorted(expected), sql)
+      if (total) assert(r.rows == expected, sql)
+      else assert(sorted(r.rows) == sorted(expected), sql)
     }
     // ORDER BY + LIMIT keeps its order
     val ordered = Executor.runSql(spark,
@@ -298,7 +339,13 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("sort, aggregate, window and equi-join answers plan no exchange and run one job") {
+  /** An answer whose plan has no exchange is computed in process: no
+    * Spark job at all. Of the last five shapes, three used to shuffle or
+    * broadcast: a join side whose estimated size passes
+    * `spark.sql.maxSinglePartitionBytes` (a join's estimate is the product
+    * of its sides'), an inner join with no equality, and a join over a
+    * join's output; a union and a full outer join need nothing more. */
+  test("sort, aggregate, window, join and union answers plan no exchange and run no job") {
     school
     Seq(
       "SELECT student_id, age FROM students ORDER BY age DESC, student_id",
@@ -308,12 +355,65 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       "SELECT s.student_name, x.score FROM scores x JOIN students s ON s.student_id = x.student_id " +
         "WHERE x.score > 90",
       "SELECT s.student_name, x.score FROM students s LEFT JOIN scores x ON x.student_id = s.student_id " +
-        "AND x.course_id = 1"
+        "AND x.course_id = 1",
+      "WITH p AS (SELECT a.student_id AS s1, b.student_id AS s2, COUNT(*) AS c FROM scores a JOIN scores b " +
+        "ON a.course_id = b.course_id AND a.student_id < b.student_id GROUP BY a.student_id, b.student_id) " +
+        "SELECT p.s1, p.s2, p.c FROM students s JOIN p ON p.s1 = s.student_id WHERE p.c > 5",
+      "SELECT a.student_id AS s1, b.student_id AS s2 FROM students a JOIN students b " +
+        "ON a.student_id < b.student_id AND a.grade_level <> b.grade_level WHERE a.student_id <= 3 AND b.student_id <= 40",
+      "SELECT c.course_name, SUM(x.score) AS total FROM scores x JOIN students s ON s.student_id = x.student_id " +
+        "JOIN courses c ON c.course_id = x.course_id GROUP BY c.course_name ORDER BY c.course_name",
+      "SELECT student_id FROM scores WHERE grade = 'A' UNION SELECT student_id FROM scores WHERE grade = 'F'",
+      "SELECT s.student_id, x.score FROM (SELECT * FROM students WHERE student_id <= 10) s " +
+        "FULL OUTER JOIN (SELECT * FROM scores WHERE course_id = 1) x ON x.student_id = s.student_id"
     ).foreach { sql =>
       val ((df, r), jobs) = withExecJobs(executeOn(sql, school))
       assert(r.rowcount > 0, sql)
       assert(exchanges(df) == 0, s"$sql\n${r.explain}")
-      assert(jobs == 1, s"$sql ran $jobs jobs\n${r.explain}")
+      assert(jobs == 0, s"$sql ran $jobs jobs\n${r.explain}")
+      val expected = spark.sql(sql).collect().toSeq.map(_.toSeq.map(Executor.jsonSafe))
+      if (expected.size <= Executor.DefaultLimit) // else the LIMIT keeps any 100 of them
+        assert(r.rows.map(_.mkString("|")).sorted == expected.map(_.mkString("|")).sorted, sql)
+    }
+  }
+
+  /** A small frame whose plan shuffles (here a plain `spark.sql` frame,
+    * not the one-partition rewrite) is not computed in process:
+    * its RDD has a shuffle dependency, so it runs as jobs, with the rows
+    * `collect()` gives. In a session without adaptive execution nothing
+    * has run the shuffle's map side when the plan's RDD is built. */
+  test("a small frame whose plan shuffles still runs as a job") {
+    school
+    val static = spark.newSession() // a conf of its own, so the shared session's is not written
+    static.conf.set("spark.sql.adaptive.enabled", "false")
+    SchoolFixture.register(static)
+    val sqls = Seq(
+      "SELECT grade, COUNT(*) AS n FROM scores GROUP BY grade ORDER BY grade",
+      "SELECT COUNT(*) AS n, MAX(score) AS top FROM scores WHERE year > 2022",
+      "WITH p AS (SELECT a.student_id AS s1, b.student_id AS s2, COUNT(*) AS c FROM scores a JOIN scores b " +
+        "ON a.course_id = b.course_id AND a.student_id < b.student_id GROUP BY a.student_id, b.student_id), " +
+        "pairs AS (SELECT st1.student_id AS s1, st2.student_id AS s2 FROM students st1 JOIN students st2 " +
+        "ON st1.student_id < st2.student_id AND st1.grade_level <> st2.grade_level) " +
+        "SELECT ROUND(CAST(SUM(COALESCE(p.c, 0)) AS DOUBLE) / COUNT(*), 4) AS v " +
+        "FROM pairs LEFT JOIN p ON p.s1 = pairs.s1 AND p.s2 = pairs.s2")
+    for (session <- Seq(spark, static); sql <- sqls) {
+      val df = session.sql(sql)
+      assert(Executor.inputBytes(df.queryExecution.optimizedPlan) < Executor.SmallInputMaxBytes, sql)
+      val (rows, jobs) = withExecJobs(Executor.collectWithTimeout(session, df, Executor.DefaultTimeoutMs))
+      assert(rows.map(_.toSeq.map(_.toSeq)) == Right(session.sql(sql).collect().toSeq.map(_.toSeq)), sql)
+      assert(jobs > 0, sql)
+      assert(exchanges(df) > 0, sql)
+    }
+  }
+
+  test("an error raised while computing in process answers ExecutionError") {
+    school
+    val (r, jobs) = withExecJobs(
+      Executor.runSql(spark, "SELECT student_id, score / (score - score) AS r FROM scores ORDER BY score_id", school))
+    assert(jobs == 0)
+    r match {
+      case Left(ExecutionError(message)) => assert(message.contains("DIVIDE_BY_ZERO"), message)
+      case other => fail(s"expected an ExecutionError, got $other")
     }
   }
 
