@@ -167,8 +167,7 @@ object Dedup {
    */
   def minhashNearDuplicates(
       df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8, cfg: LshConfig = LshConfig(),
-      groupExact: Boolean = true): DataFrame =
+      threshold: Double = 0.8, cfg: LshConfig = LshConfig()): DataFrame =
     // handle-less convenience: the shared candidate-pair frame
     // materializes via LAZY localCheckpoint, whose blocks belong to the
     // RDD (GC-released), not the session CacheManager — so this overload
@@ -177,7 +176,7 @@ object Dedup {
     // prefer [[minhashNearDuplicatesWithCleanup]] (lineage-preserving
     // persist + explicit release).
     minhashCore(df, idCol, textCol, threshold, cfg,
-      d => d.localCheckpoint(eager = false), groupExact)._1
+      d => d.localCheckpoint(eager = false))._1
 
   /**
    * [[minhashNearDuplicates]] plus a cleanup handle that unpersists the
@@ -191,11 +190,10 @@ object Dedup {
    */
   def minhashNearDuplicatesWithCleanup(
       df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8, cfg: LshConfig = LshConfig(),
-      groupExact: Boolean = true): (DataFrame, () => Unit) = {
+      threshold: Double = 0.8, cfg: LshConfig = LshConfig()): (DataFrame, () => Unit) = {
     import org.apache.spark.storage.StorageLevel
     minhashCore(df, idCol, textCol, threshold, cfg,
-      d => d.persist(StorageLevel.MEMORY_AND_DISK), groupExact)
+      d => d.persist(StorageLevel.MEMORY_AND_DISK))
   }
 
   /**
@@ -210,9 +208,9 @@ object Dedup {
    * either. Result-identical to the text form: MinHash is
    * duplicate-invariant, so distinct arrays band exactly like raw
    * shingles, and the verify side always used the distinct arrays
-   * (banding/cap/verify code is SHARED with the text form via
-   * [[pairsFromBuckets]]/[[verifyByShingles]], so the two cannot
-   * drift).
+   * (the verify code is SHARED with the text form via
+   * [[verifyByShingles]]; banding and the cap are per row, as in
+   * [[minhashNearDuplicatesUngrouped]], via [[pairsFromBuckets]]).
    */
   def minhashNearDuplicatesPreShingled(
       df: DataFrame, idCol: String, shCol: String,
@@ -228,12 +226,13 @@ object Dedup {
       .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
     val sh = df.join(candIds, df(idCol) === candIds("id"), "left_semi")
       .select(col(idCol).as("id"), col(shCol).as("sh"))
-    verifyByShingles(pairs, sh, threshold)
+    verifyByShingles(pairs, sh, sh, threshold)
   }
 
   /** Bucket-capped candidate pairs from a (doc_id, band, bucket) frame —
     * the single implementation of the bucket-size cap and in-bucket pair
-    * explosion, shared by the text and pre-shingled entry points. */
+    * explosion, shared by the pre-shingled entry point and the
+    * ungrouped reference. */
   private def pairsFromBuckets(b: DataFrame, cfg: LshConfig): DataFrame =
     b.groupBy("band", "bucket")
       .agg(collect_list("doc_id").as("ids"), count(lit(1)).as("n"))
@@ -243,17 +242,17 @@ object Dedup {
       .where(col("id_a") < col("id_b"))
       .distinct()
 
-  /** Exact-Jaccard verification of candidate pairs against a
-    * (id, sh: array<string>) distinct-shingle frame — the single
-    * implementation of the size-ratio prefilter and the intersection
-    * check, shared by the text and pre-shingled entry points.
+  /** Exact-Jaccard verification of (id_a, id_b) candidate pairs against
+    * the two sides' (id, sh: array<string>) distinct-shingle frames —
+    * the single implementation of the size-ratio prefilter and the
+    * intersection check, shared by every LSH entry point.
     * Length filter: J >= t needs size ratio >= t (see ngramJaccardPairs)
     * — skip the exact intersection for candidates that cannot pass. */
-  private def verifyByShingles(pairs: DataFrame, sh: DataFrame,
+  private def verifyByShingles(pairs: DataFrame, shA: DataFrame, shB: DataFrame,
       threshold: Double): DataFrame =
     pairs
-      .join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-      .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
+      .join(shA.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
+      .join(shB.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
       .where(size(col("sh_a")) >= size(col("sh_b")) * threshold &&
         size(col("sh_b")) >= size(col("sh_a")) * threshold)
       .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
@@ -262,96 +261,48 @@ object Dedup {
       .where(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
 
-  /** Shared LSH-verify pipeline; `share` decides how the reused
-    * candidate-pair frame materializes (persist vs lazy localCheckpoint —
-    * see the two public entry points).
-    *
-    * `groupExact` (r19, guide §8 — the [[ngramJaccardPairs]] analysis
-    * applied to LSH): verbatim duplicates share their whole signature,
-    * so every copy hashes, bands, pairs and verifies redundantly. When
-    * true (default), identical texts collapse to one GROUP row before
-    * the signature (one text-keyed exchange): hashing/banding runs once
-    * per distinct text, the bucket cap compares Σ group sizes (the same
-    * member count the ungrouped bucket carried), candidate pairs and
-    * the exact-Jaccard verify run at group grain (identical texts ⇒
-    * identical shingle sets ⇒ identical jaccard for every member pair),
-    * and verified group pairs expand back to member pairs at the end —
-    * result-identical (differential-pinned in DedupNgramSpec).
-    * Callers whose input is ALREADY exact-deduped (Pipelines.dedupCorpus
-    * runs after [[dedupExact]]) pass false: every group would be a
-    * singleton and the grouping exchange pure overhead. */
+  /** Shared LSH-verify pipeline over [[ExactGroups]]; `share` decides
+    * how the reused candidate-pair frame materializes (persist vs lazy
+    * localCheckpoint — see the two public entry points). The bucket cap
+    * compares Σ group sizes, and both the candidate pairs (shared:
+    * ≈ dup-rate × corpus, so the verify side does not re-run the LSH
+    * pipeline) and the exact-Jaccard verify are at group grain. */
   private def minhashCore(
       df: DataFrame, idCol: String, textCol: String,
       threshold: Double, cfg: LshConfig,
-      share: DataFrame => DataFrame,
-      groupExact: Boolean = true): (DataFrame, () => Unit) = {
-    if (groupExact) return minhashCoreGrouped(df, idCol, textCol, threshold, cfg, share)
-    // candidate pairs are shared (tiny: ≈ dup-rate × corpus) so the
-    // member id set below doesn't re-run the LSH pipeline
-    val pairs = share(minhashCandidatePairs(df, idCol, textCol, cfg))
-    // Verify-side shingles are computed for CANDIDATE MEMBERS ONLY: the
-    // semi join runs before the shingle projection, so at corpus scale
-    // the exact-Jaccard check re-tokenizes the (small) candidate set
-    // instead of the whole corpus — twice over.
-    val candIds = pairs
-      .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-    val sh = df.join(candIds, df(idCol) === candIds("id"), "left_semi")
-      .select(col(idCol).as("id"), array_distinct(shingles(col(textCol), cfg.shingleSize)).as("sh"))
-    (verifyByShingles(pairs, sh, threshold),
-      () => { pairs.unpersist(blocking = false); () })
-  }
-
-  /** [[minhashCore]] with exact-duplicate grouping (see its doc). */
-  private def minhashCoreGrouped(
-      df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, cfg: LshConfig,
       share: DataFrame => DataFrame): (DataFrame, () => Unit) = {
-    val groups = df.groupBy(col(textCol).as("__text"))
-      .agg(min(col(idCol)).as("gid"), count(lit(1)).as("g"),
-        collect_list(col(idCol)).as("members"))
-      .localCheckpoint(eager = false)
-    val gb = groups.select(col("gid"), col("g"),
+    val groups = ExactGroups(df, idCol, col(textCol).as("__text"))
+    val gb = groups.frame.select(col("gid"), col("g"),
         graft.functions.minhash_buckets(shingles(col("__text"), cfg.shingleSize),
           cfg.numHashes, cfg.bands, cfg.seed).as("buckets"))
       .where(col("buckets").isNotNull)
       .select(col("gid"), col("g"), posexplode(col("buckets")).as(Seq("band", "bucket")))
-    // bucket-size cap on the TRUE member count (Σg — all members of a
-    // group band identically, so the ungrouped bucket held exactly
-    // these members); pair generation is combinations-with-self
-    // (slice from i+1): (i,i) is the within-group pair, kept only for
-    // groups with ≥2 members
-    val glists = gb.groupBy("band", "bucket")
-      .agg(sort_array(collect_list(struct(col("gid"), col("g")))).as("ps"),
-        sum(col("g")).as("n"))
-      .where(col("n") > 1 && col("n") <= cfg.maxBucketSize)
-    val gpairs = share(glists
-      .select(posexplode(col("ps")).as(Seq("__i", "a")), col("ps"))
-      .select(col("a"),
-        explode(slice(col("ps"), col("__i") + 1, size(col("ps")) - col("__i"))).as("b"))
-      .where(col("a.gid") =!= col("b.gid") || col("a.g") >= 2)
+    val gpairs = share(ExactGroups.pairs(gb, Seq("band", "bucket"), Nil, cfg.maxBucketSize)
       .select(col("a.gid").as("id_a"), col("b.gid").as("id_b"))
       .distinct())
-    // verify at GROUP grain: representative shingle sets only
+    // Verify-side shingles for CANDIDATE groups only: the semi join runs
+    // before the shingle projection, so the exact-Jaccard check
+    // re-tokenizes the (small) candidate set, not the whole corpus
     val candGids = gpairs
       .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-    val gsh = groups.join(candGids, groups("gid") === candGids("id"), "left_semi")
+    val gsh = groups.frame.join(candGids, groups.frame("gid") === candGids("id"), "left_semi")
       .select(col("gid").as("id"),
         array_distinct(shingles(col("__text"), cfg.shingleSize)).as("sh"))
-    val out = verifyByShingles(gpairs, gsh, threshold)
-      // expand verified group pairs to member pairs (canonical id
-      // order; within-group pairs via the `<` filter over the self
-      // cross — the ngramJaccardPairs expansion shape)
-      .join(groups.select(col("gid").as("id_a"), col("members").as("__ms_a")), "id_a")
-      .join(groups.select(col("gid").as("id_b"), col("members").as("__ms_b")), "id_b")
-      .select(col("id_a"), col("id_b"), col("jaccard"),
-        explode(col("__ms_a")).as("__ia"), col("__ms_b"))
-      .select(col("id_a"), col("id_b"), col("jaccard"), col("__ia"),
-        explode(col("__ms_b")).as("__ib"))
-      .where(col("id_a") =!= col("id_b") || col("__ia") < col("__ib"))
-      .select(when(col("__ia") < col("__ib"), col("__ia")).otherwise(col("__ib")).as("id_a"),
-        when(col("__ia") < col("__ib"), col("__ib")).otherwise(col("__ia")).as("id_b"),
-        col("jaccard"))
-    (out, () => { gpairs.unpersist(blocking = false); () })
+    (groups.expandPairs(verifyByShingles(gpairs, gsh, gsh, threshold)),
+      () => { gpairs.unpersist(blocking = false); () })
+  }
+
+  /** The per-row MinHash pipeline, kept as the differential-testing
+    * reference for [[minhashNearDuplicates]]. Not on any query path. */
+  private[graft] def minhashNearDuplicatesUngrouped(
+      df: DataFrame, idCol: String, textCol: String,
+      threshold: Double = 0.8, cfg: LshConfig = LshConfig()): DataFrame = {
+    val pairs = minhashCandidatePairs(df, idCol, textCol, cfg).localCheckpoint(eager = false)
+    val candIds = pairs
+      .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
+    val sh = df.join(candIds, df(idCol) === candIds("id"), "left_semi")
+      .select(col(idCol).as("id"), array_distinct(shingles(col(textCol), cfg.shingleSize)).as("sh"))
+    verifyByShingles(pairs, sh, sh, threshold)
   }
 
   /**
@@ -415,19 +366,11 @@ object Dedup {
     def memberShingles(df: DataFrame, side: String) = {
       val ids = pairs.select(col(side).as("id")).distinct()
       df.join(ids, df(idCol) === ids("id"), "left_semi")
-        .select(col(idCol).as(side),
-          array_distinct(shingles(col(textCol), cfg.shingleSize)).as(s"sh_$side"))
+        .select(col(idCol).as("id"),
+          array_distinct(shingles(col(textCol), cfg.shingleSize)).as("sh"))
     }
-    val out = pairs
-      .join(memberShingles(existing, "id_a"), "id_a")
-      .join(memberShingles(incoming, "id_b"), "id_b")
-      .where(size(col("sh_id_a")) >= size(col("sh_id_b")) * threshold &&
-        size(col("sh_id_b")) >= size(col("sh_id_a")) * threshold)
-      .withColumn("inter", size(array_intersect(col("sh_id_a"), col("sh_id_b"))))
-      .withColumn("uni", size(col("sh_id_a")) + size(col("sh_id_b")) - col("inter"))
-      .withColumn("jaccard", col("inter").cast("double") / col("uni"))
-      .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    val out = verifyByShingles(pairs, memberShingles(existing, "id_a"),
+      memberShingles(incoming, "id_b"), threshold)
     // the candidate cache stays alive while `out` is consumed (it is
     // referenced by three branches of the verify join); the cleanup
     // handle releases it once the caller has materialized the result
@@ -724,58 +667,33 @@ object Dedup {
    * Recall guarantee via pigeonhole banding: split the 64-bit hash into
    * `maxDistance + 1` chunks; any pair within the distance must agree on
    * at least one chunk exactly — bucket-join on (chunk index, chunk value)
-   * then verify with the exact popcount.
-   *
-   * Exact-duplicate grouping (r19): identical texts share their whole
-   * SimHash, so — as in [[ngramJaccardPairs]] and [[minhashCore]] —
-   * they collapse to one group row before hashing/banding; the bucket
-   * cap compares Σ group sizes (the ungrouped bucket's member count),
-   * pairs generate at group grain (combinations incl. the (A,A) self
-   * pair for groups of ≥2, whose Hamming distance is 0 and always
-   * ≤ maxDistance), and verified group pairs expand to member pairs —
-   * result-identical (differential-pinned in DedupNgramSpec).
+   * then verify with the exact popcount. Hashing, banding and the verify
+   * run per [[ExactGroups]] group; a group's (A, A) pair has distance 0.
    */
   def simhashNearDuplicates(
       df: DataFrame, idCol: String, textCol: String,
       maxDistance: Int = 3, seed: Long = 42L, maxBucketSize: Int = 10000): DataFrame = {
+    val groups = ExactGroups(df, idCol, col(textCol).as("__text"))
+    val banded = groups.frame
+      .select(col("gid"), col("g"), simhash64(tokens(col("__text")), seed).as("simhash"))
+      .select(col("gid"), col("g"), col("simhash"), simhashChunks(maxDistance).as("c"))
+      .select(col("gid"), col("g"), col("simhash"), col("c.chunk"), col("c.value"))
+    groups.expandPairs(
+      ExactGroups.pairs(banded, Seq("chunk", "value"), Seq("simhash"), maxBucketSize)
+        .select(col("a.gid").as("gid_a"), col("b.gid").as("gid_b"),
+          hamming64(col("a.simhash"), col("b.simhash")).as("hamming"))
+        .where(col("hamming") <= maxDistance)
+        .distinct())
+  }
+
+  /** One (chunk, value) row per pigeonhole chunk of `simhash`. */
+  private def simhashChunks(maxDistance: Int): Column = {
     val chunks = maxDistance + 1
     val bits = 64 / chunks
-    val groups = df.groupBy(col(textCol).as("__text"))
-      .agg(min(col(idCol)).as("gid"), count(lit(1)).as("g"),
-        collect_list(col(idCol)).as("members"))
-      .localCheckpoint(eager = false)
-    val gsh = groups.select(col("gid"), col("g"),
-      simhash64(tokens(col("__text")), seed).as("simhash"))
-    val bandStructs = (0 until chunks).map { i =>
+    explode(array((0 until chunks).map { i =>
       struct(lit(i).as("chunk"),
         shiftrightunsigned(col("simhash"), i * bits).bitwiseAND(lit((1L << bits) - 1)).as("value"))
-    }
-    val banded = gsh.select(col("gid"), col("g"), col("simhash"),
-        explode(array(bandStructs: _*)).as("c"))
-      .select(col("gid"), col("g"), col("simhash"), col("c.chunk"), col("c.value"))
-    val glists = banded.groupBy("chunk", "value")
-      .agg(sort_array(collect_list(struct(col("gid"), col("simhash"), col("g")))).as("ps"),
-        sum(col("g")).as("n"))
-      .where(col("n") > 1 && col("n") <= maxBucketSize)
-    glists
-      .select(posexplode(col("ps")).as(Seq("__i", "a")), col("ps"))
-      .select(col("a"),
-        explode(slice(col("ps"), col("__i") + 1, size(col("ps")) - col("__i"))).as("b"))
-      .where(col("a.gid") =!= col("b.gid") || col("a.g") >= 2)
-      .select(col("a.gid").as("gid_a"), col("b.gid").as("gid_b"),
-        hamming64(col("a.simhash"), col("b.simhash")).as("hamming"))
-      .where(col("hamming") <= maxDistance)
-      .distinct()
-      .join(groups.select(col("gid").as("gid_a"), col("members").as("__ms_a")), "gid_a")
-      .join(groups.select(col("gid").as("gid_b"), col("members").as("__ms_b")), "gid_b")
-      .select(col("gid_a"), col("gid_b"), col("hamming"),
-        explode(col("__ms_a")).as("__ia"), col("__ms_b"))
-      .select(col("gid_a"), col("gid_b"), col("hamming"), col("__ia"),
-        explode(col("__ms_b")).as("__ib"))
-      .where(col("gid_a") =!= col("gid_b") || col("__ia") < col("__ib"))
-      .select(when(col("__ia") < col("__ib"), col("__ia")).otherwise(col("__ib")).as("id_a"),
-        when(col("__ia") < col("__ib"), col("__ib")).otherwise(col("__ia")).as("id_b"),
-        col("hamming"))
+    }: _*))
   }
 
   /** The pre-r19 UNGROUPED simhash pair pipeline, kept as the
@@ -784,15 +702,8 @@ object Dedup {
   private[graft] def simhashNearDuplicatesUngrouped(
       df: DataFrame, idCol: String, textCol: String,
       maxDistance: Int = 3, seed: Long = 42L, maxBucketSize: Int = 10000): DataFrame = {
-    val chunks = maxDistance + 1
-    val bits = 64 / chunks
-    val sh = withSimhash(df, idCol, textCol, seed)
-    val bandStructs = (0 until chunks).map { i =>
-      struct(lit(i).as("chunk"),
-        shiftrightunsigned(col("simhash"), i * bits).bitwiseAND(lit((1L << bits) - 1)).as("value"))
-    }
-    val banded = sh.select(col("doc_id"), col("simhash"),
-        explode(array(bandStructs: _*)).as("c"))
+    val banded = withSimhash(df, idCol, textCol, seed)
+      .select(col("doc_id"), col("simhash"), simhashChunks(maxDistance).as("c"))
       .select(col("doc_id"), col("simhash"), col("c.chunk"), col("c.value"))
     val grouped = banded.groupBy("chunk", "value")
       .agg(collect_list(struct(col("doc_id"), col("simhash"))).as("members"), count(lit(1)).as("n"))
@@ -814,50 +725,18 @@ object Dedup {
    * via an inverted shingle index (explode → self-join on shingle →
    * per-pair intersection counts). Quadratic only within shingle groups;
    * `maxPostings` caps degenerate shingles (stop-shingles) the same way
-   * a text index drops stop words.
+   * a text index drops stop words, on the member count Σg of each list.
    *
-   * ==Exact-duplicate grouping (r19 optimization, guide §8)==
-   * Verbatim duplicates — the dominant redundancy in any crawl, and
-   * exactly what the 10× force fixture replicates — share their entire
-   * shingle set, so every copy pays the full quadratic pair cost for
-   * information one representative already carries. The kernel now
-   * collapses identical texts to one GROUP row before the inverted
-   * index (one text-keyed exchange, the same shape [[dedupExact]]
-   * ships), runs the posting/pair/intersection stages at group grain,
-   * and expands the verified group pairs back to member pairs at the
-   * very end. Result-IDENTICAL to the ungrouped kernel (differential-
-   * pinned in DedupNgramSpec, incl. cap-engaging and null-id cases):
-   *  - the cap condition compares the TRUE member count (Σ group
-   *    sizes per shingle) against `maxPostings`, the same number the
-   *    ungrouped posting-list length carried;
-   *  - members of one group have identical shingle sets, so every
-   *    member pair of a group pair shares the same (inter, na, nb)
-   *    and therefore the same jaccard — including within-group pairs,
-   *    whose jaccard falls below 1.0 exactly when capped lists drop
-   *    shared shingles, which the (A,A) self-pair reproduces;
-   *  - null ids never emit pairs (old: `a.id < b.id` is null-false;
-   *    new: `min`/`collect_list` skip nulls) while still occupying
-   *    cap slots (`count(*)` counts them) — both sides agree.
-   * Measured (ProbeR19Ngram, interleaved min-of-3): 10× force fixture
-   * 11.4s → 1.1s (the intersection aggregation shrinks ~replication²:
-   * Σk² 279M → group-grain); sf0.1 pays ~+0.3s of extra stages
-   * (text groupBy + two member joins) — the fixture-scale price of
-   * the at-scale shape, same tradeoff as the r18 feed-derived replay
-   * partitions.
+   * The index and the intersection counts are at [[ExactGroups]] grain.
+   * A capped list drops a shingle for every member of a group, so a
+   * within-group pair's jaccard falls below 1.0 exactly when the
+   * ungrouped kernel's does, and the (A, A) pair reproduces it.
    */
   def ngramJaccardPairs(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.5, maxPostings: Int = 500): DataFrame = {
-    // one row per DISTINCT text: representative id (min), member count,
-    // member ids. Lazy localCheckpoint: the frame feeds both the
-    // posting pipeline and the final member expansion — RDD-owned
-    // blocks, no session cache entry (the minhashNearDuplicates
-    // discipline).
-    val groups = df.groupBy(col(textCol).as("__text"))
-      .agg(min(col(idCol)).as("gid"), count(lit(1)).as("g"),
-        collect_list(col(idCol)).as("members"))
-      .localCheckpoint(eager = false)
-    val gsh = groups.select(col("gid"), col("g"),
+    val groups = ExactGroups(df, idCol, col(textCol).as("__text"))
+    val gsh = groups.frame.select(col("gid"), col("g"),
         array_distinct(shingles(col("__text"), n)).as("sh"))
       .withColumn("n_sh", size(col("sh")))
     // One shuffle: group the inverted index by shingle, cap the posting
@@ -871,46 +750,21 @@ object Dedup {
     // per corpus; pass a wider custom hash here before going past that.
     val postings = gsh.select(col("gid"), col("g"), col("n_sh"), explode(col("sh")).as("__shingle"))
       .select(col("gid"), col("g"), col("n_sh"), xxhash64(col("__shingle")).as("shingle"))
-    val lists = postings.groupBy("shingle")
-      .agg(sort_array(collect_list(struct(col("gid"), col("n_sh"), col("g")))).as("ps"),
-        sum(col("g")).as("n_members"))
-      .where(col("n_members").between(2, maxPostings))
-    lists
-      // unordered combinations, not the k² cross product: posexplode
-      // positions each entry; pairing with the slice FROM ITSELF
-      // onward emits k(k+1)/2 rows — (i,i) is the within-group pair,
-      // kept only when the group has ≥2 members; sort_array makes
-      // gid_a ≤ gid_b hold by construction (gids are unique per list)
-      .select(posexplode(col("ps")).as(Seq("__i", "a")), col("ps"))
-      .select(col("a"),
-        explode(slice(col("ps"), col("__i") + 1, size(col("ps")) - col("__i"))).as("b"))
-      // Length filter (guaranteed-safe prune, not a heuristic): with
-      // na <= nb, J <= |A∩B|/nb <= na/nb, so J >= t forces
-      // t*nb <= na (and symmetrically t*na <= nb). Pairs with
-      // mismatched shingle-set sizes drop BEFORE the intersection
-      // count aggregation ever sees them.
-      .where((col("a.gid") =!= col("b.gid") || col("a.g") >= 2) &&
-        col("a.n_sh") >= col("b.n_sh") * threshold &&
-        col("b.n_sh") >= col("a.n_sh") * threshold)
-      .groupBy(col("a.gid").as("gid_a"), col("b.gid").as("gid_b"),
-        col("a.n_sh").as("na"), col("b.n_sh").as("nb"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard", col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
-      .where(col("jaccard") >= threshold)
-      // expand verified GROUP pairs to member pairs: cross-group pairs
-      // emit each unordered member pair once (canonical id order via
-      // when/otherwise); within-group (gid_a = gid_b) pairs emit the
-      // member combinations via the `<` filter over the self cross
-      .join(groups.select(col("gid").as("gid_a"), col("members").as("__ms_a")), "gid_a")
-      .join(groups.select(col("gid").as("gid_b"), col("members").as("__ms_b")), "gid_b")
-      .select(col("gid_a"), col("gid_b"), col("jaccard"),
-        explode(col("__ms_a")).as("__ia"), col("__ms_b"))
-      .select(col("gid_a"), col("gid_b"), col("jaccard"), col("__ia"),
-        explode(col("__ms_b")).as("__ib"))
-      .where(col("gid_a") =!= col("gid_b") || col("__ia") < col("__ib"))
-      .select(when(col("__ia") < col("__ib"), col("__ia")).otherwise(col("__ib")).as("id_a"),
-        when(col("__ia") < col("__ib"), col("__ib")).otherwise(col("__ia")).as("id_b"),
-        col("jaccard"))
+    // Length filter (guaranteed-safe prune, not a heuristic): with
+    // na <= nb, J <= |A∩B|/nb <= na/nb, so J >= t forces
+    // t*nb <= na (and symmetrically t*na <= nb). Pairs with
+    // mismatched shingle-set sizes drop BEFORE the intersection
+    // count aggregation ever sees them.
+    groups.expandPairs(
+      ExactGroups.pairs(postings, Seq("shingle"), Seq("n_sh"), maxPostings,
+          col("a.n_sh") >= col("b.n_sh") * threshold,
+          col("b.n_sh") >= col("a.n_sh") * threshold)
+        .groupBy(col("a.gid").as("gid_a"), col("b.gid").as("gid_b"),
+          col("a.n_sh").as("na"), col("b.n_sh").as("nb"))
+        .agg(count(lit(1)).as("inter"))
+        .withColumn("jaccard", col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
+        .where(col("jaccard") >= threshold)
+        .select("gid_a", "gid_b", "jaccard"))
   }
 
   /** The pre-r19 UNGROUPED kernel, kept as the differential-testing

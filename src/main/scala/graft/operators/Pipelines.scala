@@ -40,12 +40,11 @@ object Pipelines {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val afterExact = exact.count()
 
+    // `exact`'s analyzed plan has the text as a distinct key, so the
+    // LSH kernel's exact-duplicate grouping is a narrow projection here
+    // (no second text-keyed exchange; see ExactGroups)
     val (pairs, releasePairs) =
-      // groupExact = false: `exact` is the dedupExact output, so every
-      // text is unique by construction — the r19 duplicate-grouping
-      // exchange would only build singleton groups
-      Dedup.minhashNearDuplicatesWithCleanup(exact, idCol, textCol, nearThreshold, cfg,
-        groupExact = false)
+      Dedup.minhashNearDuplicatesWithCleanup(exact, idCol, textCol, nearThreshold, cfg)
     // drop the larger id of every near-dup pair; a doc surviving means no
     // pair names it as the larger member
     val losers = pairs.select(col("id_b").as(idCol)).distinct()

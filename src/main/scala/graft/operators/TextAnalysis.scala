@@ -219,30 +219,19 @@ object TextAnalysis {
    * Output: (idCol, n_bigrams, avg_logp, perplexity).
    */
   def bigramPerplexity(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // Exact-duplicate grouping (r19, the Dedup-kernel analysis applied
-    // to the LM family): identical texts contribute identical bigram
-    // multisets, so the corpus explodes ONCE PER DISTINCT TEXT with the
-    // LM counts weighted by group size (a bigram occurring c times in a
-    // text adds c·g, exactly the c-per-copy the ungrouped explode
-    // added), and the per-document score — a function of the text and
-    // the corpus LM only — computes per group and expands to members.
-    // Differential-pinned in DedupNgramSpec.
-    val groups = df.groupBy(col(textCol).as("__text"))
-      .agg(min(col(idCol)).as("gid"), count(lit(1)).as("g"),
-        collect_list(col(idCol)).as("members"))
-      .localCheckpoint(eager = false)
-    val gBigrams = groups.where(size(Dedup.tokens(col("__text"))) >= 2)
+    // Per [[ExactGroups]] group: a bigram occurring c times in a text
+    // adds c·g to the LM counts, the c per copy the per-row explode adds
+    val groups = ExactGroups(df, idCol, col(textCol).as("__text"))
+    val gBigrams = groups.frame.where(size(Dedup.tokens(col("__text"))) >= 2)
       .select(col("gid"), col("g"), explode(Dedup.shingles(col("__text"), 2)).as("bigram"))
     val counts = gBigrams.groupBy("bigram").agg(sum(col("g")).as("n"))
       .withColumn("w1", split(col("bigram"), " ").getItem(0))
     val ctx = counts.groupBy("w1").agg(sum("n").as("ctx_n"))
     val lm = counts.join(ctx, "w1")
       .select(col("bigram"), (col("n").cast("double") / col("ctx_n")).as("p"))
-    gBigrams.join(lm, "bigram")
-      .groupBy("gid")
-      .agg(count(lit(1)).as("n_bigrams"), avg(log(col("p"))).as("__alp"))
-      .join(groups.select(col("gid"), col("members")), "gid")
-      .select(explode(col("members")).as(idCol), col("n_bigrams"), col("__alp"))
+    groups.expandScores(gBigrams.join(lm, "bigram")
+        .groupBy("gid")
+        .agg(count(lit(1)).as("n_bigrams"), avg(log(col("p"))).as("__alp")), idCol)
       .select(col(idCol), col("n_bigrams"),
         round(col("__alp"), 4).as("avg_logp"),
         round(exp(-col("__alp")), 4).as("perplexity"))
@@ -437,22 +426,15 @@ object TextAnalysis {
    */
   def crossEntropyDiff(raw: DataFrame, target: DataFrame, idCol: String,
       textCol: String, smoothing: Double = 1.0): DataFrame = {
-    // Exact-duplicate grouping (r19, the bigramPerplexity analysis):
-    // both LMs are count models, so identical texts contribute
-    // g-weighted counts (exact integer equality with the per-copy
-    // explode), and the per-document score — a function of the text
-    // and the two LMs only — computes once per distinct raw text and
-    // expands to members. Differential-pinned in DedupNgramSpec.
-    val groups = raw.groupBy(col(textCol).as("__text"))
-      .agg(min(col(idCol)).as("gid"), count(lit(1L)).as("g"),
-        collect_list(col(idCol)).as("members"))
-      .localCheckpoint(eager = false)
-    val gToks = groups
+    // Both LMs are count models: per [[ExactGroups]] group, a text's
+    // tokens count g times, exactly the per-copy explode's counts
+    val groups = ExactGroups(raw, idCol, col(textCol).as("__text"))
+    val gToks = groups.frame
       .select(col("gid"), col("g"),
         explode(split(lower(trim(col("__text"))), "\\s+")).as("token"))
       .where(length(col("token")) > 0)
     val cr = gToks.groupBy("token").agg(sum(col("g")).as("c_r"))
-    val ct = target.groupBy(col(textCol).as("__t")).agg(count(lit(1L)).as("g"))
+    val ct = ExactGroups.counts(target, col(textCol).as("__t"))
       .select(col("g"), explode(split(lower(trim(col("__t"))), "\\s+")).as("token"))
       .where(length(col("token")) > 0)
       .groupBy("token").agg(sum(col("g")).as("c_t"))
@@ -466,11 +448,9 @@ object TextAnalysis {
       (log((col("c_t") + smoothing) / (col("t_t") + lit(smoothing) * col("v"))) -
         log((col("c_r") + smoothing) / (col("t_r") + lit(smoothing) * col("v"))))
         .as("log_ratio"))
-    gToks.join(scored, Seq("token"))
-      .groupBy(col("gid"))
-      .agg(count(lit(1L)).as("n_tokens"), avg(col("log_ratio")).as("__ce"))
-      .join(groups.select(col("gid"), col("members")), "gid")
-      .select(explode(col("members")).as(idCol), col("n_tokens"), col("__ce"))
+    groups.expandScores(gToks.join(scored, Seq("token"))
+        .groupBy(col("gid"))
+        .agg(count(lit(1L)).as("n_tokens"), avg(col("log_ratio")).as("__ce")), idCol)
       .select(col(idCol), col("n_tokens"),
         // + 0.0 normalizes IEEE negative zero (a tiny negative average
         // rounds to -0.0 in one engine and +0.0 in the other — equal
@@ -723,18 +703,12 @@ object TextAnalysis {
     // corpus forces anyway; the driver math is the same IEEE
     // expression tree the SQL form evaluates.
     //
-    // Exact-duplicate grouping (r19): both passes now run once per
-    // DISTINCT (text, filter-value) — the filter value joins the group
-    // key so text-identical rows with different target labels never
-    // merge — with the fit counts weighted by group size (c·g ≡ c per
-    // copy) and the per-document score (text + model only) expanded to
-    // members. Differential-pinned in DedupNgramSpec.
-    val groups = raw.groupBy(col(textCol).as("__text"), targetFilter.as("__is_t"))
-      .agg(min(col(idCol)).as("gid"), count(lit(1L)).as("g"),
-        collect_list(col(idCol)).as("members"))
-      .localCheckpoint(eager = false)
+    // Both passes run per [[ExactGroups]] group of (text, filter value):
+    // the filter value is in the key so text-identical rows with
+    // different target labels never merge, and fit counts weight by g.
+    val groups = ExactGroups(raw, idCol, col(textCol).as("__text"), targetFilter.as("__is_t"))
     import graft.functions.word_shingles
-    val gInst = groups.select(col("gid"), col("g"), col("__is_t"), explode(concat(
+    val gInst = groups.frame.select(col("gid"), col("g"), col("__is_t"), explode(concat(
         coalesce(word_shingles(col("__text"), 1), array()),
         coalesce(word_shingles(col("__text"), 2), array()))).as("__ngram"))
       .select(col("gid"), col("g"), col("__is_t"),
@@ -747,13 +721,11 @@ object TextAnalysis {
       val b = r.getAs[Int]("bucket"); cR(b) = r.getAs[Long]("c_r"); cT(b) = r.getAs[Long]("c_t")
     }
     val logRatio = dsirLogRatios(cR, cT, smoothing)
-    gInst
-      .select(col("gid"),
-        element_at(typedLit(logRatio.toSeq), col("bucket") + 1).as("log_ratio"))
-      .groupBy(col("gid"))
-      .agg(count(lit(1L)).as("n_feats"), sum(col("log_ratio")).as("__s"))
-      .join(groups.select(col("gid"), col("members")), "gid")
-      .select(explode(col("members")).as(idCol), col("n_feats"), col("__s"))
+    groups.expandScores(gInst
+        .select(col("gid"),
+          element_at(typedLit(logRatio.toSeq), col("bucket") + 1).as("log_ratio"))
+        .groupBy(col("gid"))
+        .agg(count(lit(1L)).as("n_feats"), sum(col("log_ratio")).as("__s")), idCol)
       .select(col(idCol), col("n_feats"),
         (round(col("__s"), 6) + lit(0.0)).as("dsir_logw"),
         (round(col("__s") / col("n_feats"), 6) + lit(0.0)).as("avg_logw"),

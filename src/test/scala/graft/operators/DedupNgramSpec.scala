@@ -111,8 +111,7 @@ class DedupNgramSpec extends SparkSpec {
     for ((df, id) <- Seq((dupCorpus, "id"),
         (spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id"))) {
       val a = Dedup.minhashNearDuplicates(df, id, "text", threshold = 0.5)
-      val b = Dedup.minhashNearDuplicates(df, id, "text", threshold = 0.5,
-        cfg = Dedup.LshConfig(), groupExact = false)
+      val b = Dedup.minhashNearDuplicatesUngrouped(df, id, "text", threshold = 0.5)
       assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
         s"minhash grouped diverged on $id corpus")
     }
@@ -124,8 +123,7 @@ class DedupNgramSpec extends SparkSpec {
     val df = (1L to 5L).map(i => (i, "aa bb cc dd ee ff gg")).toDF("id", "text")
     val cfg = Dedup.LshConfig(maxBucketSize = 4)
     assert(Dedup.minhashNearDuplicates(df, "id", "text", 0.5, cfg).count() == 0)
-    assert(Dedup.minhashNearDuplicates(df, "id", "text", 0.5, cfg,
-      groupExact = false).count() == 0)
+    assert(Dedup.minhashNearDuplicatesUngrouped(df, "id", "text", 0.5, cfg).count() == 0)
   }
 
   test("simhash: grouped ≡ ungrouped on a duplicate-heavy corpus and the fixture") {
@@ -175,5 +173,92 @@ class DedupNgramSpec extends SparkSpec {
     val c = TextAnalysis.dsirWeightsWhere(fixture, col("lang") === "en", "doc_id", "text")
     val d = TextAnalysis.dsirWeightsWhereUngrouped(fixture, col("lang") === "en", "doc_id", "text")
     assert(c.exceptAll(d).count() == 0 && d.exceptAll(c).count() == 0)
+  }
+
+  // ---- shared ExactGroups step: repeated ids and distinct-text inputs ----
+
+  /** Multiset equality on collected rows: `exceptAll` over a
+    * `dropDuplicates` input fails to bind in Spark 4.1.2's optimizer
+    * (the rewritten `Deduplicate` aggregate loses an attribute the
+    * `replicaterows` generator still references). */
+  private def assertSameRows(a: DataFrame, b: DataFrame, what: String): Unit = {
+    val (ra, rb) = (a.collect().map(_.toString).sorted.toSeq, b.collect().map(_.toString).sorted.toSeq)
+    assert(ra == rb, s"$what diverged: grouped=$ra reference=$rb")
+  }
+
+  test("an id on two near-identical texts never pairs with itself") {
+    // id 7 carries both texts; 5 shares the longer one, so the group
+    // pair of the two texts expands [5, 7] × [7]
+    val words = (1 to 30).map(i => s"w$i").mkString(" ")
+    val df = Seq((5L, s"$words extra"), (7L, s"$words extra"), (7L, words),
+      (9L, "unrelated words that share nothing with the rest at all"))
+      .toDF("id", "text")
+    val kernels = Seq(
+      "ngram" -> (Dedup.ngramJaccardPairs(df, "id", "text", 2, 0.5),
+        Dedup.ngramJaccardPairsUngrouped(df, "id", "text", 2, 0.5)),
+      "minhash" -> (Dedup.minhashNearDuplicates(df, "id", "text", 0.5),
+        Dedup.minhashNearDuplicatesUngrouped(df, "id", "text", 0.5)),
+      "simhash" -> (Dedup.simhashNearDuplicates(df, "id", "text", maxDistance = 7),
+        Dedup.simhashNearDuplicatesUngrouped(df, "id", "text", maxDistance = 7)))
+    for ((name, (grouped, reference)) <- kernels) {
+      val ids = grouped.collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(!ids.contains((7L, 7L)), s"$name emitted (7, 7)")
+      assert(ids.toSet == Set((5L, 7L)), s"$name: ${ids.toSeq}")
+      assertSameRows(grouped, reference, name)
+    }
+  }
+
+  /** Whether `out`'s optimized plan groups on the text beyond its input:
+    * an aggregate keyed on `text` other than `dropDuplicates`' own
+    * (first-value) one, or a checkpointed group frame. */
+  private def groupsText(out: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, First}
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.execution.LogicalRDD
+    out.queryExecution.optimizedPlan.exists {
+      case a: Aggregate =>
+        a.groupingExpressions.exists(_.references.exists(_.name == "text")) &&
+          a.aggregateExpressions.exists(_.exists {
+            case _: First => false
+            case _: AggregateFunction => true
+            case _ => false
+          })
+      case r: LogicalRDD => r.output.exists(_.name == "__text")
+      case _ => false
+    }
+  }
+
+  test("distinct-text inputs skip the grouping and match every reference") {
+    val raw = dupCorpus.union(Seq(
+      (null.asInstanceOf[java.lang.Long], "alpha beta gamma delta epsilon theta"),
+      (null.asInstanceOf[java.lang.Long], "a lone document with a null id"))
+      .toDF("id", "text"))
+    val persisted = Dedup.dedupExact(raw, "id", Seq("text")).persist()
+    val dropped = raw.dropDuplicates("text")
+    try {
+      assert(groupsText(Dedup.ngramJaccardPairs(raw, "id", "text")),
+        "a table-like input must still be grouped")
+      for ((shape, in) <- Seq("dedupExact" -> persisted, "dropDuplicates" -> dropped)) {
+        assert(in.where(col("id").isNull).count() == 2)
+        val tgt = in.where(col("id") % 2 === 0)
+        val kernels = Seq(
+          "ngram" -> (Dedup.ngramJaccardPairs(in, "id", "text", 2, 0.5),
+            Dedup.ngramJaccardPairsUngrouped(in, "id", "text", 2, 0.5)),
+          "minhash" -> (Dedup.minhashNearDuplicates(in, "id", "text", 0.5),
+            Dedup.minhashNearDuplicatesUngrouped(in, "id", "text", 0.5)),
+          "simhash" -> (Dedup.simhashNearDuplicates(in, "id", "text", maxDistance = 5),
+            Dedup.simhashNearDuplicatesUngrouped(in, "id", "text", maxDistance = 5)),
+          "perplexity" -> (TextAnalysis.bigramPerplexity(in, "id", "text"),
+            TextAnalysis.bigramPerplexityUngrouped(in, "id", "text")),
+          "crossEntropyDiff" -> (TextAnalysis.crossEntropyDiff(in, tgt, "id", "text"),
+            TextAnalysis.crossEntropyDiffUngrouped(in, tgt, "id", "text")),
+          "dsir" -> (TextAnalysis.dsirWeightsWhere(in, col("id") % 2 === 0, "id", "text", 64),
+            TextAnalysis.dsirWeightsWhereUngrouped(in, col("id") % 2 === 0, "id", "text", 64)))
+        for ((name, (out, reference)) <- kernels) {
+          assert(!groupsText(out), s"$name on $shape output grouped the text again")
+          assertSameRows(out, reference, s"$name on $shape")
+        }
+      }
+    } finally persisted.unpersist()
   }
 }

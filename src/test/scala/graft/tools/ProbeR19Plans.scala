@@ -129,8 +129,7 @@ object ProbeR19Plans {
     // ---- minhash / simhash grouping: before = ungrouped kernels in
     // the declared compositions ----
     dump("x_dedup_minhash_before", {
-      val (p, _) = Dedup.minhashNearDuplicatesWithCleanup(
-        docs, "doc_id", "text", threshold = 0.7, Dedup.LshConfig(), groupExact = false)
+      val p = Dedup.minhashNearDuplicatesUngrouped(docs, "doc_id", "text", threshold = 0.7)
       p.select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
         .orderBy("id_a", "id_b").limit(100)
     })
