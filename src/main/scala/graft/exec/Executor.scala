@@ -8,8 +8,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.InnerLike
-import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, Join, JoinHint, LeafNode, LocalRelation,
-  LogicalPlan, OneRowRelation, Repartition, SHUFFLE_HASH, SHUFFLE_REPLICATE_NL}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, HintInfo, Join, JoinHint, LeafNode, LogicalPlan,
+  Project, Repartition, SHUFFLE_HASH, SHUFFLE_REPLICATE_NL}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.graft.{interop, localTask}
 import org.apache.spark.sql.internal.SQLConf
@@ -27,30 +27,33 @@ import graft.safety.Validator.Validated
  * hard ceiling `maxRows` 500 — ref README.md:113-118). The cost gate reads
  * optimizer statistics off the already-built plan — no extra cluster
  * round-trip (unlike the reference's separate EXPLAIN connection).
- * A query whose estimated input (the summed leaf `sizeInBytes` of that
- * same optimized plan, subquery plans included) is below
- * [[SmallInputMaxBytes]] runs interpreted, in one partition and in
- * process, for that one execution only. Interpreted: whole-stage codegen
- * off and interpreted expression factories, because compiling a query's
- * generated classes with Janino costs more than it saves when the query
- * reads a few thousand rows, and a fresh question compiles all of its
- * own. One partition: every leaf and join sits behind a narrow coalesce
- * and joins are hinted not to broadcast ([[onePartition]]), so the
- * planner inserts no exchange, where scheduling the jobs of a shuffle, a
- * range-partition sample or a broadcast would cost more than the rows.
- * In process: such a plan's RDD is one partition whose dependencies are
- * narrow all the way down, and that partition is computed in this process
- * as a task of its own, with no Spark job ([[collectSmall]]), since a
- * job's fixed cost (scheduling, closure cleaning, task set-up) is most of
- * a small answer's time. What still needs a job runs one: an
- * uncorrelated scalar subquery (its own job), and a join the optimizer
- * makes itself (the semi or anti join of EXISTS, IN or EXCEPT, a
- * correlated scalar subquery's join), which carries no hint and
- * broadcasts. The narrow-lineage guard is a correctness rule, not a
- * tuning one: a shuffle's map side runs only as a stage the scheduler
- * runs first, and a plan that shuffles, computed in process where nothing
- * had run that stage, returned wrong rows with no error. Larger inputs
- * keep the compiled, partitioned path and its jobs.
+ * The validated query is analysed and optimized once, for the read-only
+ * guard and the cost gate. A query whose estimated input (the summed leaf
+ * `sizeInBytes` of that optimized plan, subquery plans included) is below
+ * [[SmallInputMaxBytes]] then runs that optimized plan rewritten to one
+ * partition ([[onePartition]]), planned once without adaptive execution
+ * ([[interop.planned]]: with no exchange there is no stage to re-plan),
+ * interpreted and in process, for that one execution only. One partition:
+ * every scan and join, the joins the optimizer made from IN, EXISTS,
+ * EXCEPT or a correlated scalar subquery included, sits behind a narrow
+ * coalesce and joins are hinted not to broadcast, so the planner inserts
+ * no exchange, where scheduling the jobs of a shuffle, a range-partition
+ * sample or a broadcast would cost more than the rows. Interpreted:
+ * whole-stage codegen off and interpreted expression factories, because
+ * compiling a query's generated classes with Janino costs more than it
+ * saves when the query reads a few thousand rows, and a fresh question
+ * compiles all of its own. In process: such a plan's RDD is one partition
+ * whose dependencies are narrow all the way down, and that partition is
+ * computed in this process as a task of its own, with no Spark job
+ * ([[collectSmall]]), since a job's fixed cost (scheduling, closure
+ * cleaning, task set-up) is most of a small answer's time. What still
+ * needs a job runs one: an uncorrelated scalar subquery (its own job), and
+ * an outer or anti join with no equality, whose only plans broadcast. The
+ * narrow-lineage guard is a correctness rule, not a tuning one: a
+ * shuffle's map side runs only as a stage the scheduler runs first, and a
+ * plan that shuffles, computed in process where nothing had run that
+ * stage, returned wrong rows with no error. Larger inputs keep the
+ * session's compiled, partitioned, adaptive plan and its jobs.
  */
 object Executor {
 
@@ -123,50 +126,56 @@ object Executor {
   private val ShuffleHash = Some(HintInfo(strategy = Some(SHUFFLE_HASH)))
   private val ReplicateNl = Some(HintInfo(strategy = Some(SHUFFLE_REPLICATE_NL)))
 
-  /** The frame a small input runs as: the validated query's analyzed plan
-    * with every leaf and every join, subquery plans included, behind a
-    * narrow coalesce to one partition (`Repartition(1, shuffle = false)`,
-    * no shuffle). A child in one partition satisfies every distribution
-    * that a sort, an aggregate, a window or a join requires, so the planner
-    * inserts no exchange. A join's own output is not one partition to the
-    * planner (it is the pair of its sides' partitionings), so a join over a
-    * join would shuffle both sides without the coalesce above the inner
-    * one. Joins are hinted so that none broadcasts, which would run a job
-    * of its own: an equi-join as a local hash join (SHUFFLE_HASH on both
-    * sides), an inner join with no equality as a cartesian product
-    * (SHUFFLE_REPLICATE_NL, which reads both one-partition sides in place);
-    * an outer join with no equality has no such plan and still broadcasts.
-    * The rows are the same: a coalesce moves no row, a hint changes only
-    * the join's strategy. `OneRowRelation` is left bare: it is one row
-    * already, and the optimizer's rewrite of a subquery over it matches on
-    * it directly. A plan the optimizer folds into a local relation runs
-    * with no job at all, and a wrapped leaf would block that fold, so it
-    * keeps the frame it has. */
-  private[exec] def onePartition(df: DataFrame): DataFrame =
-    if (df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) df
-    else interop.ofRows(df.sparkSession, df.queryExecution.analyzed.transformUpWithSubqueries {
-      case leaf: LeafNode if !leaf.isInstanceOf[OneRowRelation] => coalesced(leaf)
-      case j: Join if ExtractEquiJoinKeys.unapply(j).isDefined =>
-        coalesced(j.copy(hint = JoinHint(ShuffleHash, ShuffleHash)))
-      case j: Join if j.joinType.isInstanceOf[InnerLike] =>
-        coalesced(j.copy(hint = JoinHint(ReplicateNl, ReplicateNl)))
-      case j: Join => coalesced(j)
-    })
+  /** The plan a small input runs: an optimized plan with every scan and
+    * every join, subquery plans included, behind a narrow coalesce to one
+    * partition (`Repartition(1, shuffle = false)`, no shuffle), placed
+    * above the projections and filters over what it coalesces so that a
+    * file scan still prunes columns and pushes filters. A child in one
+    * partition satisfies every distribution that a sort, an aggregate, a
+    * window or a join requires, so the planner inserts no exchange. A
+    * join's own output is not one partition to the planner (it is the pair
+    * of its sides' partitionings), so a join over a join would shuffle both
+    * sides without the coalesce above the inner one. Joins are hinted so
+    * that none broadcasts, which would run a job of its own: an equi-join
+    * as a local hash join (SHUFFLE_HASH on both sides), an inner join with
+    * no equality as a cartesian product (SHUFFLE_REPLICATE_NL, which reads
+    * both one-partition sides in place); an outer or anti join with no
+    * equality has no such plan and still broadcasts. The rows are the same:
+    * a coalesce moves no row, a hint changes only the join's strategy. */
+  private[exec] def onePartition(plan: LogicalPlan): LogicalPlan = plan.transformUpWithSubqueries {
+    case leaf: LeafNode => coalesced(leaf)
+    case p @ (_: Project | _: Filter) => p.children.head match {
+      case Repartition(1, false, scan) => coalesced(p.withNewChildren(Seq(scan)))
+      case _ => p
+    }
+    case j: Join if ExtractEquiJoinKeys.unapply(j).isDefined =>
+      coalesced(j.copy(hint = JoinHint(ShuffleHash, ShuffleHash)))
+    case j: Join if j.joinType.isInstanceOf[InnerLike] =>
+      coalesced(j.copy(hint = JoinHint(ReplicateNl, ReplicateNl)))
+    case j: Join => coalesced(j)
+  }
 
   private def coalesced(plan: LogicalPlan): LogicalPlan = Repartition(1, shuffle = false, plan)
 
   /** Timed collect with job-group cancellation — the Spark analogue of
     * `SET LOCAL statement_timeout` (V10, ref nl2sql.py:332-342). A small
-    * input ([[SmallInputMaxBytes]]) is collected interpreted, and in
-    * process where its plan allows ([[collectSmall]]); on timeout an
-    * in-process task is killed at the next row a scan hands it, as
-    * cancelling the job group kills a job's tasks. The settings live only
-    * on the single-use worker thread: a clone of the session conf for the
-    * planning, and local properties the thread's jobs hand to
-    * their tasks (and the in-process task to itself). The session conf is
-    * never written, since a set/restore on it would race with concurrent
-    * work. */
-  def collectWithTimeout(spark: SparkSession, df: DataFrame, timeoutMs: Long): Either[EngineError, Array[Row]] = {
+    * input ([[SmallInputMaxBytes]]) is collected as [[collectSmall]]
+    * collects it, from its own optimized plan, planned without adaptive
+    * execution. */
+  def collectWithTimeout(spark: SparkSession, df: DataFrame, timeoutMs: Long): Either[EngineError, Array[Row]] =
+    timed(spark, if (isSmall(df)) interop.planned(df, df.queryExecution.optimizedPlan) else df, timeoutMs)
+
+  /** `df`'s rows, on a single-use worker thread in a job group of its own:
+    * `df.collect()`, or [[collectSmall]] for a small frame (one built by
+    * [[interop.planned]], which keeps its source's leaves and so their
+    * size). On timeout the job group is cancelled, and an in-process task
+    * is killed at the next row a scan hands it, as cancelling the job group
+    * kills a job's tasks. A small frame's settings live only on the worker
+    * thread: a clone of the session conf for its planning, and local
+    * properties the thread's jobs hand to their tasks (and the in-process
+    * task to itself). The session conf is never written, since a
+    * set/restore on it would race with concurrent work. */
+  private def timed(spark: SparkSession, df: DataFrame, timeoutMs: Long): Either[EngineError, Array[Row]] = {
     val group = s"graft-exec-${System.nanoTime()}"
     val timedOut = new AtomicBoolean(false)
     // a daemon: a query still computing after its timeout must not hold the JVM open
@@ -201,29 +210,26 @@ object Executor {
     } finally pool.shutdownNow()
   }
 
-  /** A small frame's rows, in one SQL execution (so SQL listeners see
-    * it). When the final plan's RDD is one partition whose dependencies
-    * are narrow all the way down, that partition is computed as a task of
-    * its own ([[localTask]]), with no job; otherwise the plan runs as
-    * `df.collect()` runs it. Planning (`execute`) has already run whatever
-    * the plan needs first as jobs of their own: subqueries, broadcasts, and
-    * under adaptive execution the shuffle stages. Under adaptive execution
-    * both happen on the thread that runs its result stage
-    * ([[interop.onFinalPlan]]), which frees the plan's sorters as soon as
-    * the stage returns. `killed` stops the task at its next row. */
+  /** A small frame's rows ([[interop.planned]]), in one SQL execution, so
+    * SQL listeners see it with the plan that ran. Building the plan's RDD
+    * first runs what the plan needs, as jobs of their own: uncorrelated
+    * scalar subqueries and broadcasts. When that RDD is one partition whose
+    * dependencies are narrow all the way down, that partition is computed
+    * as a task of its own ([[localTask]]), with no job; otherwise the plan
+    * runs as `collect()` runs it. `killed` stops the task at its next row. */
   private def collectSmall(df: DataFrame, killed: AtomicBoolean): Array[Row] = {
     val qe = df.queryExecution
     SQLExecution.withNewExecutionId(qe, Some("collect")) {
-      qe.executedPlan.resetMetrics()
-      val rows = interop.onFinalPlan(qe.executedPlan) { plan =>
-        val rdd = plan.execute()
+      val plan = qe.executedPlan
+      plan.resetMetrics()
+      val rdd = plan.execute()
+      val rows =
         if (rdd.getNumPartitions == 1 && narrow(rdd))
           localTask.run(df.sparkSession.sparkContext, killed) { task =>
             rdd.iterator(rdd.partitions.head, task).map(_.copy()).toArray
           }
         else plan.executeCollect()
-      }
-      interop.fromInternal(df, qe.executedPlan.output, rows)
+      interop.fromInternal(df, plan.output, rows)
     }
   }
 
@@ -271,10 +277,11 @@ object Executor {
       timeoutMs: Long = DefaultTimeoutMs): Either[EngineError, QueryResult] =
     execute(spark, v, limit, timeoutMs).map(_._2)
 
-  /** [[run]], also handing back the executed frame, so a caller reads its
-    * analyzed plan instead of parsing and analysing the SQL again. A small
-    * input runs as [[onePartition]] of the validated query's frame, whose
-    * analyzed plan adds only coalesces and join hints. */
+  /** [[run]], also handing back the executed frame, whose analyzed plan is
+    * the validated query's (a caller reads it instead of parsing and
+    * analysing the SQL again) and whose optimized and physical plans are
+    * the ones that ran: for a small input, [[onePartition]] of the
+    * validated frame's optimized plan, planned by [[interop.planned]]. */
   private[graft] def execute(
       spark: SparkSession,
       v: Validated,
@@ -287,12 +294,12 @@ object Executor {
     try {
       val df = frame(spark, v, limit)
       for {
-        _ <- readOnly(df)
+        _ <- readOnly(df.queryExecution.analyzed)
         _ <- costGate(df)
-        toRun = if (isSmall(df)) onePartition(df) else df
-        // the frame that runs is vetted too, not only the one it came from
-        _ <- readOnly(toRun)
-        rows <- collectWithTimeout(spark, toRun, timeoutMs)
+        toRun = if (isSmall(df)) interop.planned(df, onePartition(df.queryExecution.optimizedPlan)) else df
+        // the plan that runs is vetted too, not only the one it came from
+        _ <- readOnly(toRun.queryExecution.optimizedPlan)
+        rows <- timed(spark, toRun, timeoutMs)
       } yield (toRun, QueryResult(
         sql = v.sql,
         columns = toRun.columns.toSeq,
@@ -304,11 +311,11 @@ object Executor {
         Left(ExecutionError(Option(e.getMessage).getOrElse(e.getClass.getName).take(1000)))
     }
 
-  /** Read-only guard on the RESOLVED plan, subquery plans included: the
+  /** Read-only guard on a RESOLVED plan, subquery plans included: the
     * parse-time NAME denylist can miss a registry alias (`try_reflect`
-    * resolves to the same reflection call as `reflect`), the analyzed
-    * plan cannot. The scan is applied DIRECTLY to this query's analyzed
-    * plan rather than by toggling spark.graft.readOnly around execution:
+    * resolves to the same reflection call as `reflect`), the resolved
+    * plan cannot. The scan is applied DIRECTLY to this query's plans
+    * rather than by toggling spark.graft.readOnly around execution:
     * the conf is session-global, so a per-query set/restore races with
     * concurrent work on a shared session (another thread's legitimate
     * write failing inside the window, or an overlapping run restoring the
@@ -316,9 +323,9 @@ object Executor {
     * and independent of whether GraftExtensions is registered; sessions
     * that want the analyzer-rule layer on EVERYTHING (not just engine
     * queries) still opt in via the conf. */
-  private def readOnly(df: DataFrame): Either[EngineError, Unit] =
+  private def readOnly(plan: LogicalPlan): Either[EngineError, Unit] =
     graft.plans.ReadOnlyGuard
-      .firstOffenseDeep(df.queryExecution.analyzed)
+      .firstOffenseDeep(plan)
       .map(what => SqlSafetyError(s"Statically un-vettable construct: $what is not allowed"))
       .toLeft(())
 

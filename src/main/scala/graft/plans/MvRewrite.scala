@@ -123,18 +123,14 @@ class MvRewrite(session: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** The aggregate child, stripped of pure column-pruning Projects, of
-    * narrow coalesces (`Repartition` without a shuffle: the executor's
-    * one-partition frame puts one above each leaf, and it changes no row)
-    * and of at most one Filter (validated against the keys by the
-    * caller). */
+  /** The aggregate child, stripped of pure column-pruning Projects and
+    * of at most one Filter (validated against the keys by the caller). */
   private def strip(p: LogicalPlan,
       cond: Option[Expression]): Option[(Option[Expression], LogicalPlan)] =
     p match {
       case Project(projList, inner)
         if projList.forall(_.isInstanceOf[AttributeReference]) =>
         strip(inner, cond)
-      case Repartition(_, false, inner) => strip(inner, cond)
       case Filter(c, inner) if cond.isEmpty => strip(inner, Some(c))
       case other => Some((cond, other))
     }

@@ -9,10 +9,13 @@ import org.apache.spark.SparkEnv
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.Repartition
-import org.apache.spark.sql.execution.WholeStageCodegenExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Repartition}
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, QueryExecution, SimpleMode,
+  WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkSpec
 import graft.core.{ExecutionError, PlanTooLargeError, QueryResult, SqlSafetyError, TimeoutError}
 import graft.eval.SchoolFixture
@@ -27,14 +30,16 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def compiledStages(df: org.apache.spark.sql.DataFrame): Int =
     collect(df.queryExecution.executedPlan) { case w: WholeStageCodegenExec => w }.size
 
+  /** Exchanges and coalesces of the physical plan that ran (an answer's
+    * frame is the one that ran), subquery plans included. */
   private def exchanges(df: DataFrame): Int =
-    collect(df.queryExecution.executedPlan) {
+    collectWithSubqueries(df.queryExecution.executedPlan) {
       case e: ShuffleExchangeExec => e
       case e: BroadcastExchangeExec => e
     }.size
 
   private def coalesces(df: DataFrame): Int =
-    df.queryExecution.analyzed.collectWithSubqueries { case r: Repartition => r }.size
+    collectWithSubqueries(df.queryExecution.executedPlan) { case c: CoalesceExec => c }.size
 
   private def executeOn(sql: String, tables: Set[String]): (DataFrame, QueryResult) = {
     val v = Validator.validate(spark, sql, tables).fold(e => fail(s"$sql: ${e.message}"), identity)
@@ -42,34 +47,41 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .fold(e => fail(s"$sql: ${e.message}"), identity)
   }
 
-  /** `f`'s result and the number of jobs it ran in Executor's job groups.
-    * The listener bus delivers events in order but on its own thread, so
-    * the count is read once a marker job run after `f` has been seen (and
-    * started once one run before `f` has, so no earlier job is counted). */
-  private def withExecJobs[A](f: => A): (A, Int) = {
+  private def sorted(rows: Seq[Seq[Any]]): Seq[String] = rows.map(_.mkString("|")).sorted
+
+  /** Returns once the listener bus has delivered every event posted before
+    * the call: the bus delivers a queue's events in order but on its own
+    * thread, so a marker job is run and its start awaited. */
+  private def drainListeners(): Unit = {
     val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    @volatile var marker = ""
-    @volatile var seen = new CountDownLatch(1)
+    val marker = s"listener-barrier-${System.nanoTime()}"
+    val seen = new CountDownLatch(1)
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = Option(e.properties).foreach { p =>
-        if (Option(p.getProperty("spark.jobGroup.id")).exists(_.startsWith("graft-exec-"))) jobs.incrementAndGet()
-        if (p.getProperty("spark.job.description") == marker) seen.countDown()
-      }
-    }
-    def barrier(): Unit = {
-      seen = new CountDownLatch(1)
-      marker = s"exec-jobs-barrier-${System.nanoTime()}"
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(seen.await(60, TimeUnit.SECONDS), "listener never saw the marker job")
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker)) seen.countDown()
     }
     sc.addSparkListener(listener)
     try {
-      barrier()
-      jobs.set(0)
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(seen.await(60, TimeUnit.SECONDS), "listener never saw the marker job")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** `f`'s result and the number of jobs it ran in Executor's job groups. */
+  private def withExecJobs[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = Option(e.properties).foreach { p =>
+        if (Option(p.getProperty("spark.jobGroup.id")).exists(_.startsWith("graft-exec-"))) jobs.incrementAndGet()
+      }
+    }
+    drainListeners()
+    sc.addSparkListener(listener)
+    try {
       val a = f
-      barrier()
+      drainListeners()
       (a, jobs.get)
     } finally sc.removeSparkListener(listener)
   }
@@ -192,20 +204,23 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(!r.exists(_.rows.exists(_.exists(v => v != null && v.toString.contains("/")))))
   }
 
+  private def workers = Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith("graft-exec-"))
+
+  private def settled(within: Long)(cond: => Boolean): Boolean = {
+    val end = System.nanoTime() + within * 1000000
+    while (!cond && System.nanoTime() < end) Thread.sleep(10)
+    cond
+  }
+
   /** The in-process path keeps the timeout: the timed-out task is killed
     * at the next row a scan hands it, and its memory (here the
-    * aggregation's hash map) goes back to the pool. It runs before the
-    * next test, whose timed-out job keeps its executor task (and that
-    * task's memory) until the task's next check for a kill. */
+    * aggregation's hash map) goes back to the pool. It runs before
+    * "timeout cancels a long-running query", whose timed-out job keeps its
+    * executor task (and that task's memory) until the task's next check
+    * for a kill. */
   test("a timed-out answer computed in process stops and releases its memory") {
     school
     val memory = SparkEnv.get.memoryManager
-    def workers = Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith("graft-exec-"))
-    def settled(within: Long)(cond: => Boolean): Boolean = {
-      val end = System.nanoTime() + within * 1000000
-      while (!cond && System.nanoTime() < end) Thread.sleep(10)
-      cond
-    }
     val before = memory.executionMemoryUsed
     @volatile var peak = before
     @volatile var polling = true
@@ -227,6 +242,30 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     poller.join()
     assert(peak > before, "the aggregation held no execution memory")
     assert(Executor.runSql(spark, "SELECT COUNT(*) AS n FROM students", school).exists(_.rows == Seq(Seq(100L))))
+  }
+
+  /** The next test's triple cross join, on the engine's own path: the cost
+    * gate admits it (a global COUNT(*) is one estimated row), its input is
+    * three scans of a 117 KB file, so it runs interpreted as nested
+    * cartesian products in one partition, in process and with no job.
+    * Killed on timeout, its task stops (a cartesian product checks for a
+    * kill at each row of its outer side) and its memory (the buffered inner
+    * sides) goes back to the pool. */
+  test("a timed-out cross join on the engine's path runs in process and releases its memory") {
+    tables
+    val memory = SparkEnv.get.memoryManager
+    val before = memory.executionMemoryUsed
+    val sql = "SELECT COUNT(*) AS c FROM (SELECT a.l_orderkey FROM lineitem a CROSS JOIN lineitem b " +
+      "CROSS JOIN lineitem c) t"
+    val v = Validator.validate(spark, sql, tables).fold(e => fail(e.message), identity)
+    assert(Executor.costGate(Executor.frame(spark, v)).isRight)
+    val (r, jobs) = withExecJobs(Executor.run(spark, v, timeoutMs = 900))
+    assert(r.left.exists(_.isInstanceOf[TimeoutError]), r)
+    assert(jobs == 0, "the cross join ran as a job")
+    val stuck = workers
+    stuck.foreach(_.join(20000))
+    assert(stuck.forall(!_.isAlive), "the worker kept running")
+    assert(settled(10000)(memory.executionMemoryUsed == before), "the task kept its memory")
   }
 
   test("timeout cancels a long-running query") {
@@ -257,7 +296,6 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         "JOIN courses c ON c.course_id = x.course_id WHERE x.grade = 'A'" -> false,
       "SELECT student_id FROM scores WHERE grade = 'A' INTERSECT SELECT student_id FROM scores WHERE grade = 'F'" -> false,
       "SELECT student_id, CASE WHEN age > 16 THEN 'older' END AS band FROM students WHERE student_id <= 20" -> false)
-    def sorted(rows: Seq[Seq[Any]]) = rows.map(_.mkString("|")).sorted
     shapes.foreach { case (sql, total) =>
       val v = Validator.validate(spark, sql, school).fold(e => fail(s"$sql: ${e.message}"), identity)
       val (df, r) = Executor.execute(spark, v, Executor.DefaultLimit, Executor.DefaultTimeoutMs)
@@ -328,7 +366,6 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       "SELECT student_id FROM scores WHERE grade = 'A' UNION SELECT student_id FROM scores WHERE grade = 'F'" -> false,
       "SELECT s.student_id, c.course_id FROM students s JOIN courses c ON c.course_id > s.age - 10 " +
         "WHERE s.student_id <= 5" -> false)
-    def sorted(rows: Seq[Seq[Any]]) = rows.map(_.mkString("|")).sorted
     shapes.foreach { case (sql, total) =>
       val (df, r) = executeOn(sql, school)
       assert(coalesces(df) > 0, sql)
@@ -417,11 +454,16 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
+  /** The rewrite comes after the optimizer, so it cannot block the fold:
+    * what runs is the folded relation, behind one coalesce. */
   test("an answer the optimizer folds into a local relation still runs no job") {
     school
     val ((df, r), jobs) = withExecJobs(executeOn("SELECT student_name, age FROM students WHERE age > 15", school))
     assert(r.rowcount > 0)
-    assert(coalesces(df) == 0)
+    df.queryExecution.optimizedPlan match {
+      case Repartition(1, false, _: LocalRelation) =>
+      case other => fail(s"not folded:\n$other")
+    }
     assert(jobs == 0, r.explain)
   }
 
@@ -452,13 +494,148 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       "SELECT try_reflect('java.lang.System', 'getenv', 'PATH') AS v, n_name FROM nation " +
         "ORDER BY n_nationkey LIMIT 1",
       spark.sessionState.sqlParser.parsePlan("SELECT 1"), needsLimit = false)
-    val ran = Executor.onePartition(Executor.frame(spark, smuggled))
-    assert(coalesces(ran) > 0)
-    assert(graft.plans.ReadOnlyGuard.firstOffenseDeep(ran.queryExecution.analyzed).isDefined)
+    val ran = Executor.onePartition(Executor.frame(spark, smuggled).queryExecution.optimizedPlan)
+    assert(ran.collectWithSubqueries { case r: Repartition => r }.nonEmpty)
+    assert(graft.plans.ReadOnlyGuard.firstOffenseDeep(ran).isDefined)
     assert(Executor.run(spark, smuggled).left.exists(_.isInstanceOf[SqlSafetyError]))
-    // an admitted small answer's frame passes the same guard
+    // an admitted small answer's plan passes the same guard
     val (df, _) = executeOn("SELECT n_name FROM nation ORDER BY n_regionkey, n_nationkey", tables)
     assert(coalesces(df) > 0)
-    assert(graft.plans.ReadOnlyGuard.firstOffenseDeep(df.queryExecution.analyzed).isEmpty)
+    assert(graft.plans.ReadOnlyGuard.firstOffenseDeep(df.queryExecution.optimizedPlan).isEmpty)
+  }
+
+  /** The coalesce goes above a scan's projections and filters, so a file
+    * scan of a small answer still reads only the columns it needs and
+    * pushes its filters down. */
+  test("a small answer's file scan still prunes columns and pushes filters") {
+    tables
+    val (df, r) = executeOn("SELECT n_name FROM nation WHERE n_regionkey = 1 ORDER BY n_name", tables)
+    val scans = collect(df.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+    assert(scans.size == 1 && coalesces(df) == 1, r.explain)
+    assert(scans.head.requiredSchema.fieldNames.toSet == Set("n_name", "n_regionkey"), r.explain)
+    assert(scans.head.dataFilters.nonEmpty, r.explain)
+    assert(r.rows == spark.sql("SELECT n_name FROM nation WHERE n_regionkey = 1 ORDER BY n_name")
+      .collect().toSeq.map(_.toSeq))
+  }
+
+  /** The optimizer turns IN, EXISTS, NOT EXISTS and EXCEPT into semi or
+    * anti joins, and a correlated scalar subquery into an outer join.
+    * The one-partition rewrite comes after it, so these joins are hinted
+    * and coalesced like written ones: no broadcast, no job. */
+  test("the joins the optimizer makes run in one partition and no job") {
+    school
+    Seq(
+      "SELECT student_name FROM students WHERE student_id IN (SELECT student_id FROM scores WHERE score >= 99)",
+      "SELECT s.student_id, s.student_name FROM students s WHERE EXISTS " +
+        "(SELECT 1 FROM scores x WHERE x.student_id = s.student_id AND x.score = 100)",
+      "SELECT s.student_id FROM students s WHERE NOT EXISTS " +
+        "(SELECT 1 FROM scores x WHERE x.student_id = s.student_id AND x.grade = 'F')",
+      "SELECT student_id FROM scores WHERE course_id = 1 EXCEPT SELECT student_id FROM scores WHERE course_id = 2",
+      "SELECT x.student_id, x.score FROM scores x WHERE x.course_id = 2 AND x.score > " +
+        "(SELECT AVG(y.score) + 20 FROM scores y WHERE y.course_id = x.course_id)"
+    ).foreach { sql =>
+      val ((df, r), jobs) = withExecJobs(executeOn(sql, school))
+      assert(jobs == 0, s"$sql ran $jobs jobs\n${r.explain}")
+      assert(exchanges(df) == 0, s"$sql\n${r.explain}")
+      assert(coalesces(df) > 0, sql)
+      val expected = spark.sql(sql).collect().toSeq.map(_.toSeq.map(Executor.jsonSafe))
+      assert(expected.nonEmpty && expected.size <= Executor.DefaultLimit, sql)
+      assert(sorted(r.rows) == sorted(expected), sql)
+    }
+  }
+
+  /** The cache manager substitutes a cached fragment before the optimizer
+    * runs, so the one-partition plan reads the cache even when the cached
+    * fragment is more than one leaf (here a filtered view). */
+  test("an answer over a cached, filtered view is read from the cache") {
+    school
+    val sql = "SELECT course_id, COUNT(*) AS n, MAX(score) AS top FROM a_scores GROUP BY course_id ORDER BY course_id"
+    spark.sql("SELECT * FROM scores WHERE grade = 'A'").createOrReplaceTempView("a_scores")
+    val uncached = spark.sql(sql).collect().toSeq.map(_.toSeq.map(Executor.jsonSafe))
+    spark.catalog.cacheTable("a_scores")
+    try {
+      val (df, r) = executeOn(sql, Set("a_scores"))
+      assert(collectWithSubqueries(df.queryExecution.executedPlan) { case s: InMemoryTableScanExec => s }.nonEmpty,
+        r.explain)
+      assert(coalesces(df) > 0 && exchanges(df) == 0, r.explain)
+      assert(uncached.nonEmpty && r.rows == uncached)
+    } finally {
+      spark.catalog.uncacheTable("a_scores")
+      spark.catalog.dropTempView("a_scores")
+    }
+  }
+
+  /** A small answer is still one SQL execution that listeners see, and
+    * what they see is the plan that ran: no adaptive wrapper, the plan the
+    * answer's `explain` prints. */
+  test("a SQL listener sees each small answer once, with the plan that ran") {
+    school
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = seen.add(qe)
+    }
+    spark.listenerManager.register(listener)
+    try Seq(
+      "SELECT grade, COUNT(*) AS n FROM scores GROUP BY grade ORDER BY grade",
+      "SELECT student_name FROM students WHERE student_id IN (SELECT student_id FROM scores WHERE score >= 99)",
+      "SELECT student_id, score FROM scores WHERE course_id = 3 AND score > (SELECT AVG(score) FROM scores)"
+    ).foreach { sql =>
+      drainListeners()
+      seen.clear()
+      val (df, r) = executeOn(sql, school)
+      drainListeners()
+      val executions = seen.asScala.toSeq
+      assert(executions.size == 1, s"$sql: ${executions.size} executions")
+      val plan = executions.head.executedPlan
+      assert(plan eq df.queryExecution.executedPlan, sql)
+      assert(plan.find(_.isInstanceOf[AdaptiveSparkPlanExec]).isEmpty, sql)
+      assert(executions.head.explainString(SimpleMode) == r.explain, sql)
+      assert(r.explain.contains("Coalesce 1"), r.explain)
+      // the answer's frame still carries the validated query's analyzed plan
+      assert(df.queryExecution.analyzed.collectWithSubqueries { case p: Repartition => p }.isEmpty, sql)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Many threads asking one engine get the answers one thread gets: the
+    * chosen SQL and the row multiset of each answer, or the same error.
+    * The set covers an answer computed in process, asks whose SQL has an
+    * uncorrelated scalar subquery (its own job), an outer join with no
+    * equality (a broadcast job) and a timeout (a task killed in process). */
+  test("concurrent asks on one engine answer as sequential asks do") {
+    school
+    val engine = new graft.api.Engine(spark, SchoolFixture.tables, SchoolFixture.fks)
+    def answer(r: Either[graft.core.EngineError, QueryResult]): Either[String, (String, Seq[String])] =
+      r.fold(e => Left(e.kind), q => Right((q.sql, sorted(q.rows))))
+    val crossJoin = "SELECT a.student_id, COUNT(*) AS n FROM scores a CROSS JOIN scores b CROSS JOIN scores c " +
+      "GROUP BY a.student_id"
+    val outerNonEqui = "SELECT s.student_id, c.course_id FROM students s LEFT JOIN courses c " +
+      "ON c.course_id > s.age - 8 WHERE s.student_id <= 6"
+    val asks: Seq[(String, () => Either[String, (String, Seq[String])])] =
+      Seq(11, 43, 75, 107, 139, 171, 203, 235, 267, 299).map { i =>
+        val q = graft.eval.Evaluation.schoolCorpus(i).question
+        q -> (() => answer(engine.ask(q)))
+      } ++ Seq(
+        outerNonEqui -> (() => answer(engine.run(outerNonEqui))),
+        crossJoin -> (() => answer(engine.run(crossJoin, timeoutMs = 300))))
+    val sequential = asks.map { case (k, ask) => k -> ask() }.toMap
+    assert(sequential(crossJoin) == Left("timeout"))
+    assert(sequential(outerNonEqui).isRight)
+    assert(sequential.values.count(_.exists(_._1.toUpperCase.contains("(SELECT"))) >= 1, sequential)
+    val (_, outerJobs) = withExecJobs(engine.run(outerNonEqui))
+    assert(outerJobs > 0, "the outer join with no equality no longer broadcasts")
+    val threads = math.min(Runtime.getRuntime.availableProcessors, 8)
+    val rounds = 3
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      val runs = (0 until threads).map { t =>
+        val mine = asks.drop(t % asks.size) ++ asks.take(t % asks.size) // each thread starts elsewhere
+        pool.submit(() => Seq.fill(rounds)(mine.map { case (k, ask) => k -> ask() }).flatten)
+      }
+      val answers = runs.flatMap(_.get(120, TimeUnit.SECONDS))
+      assert(answers.size == threads * rounds * asks.size)
+      val differing = answers.filter { case (k, a) => a != sequential(k) }
+      assert(differing.isEmpty, differing.take(3).map { case (k, a) => s"$k: $a, alone ${sequential(k)}" })
+    } finally pool.shutdownNow()
   }
 }

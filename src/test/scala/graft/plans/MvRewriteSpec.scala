@@ -103,9 +103,9 @@ class MvRewriteSpec extends SparkSpec {
     }
   }
 
-  /** A small input runs as the executor's one-partition frame, whose
-    * leaves sit behind a coalesce: the served answer must still read the
-    * state, not the base table. */
+  /** A small input runs the executor's one-partition plan, whose scans
+    * sit behind a coalesce: the served answer must still read the state,
+    * not the base table. */
   test("an engine answer over a small materialized table does not scan the base relation") {
     setup
     withMv {
