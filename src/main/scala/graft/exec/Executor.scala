@@ -11,6 +11,7 @@ import org.apache.spark.sql.catalyst.plans.InnerLike
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, HintInfo, Join, JoinHint, LeafNode, LogicalPlan,
   Project, Repartition, SHUFFLE_HASH, SHUFFLE_REPLICATE_NL}
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.graft.{interop, localTask}
 import org.apache.spark.sql.internal.SQLConf
 import graft.core._
@@ -52,8 +53,12 @@ import graft.safety.Validator.Validated
  * narrow-lineage guard is a correctness rule, not a tuning one: a
  * shuffle's map side runs only as a stage the scheduler runs first, and a
  * plan that shuffles, computed in process where nothing had run that
- * stage, returned wrong rows with no error. Larger inputs keep the
- * session's compiled, partitioned, adaptive plan and its jobs.
+ * stage, returned wrong rows with no error. A plain small frame handed to
+ * [[collectWithTimeout]] (a sketch-served answer) is not rewritten: it
+ * runs its own plan, interpreted, in process when that plan has no
+ * exchange and as the session's adaptive plan runs when it shuffles.
+ * Larger inputs keep the session's compiled, partitioned, adaptive plan
+ * and its jobs.
  */
 object Executor {
 
@@ -159,23 +164,25 @@ object Executor {
 
   /** Timed collect with job-group cancellation — the Spark analogue of
     * `SET LOCAL statement_timeout` (V10, ref nl2sql.py:332-342). A small
-    * input ([[SmallInputMaxBytes]]) is collected as [[collectSmall]]
-    * collects it, from its own optimized plan, planned without adaptive
-    * execution. */
+    * input ([[SmallInputMaxBytes]]) runs its own plan as [[collectSmall]]
+    * runs it, planned on the worker thread under its interpreted conf:
+    * in process where that plan allows, and as the session's adaptive
+    * plan runs (its shuffle stages and their partitions coalesced by
+    * adaptive execution) where it shuffles. */
   def collectWithTimeout(spark: SparkSession, df: DataFrame, timeoutMs: Long): Either[EngineError, Array[Row]] =
-    timed(spark, if (isSmall(df)) interop.planned(df, df.queryExecution.optimizedPlan) else df, timeoutMs)
+    timed(spark, df, isSmall(df), timeoutMs)
 
   /** `df`'s rows, on a single-use worker thread in a job group of its own:
-    * `df.collect()`, or [[collectSmall]] for a small frame (one built by
-    * [[interop.planned]], which keeps its source's leaves and so their
-    * size). On timeout the job group is cancelled, and an in-process task
-    * is killed at the next row a scan hands it, as cancelling the job group
-    * kills a job's tasks. A small frame's settings live only on the worker
-    * thread: a clone of the session conf for its planning, and local
-    * properties the thread's jobs hand to their tasks (and the in-process
-    * task to itself). The session conf is never written, since a
-    * set/restore on it would race with concurrent work. */
-  private def timed(spark: SparkSession, df: DataFrame, timeoutMs: Long): Either[EngineError, Array[Row]] = {
+    * `df.collect()`, or [[collectSmall]] when `small`. On timeout the job
+    * group is cancelled, and an in-process task is killed at the next row
+    * a scan hands it, as cancelling the job group kills a job's tasks. A
+    * small frame's settings live only on the worker thread: a clone of the
+    * session conf for its planning, and local properties the thread's jobs
+    * hand to their tasks (and the in-process task to itself). The session
+    * conf is never written, since a set/restore on it would race with
+    * concurrent work. */
+  private def timed(spark: SparkSession, df: DataFrame, small: Boolean,
+      timeoutMs: Long): Either[EngineError, Array[Row]] = {
     val group = s"graft-exec-${System.nanoTime()}"
     val timedOut = new AtomicBoolean(false)
     // a daemon: a query still computing after its timeout must not hold the JVM open
@@ -188,7 +195,7 @@ object Executor {
           val sc = spark.sparkContext
           sc.setJobGroup(group, "graft timed execution", interruptOnCancel = true)
           try {
-            if (!isSmall(df)) df.collect()
+            if (!small) df.collect()
             else {
               val conf = df.sparkSession.sessionState.conf.clone()
               SmallInputConf.foreach { case (k, v) => conf.setConfString(k, v); sc.setLocalProperty(k, v) }
@@ -210,25 +217,30 @@ object Executor {
     } finally pool.shutdownNow()
   }
 
-  /** A small frame's rows ([[interop.planned]]), in one SQL execution, so
-    * SQL listeners see it with the plan that ran. Building the plan's RDD
-    * first runs what the plan needs, as jobs of their own: uncorrelated
-    * scalar subqueries and broadcasts. When that RDD is one partition whose
-    * dependencies are narrow all the way down, that partition is computed
-    * as a task of its own ([[localTask]]), with no job; otherwise the plan
-    * runs as `collect()` runs it. `killed` stops the task at its next row. */
+  /** A small frame's rows, in one SQL execution, so SQL listeners see it
+    * with the plan that ran. Building the plan's RDD first runs what the
+    * plan needs, as jobs of their own: uncorrelated scalar subqueries and
+    * broadcasts. When that RDD is one partition whose dependencies are
+    * narrow all the way down, that partition is computed as a task of its
+    * own ([[localTask]]), with no job; otherwise the plan runs as
+    * `collect()` runs it, as does an adaptive plan (a plain frame's that
+    * shuffles), whose stages run as jobs. `killed` stops the task at its
+    * next row. */
   private def collectSmall(df: DataFrame, killed: AtomicBoolean): Array[Row] = {
     val qe = df.queryExecution
     SQLExecution.withNewExecutionId(qe, Some("collect")) {
       val plan = qe.executedPlan
       plan.resetMetrics()
-      val rdd = plan.execute()
-      val rows =
-        if (rdd.getNumPartitions == 1 && narrow(rdd))
-          localTask.run(df.sparkSession.sparkContext, killed) { task =>
-            rdd.iterator(rdd.partitions.head, task).map(_.copy()).toArray
-          }
-        else plan.executeCollect()
+      val rows = plan match {
+        case _: AdaptiveSparkPlanExec => plan.executeCollect()
+        case _ =>
+          val rdd = plan.execute()
+          if (rdd.getNumPartitions == 1 && narrow(rdd))
+            localTask.run(df.sparkSession.sparkContext, killed) { task =>
+              rdd.iterator(rdd.partitions.head, task).map(_.copy()).toArray
+            }
+          else plan.executeCollect()
+      }
       interop.fromInternal(df, plan.output, rows)
     }
   }
@@ -296,10 +308,11 @@ object Executor {
       for {
         _ <- readOnly(df.queryExecution.analyzed)
         _ <- costGate(df)
-        toRun = if (isSmall(df)) interop.planned(df, onePartition(df.queryExecution.optimizedPlan)) else df
+        small = isSmall(df)
+        toRun = if (small) interop.planned(df, onePartition(df.queryExecution.optimizedPlan)) else df
         // the plan that runs is vetted too, not only the one it came from
         _ <- readOnly(toRun.queryExecution.optimizedPlan)
-        rows <- timed(spark, toRun, timeoutMs)
+        rows <- timed(spark, toRun, small, timeoutMs)
       } yield (toRun, QueryResult(
         sql = v.sql,
         columns = toRun.columns.toSeq,

@@ -275,6 +275,8 @@ class EngineSpec extends SparkSpec {
           timeoutMs = 60000L)
         .toOption.get
       assert(r.sql.contains("served from registered serving state"), r.sql)
+      // the explain is of the plan that ran: its adaptive plan, final
+      assert(r.explain.contains("AdaptiveSparkPlan isFinalPlan=true"), r.explain)
       assert(r.columns == Seq("vocab_a", "vocab_b", "vocab_shared",
         "jsd_micro", "kl_ab_micro", "kl_ba_micro"), r.columns)
       // the served answer equals the batch operator over the same docs

@@ -12,7 +12,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Repartition}
 import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, QueryExecution, SimpleMode,
   WholeStageCodegenExec}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -441,6 +441,49 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(jobs > 0, sql)
       assert(exchanges(df) > 0, sql)
     }
+  }
+
+  /** A plain small frame (a sketch-served answer) is not rewritten: SQL
+    * listeners see one execution, of that frame's own plan, which its
+    * `explain` then prints. A plan with no exchange is computed in process;
+    * one that shuffles runs as the session's adaptive plan, which here
+    * coalesces 200 shuffle partitions. */
+  test("a plain small frame runs its own plan, adaptive where it shuffles") {
+    val session = spark.newSession() // a conf of its own, so the shared session's is not written
+    session.conf.set("spark.sql.shuffle.partitions", "200")
+    SchoolFixture.register(session)
+    Sources.register(session, sfDir)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = seen.add(qe)
+    }
+    session.listenerManager.register(listener)
+    try Seq(
+      "SELECT grade, COUNT(*) AS n FROM scores GROUP BY grade ORDER BY grade" -> true,
+      "SELECT n_name FROM nation WHERE n_regionkey = 1" -> false
+    ).foreach { case (sql, shuffles) =>
+      val df = session.sql(sql)
+      assert(Executor.inputBytes(df.queryExecution.optimizedPlan) < Executor.SmallInputMaxBytes, sql)
+      drainListeners()
+      seen.clear()
+      val (rows, jobs) = withExecJobs(Executor.collectWithTimeout(session, df, Executor.DefaultTimeoutMs))
+      val executions = seen.asScala.toSeq
+      assert(rows.map(_.toSeq.map(_.toSeq)) == Right(session.sql(sql).collect().toSeq.map(_.toSeq)), sql)
+      assert(executions.size == 1 && (executions.head eq df.queryExecution), s"$sql: ${executions.size} executions")
+      val plan = df.queryExecution.executedPlan
+      val explain = df.queryExecution.explainString(SimpleMode)
+      assert(compiledStages(df) == 0, explain)
+      if (shuffles) {
+        assert(plan.isInstanceOf[AdaptiveSparkPlanExec] && explain.contains("isFinalPlan=true"), explain)
+        val reads = collect(plan) { case r: AQEShuffleReadExec => r }
+        assert(reads.nonEmpty && reads.forall(_.partitionSpecs.size < 200), explain)
+        assert(jobs > 0, sql)
+      } else {
+        assert(plan.find(_.isInstanceOf[AdaptiveSparkPlanExec]).isEmpty && exchanges(df) == 0, explain)
+        assert(jobs == 0, explain)
+      }
+    } finally session.listenerManager.unregister(listener)
   }
 
   test("an error raised while computing in process answers ExecutionError") {
