@@ -2347,6 +2347,8 @@ object Queries {
 object ExtensionQueries {
   import org.apache.spark.sql.functions._
   import graft.operators.{Dedup, Similarity, Sketches, TextAnalysis}
+  import graft.streaming.Streams
+  import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
   private def docs(s: SparkSession, dir: String): DataFrame = {
     Sources.register(s, dir); s.table("documents")
@@ -2367,29 +2369,49 @@ object ExtensionQueries {
     * overloads, whose GC-managed localCheckpoint sharing cannot leak). */
   private def harnessManaged(built: (DataFrame, () => Unit)): DataFrame = built._1
 
+  /** Runs a declared stream replay to its end and returns the rows its
+    * memory sink `name` received.
+    *
+    * The replay runs on a clone of `s`. Spark SQL keeps per-query settings
+    * in a session's SQLConf, and a clone is the per-query session Spark
+    * itself makes for every streaming query it starts. So the state
+    * partition count and `settings` are set on the clone only, and the
+    * sink's view is registered there: `s`'s conf and catalog are never
+    * written, and a query running on `s` at the same time never sees a
+    * replay's settings. `build` makes the stream, feeds and batch snapshots
+    * included, on the clone it is handed, so no plan mixes two sessions.
+    *
+    * A clone's `StreamingQueryManager` starts with no listeners, so the
+    * listeners on `s.streams` are added to the clone's: a listener on the
+    * caller's session still sees the replay start, progress and end.
+    *
+    * State partitions: one per ~150k feed rows, at most 8. At fixture scale
+    * per-partition state-store commit dominates and one partition beats
+    * four by ~2× (OPTIMIZATION_r18.md §3); the 1M-row force feed runs ~20%
+    * faster at 7 than at 4 with the same rows, as each key keeps its row
+    * order in one partition (OPTIMIZATION_r19.md §2). */
+  private def replay(s: SparkSession, name: String, outputMode: String, feedRows: Int,
+      settings: (String, String)*)(build: SparkSession => org.apache.spark.sql.Dataset[_]): DataFrame = {
+    val c = org.apache.spark.sql.graft.interop.cloneSession(s)
+    c.conf.set("spark.sql.shuffle.partitions", math.min(8, feedRows / 150000 + 1).toLong)
+    settings.foreach { case (k, v) => c.conf.set(k, v) }
+    s.streams.listListeners().foreach(c.streams.addListener)
+    awaitBounded(build(c).writeStream.format("memory").queryName(name)
+      .outputMode(outputMode)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start())
+    c.table(name)
+  }
+
+  /** State store of the replays whose operator needs RocksDB
+    * (transformWithState). */
+  private val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   /** Bounded wait for the streaming rows: a query that does not finish
     * inside `ms` is STOPPED and the row fails loud — reading the memory
     * sink of a still-running query would surface as a confusing oracle
     * mismatch instead of a timeout (round-14 ADVICE). */
-  /** Replay-scoped state partition count, derived from the collected
-    * feed size (free — the feed is on the driver by construction).
-    * Round-18 measurement, both directions: at fixture scale (≤150k
-    * rows) per-partition state-store COMMIT dominates, and 1 partition
-    * beats 4 by ~2× (ProbeR18Stream interleaved A/B: 2.5s vs 4.5s);
-    * at the 10× force fixture the state/compute is 10× bigger and 1
-    * partition serializes it (x_stream_join 3.5s@4 vs 8.7s@1 in
-    * BENCH_force). Neither constant is right at both ends — derive
-    * from rows, one partition per ~150k feed rows (production sizes
-    * the same scoped conf to throughput). Cap raised 4 → 8 in r19:
-    * the 1M-row force feed derives 7, which ProbeR19TwsParts measured
-    * ~20% faster than 4 (9.7→7.4s / 6.4→5.3s interleaved) with a
-    * bit-identical emitted row set — per-key row order is preserved
-    * (single feed partition, each key in one state partition), so
-    * even float folds are unchanged. Fixture-scale feeds (≤150k)
-    * still derive 1. */
-  private def replayPartitions(nRows: Int): String =
-    math.min(8, nRows / 150000 + 1).toString
-
   private def awaitBounded(q: org.apache.spark.sql.streaming.StreamingQuery,
       ms: Long = 120000L): Unit = {
     val done = q.awaitTermination(ms)
@@ -2674,36 +2696,16 @@ object ExtensionQueries {
     "x_tws_sessions" -> ((s, dir) => {
       Sources.register(s, dir)
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = s.table("events").where(col("user_id") < 300)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-        .as[graft.streaming.Streams.Event].collect()
-      val sentinel = graft.streaming.Streams.Event(
+        .as[Streams.Event].collect()
+      val sentinel = Streams.Event(
         -1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L, "sentinel", 0.0)
-      val in = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[graft.streaming.Streams.Event]
-      in.addData((ev :+ sentinel).toSeq: _*)
-      s.catalog.dropTempView("x_tws_sessions_sink")
-      val prevProv = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      s.conf.set("spark.sql.shuffle.partitions", replayPartitions(ev.length))
-      try {
-        val q = graft.streaming.Streams.sessionizeTws(in.toDS(), gapMs = 30L * 60 * 1000)
-          .writeStream.format("memory").queryName("x_tws_sessions_sink")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        awaitBounded(q)
-      } finally {
-        prevProv match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
-      s.table("x_tws_sessions_sink").where(col("user_id") >= 0)
+      replay(s, "x_tws_sessions_sink", "append", ev.length, RocksDb) { c =>
+        val in = MemoryStream[Streams.Event](c)
+        in.addData((ev :+ sentinel).toSeq: _*)
+        Streams.sessionizeTws(in.toDS(), gapMs = 30L * 60 * 1000)
+      }.where(col("user_id") >= 0)
         .select(col("user_id"), col("n_events"),
           round(col("session_value"), 2).as("session_value"),
           col("start_ms"), col("end_ms"))
@@ -3118,7 +3120,7 @@ object ExtensionQueries {
     // oracled against the same global running sum
     "x_pack_streamed" -> ((s, dir) => {
       val d = docs(s, dir)
-      val m = new graft.streaming.Streams.PackingMaintainer(
+      val m = new Streams.PackingMaintainer(
         "doc_id", "text", seqLen = 256)
       val mx = d.agg(max("doc_id")).collect()(0).getLong(0)
       val batches = Seq(
@@ -3318,7 +3320,7 @@ object ExtensionQueries {
     // recomputation of the same divergence
     "x_served_drift" -> ((s, dir) => {
       val d = docs(s, dir)
-      val m = new graft.streaming.Streams.VocabDriftMaintainer("text")
+      val m = new Streams.VocabDriftMaintainer("text")
       (0 until 3).foreach(i => m.onBatch(
         d.where(col("lang") =!= "en" && pmod(col("doc_id"), lit(3)) === i),
         i.toLong))
@@ -3815,7 +3817,6 @@ object ExtensionQueries {
     "x_stream_join" -> ((s, dir) => {
       Sources.register(s, dir)
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       // HARNESS-SCOPED collect: MemoryStream has no distributed feeder,
       // so the fixture feed materializes on the driver. The bound is
       // the view/purchase projection (~2/7 of events — ~170k rows /
@@ -3827,38 +3828,21 @@ object ExtensionQueries {
         .where(col("event_type").isin("view", "purchase"))
         .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
         .as[(Long, Long, java.sql.Timestamp, String)].collect()
-      val vs = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, java.sql.Timestamp)]
-      val ps = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, java.sql.Timestamp)]
-      vs.addData(ev.filter(_._4 == "view").map(e => (e._1, e._2, e._3)).toSeq: _*)
-      ps.addData(ev.filter(_._4 == "purchase").map(e => (e._1, e._2, e._3)).toSeq: _*)
-      val joined = graft.streaming.Streams.intervalJoinStream(
-        vs.toDF().toDF("view_id", "user_id", "v_ts"),
-        ps.toDF().toDF("buy_id", "user_id", "b_ts"),
-        "user_id", "v_ts", "b_ts", horizon = "30 minutes")
-      s.catalog.dropTempView("x_stream_join_sink")
       // the stream-stream join's cost at this size is state-store
       // CHECKPOINTING, not compute: each shuffle partition carries four
       // HDFS-backed stores (2 sides × keyToNumValues/keyWithIndexToValue),
-      // each writing delta files per batch — scope the partition count to
-      // the streaming query (it is captured at query START) and restore.
-      // Round-18 measurement (ProbeR18Stream, interleaved): the SAME
-      // replay at 4 partitions ≈ 4.5s vs 2.5s at 1 — per-partition store
-      // commit is the whole gap, so every stream replay below scopes to
-      // the feed-derived count (1 at fixture scale, up to 8 at force
-      // scale; results are partition-invariant — production sizes this
-      // to throughput via the same scoped conf)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", replayPartitions(ev.length))
-      try {
-        val q = joined.writeStream.format("memory").queryName("x_stream_join_sink")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        awaitBounded(q)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.table("x_stream_join_sink")
+      // each writing delta files per batch, so the replay's feed-derived
+      // partition count matters most here
+      replay(s, "x_stream_join_sink", "append", ev.length) { c =>
+        val vs = MemoryStream[(Long, Long, java.sql.Timestamp)](c)
+        val ps = MemoryStream[(Long, Long, java.sql.Timestamp)](c)
+        vs.addData(ev.filter(_._4 == "view").map(e => (e._1, e._2, e._3)).toSeq: _*)
+        ps.addData(ev.filter(_._4 == "purchase").map(e => (e._1, e._2, e._3)).toSeq: _*)
+        Streams.intervalJoinStream(
+          vs.toDF().toDF("view_id", "user_id", "v_ts"),
+          ps.toDF().toDF("buy_id", "user_id", "b_ts"),
+          "user_id", "v_ts", "b_ts", horizon = "30 minutes")
+      }
         .select(col("user_id"), col("view_id"), col("buy_id"),
           (unix_micros(col("b_ts")) - unix_micros(col("v_ts"))).as("lag_us"))
         .orderBy("view_id", "buy_id")
@@ -3878,94 +3862,53 @@ object ExtensionQueries {
     "x_stream_join_outer" -> ((s, dir) => {
       Sources.register(s, dir)
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = s.table("events")
         .where(col("event_type").isin("view", "purchase") && col("user_id") < 100)
         .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
         .as[(Long, Long, java.sql.Timestamp, String)].collect()
       val far = java.sql.Timestamp.valueOf("2030-01-01 00:00:00")
-      val vs = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, java.sql.Timestamp)]
-      val ps = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, java.sql.Timestamp)]
-      // sentinels share user_id -1 so they pair with each other (and
-      // are filtered below), never with a real row
-      vs.addData(ev.filter(_._4 == "view").map(e => (e._1, e._2, e._3)).toSeq
-        :+ ((-1L, -1L, far)): _*)
-      ps.addData(ev.filter(_._4 == "purchase").map(e => (e._1, e._2, e._3)).toSeq
-        :+ ((-2L, -1L, far)): _*)
-      val joined = graft.streaming.Streams.intervalJoinStream(
-        vs.toDF().toDF("view_id", "user_id", "v_ts"),
-        ps.toDF().toDF("buy_id", "user_id", "b_ts"),
-        "user_id", "v_ts", "b_ts", horizon = "30 minutes",
-        joinType = "leftOuter")
-      s.catalog.dropTempView("x_stream_join_outer_sink")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       // the null emission NEEDS the trailing no-data batch — sibling
       // wrappers (userActivity, nearDupStream) disable
-      // noDataMicroBatches session-wide for their timeout semantics and
-      // never restore, so a session that ran one earlier would silently
-      // turn this row into the inner join (round-16 self-review). Pin
-      // true for this query, restore after.
-      val prevNoData = s.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", replayPartitions(ev.length))
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-      try {
-        val q = joined.writeStream.format("memory")
-          .queryName("x_stream_join_outer_sink")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        awaitBounded(q)
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        prevNoData match {
-          case Some(p) => s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", p)
-          case None => s.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-        }
-      }
-      s.table("x_stream_join_outer_sink").where(col("user_id") >= 0)
+      // noDataMicroBatches on their session for their timeout semantics,
+      // so a session that ran one earlier would silently turn this row
+      // into the inner join (round-16 self-review): pin it on the replay
+      replay(s, "x_stream_join_outer_sink", "append", ev.length,
+          "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") { c =>
+        val vs = MemoryStream[(Long, Long, java.sql.Timestamp)](c)
+        val ps = MemoryStream[(Long, Long, java.sql.Timestamp)](c)
+        // sentinels share user_id -1 so they pair with each other (and
+        // are filtered below), never with a real row
+        vs.addData(ev.filter(_._4 == "view").map(e => (e._1, e._2, e._3)).toSeq
+          :+ ((-1L, -1L, far)): _*)
+        ps.addData(ev.filter(_._4 == "purchase").map(e => (e._1, e._2, e._3)).toSeq
+          :+ ((-2L, -1L, far)): _*)
+        Streams.intervalJoinStream(
+          vs.toDF().toDF("view_id", "user_id", "v_ts"),
+          ps.toDF().toDF("buy_id", "user_id", "b_ts"),
+          "user_id", "v_ts", "b_ts", horizon = "30 minutes",
+          joinType = "leftOuter")
+      }.where(col("user_id") >= 0)
         .select(col("user_id"), col("view_id"), col("buy_id"),
           (unix_micros(col("b_ts")) - unix_micros(col("v_ts"))).as("lag_us"))
         .orderBy("view_id", "buy_id")
     }),
     // transformWithState end-to-end: the Spark-4 typed-state processor
     // (RunningTotalProcessor) folds per-user totals inside a REAL
-    // streaming query (RocksDB store — the API requires it — scoped to
-    // the query and restored); single AvailableNow batch in update
+    // streaming query (RocksDB store — the API requires it — set on the
+    // replay's session only); single AvailableNow batch in update
     // mode emits exactly the final per-user state, oracled against the
     // batch GROUP BY
     "x_tws_totals" -> ((s, dir) => {
       Sources.register(s, dir)
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = s.table("events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-        .as[graft.streaming.Streams.Event].collect()
-      val in = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[graft.streaming.Streams.Event]
-      in.addData(ev.toSeq: _*)
-      s.catalog.dropTempView("x_tws_totals_sink")
-      val prevProv = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      s.conf.set("spark.sql.shuffle.partitions", replayPartitions(ev.length))
-      try {
-        val q = graft.streaming.Streams.runningTotalsStream(in.toDS())
-          .writeStream.format("memory").queryName("x_tws_totals_sink")
-          .outputMode("update")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        awaitBounded(q)
-      } finally {
-        prevProv match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
+        .as[Streams.Event].collect()
+      replay(s, "x_tws_totals_sink", "update", ev.length, RocksDb) { c =>
+        val in = MemoryStream[Streams.Event](c)
+        in.addData(ev.toSeq: _*)
+        Streams.runningTotalsStream(in.toDS())
       }
-      s.table("x_tws_totals_sink")
         .select(col("user_id"), col("events"),
           round(col("total_value"), 2).as("total_value"))
         .orderBy("user_id")
@@ -3980,41 +3923,20 @@ object ExtensionQueries {
     "x_tws_bootstrap" -> ((s, dir) => {
       Sources.register(s, dir)
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val snapshot = s.table("events")
-        .where(dayofmonth(col("ts")) <= 15)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("events"), sum(col("value")).as("total_value"))
-        .as[(Long, Long, Double)]
       val ev = s.table("events")
         .where(dayofmonth(col("ts")) >= 16)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-        .as[graft.streaming.Streams.Event].collect()
-      val in = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[graft.streaming.Streams.Event]
-      in.addData(ev.toSeq: _*)
-      s.catalog.dropTempView("x_tws_bootstrap_sink")
-      val prevProv = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      s.conf.set("spark.sql.shuffle.partitions", replayPartitions(ev.length))
-      try {
-        val q = graft.streaming.Streams
-          .runningTotalsBootstrapped(in.toDS(), snapshot)
-          .writeStream.format("memory").queryName("x_tws_bootstrap_sink")
-          .outputMode("update")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        awaitBounded(q)
-      } finally {
-        prevProv match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
+        .as[Streams.Event].collect()
+      replay(s, "x_tws_bootstrap_sink", "update", ev.length, RocksDb) { c =>
+        val snapshot = c.table("events")
+          .where(dayofmonth(col("ts")) <= 15)
+          .groupBy(col("user_id"))
+          .agg(count(lit(1)).as("events"), sum(col("value")).as("total_value"))
+          .as[(Long, Long, Double)]
+        val in = MemoryStream[Streams.Event](c)
+        in.addData(ev.toSeq: _*)
+        Streams.runningTotalsBootstrapped(in.toDS(), snapshot)
       }
-      s.table("x_tws_bootstrap_sink")
         .select(col("user_id"), col("events"),
           round(col("total_value"), 2).as("total_value"))
         .orderBy("user_id")
@@ -4022,41 +3944,21 @@ object ExtensionQueries {
     // transformWithState with MapState + ListState: per-user top-3
     // event types (MapState lifetime counts) and the 20-newest recency
     // buffer (ListState, append-then-trim), run as a REAL streaming
-    // query (RocksDB, scoped partitions) — single AvailableNow batch in
+    // query (RocksDB, feed-derived partitions) — single AvailableNow batch in
     // update mode emits the final per-user rank block, oracled against
     // the batch window-rank replica. Buffer stats are min/max: order-
     // independent, so the hashed surface carries no float-sum drift.
     "x_tws_topk" -> ((s, dir) => {
       Sources.register(s, dir)
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = s.table("events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-        .as[graft.streaming.Streams.Event].collect()
-      val in = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[graft.streaming.Streams.Event]
-      in.addData(ev.toSeq: _*)
-      s.catalog.dropTempView("x_tws_topk_sink")
-      val prevProv = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      s.conf.set("spark.sql.shuffle.partitions", replayPartitions(ev.length))
-      try {
-        val q = graft.streaming.Streams.topKRecentStream(in.toDS(), k = 3, recentSize = 20)
-          .writeStream.format("memory").queryName("x_tws_topk_sink")
-          .outputMode("update")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        awaitBounded(q)
-      } finally {
-        prevProv match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
+        .as[Streams.Event].collect()
+      replay(s, "x_tws_topk_sink", "update", ev.length, RocksDb) { c =>
+        val in = MemoryStream[Streams.Event](c)
+        in.addData(ev.toSeq: _*)
+        Streams.topKRecentStream(in.toDS(), k = 3, recentSize = 20)
       }
-      s.table("x_tws_topk_sink")
         .select(col("user_id"), col("rank"), col("event_type"), col("n_events"),
           col("recent_n"), col("recent_min"), col("recent_max"))
         .orderBy("user_id", "rank")

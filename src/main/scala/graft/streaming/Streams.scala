@@ -82,6 +82,11 @@ object Streams {
    * Custom per-user state via flatMapGroupsWithState: running event count
    * and value sum, emitting an update per batch; state expires (and emits
    * a final `closed` record) after `timeoutMs` without activity.
+   *
+   * Sets `spark.sql.streaming.noDataMicroBatches.enabled=false` on the
+   * caller's session (`events.sparkSession`) and leaves it so: every
+   * stream started on that session afterwards runs without no-data
+   * batches unless it sets the key again.
    */
   def userActivity(events: Dataset[Event], timeoutMs: Long = 60 * 60 * 1000L): Dataset[UserActivity] = {
     import events.sparkSession.implicits._
@@ -476,6 +481,10 @@ object Streams {
    * the active working set, not corpus history. Emission is
    * at-least-once per matching band — downstream dedup (or the batch
    * verifier) collapses repeats.
+   *
+   * Like [[userActivity]], sets
+   * `spark.sql.streaming.noDataMicroBatches.enabled=false` on the caller's
+   * session (`docs.sparkSession`) and leaves it so.
    */
   def nearDupStream(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.8,

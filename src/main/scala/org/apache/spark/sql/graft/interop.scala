@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -13,9 +13,10 @@ import org.apache.spark.sql.execution.reuse.ReuseExchangeAndSubquery
  * Interop shim: `Column ⇄ Expression` bridging lives behind
  * `private[sql]` in Spark 4 (columns wrap ColumnNodes, not Expressions).
  * This object re-exports the two conversions the engine's custom
- * expressions need, and the two pieces the executor needs to run an
- * optimized plan of its own and to hand back rows it computed itself: a
- * frame over a given optimized plan, and a frame's encoder. Kept
+ * expressions need, the two pieces the executor needs to run an
+ * optimized plan of its own and to hand back rows it computed itself (a
+ * frame over a given optimized plan, and a frame's encoder), and the
+ * session clone a stream replay runs on. Kept
  * deliberately minimal — nothing else from Spark internals is re-exported
  * (`localTask` holds the task set-up).
  */
@@ -39,6 +40,11 @@ object interop {
     }
     new classic.Dataset[Row](qe, ds.encoder)
   }
+
+  /** A session whose conf, temporary views, functions and SQL listeners
+    * start as copies of `s`'s, so settings and views made on it stay off
+    * `s`: the per-query session Spark itself makes for a streaming query. */
+  def cloneSession(s: SparkSession): SparkSession = s.asInstanceOf[classic.SparkSession].cloneSession()
 
   /** `rows` of `df`'s physical plan, whose output is `output`, as the
     * `Row`s `df.collect()` hands back. */
