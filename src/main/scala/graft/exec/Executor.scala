@@ -3,8 +3,6 @@ package graft.exec
 import java.util.concurrent.{Executors, TimeUnit, TimeoutException => JTimeoutException}
 import java.util.concurrent.atomic.AtomicBoolean
 
-import org.apache.spark.NarrowDependency
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.InnerLike
@@ -47,9 +45,14 @@ import graft.safety.Validator.Validated
  * whose dependencies are narrow all the way down, and that partition is
  * computed in this process as a task of its own, with no Spark job
  * ([[collectSmall]]), since a job's fixed cost (scheduling, closure
- * cleaning, task set-up) is most of a small answer's time. What still
- * needs a job runs one: an uncorrelated scalar subquery (its own job), and
- * an outer or anti join with no equality, whose only plans broadcast. The
+ * cleaning, task set-up) is most of a small answer's time. So is an
+ * uncorrelated scalar subquery's plan, by the thread that needs its value,
+ * and each hash aggregate runs as an object hash aggregate, which cleans
+ * no closure and holds up to 128 groups without reserving a memory page
+ * ([[interop.planned]]). What still runs jobs: an outer or anti join with
+ * no equality, whose only plans broadcast; a distinct aggregate, whose
+ * `Expand` above the coalesce makes the planner shuffle; and inputs above
+ * the bound. The
  * narrow-lineage guard is a correctness rule, not a tuning one: a
  * shuffle's map side runs only as a stage the scheduler runs first, and a
  * plan that shuffles, computed in process where nothing had run that
@@ -92,11 +95,12 @@ object Executor {
     SQLConf.CODEGEN_FACTORY_MODE.key -> "NO_CODEGEN",
     SQLConf.MAX_SINGLE_PARTITION_BYTES.key -> Long.MaxValue.toString)
 
-  /** Build the capped DataFrame for validated SQL: execute the validated
-    * text and inject `limit(n)` when the plan had no top-level LIMIT —
+  /** Build the capped DataFrame for validated SQL: analyse the validator's
+    * parse of it (`v.plan`; the text is not parsed again) and inject
+    * `limit(n)` when the plan had no top-level LIMIT —
     * semantics of the reference's AST rewrite (nl2sql.py:299-306). */
   def frame(spark: SparkSession, v: Validated, limit: Int = DefaultLimit): DataFrame = {
-    val df = spark.sql(v.sql)
+    val df = interop.ofRows(spark, v.plan)
     if (v.needsLimit) df.limit(math.min(limit, MaxRows)) else df
   }
 
@@ -170,21 +174,22 @@ object Executor {
     * plan runs (its shuffle stages and their partitions coalesced by
     * adaptive execution) where it shuffles. */
   def collectWithTimeout(spark: SparkSession, df: DataFrame, timeoutMs: Long): Either[EngineError, Array[Row]] =
-    timed(spark, df, isSmall(df), timeoutMs)
+    timed(spark, df, isSmall(df), timeoutMs, new AtomicBoolean)
 
   /** `df`'s rows, on a single-use worker thread in a job group of its own:
     * `df.collect()`, or [[collectSmall]] when `small`. On timeout the job
-    * group is cancelled, and an in-process task is killed at the next row
-    * a scan hands it, as cancelling the job group kills a job's tasks. A
+    * group is cancelled and `killed` is set, so an in-process task (a
+    * subquery's of a frame [[interop.planned]] with the same flag
+    * included) is killed at the next row a scan hands it, as cancelling the
+    * job group kills a job's tasks. A
     * small frame's settings live only on the worker thread: a clone of the
     * session conf for its planning, and local properties the thread's jobs
     * hand to their tasks (and the in-process task to itself). The session
     * conf is never written, since a set/restore on it would race with
     * concurrent work. */
-  private def timed(spark: SparkSession, df: DataFrame, small: Boolean,
-      timeoutMs: Long): Either[EngineError, Array[Row]] = {
+  private def timed(spark: SparkSession, df: DataFrame, small: Boolean, timeoutMs: Long,
+      killed: AtomicBoolean): Either[EngineError, Array[Row]] = {
     val group = s"graft-exec-${System.nanoTime()}"
-    val timedOut = new AtomicBoolean(false)
     // a daemon: a query still computing after its timeout must not hold the JVM open
     val pool = Executors.newSingleThreadExecutor { (r: Runnable) =>
       val t = new Thread(r, group); t.setDaemon(true); t
@@ -199,7 +204,7 @@ object Executor {
             else {
               val conf = df.sparkSession.sessionState.conf.clone()
               SmallInputConf.foreach { case (k, v) => conf.setConfString(k, v); sc.setLocalProperty(k, v) }
-              SQLConf.withExistingConf(conf)(collectSmall(df, timedOut))
+              SQLConf.withExistingConf(conf)(collectSmall(df, killed))
             }
           } finally sc.clearJobGroup()
         }
@@ -207,7 +212,7 @@ object Executor {
       try Right(fut.get(timeoutMs, TimeUnit.MILLISECONDS))
       catch {
         case _: JTimeoutException =>
-          timedOut.set(true)
+          killed.set(true)
           spark.sparkContext.cancelJobGroup(group)
           fut.cancel(true)
           Left(TimeoutError(s"Execution exceeded ${timeoutMs}ms"))
@@ -218,11 +223,12 @@ object Executor {
   }
 
   /** A small frame's rows, in one SQL execution, so SQL listeners see it
-    * with the plan that ran. Building the plan's RDD first runs what the
-    * plan needs, as jobs of their own: uncorrelated scalar subqueries and
-    * broadcasts. When that RDD is one partition whose dependencies are
-    * narrow all the way down, that partition is computed as a task of its
-    * own ([[localTask]]), with no job; otherwise the plan runs as
+    * with the plan that ran. When the plan's RDD is one partition whose
+    * dependencies are narrow all the way down, that partition is computed
+    * as a task of its own, with no job ([[localTask.rows]]); building the
+    * RDD first computes the plan's subqueries (in process for a frame
+    * [[interop.planned]]) and runs its broadcasts as jobs (only an outer or
+    * anti join with no equality has one). Otherwise the plan runs as
     * `collect()` runs it, as does an adaptive plan (a plain frame's that
     * shuffles), whose stages run as jobs. `killed` stops the task at its
     * next row. */
@@ -233,21 +239,10 @@ object Executor {
       plan.resetMetrics()
       val rows = plan match {
         case _: AdaptiveSparkPlanExec => plan.executeCollect()
-        case _ =>
-          val rdd = plan.execute()
-          if (rdd.getNumPartitions == 1 && narrow(rdd))
-            localTask.run(df.sparkSession.sparkContext, killed) { task =>
-              rdd.iterator(rdd.partitions.head, task).map(_.copy()).toArray
-            }
-          else plan.executeCollect()
+        case _ => localTask.rows(plan, killed)
       }
       interop.fromInternal(df, plan.output, rows)
     }
-  }
-
-  private def narrow(rdd: RDD[_]): Boolean = rdd.dependencies.forall {
-    case d: NarrowDependency[_] => narrow(d.rdd)
-    case _ => false
   }
 
   /** JSON-safe coercion at the sink (ref nl2sql.py:325-330): Decimal →
@@ -293,7 +288,9 @@ object Executor {
     * the validated query's (a caller reads it instead of parsing and
     * analysing the SQL again) and whose optimized and physical plans are
     * the ones that ran: for a small input, [[onePartition]] of the
-    * validated frame's optimized plan, planned by [[interop.planned]]. */
+    * validated frame's optimized plan, planned by [[interop.planned]]
+    * with the flag the timeout sets, so a subquery computed in process
+    * stops with the answer. */
   private[graft] def execute(
       spark: SparkSession,
       v: Validated,
@@ -305,14 +302,15 @@ object Executor {
     // envelope, never an exception, so the whole pipeline is guarded.
     try {
       val df = frame(spark, v, limit)
+      val killed = new AtomicBoolean
       for {
         _ <- readOnly(df.queryExecution.analyzed)
         _ <- costGate(df)
         small = isSmall(df)
-        toRun = if (small) interop.planned(df, onePartition(df.queryExecution.optimizedPlan)) else df
+        toRun = if (small) interop.planned(df, onePartition(df.queryExecution.optimizedPlan), killed) else df
         // the plan that runs is vetted too, not only the one it came from
         _ <- readOnly(toRun.queryExecution.optimizedPlan)
-        rows <- timed(spark, toRun, small, timeoutMs)
+        rows <- timed(spark, toRun, small, timeoutMs, killed)
       } yield (toRun, QueryResult(
         sql = v.sql,
         columns = toRun.columns.toSeq,

@@ -2,10 +2,12 @@ package org.apache.spark.sql.graft
 
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
-import org.apache.spark.{SparkContext, TaskContext, TaskContextImpl, TaskKilledException}
+import org.apache.spark.{NarrowDependency, SparkContext, TaskContext, TaskContextImpl, TaskKilledException}
 import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.memory.{MemoryMode, TaskMemoryManager}
-import org.apache.spark.rdd.InputFileBlockHolder
+import org.apache.spark.rdd.{InputFileBlockHolder, RDD}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.util.Utils
 
 /**
@@ -19,6 +21,7 @@ import org.apache.spark.util.Utils
  * completion listeners run, and the task's memory and block locks are
  * released. Setting the `killed` flag kills the task: every
  * `InterruptibleIterator` it reads through throws at its next row.
+ * [[rows]] computes a physical plan's rows that way when its RDD allows.
  */
 object localTask {
 
@@ -69,5 +72,29 @@ object localTask {
         mm.synchronized(mm.notifyAll()) // wake tasks waiting for memory, as an executor does
       }
     }
+  }
+
+  /** `plan`'s rows, at most `max` of them (all of them when `None`). When
+    * the plan's RDD is one partition whose dependencies are narrow all the
+    * way down, that partition is computed on this thread under [[run]],
+    * with no job, and stops at `max` rows; otherwise the plan runs as
+    * `executeCollect` (or `executeTake`) runs it, as jobs: a shuffle's map
+    * side runs only as a stage the scheduler runs first, so computing a
+    * plan that shuffles here would read map output nothing had written.
+    * Building the RDD first computes what the plan needs: its subqueries,
+    * and its broadcasts as jobs of their own. */
+  def rows(plan: SparkPlan, killed: AtomicBoolean, max: Option[Int] = None): Array[InternalRow] = {
+    val rdd = plan.execute()
+    if (rdd.getNumPartitions == 1 && narrow(rdd))
+      run(plan.session.sparkContext, killed) { task =>
+        val it = rdd.iterator(rdd.partitions.head, task).map(_.copy())
+        max.fold(it)(it.take).toArray
+      }
+    else max.fold(plan.executeCollect())(plan.executeTake)
+  }
+
+  private def narrow(rdd: RDD[_]): Boolean = rdd.dependencies.forall {
+    case d: NarrowDependency[_] => narrow(d.rdd)
+    case _ => false
   }
 }

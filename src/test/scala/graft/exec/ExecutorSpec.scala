@@ -1,11 +1,11 @@
 package graft.exec
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.SparkEnv
+import org.apache.spark.{SparkEnv, SparkThrowable}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
@@ -13,8 +13,10 @@ import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Repartition}
 import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, QueryExecution, SimpleMode,
   WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.graft.{InProcessSubqueryExec, localTask}
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkSpec
 import graft.core.{ExecutionError, PlanTooLargeError, QueryResult, SqlSafetyError, TimeoutError}
@@ -196,9 +198,8 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     * must still refuse to execute it. */
   test("reflection survives a name-denylist bypass: Executor.run's resolved-plan layer refuses") {
     tables
-    val smuggled = Validator.Validated(
-      "SELECT try_reflect('java.lang.System', 'getenv', 'PATH') AS v FROM nation LIMIT 1",
-      spark.sessionState.sqlParser.parsePlan("SELECT 1"), needsLimit = false)
+    val sql = "SELECT try_reflect('java.lang.System', 'getenv', 'PATH') AS v FROM nation LIMIT 1"
+    val smuggled = Validator.Validated(sql, spark.sessionState.sqlParser.parsePlan(sql), needsLimit = false)
     val r = Executor.run(spark, smuggled)
     assert(r.isLeft, "a smuggled reflection query must not execute")
     assert(!r.exists(_.rows.exists(_.exists(v => v != null && v.toString.contains("/")))))
@@ -213,8 +214,9 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   /** The in-process path keeps the timeout: the timed-out task is killed
-    * at the next row a scan hands it, and its memory (here the
-    * aggregation's hash map) goes back to the pool. It runs before
+    * at the next row a scan hands it, and its memory (here the sorter an
+    * aggregation of more than 128 groups falls back to: the innermost
+    * side's key changes at every row) goes back to the pool. It runs before
     * "timeout cancels a long-running query", whose timed-out job keeps its
     * executor task (and that task's memory) until the task's next check
     * for a kill. */
@@ -227,8 +229,8 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val poller = new Thread(() => while (polling) { peak = math.max(peak, memory.executionMemoryUsed); Thread.sleep(5) })
     poller.start()
     // ~3·10⁸ rows: minutes of work, so only a kill stops it within the waits below
-    val sql = "SELECT a.student_id, COUNT(*) AS n FROM scores a CROSS JOIN scores b CROSS JOIN scores c " +
-      "GROUP BY a.student_id"
+    val sql = "SELECT c.score_id, COUNT(*) AS n FROM scores a CROSS JOIN scores b CROSS JOIN scores c " +
+      "GROUP BY c.score_id"
     val t0 = System.nanoTime()
     val r = Executor.runSql(spark, sql, school, timeoutMs = 1500)
     val ms = (System.nanoTime() - t0) / 1000000
@@ -262,6 +264,24 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val (r, jobs) = withExecJobs(Executor.run(spark, v, timeoutMs = 900))
     assert(r.left.exists(_.isInstanceOf[TimeoutError]), r)
     assert(jobs == 0, "the cross join ran as a job")
+    val stuck = workers
+    stuck.foreach(_.join(20000))
+    assert(stuck.forall(!_.isAlive), "the worker kept running")
+    assert(settled(10000)(memory.executionMemoryUsed == before), "the task kept its memory")
+  }
+
+  /** The same triple cross join inside an uncorrelated scalar subquery: the
+    * subquery is computed in process too, by the answer's worker, and the
+    * timeout kills it there. */
+  test("a timed-out scalar subquery stops in process and releases its memory") {
+    tables
+    val memory = SparkEnv.get.memoryManager
+    val before = memory.executionMemoryUsed
+    val sql = "SELECT n_name FROM nation WHERE n_nationkey < " +
+      "(SELECT COUNT(*) FROM lineitem a CROSS JOIN lineitem b CROSS JOIN lineitem c)"
+    val (r, jobs) = withExecJobs(Executor.runSql(spark, sql, tables, timeoutMs = 900))
+    assert(r.left.exists(_.isInstanceOf[TimeoutError]), r)
+    assert(jobs == 0, "the subquery ran as a job")
     val stuck = workers
     stuck.foreach(_.join(20000))
     assert(stuck.forall(!_.isAlive), "the worker kept running")
@@ -533,10 +553,9 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   /** The guard reads the plan that runs, not only the one it came from. */
   test("the read-only guard vets the one-partition frame that runs") {
     tables
-    val smuggled = Validator.Validated(
-      "SELECT try_reflect('java.lang.System', 'getenv', 'PATH') AS v, n_name FROM nation " +
-        "ORDER BY n_nationkey LIMIT 1",
-      spark.sessionState.sqlParser.parsePlan("SELECT 1"), needsLimit = false)
+    val sql = "SELECT try_reflect('java.lang.System', 'getenv', 'PATH') AS v, n_name FROM nation " +
+      "ORDER BY n_nationkey LIMIT 1"
+    val smuggled = Validator.Validated(sql, spark.sessionState.sqlParser.parsePlan(sql), needsLimit = false)
     val ran = Executor.onePartition(Executor.frame(spark, smuggled).queryExecution.optimizedPlan)
     assert(ran.collectWithSubqueries { case r: Repartition => r }.nonEmpty)
     assert(graft.plans.ReadOnlyGuard.firstOffenseDeep(ran).isDefined)
@@ -585,6 +604,72 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(expected.nonEmpty && expected.size <= Executor.DefaultLimit, sql)
       assert(sorted(r.rows) == sorted(expected), sql)
     }
+  }
+
+  /** An uncorrelated scalar subquery's plan is computed in process too, by
+    * the thread that needs its value, so the answer runs no job: a
+    * subquery over a join, one over a grouped subquery, one nested in
+    * another, one in the SELECT list, and one with no row (NULL). */
+  test("uncorrelated scalar subqueries are computed in process and run no job") {
+    school
+    tables
+    val noRow = "SELECT n_name, (SELECT r_name FROM region WHERE r_regionkey < 0) AS none FROM nation " +
+      "WHERE n_nationkey < 3"
+    Seq(
+      "SELECT DISTINCT st.student_name FROM scores s JOIN students st ON st.student_id = s.student_id " +
+        "WHERE s.score >= (SELECT MAX(sc.score) FROM scores sc JOIN courses c ON c.course_id = sc.course_id " +
+        "WHERE c.course_name = 'Algebra') ORDER BY st.student_name" -> school,
+      "SELECT course_id FROM scores GROUP BY course_id HAVING COUNT(*) >= " +
+        "(SELECT MEDIAN(c) FROM (SELECT COUNT(*) AS c FROM scores GROUP BY course_id) t) ORDER BY course_id" -> school,
+      "SELECT student_id, score FROM scores WHERE course_id = 3 AND score > " +
+        "(SELECT AVG(score) FROM scores WHERE year > (SELECT MIN(year) FROM scores))" -> school,
+      "SELECT student_id, score - (SELECT AVG(score) FROM scores) AS diff FROM scores WHERE course_id = 2" -> school,
+      noRow -> tables
+    ).foreach { case (sql, ts) =>
+      val ((df, r), jobs) = withExecJobs(executeOn(sql, ts))
+      assert(jobs == 0, s"$sql ran $jobs jobs\n${r.explain}")
+      assert(collectWithSubqueries(df.queryExecution.executedPlan) { case s: InProcessSubqueryExec => s }.nonEmpty,
+        r.explain)
+      val expected = spark.sql(sql).collect().toSeq.map(_.toSeq.map(Executor.jsonSafe))
+      assert(expected.nonEmpty && expected.size <= Executor.DefaultLimit, sql)
+      assert(sorted(r.rows) == sorted(expected), sql)
+      if (sql == noRow) assert(r.rows.forall(_(1) == null), r.rows)
+    }
+  }
+
+  test("a scalar subquery of more than one row fails as it does in spark.sql") {
+    school
+    val sql = "SELECT student_id FROM students WHERE age = (SELECT age FROM students WHERE student_id <= 2)"
+    val condition = intercept[SparkThrowable](spark.sql(sql).collect()).getCondition
+    assert(condition != null)
+    val (r, jobs) = withExecJobs(Executor.runSql(spark, sql, school))
+    assert(jobs == 0)
+    r match {
+      case Left(ExecutionError(message)) => assert(message.contains(condition), message)
+      case other => fail(s"expected an ExecutionError, got $other")
+    }
+  }
+
+  /** A small answer's aggregates run as object hash aggregates, which hold
+    * up to 128 groups in a plain hash map: computing a few groups reserves
+    * no execution memory, where a hash aggregate reserves a whole page on
+    * its first row. */
+  test("a small grouped answer runs no hash aggregate and holds no memory for a few groups") {
+    school
+    val sql = "SELECT grade, COUNT(*) AS n, AVG(score) AS a, COUNT(DISTINCT course_id) AS d FROM scores GROUP BY grade"
+    val (df, r) = executeOn(sql, school)
+    val plan = df.queryExecution.executedPlan
+    assert(collectWithSubqueries(plan) { case a: HashAggregateExec => a }.isEmpty, r.explain)
+    assert(collectWithSubqueries(plan) { case a: ObjectHashAggregateExec => a }.nonEmpty, r.explain)
+    assert(sorted(r.rows) == sorted(spark.sql(sql).collect().toSeq.map(_.toSeq.map(Executor.jsonSafe))))
+    // the answer's partition again, under a task of this test's own, reading the pool at every row
+    val memory = SparkEnv.get.memoryManager
+    val before = memory.executionMemoryUsed
+    val rdd = plan.execute()
+    val held = localTask.run(spark.sparkContext, new AtomicBoolean) { task =>
+      rdd.iterator(rdd.partitions.head, task).map(_ => memory.executionMemoryUsed - before).max
+    }
+    assert(held == 0, r.explain)
   }
 
   /** The cache manager substitutes a cached fragment before the optimizer
@@ -643,8 +728,9 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   /** Many threads asking one engine get the answers one thread gets: the
     * chosen SQL and the row multiset of each answer, or the same error.
     * The set covers an answer computed in process, asks whose SQL has an
-    * uncorrelated scalar subquery (its own job), an outer join with no
-    * equality (a broadcast job) and a timeout (a task killed in process). */
+    * uncorrelated scalar subquery (computed in process by each answer's
+    * own thread), an outer join with no equality (a broadcast job) and a
+    * timeout (a task killed in process). */
   test("concurrent asks on one engine answer as sequential asks do") {
     school
     val engine = new graft.api.Engine(spark, SchoolFixture.tables, SchoolFixture.fks)
