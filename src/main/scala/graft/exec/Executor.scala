@@ -52,10 +52,9 @@ import graft.safety.Validator.Validated
  * ([[interop.planned]]). What still runs jobs: an outer or anti join with
  * no equality, whose only plans broadcast; a distinct aggregate, whose
  * `Expand` above the coalesce makes the planner shuffle; and inputs above
- * the bound. The
- * narrow-lineage guard is a correctness rule, not a tuning one: a
- * shuffle's map side runs only as a stage the scheduler runs first, and a
- * plan that shuffles, computed in process where nothing had run that
+ * the bound. The narrow-lineage guard is a correctness rule, not a tuning
+ * one: a shuffle's map side runs only as a stage the scheduler runs first,
+ * and a plan that shuffles, computed in process where nothing had run that
  * stage, returned wrong rows with no error. A plain small frame handed to
  * [[collectWithTimeout]] (a sketch-served answer) is not rewritten: it
  * runs its own plan, interpreted, in process when that plan has no
@@ -149,8 +148,10 @@ object Executor {
     * as a local hash join (SHUFFLE_HASH on both sides), an inner join with
     * no equality as a cartesian product (SHUFFLE_REPLICATE_NL, which reads
     * both one-partition sides in place); an outer or anti join with no
-    * equality has no such plan and still broadcasts. The rows are the same:
-    * a coalesce moves no row, a hint changes only the join's strategy. */
+    * equality has no such plan and still broadcasts. A distinct
+    * aggregate's `Expand` is not coalesced, so its aggregate still
+    * shuffles. The rows are the same: a coalesce moves no row, a hint
+    * changes only the join's strategy. */
   private[exec] def onePartition(plan: LogicalPlan): LogicalPlan = plan.transformUpWithSubqueries {
     case leaf: LeafNode => coalesced(leaf)
     case p @ (_: Project | _: Filter) => p.children.head match {
@@ -181,12 +182,11 @@ object Executor {
     * group is cancelled and `killed` is set, so an in-process task (a
     * subquery's of a frame [[interop.planned]] with the same flag
     * included) is killed at the next row a scan hands it, as cancelling the
-    * job group kills a job's tasks. A
-    * small frame's settings live only on the worker thread: a clone of the
-    * session conf for its planning, and local properties the thread's jobs
-    * hand to their tasks (and the in-process task to itself). The session
-    * conf is never written, since a set/restore on it would race with
-    * concurrent work. */
+    * job group kills a job's tasks. A small frame's settings live only on
+    * the worker thread: a clone of the session conf for its planning, and
+    * local properties the thread's jobs hand to their tasks (and the
+    * in-process task to itself). The session conf is never written, since
+    * a set/restore on it would race with concurrent work. */
   private def timed(spark: SparkSession, df: DataFrame, small: Boolean, timeoutMs: Long,
       killed: AtomicBoolean): Either[EngineError, Array[Row]] = {
     val group = s"graft-exec-${System.nanoTime()}"
