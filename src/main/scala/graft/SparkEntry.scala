@@ -2350,12 +2350,6 @@ object ExtensionQueries {
   import graft.streaming.Streams
   import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-  private def docs(s: SparkSession, dir: String): DataFrame = {
-    Sources.register(s, dir); s.table("documents")
-  }
-  private def embs(s: SparkSession, dir: String): DataFrame = {
-    Sources.register(s, dir); s.table("embeddings")
-  }
 
   /** The WithCleanup calling pattern for query lambdas: the operator's
     * internal candidate caches are PERSISTED (lineage-preserving) and
@@ -2430,8 +2424,7 @@ object ExtensionQueries {
     * the Spark side and the DuckDB oracle derive the SAME changelog
     * from the same table, so the materialization semantics are what is
     * compared. */
-  private def ordersChangelog(s: SparkSession, dir: String): DataFrame = {
-    Sources.register(s, dir)
+  private def ordersChangelog(s: SparkSession): DataFrame = {
     s.table("orders").select(
       pmod(col("o_orderkey").cast("long"), lit(997L)).as("k"),
       col("o_orderkey").cast("long").as("ver"),
@@ -2461,7 +2454,6 @@ object ExtensionQueries {
   private val docsFixtureWritten =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
   private def docsFixture(s: SparkSession, dir: String): Unit = {
-    Sources.register(s, dir)
     val fixDir = s"/tmp/graft_docfix_${ProcessHandle.current().pid()}_" +
       s"${new java.io.File(dir).getName}/customers"
     docsFixtureWritten.computeIfAbsent(fixDir, _ => {
@@ -2542,7 +2534,6 @@ object ExtensionQueries {
     }),
     // --- data-quality expectations (operators/Expectations.scala) ---
     "x_audit" -> ((s, dir) => {
-      Sources.register(s, dir)
       graft.operators.Expectations.audit(s.table("orders"), Seq(
         graft.operators.Expectations.NotNull("o_orderpriority"),
         graft.operators.Expectations.Unique("o_orderkey"),
@@ -2559,7 +2550,6 @@ object ExtensionQueries {
     // spans are tight and the range predicate actually drops files;
     // the comparison pins the null-safe interval-overlap plan logic
     "x_file_pruning" -> ((s, dir) => {
-      Sources.register(s, dir)
       val spans = s.table("lineitem")
         .groupBy(floor(col("l_partkey") / lit(53.0)).cast("long").as("file_id"))
         .agg(min(col("l_partkey").cast("double")).as("pk_min"),
@@ -2568,7 +2558,6 @@ object ExtensionQueries {
         .orderBy("file_id")
     }),
     "x_compaction_plan" -> ((s, dir) => {
-      Sources.register(s, dir)
       val files = s.table("orders").groupBy(
         pmod(col("o_orderkey").cast("long"), lit(499L)).as("file_id"))
         .agg(sum(pmod(col("o_orderkey").cast("long"), lit(1000L))).as("bytes"))
@@ -2581,7 +2570,7 @@ object ExtensionQueries {
     // host. Both engines derive the SAME edges from the same text, so
     // the comparison pins the PageRank algebra, not the fixture.
     "x_pagerank" -> ((s, dir) => {
-      val aug = docs(s, dir).select(col("doc_id"),
+      val aug = s.table("documents").select(col("doc_id"),
         when(col("doc_id") % 4 === 0,
           concat(col("text"), lit(" see https://www.site"), col("doc_id") % 20,
             lit(".example.org/p/"), col("doc_id"), lit(" and http://cdn"),
@@ -2599,7 +2588,6 @@ object ExtensionQueries {
     // market-basket co-occurrence over (user, day) baskets: self-join
     // on the basket key only (fan-out bounded by |types|² per basket)
     "x_cooccurrence" -> ((s, dir) => {
-      Sources.register(s, dir)
       graft.operators.EventAnalytics.typeCooccurrence(
         s.table("events"), "user_id", "ts", "event_type")
         .orderBy("type_a", "type_b")
@@ -2608,7 +2596,6 @@ object ExtensionQueries {
     // to a (type, bucket) histogram in one pass; fixed-width integer
     // buckets are engine-deterministic (no quantile fitting)
     "x_psi_drift" -> ((s, dir) => {
-      Sources.register(s, dir)
       val e = s.table("events")
       graft.operators.Drift.psi(
         e.where(dayofmonth(col("ts")) <= 15),
@@ -2621,7 +2608,6 @@ object ExtensionQueries {
     // all-integer arithmetic until the final divisions, so the rounded
     // statistic is engine-exact)
     "x_ks_drift" -> ((s, dir) => {
-      Sources.register(s, dir)
       harnessManaged(graft.operators.EventAnalytics.ksStatisticWithCleanup(
         s.table("events"), "value", "event_type", "view", "purchase"))
         .select(round(col("ks"), 6).as("ks"))
@@ -2630,7 +2616,6 @@ object ExtensionQueries {
     // distributions — integer/half-exact ranks, no rounding needed
     // beyond the 6dp convention
     "x_mann_whitney" -> ((s, dir) => {
-      Sources.register(s, dir)
       harnessManaged(graft.operators.EventAnalytics.mannWhitneyUWithCleanup(
         s.table("events"), "value", "event_type", "view", "purchase"))
         .select(round(col("u_a"), 2).as("u_a"), round(col("rho"), 6).as("rho"))
@@ -2639,7 +2624,6 @@ object ExtensionQueries {
     // CDF gaps weighted by value spans (cross-partition lead seam
     // handled by the broadcast boundary frame)
     "x_w1_drift" -> ((s, dir) => {
-      Sources.register(s, dir)
       harnessManaged(graft.operators.EventAnalytics.wasserstein1WithCleanup(
         s.table("events"), "value", "event_type", "view", "purchase"))
         .select(round(col("w1"), 4).as("w1"))
@@ -2648,7 +2632,6 @@ object ExtensionQueries {
     // at >= 14 purchases; hashed surface is the pure-integer columns
     // (zscore is a report column, spec-pinned with tolerance)
     "x_ab_test" -> ((s, dir) => {
-      Sources.register(s, dir)
       graft.operators.Experiments.abConversion(s.table("events"), "user_id",
         pmod(col("user_id"), lit(2)), col("event_type") === "purchase",
         minConversions = 14L).drop("zscore")
@@ -2661,7 +2644,6 @@ object ExtensionQueries {
     // UNPIVOT — the SQL syntaxes differ across engines, the semantics
     // must not
     "x_unpivot" -> ((s, dir) => {
-      Sources.register(s, dir)
       s.table("customer")
         .select(col("c_custkey"), col("c_acctbal").as("bal"),
           col("c_nationkey").cast("double").as("nk"))
@@ -2675,7 +2657,6 @@ object ExtensionQueries {
     // overlap must agree, so it hashes against x_tws_sessions' replica
     // SQL verbatim (batch ≡ streaming ≡ oracle)
     "x_sessionize" -> ((s, dir) => {
-      Sources.register(s, dir)
       graft.operators.EventAnalytics.sessionize(
           s.table("events").where(col("user_id") < 300), "user_id", "ts", "value")
         .select(col("user_id"), col("n_events"),
@@ -2694,7 +2675,6 @@ object ExtensionQueries {
     // oracle computes gaps on epoch_ms too). user_id < 300 bounds the
     // replay; LIMIT keeps the dump bounded
     "x_tws_sessions" -> ((s, dir) => {
-      Sources.register(s, dir)
       import s.implicits._
       val ev = s.table("events").where(col("user_id") < 300)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
@@ -2718,7 +2698,6 @@ object ExtensionQueries {
     // missing path is NULL, pinned by the k_missing column. The oracle
     // replicates with DuckDB's json_extract + casts.
     "x_variant_props" -> ((s, dir) => {
-      Sources.register(s, dir)
       s.table("events")
         .select(col("event_id"),
           expr("parse_json(props)").as("__v"))
@@ -2739,7 +2718,6 @@ object ExtensionQueries {
           "GROUP BY l_returnflag " +
           "|> ORDER BY l_returnflag |> LIMIT 100")),
     "x_json_props" -> ((s, dir) => {
-      Sources.register(s, dir)
       val parsed = s.table("events").select(col("event_type"),
         from_json(col("props"),
           org.apache.spark.sql.types.StructType.fromDDL("k INT"))
@@ -2755,7 +2733,6 @@ object ExtensionQueries {
     // side drops orders with o_orderkey % 7 == 0, so their lineitems
     // dangle; both join sides project only key columns (LeftAnti)
     "x_fk_orphans" -> ((s, dir) => {
-      Sources.register(s, dir)
       graft.operators.Expectations.referentialAudit(
         s.table("lineitem"), Seq("l_orderkey"),
         s.table("orders").where(col("o_orderkey") % 7 =!= 0), Seq("o_orderkey"))
@@ -2764,14 +2741,12 @@ object ExtensionQueries {
     // k-anonymity release gate over (nation, segment) quasi-identifiers:
     // one |classes|-sized hash aggregation, one report row
     "x_k_anonymity" -> ((s, dir) => {
-      Sources.register(s, dir)
       graft.operators.Governance.kAnonymityStats(
         s.table("customer"), Seq("c_nationkey", "c_mktsegment"), k = 8)
     }),
     // l-diversity over the same classes with a banded balance as the
     // sensitive attribute (homogeneity-attack audit)
     "x_l_diversity" -> ((s, dir) => {
-      Sources.register(s, dir)
       val c = s.table("customer").select(col("c_nationkey"), col("c_mktsegment"),
         floor(col("c_acctbal") / 2000.0).cast("long").as("bal_band"))
       graft.operators.Governance.lDiversityViolations(
@@ -2781,7 +2756,6 @@ object ExtensionQueries {
     // suppression remediation: the surviving corpus must audit clean
     // at the same k by construction (anti-join on the quasi key)
     "x_k_suppress" -> ((s, dir) => {
-      Sources.register(s, dir)
       val kept = graft.operators.Governance.suppressBelowK(
         s.table("customer"), Seq("c_nationkey", "c_mktsegment"), k = 8)
       graft.operators.Governance.kAnonymityStats(
@@ -2792,7 +2766,6 @@ object ExtensionQueries {
     // (skewness-attack audit; t = 1/10 compared cross-multiplied, so
     // no doubles reach the hashed surface)
     "x_t_closeness" -> ((s, dir) => {
-      Sources.register(s, dir)
       val c = s.table("customer").select(col("c_nationkey"), col("c_mktsegment"),
         floor(col("c_acctbal") / 2000.0).cast("long").as("bal_band"))
       graft.operators.Governance.tClosenessStats(
@@ -2803,7 +2776,6 @@ object ExtensionQueries {
     // over the same classes — the distance that catches mass sitting
     // FAR from the global distribution along the band axis
     "x_t_closeness_emd" -> ((s, dir) => {
-      Sources.register(s, dir)
       val c = s.table("customer").select(col("c_nationkey"), col("c_mktsegment"),
         floor(col("c_acctbal") / 2000.0).cast("long").as("bal_band"))
       graft.operators.Governance.tClosenessOrderedStats(
@@ -2816,7 +2788,7 @@ object ExtensionQueries {
     // id-ordered enumeration while the operator uses degree-ordered
     // orientation — both must land on the same exact census
     "x_triangles" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"))
+      val d = s.table("documents").select(col("doc_id"))
       val raw = d.select((col("doc_id") % 31).as("src"), ((col("doc_id") * 7 + 3) % 31).as("dst"))
         .unionAll(d.select((col("doc_id") % 31).as("src"), ((col("doc_id") * 13 + 5) % 31).as("dst")))
         .unionAll(d.select((col("doc_id") % 31).as("src"), ((col("doc_id") * 3 + 11) % 31).as("dst")))
@@ -2827,7 +2799,7 @@ object ExtensionQueries {
     // iteration with early exit, oracled against a depth-capped
     // recursive CTE with UNION-distinct semantics + MIN(depth)
     "x_graph_reach" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"))
+      val d = s.table("documents").select(col("doc_id"))
       val raw = d.select((col("doc_id") % 31).as("src"), ((col("doc_id") * 7 + 3) % 31).as("dst"))
         .unionAll(d.select((col("doc_id") % 31).as("src"), ((col("doc_id") * 13 + 5) % 31).as("dst")))
         .unionAll(d.select((col("doc_id") % 31).as("src"), ((col("doc_id") * 3 + 11) % 31).as("dst")))
@@ -2837,7 +2809,7 @@ object ExtensionQueries {
         .orderBy("node")
     }),
     "x_host_graph_degrees" -> ((s, dir) => {
-      val aug = docs(s, dir).select(col("doc_id"),
+      val aug = s.table("documents").select(col("doc_id"),
         when(col("doc_id") % 4 === 0,
           concat(col("text"), lit(" see https://www.site"), col("doc_id") % 20,
             lit(".example.org/p/"), col("doc_id"), lit(" and http://cdn"),
@@ -2862,7 +2834,6 @@ object ExtensionQueries {
     // batch by provenance — the maintained view must hash-match the
     // direct join of the final states (refresh ≡ rebuild contract)
     "x_mv_join_refresh" -> ((s, dir) => {
-      Sources.register(s, dir)
       val o = s.table("orders").select(col("o_orderkey"), col("o_custkey"),
         round(col("o_totalprice"), 2).as("o_price"))
       val c = s.table("customer").select(col("c_custkey").as("o_custkey"),
@@ -2885,7 +2856,6 @@ object ExtensionQueries {
     // maintained view must hash-match the direct join over corrected
     // prices (update ≡ rebuild contract)
     "x_mv_join_update" -> ((s, dir) => {
-      Sources.register(s, dir)
       val o = s.table("orders").select(col("o_orderkey"), col("o_custkey"),
         round(col("o_totalprice"), 2).as("o_price"))
       val c = s.table("customer").select(col("c_custkey").as("o_custkey"),
@@ -2898,7 +2868,6 @@ object ExtensionQueries {
         .orderBy("o_orderkey").limit(1000)
     }),
     "x_mv_refresh" -> ((s, dir) => {
-      Sources.register(s, dir)
       val o = s.table("orders").select(
         pmod(col("o_custkey").cast("long"), lit(101L)).as("g"),
         pmod(col("o_orderkey").cast("long"), lit(1000L)).as("v"),
@@ -2916,7 +2885,6 @@ object ExtensionQueries {
     // cnt/sum/min/max under the same insert/delete classes; v2 carries
     // NULLs so cnt_v2 genuinely diverges from n
     "x_mv_multi" -> ((s, dir) => {
-      Sources.register(s, dir)
       val o = s.table("orders").select(
         pmod(col("o_custkey").cast("long"), lit(101L)).as("g"),
         pmod(col("o_orderkey").cast("long"), lit(1000L)).as("v1"),
@@ -2940,7 +2908,6 @@ object ExtensionQueries {
     // stored table a lakehouse deployment serves against; MvRewriteSpec
     // pins that this exact shape optimizes to an aggregate-free plan.
     "x_mv_serve_having" -> ((s, dir) => {
-      Sources.register(s, dir)
       val base = s.table("orders").select(
         pmod(col("o_custkey").cast("long"), lit(101L)).as("g"),
         when(col("o_orderkey") % 7 === 0, lit(null).cast("long"))
@@ -2958,7 +2925,6 @@ object ExtensionQueries {
     // a key-only WHERE — answered by re-aggregating the key-sized state
     // (MvRewriteSpec pins the plan never rescans the base)
     "x_mv_serve_rollup" -> ((s, dir) => {
-      Sources.register(s, dir)
       val base = s.table("orders").select(
         pmod(col("o_custkey").cast("long"), lit(101L)).as("g"),
         pmod(col("o_custkey").cast("long"), lit(7L)).as("h"),
@@ -2975,14 +2941,14 @@ object ExtensionQueries {
     // --- CDC / changelog materialization (operators/Cdc.scala) ---
     "x_cdc_apply" -> ((s, dir) =>
       graft.operators.Cdc.applyChangelog(
-        ordersChangelog(s, dir), Seq("k"), "ver", "op").orderBy("k")),
+        ordersChangelog(s), Seq("k"), "ver", "op").orderBy("k")),
     // SCD type-2 history from the same changelog: each change becomes
     // a [valid_from, valid_to) interval, deletes close without a row,
     // is_current ⇔ open — LIMIT bounded by a total (k, valid_from)
     // order (ver is globally unique)
     "x_scd2" -> ((s, dir) =>
       graft.operators.Cdc.scd2History(
-        ordersChangelog(s, dir), Seq("k"), "ver", "op")
+        ordersChangelog(s), Seq("k"), "ver", "op")
         .select(col("k"), col("valid_from"), col("valid_to"),
           col("val"), col("is_current"))
         .orderBy("k", "valid_from").limit(2000)),
@@ -2991,7 +2957,7 @@ object ExtensionQueries {
     "x_scd2_asof" -> ((s, dir) =>
       graft.operators.Cdc.scd2AsOf(
         graft.operators.Cdc.scd2History(
-          ordersChangelog(s, dir), Seq("k"), "ver", "op"),
+          ordersChangelog(s), Seq("k"), "ver", "op"),
         lit(3000L))
         .select(col("k"), col("valid_from"), col("val"))
         .orderBy("k")),
@@ -2999,7 +2965,7 @@ object ExtensionQueries {
     // suffix folded in via scd2Apply — must hash-match the FULL-log
     // oracle (refresh ≡ rebuild; same SQL as x_scd2 by construction)
     "x_scd2_incremental" -> ((s, dir) => {
-      val log = ordersChangelog(s, dir)
+      val log = ordersChangelog(s)
       val hist0 = graft.operators.Cdc.scd2History(
         log.where(col("ver") <= 3000L), Seq("k"), "ver", "op")
       graft.operators.Cdc.scd2Apply(hist0,
@@ -3010,14 +2976,13 @@ object ExtensionQueries {
     }),
     "x_cdc_asof" -> ((s, dir) =>
       graft.operators.Cdc.snapshotAsOf(
-        ordersChangelog(s, dir), Seq("k"), "ver", "op", lit(3000L)).orderBy("k")),
+        ordersChangelog(s), Seq("k"), "ver", "op", lit(3000L)).orderBy("k")),
     "x_cdc_diff" -> ((s, dir) =>
       graft.operators.Cdc.netChanges(
-        ordersChangelog(s, dir), Seq("k"), "ver", "op",
+        ordersChangelog(s), Seq("k"), "ver", "op",
         lit(3000L), lit(Long.MaxValue)).orderBy("k")),
     // --- W2 bounded global rank (no global WindowExec — RankLimit) ---
     "d14_window_rank" -> ((s, dir) => {
-      Sources.register(s, dir)
       graft.plans.RankLimit.globalRankTopK(
         s.table("supplier").select(col("s_suppkey"), col("s_name"), col("s_acctbal")),
         Seq(col("s_acctbal").desc, col("s_suppkey")), k = 10)
@@ -3026,35 +2991,35 @@ object ExtensionQueries {
     }),
     // --- text analysis ---
     "x_text_stats" -> ((s, dir) =>
-      docs(s, dir).select(
+      s.table("documents").select(
         col("doc_id"),
         TextAnalysis.tokenCount(col("text")).as("n_tokens"),
         TextAnalysis.bpeishTokenCount(col("text")).as("n_subtokens"),
         round(TextAnalysis.digitRatio(col("text")), 4).as("digit_ratio"))
         .orderBy("doc_id").limit(100)),
     "x_text_analyze" -> ((s, dir) =>
-      TextAnalysis.analyze(docs(s, dir), "doc_id", "text")
+      TextAnalysis.analyze(s.table("documents"), "doc_id", "text")
         .drop("fingerprint") // not DuckDB-expressible; FunctionsSpec covers it
         .orderBy("doc_id").limit(100)),
     "x_lang_id" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"), TextAnalysis.langId(col("text")).as("lang_pred"))
+      s.table("documents").select(col("doc_id"), TextAnalysis.langId(col("text")).as("lang_pred"))
         .orderBy("doc_id").limit(100)),
     // --- dedup ---
     "x_dedup_exact" -> ((s, dir) =>
-      Dedup.exactDuplicateGroups(docs(s, dir), "doc_id", Seq("text"))
+      Dedup.exactDuplicateGroups(s.table("documents"), "doc_id", Seq("text"))
         .orderBy("keep_id").limit(100)),
     "x_dedup_stats" -> ((s, dir) =>
-      docs(s, dir).agg(count(lit(1)).as("n_docs"), countDistinct(col("text")).as("n_unique"))),
+      s.table("documents").agg(count(lit(1)).as("n_docs"), countDistinct(col("text")).as("n_unique"))),
     "x_dedup_minhash" -> ((s, dir) =>
       harnessManaged(Dedup.minhashNearDuplicatesWithCleanup(
-        docs(s, dir), "doc_id", "text", threshold = 0.7))
+        s.table("documents"), "doc_id", "text", threshold = 0.7))
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
         .orderBy("id_a", "id_b").limit(100)),
     // planted-recall contract: each ≥75-token doc gets a copy with one
     // appended token (a small edit on a long doc ⇒ Hamming ≤ 5 on the
     // 64-bit SimHash); the banded pipeline must find every planted pair
     "x_dedup_simhash" -> ((s, dir) => {
-      val base = docs(s, dir).select(col("doc_id"), col("text"))
+      val base = s.table("documents").select(col("doc_id"), col("text"))
         .where(TextAnalysis.tokenCount(col("text")) >= 75)
       val planted = base.select((col("doc_id") + 100000).as("doc_id"),
         concat(col("text"), lit(" zqxwv")).as("text"))
@@ -3063,25 +3028,25 @@ object ExtensionQueries {
         .select("id_a", "id_b").orderBy("id_a").limit(500)
     }),
     "x_dedup_ngram" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(docs(s, dir), "doc_id", "text", n = 3, threshold = 0.8)
+      Dedup.ngramJaccardPairs(s.table("documents"), "doc_id", "text", n = 3, threshold = 0.8)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
         .orderBy("id_a", "id_b").limit(100)),
     // full corpus pipelines (composed operators, DuckDB-mirrored)
     "x_dedup_corpus" -> ((s, dir) => {
       val (deduped, _) = graft.operators.Pipelines.dedupCorpus(
-        docs(s, dir), "doc_id", "text", nearThreshold = 0.85)
+        s.table("documents"), "doc_id", "text", nearThreshold = 0.85)
       deduped.select(col("doc_id")).orderBy("doc_id").limit(1000)
     }),
     "x_quality_filter" -> ((s, dir) =>
-      graft.operators.Pipelines.qualityFilter(docs(s, dir), "doc_id", "text",
+      graft.operators.Pipelines.qualityFilter(s.table("documents"), "doc_id", "text",
         allowedLangs = Seq("en"), minQuality = 0.3, minTokens = 5, maxTokens = 100000)
         .select(col("doc_id")).orderBy("doc_id").limit(500)),
     "x_text_chunks" -> ((s, dir) =>
-      graft.operators.Pipelines.chunkDocuments(docs(s, dir), "doc_id", "text",
+      graft.operators.Pipelines.chunkDocuments(s.table("documents"), "doc_id", "text",
         chunkTokens = 32, overlapTokens = 8)
         .orderBy("doc_id", "chunk_index").limit(200)),
     "x_pack_sequences" -> ((s, dir) =>
-      graft.operators.Pipelines.packSequences(docs(s, dir), "doc_id", "text",
+      graft.operators.Pipelines.packSequences(s.table("documents"), "doc_id", "text",
         capacityTokens = 256, shards = 8)
         .orderBy("doc_id").limit(500)),
     // GLOBAL concat-and-chunk packing (docs split across sequence
@@ -3089,37 +3054,37 @@ object ExtensionQueries {
     // range exchange + per-partition windows + a cluster-sized totals
     // frame; all columns exact BIGINTs
     "x_pack_offsets" -> ((s, dir) =>
-      graft.operators.Packing.packOffsets(docs(s, dir), "doc_id", "text",
+      graft.operators.Packing.packOffsets(s.table("documents"), "doc_id", "text",
         seqLen = 256).orderBy("doc_id")),
     // corpus packing scorecard: totals / ceil sequences / tail padding /
     // boundary-straddling docs
     "x_pack_stats" -> ((s, dir) =>
-      graft.operators.Packing.packingStats(docs(s, dir), "doc_id", "text",
+      graft.operators.Packing.packingStats(s.table("documents"), "doc_id", "text",
         seqLen = 256)),
     // token-budget curation: the maximal quality-ordered prefix
     // (n_chars desc, id tiebreak) fitting 20k tokens — curation by
     // TOKENS, not documents
     "x_token_budget" -> ((s, dir) =>
-      graft.operators.Packing.selectByTokenBudget(docs(s, dir), "doc_id",
+      graft.operators.Packing.selectByTokenBudget(s.table("documents"), "doc_id",
         "text", "n_chars", budgetTokens = 20000L).orderBy("doc_id")),
     // the write path: MATERIALIZED training sequences (ordered token
     // slices regrouped per sequence) — one seq_id-keyed exchange;
     // hashed surface is strings + BIGINTs only
     "x_pack_materialize" -> ((s, dir) =>
-      graft.operators.Packing.materializeSequences(docs(s, dir), "doc_id",
+      graft.operators.Packing.materializeSequences(s.table("documents"), "doc_id",
         "text", seqLen = 256).orderBy("seq_id")),
     // transfer-integrity manifest: per-shard order-independent content
     // fingerprints the receiver of a 100 TB copy recomputes to verify
     // arrival — one partial-aggregated pass, |shards| rows shuffled
     "x_shard_manifest" -> ((s, dir) =>
-      graft.operators.Layout.integrityManifest(docs(s, dir), "doc_id",
+      graft.operators.Layout.integrityManifest(s.table("documents"), "doc_id",
         pmod(col("doc_id"), lit(8L)), Some("text")).orderBy("shard")),
     // ingest-time packing SERVED end-to-end: three id-contiguous
     // micro-batches fold through the streaming maintainer (one long of
     // driver state), and the union must equal the terminal batch pack —
     // oracled against the same global running sum
     "x_pack_streamed" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = s.table("documents")
       val m = new Streams.PackingMaintainer(
         "doc_id", "text", seqLen = 256)
       val mx = d.agg(max("doc_id")).collect()(0).getLong(0)
@@ -3132,7 +3097,7 @@ object ExtensionQueries {
     }),
     // duplicate groups over the exact-Jaccard pair graph (min-label CC)
     "x_dedup_groups" -> ((s, dir) => {
-      val pairs = Dedup.ngramJaccardPairs(docs(s, dir), "doc_id", "text", n = 3, threshold = 0.8)
+      val pairs = Dedup.ngramJaccardPairs(s.table("documents"), "doc_id", "text", n = 3, threshold = 0.8)
         .select(col("id_a"), col("id_b"))
       Dedup.duplicateGroups(pairs)
         .orderBy("id").limit(1000)
@@ -3140,7 +3105,7 @@ object ExtensionQueries {
     // canonical-member selection: per near-dup group, keep the member
     // maximizing quality (min-id tiebreak) — not the first-crawled copy
     "x_dedup_canonical" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = s.table("documents")
       val pairs = Dedup.ngramJaccardPairs(d, "doc_id", "text", n = 3, threshold = 0.8)
         .select(col("id_a"), col("id_b"))
       // score GROUP MEMBERS only (r18: the canonical join discards
@@ -3159,7 +3124,7 @@ object ExtensionQueries {
     }),
     // benchmark decontamination: pseudo-benchmark = doc_id % 97 == 0
     "x_decontam" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = s.table("documents")
       val evalSet = d.where(col("doc_id") % 97 === 0)
       graft.operators.Decontamination.decontaminate(
         d, "doc_id", "text", evalSet, "text", n = 3, minOverlap = 5)
@@ -3168,7 +3133,7 @@ object ExtensionQueries {
     // contamination attribution: which eval doc leaked into which
     // training doc, with the shared-shingle count
     "x_decontam_report" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = s.table("documents")
       val evalSet = d.where(col("doc_id") % 97 === 0)
         .select(col("doc_id").as("eval_id"), col("text"))
       graft.operators.Decontamination.attributionReport(
@@ -3177,11 +3142,11 @@ object ExtensionQueries {
     }),
     // per-doc perplexity under the corpus's own bigram LM
     "x_perplexity" -> ((s, dir) =>
-      TextAnalysis.bigramPerplexity(docs(s, dir), "doc_id", "text")
+      TextAnalysis.bigramPerplexity(s.table("documents"), "doc_id", "text")
         .orderBy("doc_id").limit(200)),
     // PII redaction over deterministically-augmented text
     "x_pii_redact" -> ((s, dir) => {
-      val aug = docs(s, dir).select(col("doc_id"),
+      val aug = s.table("documents").select(col("doc_id"),
         when(col("doc_id") % 7 === 0,
           concat(col("text"), lit(" contact user"), col("doc_id"),
             lit("@mail.example.com or call 555-867-5309 at 10.0.0."),
@@ -3195,7 +3160,7 @@ object ExtensionQueries {
     // (accent-translated + upper-cased copies) must land in the same
     // group as their originals via the CCNet normalization fingerprint
     "x_normalized_dedup" -> ((s, dir) => {
-      val base = docs(s, dir).select(col("doc_id"), col("text"))
+      val base = s.table("documents").select(col("doc_id"), col("text"))
       val variants = base.where(col("doc_id") % 10 === 0)
         .select((col("doc_id") + 100000L).as("doc_id"),
           upper(translate(col("text"), "aeio", "\u00e1\u00e9\u00ec\u00f6")).as("text"))
@@ -3205,13 +3170,13 @@ object ExtensionQueries {
     "x_stratified_sample" -> ((s, dir) => {
       val n = TextAnalysis.tokenCount(col("text"))
       val stratum = when(n < 50, "short").when(n < 200, "medium").otherwise("long")
-      graft.operators.Sampling.stratifiedSample(docs(s, dir), "doc_id", stratum,
+      graft.operators.Sampling.stratifiedSample(s.table("documents"), "doc_id", stratum,
         Seq("short" -> 0.1, "medium" -> 0.5, "long" -> 1.0))
         .select(col("doc_id"), col("stratum")).orderBy("doc_id").limit(2000)
     }),
     // end-to-end curation pipeline (quality -> dedup -> decontam -> split)
     "x_curate" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = s.table("documents")
       graft.operators.Pipelines.curateCorpus(d, "doc_id", "text",
         d.where(col("doc_id") % 97 === 0), "text")
         .select(col("doc_id"), col("split")).orderBy("doc_id").limit(2000)
@@ -3220,7 +3185,7 @@ object ExtensionQueries {
     // covered by a cross-document 3-gram is cut, text rebuilt in order;
     // a known boilerplate clause is injected into even docs
     "x_span_remove" -> ((s, dir) => {
-      val aug = docs(s, dir).select(col("doc_id"), concat(col("text"),
+      val aug = s.table("documents").select(col("doc_id"), concat(col("text"),
         when(col("doc_id") % 2 === 0,
           lit(" please accept all cookies to continue")).otherwise(lit("")))
         .as("text"))
@@ -3231,21 +3196,20 @@ object ExtensionQueries {
     // doc (lang/quality/length/exact_dup/near_dup/decontam) or its
     // split when kept — one row per INPUT document
     "x_curation_audit" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = s.table("documents")
       graft.operators.Pipelines.curationAudit(d, "doc_id", "text",
         d.where(col("doc_id") % 97 === 0), "text")
         .orderBy("doc_id").limit(2000)
     }),
     // deterministic train/val/test split
     "x_split" -> ((s, dir) =>
-      graft.operators.Sampling.split(docs(s, dir), "doc_id",
+      graft.operators.Sampling.split(s.table("documents"), "doc_id",
         Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05))
         .select(col("doc_id"), col("split")).orderBy("doc_id").limit(2000)),
     // deterministic training-export shuffle: the first 200 rows of the
     // hash-keyed pseudo-random permutation — pins that the permutation
     // is pure integer arithmetic any engine reproduces (vs rand())
     "x_det_shuffle" -> ((s, dir) => {
-      Sources.register(s, dir)
       graft.operators.Sampling.deterministicShuffle(
           s.table("orders").select("o_orderkey", "o_custkey"), "o_orderkey")
         .withColumn("shuffle_key",
@@ -3256,7 +3220,7 @@ object ExtensionQueries {
     // split (the violation list leakageSafeSplit exists to empty —
     // running the audit on the naive split quantifies the leakage)
     "x_split_audit" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = s.table("documents")
       val assigned = graft.operators.Sampling.split(d, "doc_id",
         Seq("train" -> 0.8, "test" -> 0.2))
       val pairs = Dedup.ngramJaccardPairs(d, "doc_id", "text", n = 3, threshold = 0.8)
@@ -3268,7 +3232,7 @@ object ExtensionQueries {
     // train/test — the oracle recomputes groups recursively and applies
     // the same hash rule to the group key
     "x_leakage_split" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = s.table("documents")
       val pairs = Dedup.ngramJaccardPairs(d, "doc_id", "text", n = 3, threshold = 0.8)
         .select(col("id_a"), col("id_b"))
       val groups = Dedup.duplicateGroups(pairs)
@@ -3279,28 +3243,28 @@ object ExtensionQueries {
     // per-row weighted sampling: keep probability = min(n_tokens/200, 1)
     "x_weighted_sample" -> ((s, dir) => {
       val w = TextAnalysis.tokenCount(col("text")).cast("double") / lit(200.0)
-      graft.operators.Sampling.weightedSample(docs(s, dir), "doc_id", w)
+      graft.operators.Sampling.weightedSample(s.table("documents"), "doc_id", w)
         .select(col("doc_id")).orderBy("doc_id").limit(2000)
     }),
     // length-bucketed inference batching (32-token bands, batches of 8)
     "x_len_batches" -> ((s, dir) =>
-      graft.operators.Sampling.lengthBatches(docs(s, dir), "doc_id", "text",
+      graft.operators.Sampling.lengthBatches(s.table("documents"), "doc_id", "text",
         bucketWidth = 32, batchSize = 8)
         .orderBy("doc_id").limit(500)),
     // corpus vocabulary (top-100 tokens by document frequency)
     "x_vocab_top" -> ((s, dir) =>
-      TextAnalysis.topTerms(docs(s, dir), "doc_id", "text", k = 100)),
+      TextAnalysis.topTerms(s.table("documents"), "doc_id", "text", k = 100)),
     // corpus-pair vocabulary divergence (JSD + both KLs) between the
     // en and es slices — the pre-mixing "how different are these
     // sources" check; vocab-sized shuffles only
     "x_vocab_divergence" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = s.table("documents")
       TextAnalysis.vocabDivergence(
         d.where(col("lang") === "en"), d.where(col("lang") === "es"), "text")
     }),
     // the tokens driving that divergence: top-20 by |smoothed log-ratio|
     "x_divergent_tokens" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = s.table("documents")
       TextAnalysis.divergentTokens(
         d.where(col("lang") === "en"), d.where(col("lang") === "es"), "text", k = 20)
     }),
@@ -3309,7 +3273,7 @@ object ExtensionQueries {
     // hashed surface is the exact counts; the oov_rate double is a
     // derivable report column and stays off the oracle
     "x_oov_rate" -> ((s, dir) =>
-      TextAnalysis.oovRate(docs(s, dir), "text", "lang", vocabSize = 500)
+      TextAnalysis.oovRate(s.table("documents"), "text", "lang", vocabSize = 500)
         .drop("oov_rate")),
     // streaming vocab-drift SERVED through the NL routing layer: fold
     // the non-en slice as three micro-batches into a live
@@ -3319,7 +3283,7 @@ object ExtensionQueries {
     // (Streams fold → SketchCatalog.route), oracled against a batch
     // recomputation of the same divergence
     "x_served_drift" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = s.table("documents")
       val m = new Streams.VocabDriftMaintainer("text")
       (0 until 3).foreach(i => m.onBatch(
         d.where(col("lang") =!= "en" && pmod(col("doc_id"), lit(3)) === i),
@@ -3340,21 +3304,21 @@ object ExtensionQueries {
     // n_chars — one |strata|-sized percentile pass, no corpus sort
     "x_quantile_cut" -> ((s, dir) =>
       graft.operators.Sampling.selectTopQuantilePerStratum(
-        docs(s, dir), "source", "n_chars", keepFraction = 0.3)
+        s.table("documents"), "source", "n_chars", keepFraction = 0.3)
         .select(col("doc_id"), col("source"), col("n_chars"))
         .orderBy("doc_id")),
     // BPE tokenizer training statistics: the first-iteration adjacent
     // char-pair counts (word-boundary-restricted), top 40
     "x_bpe_pairs" -> ((s, dir) =>
-      graft.operators.Bpe.pairCounts(docs(s, dir), "text")
+      graft.operators.Bpe.pairCounts(s.table("documents"), "text")
         .orderBy(col("cnt").desc, col("pair_a"), col("pair_b")).limit(40)),
     // corpus symbol statistics under the empty vocabulary (code points):
     // the measurement a tokenizer-selection loop runs per candidate
     "x_bpe_vocab" -> ((s, dir) =>
-      graft.operators.Bpe.vocabStats(docs(s, dir), "doc_id", "text", Nil)),
+      graft.operators.Bpe.vocabStats(s.table("documents"), "doc_id", "text", Nil)),
     // text normalization (control-char strip + whitespace collapse + case)
     "x_normalize" -> ((s, dir) => {
-      val aug = docs(s, dir).select(col("doc_id"),
+      val aug = s.table("documents").select(col("doc_id"),
         when(col("doc_id") % 5 === 0,
           concat(lit("  \t"), col("text"), lit("\u0007\u000B  MIXED case  ")))
           .otherwise(col("text")).as("text"))
@@ -3366,41 +3330,41 @@ object ExtensionQueries {
     }),
     // Gopher-style repetition signals
     "x_repetition" -> ((s, dir) =>
-      TextAnalysis.repetitionStats(docs(s, dir), "doc_id", "text")
+      TextAnalysis.repetitionStats(s.table("documents"), "doc_id", "text")
         .orderBy("doc_id").limit(100)),
     // per-source stats + temperature-scaled mixing weights
     // per-source dataset card: volumes, mean quality, language spread,
     // exact-dup exposure — one enrichment projection + two aggregations
     "x_corpus_report" -> ((s, dir) =>
-      graft.operators.Pipelines.corpusReport(docs(s, dir), "doc_id", "text",
+      graft.operators.Pipelines.corpusReport(s.table("documents"), "doc_id", "text",
         "lang", "source").orderBy("source").limit(100)),
     "x_source_mix" -> ((s, dir) =>
-      graft.operators.Pipelines.sourceMix(docs(s, dir), "doc_id", "text", "source", alpha = 0.7)
+      graft.operators.Pipelines.sourceMix(s.table("documents"), "doc_id", "text", "source", alpha = 0.7)
         .orderBy("source").limit(100)),
     // token-budget mixing plan: per-source target allocation under a
     // 50k-token budget and the per-mille rate that realizes it
     "x_source_budget" -> ((s, dir) =>
-      graft.operators.Pipelines.sourceBudgetPlan(docs(s, dir), "doc_id", "text",
+      graft.operators.Pipelines.sourceBudgetPlan(s.table("documents"), "doc_id", "text",
           "source", budgetTokens = 50000L)
         .orderBy("source").limit(100)),
     // DSIR hashed-n-gram importance weights: target = the English
     // slice, raw = the whole corpus, 4096 md5-derived buckets
     "x_dsir" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = s.table("documents")
       TextAnalysis.dsirWeightsWhere(d, col("lang") === "en", "doc_id", "text")
         .orderBy("doc_id")
     }),
     // token-window chunking (64-token chunks, 16-token overlap):
     // deterministic per-doc windows; LIMIT keeps the dump bounded
     "x_chunk_tokens" -> ((s, dir) =>
-      graft.operators.Chunking.chunkByTokens(docs(s, dir), "doc_id", "text",
+      graft.operators.Chunking.chunkByTokens(s.table("documents"), "doc_id", "text",
           size = 64, overlap = 16)
         .orderBy("doc_id", "chunk_idx").limit(500)),
     // logistic-regression gradient step (quality-classifier training):
     // fixed weights, text-stat features, label = lang='en'; the
     // x_kmeans_step precedent — pin one exactly-reproducible step
     "x_lr_step" -> ((s, dir) => {
-      val d = docs(s, dir).select(
+      val d = s.table("documents").select(
         (TextAnalysis.tokenCount(col("text")).cast("double") / 100.0).as("tok_norm"),
         round(TextAnalysis.punctRatio(col("text")), 4).as("punct"),
         round(TextAnalysis.digitRatio(col("text")), 4).as("digit"),
@@ -3411,7 +3375,7 @@ object ExtensionQueries {
     // Gumbel top-k importance resampling: 50 docs drawn without
     // replacement ∝ (n_tokens + 1), deterministic md5-derived noise
     "x_gumbel_topk" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"),
+      val d = s.table("documents").select(col("doc_id"),
         TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"))
       graft.operators.Sampling.gumbelTopK(d, "doc_id",
           log(col("n_tokens") + 1.0), k = 50)
@@ -3423,7 +3387,7 @@ object ExtensionQueries {
     // WindowGroupLimit bounds per-group state at k, RankLimitSpec pins
     // the plan)
     "x_grouped_topk" -> ((s, dir) => {
-      graft.plans.RankLimit.groupedTopK(docs(s, dir),
+      graft.plans.RankLimit.groupedTopK(s.table("documents"),
           Seq(col("lang")), Seq(col("n_chars").desc, col("doc_id")), k = 2)
         .select(col("lang"), col("doc_id"), col("n_chars"))
         .orderBy("lang", "doc_id")
@@ -3431,7 +3395,7 @@ object ExtensionQueries {
     // Moore-Lewis cross-entropy-difference selection: target LM = the
     // English slice, raw LM = the whole corpus; positive gap selects
     "x_moore_lewis" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = s.table("documents")
       TextAnalysis.crossEntropyDiff(d, d.where(col("lang") === "en"), "doc_id", "text")
         .orderBy("doc_id")
     }),
@@ -3440,7 +3404,7 @@ object ExtensionQueries {
     // cookie / newsletter lines cross the 50-doc threshold and must
     // vanish from EVERY document; the per-doc footer stays
     "x_line_dedup" -> ((s, dir) => {
-      val aug = docs(s, dir).select(col("doc_id"), concat(col("text"),
+      val aug = s.table("documents").select(col("doc_id"), concat(col("text"),
         when(col("doc_id") % 2 === 0, lit("\ncookie notice applies")).otherwise(lit("")),
         when(col("doc_id") % 3 === 0, lit("\nsubscribe to our newsletter")).otherwise(lit("")),
         when(col("doc_id") % 5 === 0,
@@ -3451,34 +3415,34 @@ object ExtensionQueries {
     }),
     // per-document duplicated-span statistics (inverted n-gram index)
     "x_span_dup" -> ((s, dir) =>
-      Dedup.duplicatedSpanStats(docs(s, dir), "doc_id", "text", n = 3)
+      Dedup.duplicatedSpanStats(s.table("documents"), "doc_id", "text", n = 3)
         .withColumnRenamed("id", "doc_id")
         .orderBy("doc_id").limit(200)),
     // per-document top-3 TF-IDF keywords
     "x_tfidf_top" -> ((s, dir) =>
-      TextAnalysis.tfidfTopTerms(docs(s, dir), "doc_id", "text", k = 3)
+      TextAnalysis.tfidfTopTerms(s.table("documents"), "doc_id", "text", k = 3)
         .withColumnRenamed("id", "doc_id")
         .orderBy("doc_id", "rank").limit(300)),
     // BM25 keyword retrieval: top-10 docs for a 3-term query (the sparse
     // complement of the ANN path; postings filtered to query terms
     // inside the scan, nothing corpus-sized shuffles)
     "x_bm25" -> ((s, dir) =>
-      TextAnalysis.bm25TopK(docs(s, dir), "doc_id", "text",
+      TextAnalysis.bm25TopK(s.table("documents"), "doc_id", "text",
         Seq("spark", "window", "merge"), k = 10)),
     // one distributed k-means E+M update from the fixed probe centroids
     // (vec_id < 8) — long-form new centroids, SQL-replicable exactly
     "x_kmeans_step" -> ((s, dir) => {
-      val e = embs(s, dir).select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+      val e = s.table("embeddings").select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val cents = e.where(col("vec_id") < 8)
       graft.operators.Similarity.kmeansStep(e, "vec_id", "emb", cents, "vec_id", "emb")
         .orderBy("cluster", "pos").limit(1000)
     }),
     // corpus bigram LM counts + conditional probability
     "x_bigram_lm" -> ((s, dir) =>
-      TextAnalysis.bigramModel(docs(s, dir), "text", k = 100)),
+      TextAnalysis.bigramModel(s.table("documents"), "text", k = 100)),
     // URL extraction over deterministically-augmented text
     "x_url_extract" -> ((s, dir) => {
-      val aug = docs(s, dir).select(col("doc_id"),
+      val aug = s.table("documents").select(col("doc_id"),
         when(col("doc_id") % 4 === 0,
           concat(col("text"), lit(" see https://www.site"), col("doc_id") % 20,
             lit(".example.org/p/"), col("doc_id"), lit(" and http://cdn"),
@@ -3489,26 +3453,25 @@ object ExtensionQueries {
     }),
     // exact per-group percentiles over events
     "x_percentiles" -> ((s, dir) => {
-      Sources.register(s, dir)
       graft.catalog.Profiler.exactPercentiles(
         s.table("events"), Seq("event_type"), "value", Seq(0.5, 0.95))
         .orderBy("event_type").limit(100)
     }),
     // boilerplate removal (CCNet-style high-frequency segment dropping)
     "x_boilerplate" -> ((s, dir) =>
-      graft.operators.Pipelines.removeBoilerplate(docs(s, dir), "doc_id", "text",
+      graft.operators.Pipelines.removeBoilerplate(s.table("documents"), "doc_id", "text",
         chunkTokens = 16, maxDocFreq = 2)
         .orderBy("doc_id").limit(200)),
     // token-length histogram (50-token buckets)
     "x_len_hist" -> ((s, dir) =>
-      docs(s, dir)
+      s.table("documents")
         .select((floor(TextAnalysis.tokenCount(col("text")).cast("double") / 50) * 50)
           .cast("long").as("bucket"))
         .groupBy("bucket").agg(count(lit(1)).as("n_docs"))
         .orderBy("bucket").limit(100)),
     // k-NN join over 4 probe queries
     "x_knn_join" -> ((s, dir) => {
-      val e = embs(s, dir).select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+      val e = s.table("embeddings").select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val q = e.where(col("vec_id") < 4)
       Similarity.knnJoin(e, "vec_id", "emb", q, "vec_id", "emb", k = 5)
         .select(col("query_id"), col("id").as("vec_id"),
@@ -3520,7 +3483,7 @@ object ExtensionQueries {
     // recall drops below 1 exactly when a twin carries an odd id
     "x_retrieval_metrics" -> ((s, dir) => {
       import graft.functions.cosine_sim
-      val e = embs(s, dir).select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+      val e = s.table("embeddings").select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val q = e.where(col("vec_id") < 20)
       val pred = Similarity.knnJoin(e.where(col("vec_id") % 2 === 0),
         "vec_id", "emb", q, "vec_id", "emb", k = 10)
@@ -3536,8 +3499,8 @@ object ExtensionQueries {
     // contrastive hard negatives: top-5 most-similar DIFFERENT-source
     // vectors per anchor (label mismatch filters before scoring)
     "x_hard_negatives" -> ((s, dir) => {
-      val lbl = docs(s, dir).select(col("doc_id").as("vec_id"), col("source"))
-      val e = embs(s, dir)
+      val lbl = s.table("documents").select(col("doc_id").as("vec_id"), col("source"))
+      val e = s.table("embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
         .join(lbl, "vec_id")
       val anchors = e.where(col("vec_id") < 4)
@@ -3552,7 +3515,7 @@ object ExtensionQueries {
     // |q|×corpus broadcast fan-out) — with 2/8 cells probed the result
     // must still equal the brute-force per-query top-5
     "x_knn_join_ivf" -> ((s, dir) => {
-      val e = embs(s, dir).select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+      val e = s.table("embeddings").select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val centers = e.where(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("emb").as("cemb"))
       val clustered = e.join(broadcast(centers), pmod(col("vec_id"), lit(8)) === col("cid"))
@@ -3572,7 +3535,7 @@ object ExtensionQueries {
     // On the planted-cluster fixture with 2/8 cells probed and a
     // generous candidate cut the result must equal brute force.
     "x_knn_join_ivfpq" -> ((s, dir) => {
-      val e = embs(s, dir).select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+      val e = s.table("embeddings").select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val centers = e.where(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("emb").as("cemb"))
       val clustered = e.join(broadcast(centers), pmod(col("vec_id"), lit(8)) === col("cid"))
@@ -3590,7 +3553,7 @@ object ExtensionQueries {
     }),
     // nearest-centroid assignment with fixed probe centroids (vec_id < 8)
     "x_cluster_assign" -> ((s, dir) => {
-      val e = embs(s, dir).select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+      val e = s.table("embeddings").select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val cents = e.where(col("vec_id") < 8)
       Similarity.assignNearestCentroid(e, "vec_id", "emb", cents, "vec_id", "emb")
         .select(col("id").as("vec_id"), col("cluster"), round(col("cosine"), 4).as("cosine"))
@@ -3599,14 +3562,14 @@ object ExtensionQueries {
     // PCA covariance pass: one-shot distributed second-moment sums →
     // upper-triangle sample covariance of the embedding dimensions
     "x_embed_cov" -> ((s, dir) =>
-      graft.operators.Pca.covarianceLong(embs(s, dir), "embedding")
+      graft.operators.Pca.covarianceLong(s.table("embeddings"), "embedding")
         .orderBy("i", "j")),
     // SemDeDup: within-cluster semantic near-dup pairs over planted
     // perturbed copies (cosine ≈ 0.97); fixed probe centroids (vec_id<8)
     // keep the assignment — and therefore the cluster scoping — oracle-
     // expressible
     "x_semdedup" -> ((s, dir) => {
-      val e = embs(s, dir).select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+      val e = s.table("embeddings").select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val planted = e.where(col("vec_id") < 25)
         .select((col("vec_id") + 100000).as("vec_id"),
           concat(array(element_at(col("emb"), 1) + lit(0.25)), slice(col("emb"), 2, 63)).as("emb"))
@@ -3622,7 +3585,7 @@ object ExtensionQueries {
     // = each eval item's unperturbed origin (cos ≈ 0.99 ≫ the 0.51
     // organic ceiling); hashed surface integer per the oracle rule
     "x_sem_decontam" -> ((s, dir) => {
-      val e = embs(s, dir).select(col("vec_id"),
+      val e = s.table("embeddings").select(col("vec_id"),
         col("embedding").cast("array<double>").as("emb"))
       val ev = e.where(col("vec_id") % 11 === 0)
         .select(col("vec_id").as("eval_id"),
@@ -3637,7 +3600,7 @@ object ExtensionQueries {
     }),
     // --- similarity search ---
     "x_ann_topk" -> ((s, dir) => {
-      val e = embs(s, dir)
+      val e = s.table("embeddings")
       val q = broadcast(e.where(col("vec_id") === 0)
         .select(col("embedding").as("q_embedding")))
       e.crossJoin(q)
@@ -3659,7 +3622,7 @@ object ExtensionQueries {
     // default seed — is certified by x_ann_ivf_clustered below, on the
     // planted-cluster corpus IVF exists for.
     "x_ann_ivf" -> ((s, dir) => {
-      val e = embs(s, dir)
+      val e = s.table("embeddings")
       val query = e.where(col("vec_id") === 0).select("embedding")
         .collect()(0).getSeq[Float](0).toArray
       val idx = Similarity.ivfIndex(e, "vec_id", "embedding", nlist = 16,
@@ -3678,7 +3641,7 @@ object ExtensionQueries {
     // far above double noise, while rounded-cosine columns would tie at
     // 4 decimals and make row order oracle-fragile).
     "x_ann_ivf_clustered" -> ((s, dir) => {
-      val e = embs(s, dir).select(col("vec_id"),
+      val e = s.table("embeddings").select(col("vec_id"),
         col("embedding").cast("array<double>").as("emb"))
       val centers = e.where(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("emb").as("cemb"))
@@ -3698,7 +3661,7 @@ object ExtensionQueries {
     // makes the result the exact brute-force top-10, same oracle shape
     // as x_pq_topk).
     "x_pq_persisted" -> ((s, dir) => {
-      val e = embs(s, dir).select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+      val e = s.table("embeddings").select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val model = graft.operators.ProductQuantization.fit(e, "vec_id", "emb", m = 16, k = 16)
       val index = graft.operators.ProductQuantization.ivfPqIndex(e, "vec_id", "emb", model, nlist = 8)
       // deterministic per-SF path: repeated executions (bench warmup +
@@ -3719,7 +3682,7 @@ object ExtensionQueries {
     // banded signature join + exact verify must find exactly what the
     // DuckDB brute force finds
     "x_cosine_neardup" -> ((s, dir) => {
-      val e = embs(s, dir).select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+      val e = s.table("embeddings").select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val planted = e.where(col("vec_id") < 25)
         .select((col("vec_id") + 100000).as("vec_id"),
           concat(array(element_at(col("emb"), 1) + lit(0.25)), slice(col("emb"), 2, 63)).as("emb"))
@@ -3730,7 +3693,6 @@ object ExtensionQueries {
     }),
     // --- as-of join over events (custom operator; DuckDB native ASOF oracle) ---
     "x_asof_purchase" -> ((s, dir) => {
-      Sources.register(s, dir)
       val events = s.table("events")
       val purchases = events.where(col("event_type") === "purchase")
         .select(col("user_id"), col("ts").as("p_ts"), col("value").as("p_value"))
@@ -3743,7 +3705,7 @@ object ExtensionQueries {
     // --- multimodal feature extraction (documents-derived media so the
     //     partition-wise decode pipeline is oracle-checkable) ---
     "x_multimodal_features" -> ((s, dir) => {
-      val media = graft.operators.Multimodal.fromDocuments(docs(s, dir))
+      val media = graft.operators.Multimodal.fromDocuments(s.table("documents"))
       graft.operators.Multimodal.extractFeatures(media, dim = 16).toDF()
         .select(col("media_id"), col("kind"), col("n_bytes"), col("frames_sampled"))
         .orderBy("media_id").limit(100)
@@ -3754,11 +3716,10 @@ object ExtensionQueries {
     // stats arithmetically, so a fake decode cannot pass
     "x_multimodal_decode" -> ((s, dir) => {
       val media = graft.operators.Multimodal.pngTable(
-        docs(s, dir).orderBy("doc_id").limit(100))
+        s.table("documents").orderBy("doc_id").limit(100))
       graft.operators.Multimodal.decodeStats(media).orderBy("media_id")
     }),
     "x_asof_tolerance" -> ((s, dir) => {
-      Sources.register(s, dir)
       val events = s.table("events")
       val purchases = events.where(col("event_type") === "purchase")
         .select(col("user_id"), col("ts").as("p_ts"), col("value").as("p_value"))
@@ -3769,13 +3730,12 @@ object ExtensionQueries {
         .orderBy("event_id").limit(100)
     }),
     "x_frame_sample" -> ((s, dir) => {
-      val media = graft.operators.Multimodal.fromDocuments(docs(s, dir))
+      val media = graft.operators.Multimodal.fromDocuments(s.table("documents"))
       graft.operators.Multimodal.sampleFrames(media, dim = 8, everyMs = 1000L).toDF()
         .select(col("media_id"), col("frame_index"), col("frame_ts_ms"))
         .orderBy("media_id", "frame_index").limit(200)
     }),
     "x_skew_agg" -> ((s, dir) => {
-      Sources.register(s, dir)
       graft.operators.Skew.saltedAggregate(s.table("events"), "user_id", "value")
         .select(col("user_id"), col("cnt"), round(col("sum"), 2).as("sum_value"),
           round(col("min"), 2).as("min_value"), round(col("max"), 2).as("max_value"))
@@ -3786,7 +3746,6 @@ object ExtensionQueries {
     // partitions, the build side replicates saltFactor×; the oracle is
     // the PLAIN join — salting must be invisible in the result
     "x_skew_join" -> ((s, dir) => {
-      Sources.register(s, dir)
       val probe = s.table("lineitem").select(
         when(col("l_orderkey") % 3 === 0, lit(1L))
           .otherwise(col("l_suppkey").cast("long")).as("k"),
@@ -3801,7 +3760,6 @@ object ExtensionQueries {
     }),
     // --- range join (binned point-in-interval; DuckDB inequality-join oracle) ---
     "x_range_join" -> ((s, dir) => {
-      Sources.register(s, dir)
       val points = s.table("customer").select(col("c_custkey"), col("c_acctbal"))
       val intervals = s.table("supplier").select(col("s_suppkey"),
         col("s_acctbal").as("lo"), (col("s_acctbal") + 500.0).as("hi"))
@@ -3815,7 +3773,6 @@ object ExtensionQueries {
     // end-to-end against DuckDB's batch interval join (inner-join
     // emission makes the bounded replay equal the batch answer)
     "x_stream_join" -> ((s, dir) => {
-      Sources.register(s, dir)
       import s.implicits._
       // HARNESS-SCOPED collect: MemoryStream has no distributed feeder,
       // so the fixture feed materializes on the driver. The bound is
@@ -3860,7 +3817,6 @@ object ExtensionQueries {
     // timers). Bounded replay (user_id < 100 on both sides + sentinel)
     // therefore equals DuckDB's batch LEFT JOIN at the same horizon.
     "x_stream_join_outer" -> ((s, dir) => {
-      Sources.register(s, dir)
       import s.implicits._
       val ev = s.table("events")
         .where(col("event_type").isin("view", "purchase") && col("user_id") < 100)
@@ -3899,7 +3855,6 @@ object ExtensionQueries {
     // mode emits exactly the final per-user state, oracled against the
     // batch GROUP BY
     "x_tws_totals" -> ((s, dir) => {
-      Sources.register(s, dir)
       import s.implicits._
       val ev = s.table("events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
@@ -3921,7 +3876,6 @@ object ExtensionQueries {
     // user the stream touches (snapshot-only users sit in state and
     // emit nothing — the oracle's IN-subquery mirrors that)
     "x_tws_bootstrap" -> ((s, dir) => {
-      Sources.register(s, dir)
       import s.implicits._
       val ev = s.table("events")
         .where(dayofmonth(col("ts")) >= 16)
@@ -3949,7 +3903,6 @@ object ExtensionQueries {
     // the batch window-rank replica. Buffer stats are min/max: order-
     // independent, so the hashed surface carries no float-sum drift.
     "x_tws_topk" -> ((s, dir) => {
-      Sources.register(s, dir)
       import s.implicits._
       val ev = s.table("events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
@@ -3965,7 +3918,6 @@ object ExtensionQueries {
     }),
     // --- sessionization (session_window; oracled via DuckDB gaps-and-islands) ---
     "x_events_sessions" -> ((s, dir) => {
-      Sources.register(s, dir)
       s.table("events")
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("session_value"))
@@ -3983,12 +3935,12 @@ object ExtensionQueries {
     // containing no empty text
     "x_entropy" -> ((s, dir) =>
       TextAnalysis.charDistribution(
-        docs(s, dir).where(length(col("text")) > 0), "doc_id", "text")
+        s.table("documents").where(length(col("text")) > 0), "doc_id", "text")
         .orderBy("doc_id").limit(100)),
     // per-host URL stats (C4-style domain filtering feed) over the same
     // deterministic augmentation as x_url_extract
     "x_host_stats" -> ((s, dir) => {
-      val aug = docs(s, dir).select(col("doc_id"),
+      val aug = s.table("documents").select(col("doc_id"),
         when(col("doc_id") % 4 === 0,
           concat(col("text"), lit(" see https://www.site"), col("doc_id") % 20,
             lit(".example.org/p/"), col("doc_id"), lit(" and http://cdn"),
@@ -3999,14 +3951,14 @@ object ExtensionQueries {
     }),
     // --- embedding compression (int8 quantization + random projection) ---
     "x_embed_quantize" -> ((s, dir) => {
-      val e = embs(s, dir).select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+      val e = s.table("embeddings").select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       graft.operators.Quantization.quantizeInt8(e, "vec_id", "emb")
         .orderBy("vec_id").limit(2000)
     }),
     // quantized-cosine top-10 against vec 0: per-vector scales cancel in
     // cosine, so the ranking runs on integer codes (8x smaller index)
     "x_quantized_topk" -> ((s, dir) => {
-      val e = embs(s, dir).select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+      val e = s.table("embeddings").select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val q = e.where(col("vec_id") === 0).select("emb")
         .collect()(0).getSeq[Double](0).toArray
       graft.operators.Quantization.quantizedTopK(e, "vec_id", "emb", q, k = 10)
@@ -4014,7 +3966,7 @@ object ExtensionQueries {
     // deterministic +-1 random projection (JL) of the first 50 vectors to
     // 8 dims; the trig-hash sign pattern keeps the matrix oracle-computable
     "x_rand_proj" -> ((s, dir) => {
-      val e = embs(s, dir).where(col("vec_id") < 50)
+      val e = s.table("embeddings").where(col("vec_id") < 50)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       graft.operators.Quantization.randomProject(e, "vec_id", "emb", outDim = 8)
         .orderBy("vec_id", "dim").limit(500)
@@ -4023,7 +3975,7 @@ object ExtensionQueries {
     // Bloom count upper-bounds the true overlap, so the screen has no
     // false negatives and the exact verify runs on candidates only)
     "x_bloom_decontam" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = s.table("documents")
       val evalSet = d.where(col("doc_id") % 97 === 0)
       graft.operators.Decontamination.decontaminateBloom(
         d, "doc_id", "text", evalSet, "text", n = 3, minOverlap = 5)
@@ -4032,7 +3984,7 @@ object ExtensionQueries {
     // product quantization encode (probe codebooks = slices of vectors
     // 0..15, so the argmin is SQL-replicable; ties break to lower code)
     "x_pq_encode" -> ((s, dir) => {
-      val e = embs(s, dir).select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+      val e = s.table("embeddings").select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val model = graft.operators.ProductQuantization.probeModel(e, "vec_id", "emb", m = 8, k = 16)
       graft.operators.ProductQuantization
         .encodeLong(e.where(col("vec_id") < 100), "vec_id", "emb", model)
@@ -4043,7 +3995,7 @@ object ExtensionQueries {
     // metric an index operator watches per ingest batch; probe
     // codebooks keep the argmin oracle-expressible
     "x_pq_errors" -> ((s, dir) => {
-      val e = embs(s, dir).select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+      val e = s.table("embeddings").select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val model = graft.operators.ProductQuantization.probeModel(e, "vec_id", "emb", m = 8, k = 16)
       graft.operators.ProductQuantization
         .quantizationErrorStats(e.where(col("vec_id") < 100), "vec_id", "emb", model)
@@ -4058,7 +4010,7 @@ object ExtensionQueries {
     // computes the gold ranking; ProbePq0 measured the margin — 100
     // candidates already exact at sf0.01, 150 at sf0.1's 2000 vectors)
     "x_pq_topk" -> ((s, dir) => {
-      val e = embs(s, dir).select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+      val e = s.table("embeddings").select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val model = graft.operators.ProductQuantization.fit(e, "vec_id", "emb", m = 16, k = 16)
       val q = e.where(col("vec_id") === 0).select("emb").collect()(0).getSeq[Double](0).toArray
       graft.operators.ProductQuantization.adcTopK(e, "vec_id", "emb", model, q, k = 10, candidates = 200)
@@ -4067,7 +4019,7 @@ object ExtensionQueries {
     // against the existing corpus; RECALL CONTRACT — every exact-Jaccard
     // >= 0.8 cross-split pair must surface with its exact jaccard
     "x_dedup_incremental" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = s.table("documents")
       harnessManaged(Dedup.incrementalNearDuplicatesWithCleanup(
         d.where(col("doc_id") % 10 =!= 0), d.where(col("doc_id") % 10 === 0),
         "doc_id", "text", threshold = 0.8))
@@ -4077,7 +4029,6 @@ object ExtensionQueries {
     // top-3 events by value per user via the bounded-heap aggregate
     // (ObjectHashAggregate partial+final; NO WindowExec row sort)
     "x_group_topk" -> ((s, dir) => {
-      Sources.register(s, dir)
       graft.operators.GroupTopK.topKPerGroup(
         s.table("events"), Seq("user_id"), "value", "event_id", k = 3)
         .select(col("user_id"), col("rank"), col("event_id"),
@@ -4091,7 +4042,6 @@ object ExtensionQueries {
     // exact-side value plus an in-contract flag (the estimate itself is
     // not DuckDB-reproducible; the flag is). ---
     "x_sketch_distinct" -> ((s, dir) => {
-      Sources.register(s, dir)
       val events = s.table("events").withColumn("day", to_date(col("ts")))
       val idx = Sketches.hllIndex(events, Seq("event_type", "day"), "user_id")
       val est = Sketches.hllEstimate(idx, Seq("event_type"))
@@ -4104,7 +4054,6 @@ object ExtensionQueries {
         .orderBy("event_type")
     }),
     "x_sketch_overlap" -> ((s, dir) => {
-      Sources.register(s, dir)
       val events = s.table("events")
       val cohorts = Sketches.thetaCohorts(
         events.where(col("event_type").isin("purchase", "click")),
@@ -4127,7 +4076,6 @@ object ExtensionQueries {
     // theta-sketch path must reach the same verdicts — seven real FK
     // edges inferred, a reversed edge and a disjoint key space rejected
     "x_fk_infer" -> ((s, dir) => {
-      Sources.register(s, dir)
       val cand = graft.catalog.FkInference.candidateEdges(
         graft.catalog.FkInference.columnSketches(s, Sources.fixtureTables))
       import s.implicits._
@@ -4144,7 +4092,6 @@ object ExtensionQueries {
         .orderBy("child", "parent")
     }),
     "x_cms_counts" -> ((s, dir) => {
-      Sources.register(s, dir)
       val events = s.table("events").withColumn("day", to_date(col("ts")))
       val idx = Sketches.cmsIndex(events, Seq("day"), "event_type")
       val merged = Sketches.cmsMerge(idx, Seq.empty)
@@ -4166,7 +4113,6 @@ object ExtensionQueries {
     // approximation marker answered from the registered, persisted index
     // (EngineSpec pins that the routed plan never rescans the corpus)
     "x_serve_distinct" -> ((s, dir) => {
-      Sources.register(s, dir)
       s.sql("SELECT event_type, user_id, to_date(ts) AS day FROM events")
         .createOrReplaceTempView("events_keyed")
       val cat = new graft.catalog.SketchCatalog(s)
@@ -4182,7 +4128,6 @@ object ExtensionQueries {
         .orderBy("event_type")
     }),
     "x_serve_overlap" -> ((s, dir) => {
-      Sources.register(s, dir)
       val cat = new graft.catalog.SketchCatalog(s)
       cat.indexCohorts("events", "event_type", "user_id")
       val served = cat.route("roughly how many user_id did both purchase and click")
@@ -4200,7 +4145,6 @@ object ExtensionQueries {
           .cast("int").as("jaccard_ok"))
     }),
     "x_serve_quantile" -> ((s, dir) => {
-      Sources.register(s, dir)
       s.sql("SELECT event_type, value, to_date(ts) AS day FROM events")
         .createOrReplaceTempView("events_keyed")
       val cat = new graft.catalog.SketchCatalog(s)
@@ -4216,7 +4160,6 @@ object ExtensionQueries {
         .orderBy("event_type")
     }),
     "x_sketch_quantiles" -> ((s, dir) => {
-      Sources.register(s, dir)
       val events = s.table("events").withColumn("day", to_date(col("ts")))
       val idx = Sketches.kllIndex(events, Seq("event_type", "day"), "value")
       val q = Sketches.kllQuantiles(idx, Seq("event_type"), Seq(0.5, 0.95))
@@ -4232,7 +4175,6 @@ object ExtensionQueries {
     }),
     // --- streaming-shaped (batch view of the events table) ---
     "x_events_hourly" -> ((s, dir) => {
-      Sources.register(s, dir)
       s.table("events")
         .groupBy(date_trunc("hour", col("ts")).cast("string").as("hour"), col("event_type"))
         .agg(count(lit(1)).as("cnt"), round(sum(col("value")), 2).as("sum_value"))
@@ -4245,7 +4187,6 @@ object ExtensionQueries {
     // on (key, value) and shuffles AGAIN for pivotfirst) a single
     // shuffle whose partials combine map-side like any groupBy
     "x_pivot" -> ((s, dir) => {
-      Sources.register(s, dir)
       val wide = Seq("click", "error", "purchase", "signup", "view").map(t =>
         round(sum(when(col("event_type") === t, col("value"))), 2).as(t))
       s.table("events")
@@ -4260,7 +4201,6 @@ object ExtensionQueries {
     // pass with map-side partials; state at scale is |windows×types|,
     // bounded by the time range, never by corpus size
     "x_sliding_window" -> ((s, dir) => {
-      Sources.register(s, dir)
       s.table("events")
         .groupBy(window(col("ts"), "6 hours", "3 hours"), col("event_type"))
         .agg(count(lit(1)).as("cnt"), round(sum(col("value")), 2).as("sum_value"))
@@ -4275,7 +4215,6 @@ object ExtensionQueries {
     // grid, zero-filled. The corpus-sized work is exactly one grouped
     // pass; everything else is kilobytes.
     "x_gap_fill" -> ((s, dir) => {
-      Sources.register(s, dir)
       val ev = s.table("events")
         .select(date_trunc("hour", col("ts")).as("hour"), col("event_type"), col("value"))
       val spine = ev.agg(min(col("hour")).as("mn"), max(col("hour")).as("mx"))
@@ -4298,7 +4237,6 @@ object ExtensionQueries {
     // global sort; gaps compare exact microsecond longs on both engines
     // (DuckDB truncates its ns timestamps to the same µs grid)
     "x_running_total" -> ((s, dir) => {
-      Sources.register(s, dir)
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       s.table("events").select(col("event_id"), col("user_id"),
@@ -4313,7 +4251,6 @@ object ExtensionQueries {
     // oracle computed from the same frozen date — certifying the NL→
     // filter path, not a hand-written WHERE
     "x_relative_date" -> ((s, dir) => {
-      Sources.register(s, dir)
       val events = s.table("events")
       val conds = graft.gen.Templates.extractFilters(
         "events in the last 10 days", events.columns.toSeq, Queries.frozenNow)
@@ -4331,7 +4268,6 @@ object ExtensionQueries {
     // and best-match ranking, so the comparison pins the whole linkage
     // pipeline, not the fixture.
     "x_entity_match" -> ((s, dir) => {
-      Sources.register(s, dir)
       val left = s.table("part")
         .select(col("p_partkey").as("id"), lower(col("p_name")).as("name"))
       val right = s.table("part")
@@ -4349,7 +4285,6 @@ object ExtensionQueries {
     // an exact double (/256.0 is a power-of-two divide), so both engines
     // compute identical ranks and identical interleaved z-values
     "x_zorder_value" -> ((s, dir) => {
-      Sources.register(s, dir)
       val li = s.table("lineitem")
       val r = li.agg(min("l_partkey"), max("l_partkey"),
         min("l_suppkey"), max("l_suppkey")).head()
@@ -4368,8 +4303,8 @@ object ExtensionQueries {
     // far above the 4dp rounding grid, so full-precision selection and
     // the oracle's rounded selection pick the same set)
     "x_ann_filtered" -> ((s, dir) => {
-      val e = embs(s, dir)
-      val d = docs(s, dir)
+      val e = s.table("embeddings")
+      val d = s.table("documents")
       val query = e.where(col("vec_id") === 0).select("embedding")
         .collect()(0).getSeq[Float](0).toArray
       Similarity.filteredTopK(e, "vec_id", "embedding", d, "doc_id",
@@ -4383,7 +4318,6 @@ object ExtensionQueries {
     // filtered scan + min-aggregate joined on the user key against the
     // previous step's reach frame (EventAnalytics.funnel)
     "x_funnel" -> ((s, dir) => {
-      Sources.register(s, dir)
       graft.operators.EventAnalytics.funnel(s.table("events"),
         "user_id", "ts", "event_type", Seq("signup", "click", "purchase"))
         .orderBy("step")
@@ -4391,14 +4325,12 @@ object ExtensionQueries {
     // retention cohorts by first-seen day: user-keyed aggregates +
     // distinct user-days, shuffle rows bounded by |users|+|user-days|
     "x_retention_cohort" -> ((s, dir) => {
-      Sources.register(s, dir)
       graft.operators.EventAnalytics.retentionCohorts(s.table("events"), "user_id", "ts")
         .orderBy("cohort_day", "day_offset").limit(2000)
     }),
     // time-to-convert per funnel transition (same reach frames as
     // x_funnel, joined pairwise on the user key; exact percentile)
     "x_funnel_timing" -> ((s, dir) => {
-      Sources.register(s, dir)
       graft.operators.EventAnalytics.funnelTiming(s.table("events"),
         "user_id", "ts", "event_type", Seq("signup", "click", "purchase"))
         .orderBy("transition")
@@ -4406,7 +4338,6 @@ object ExtensionQueries {
     // Markov transition matrix over per-user event sequences: one
     // window pass partitioned BY USER, then |types|²-row aggregates
     "x_event_transitions" -> ((s, dir) => {
-      Sources.register(s, dir)
       graft.operators.EventAnalytics.eventTransitions(s.table("events"),
         "user_id", "ts", "event_type", "event_id")
         .orderBy("from_type", "to_type")
@@ -4416,7 +4347,6 @@ object ExtensionQueries {
     // exact below 4096 users/day (both fixture SFs), so the DuckDB
     // exact side must agree row-for-row
     "x_retention_sketch" -> ((s, dir) => {
-      Sources.register(s, dir)
       graft.operators.EventAnalytics.rollingRetentionSketch(
         s.table("events"), "user_id", "ts", Seq(1, 7))
         .orderBy("day", "day_offset").limit(500)
@@ -4425,7 +4355,6 @@ object ExtensionQueries {
     // pre-aggregation to (type, day), then a RANGE-frame window over
     // the tiny per-key day series (gap days age out)
     "x_rolling_stats" -> ((s, dir) => {
-      Sources.register(s, dir)
       graft.operators.EventAnalytics.rollingDailyStats(
         s.table("events"), "event_type", "ts", "value", windowDays = 7)
         .orderBy("event_type", "day").limit(500)
@@ -4434,7 +4363,6 @@ object ExtensionQueries {
     // the scan — no user-keyed shuffle (threshold 2.5: nearest |z| is
     // 1.4e-4 away at sf0.1, far above engine drift)
     "x_anomaly_zscore" -> ((s, dir) => {
-      Sources.register(s, dir)
       graft.operators.EventAnalytics.anomalyZscores(s.table("events"),
         "event_type", "value", Seq("event_id"), threshold = 2.5)
         .orderBy("event_id").limit(500)
@@ -4442,7 +4370,6 @@ object ExtensionQueries {
     // robust median/MAD outliers (two broadcast stats passes, no
     // event-keyed shuffle — same plan family as the z-score op)
     "x_anomaly_mad" -> ((s, dir) => {
-      Sources.register(s, dir)
       graft.operators.EventAnalytics.anomalyMad(s.table("events"),
         "event_type", "value", Seq("event_id"), threshold = 3.0)
         .orderBy("event_id").limit(500)
@@ -4451,11 +4378,11 @@ object ExtensionQueries {
     // list selected and ranked by its 4dp-rounded score with id
     // tiebreak on BOTH engines, so membership and ranks are exact
     "x_hybrid_rrf" -> ((s, dir) => {
-      val e = embs(s, dir)
+      val e = s.table("embeddings")
       val query = e.where(col("vec_id") === 0).select("embedding")
         .collect()(0).getSeq[Float](0).toArray.map(_.toDouble)
       graft.operators.HybridSearch.searchDocuments(
-        docs(s, dir), "doc_id", "text", e, "vec_id", "embedding",
+        s.table("documents"), "doc_id", "text", e, "vec_id", "embedding",
         Seq("spark", "window", "merge"), query, nPerList = 50, k = 10)
     }))
 }
@@ -4483,7 +4410,9 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Queries.sql.map { case (name, q) =>
       name -> ((s: SparkSession, dir: String) => engineFrame(s, dir, q))
-    }.toMap ++ ExtensionQueries.builders
+    }.toMap ++ ExtensionQueries.builders.map { case (name, build) =>
+      name -> { (s: SparkSession, dir: String) => Sources.register(s, dir); build(s, dir) }
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops

@@ -188,12 +188,37 @@ final class Engine(
     Validator.validate(spark, sql, tables.toSet)
       .map(_ => graft.explain.Lineage.of(spark, sql))
 
-  /** Generation without execution (ref main.py:262-296). */
-  def nl2sql(question: String): Either[EngineError, (String, SchemaSlice)] = {
+  /** The candidates [[ask]] and [[nl2sql]] try, in rank order, and the
+    * relevance slice they were ranked against: the question's slice of the
+    * catalog and its intent, then `extra`'s candidates (the LLM's, on
+    * `ask`) and the template candidates, ranked by [[Ranker]]. The
+    * candidate dump (`graft.tools.Candidates`) prints these. */
+  private[graft] def rankedCandidates(question: String,
+      extra: (SchemaSlice, Intent.Analysis) => Seq[Templates.Candidate] = (_, _) => Nil)
+      : (SchemaSlice, Seq[(Templates.Candidate, Double)]) = {
     val slice = Fuzzy.selectRelevant(question, lightweightSchema)
     val analysis = Intent.analyze(question, tables)
-    val cands = Templates.candidates(slice, fks, analysis, question, valueDomains, fullSlice)
-    val ranked = Ranker.rank(cands, slice.tables.keySet)
+    val cands = extra(slice, analysis) ++
+      Templates.candidates(slice, fks, analysis, question, valueDomains, fullSlice)
+    (slice, Ranker.rank(cands, slice.tables.keySet))
+  }
+
+  /** The configured LLM's candidates for a question, prompted with its
+    * slice and intent; none from the offline no-op client. */
+  private def llmCandidates(question: String, slice: SchemaSlice,
+      analysis: Intent.Analysis): Seq[Templates.Candidate] =
+    llm.chatComplete(
+      system = "Generate SQL candidates prefixed QUERY: for the user question.",
+      user = Prompting.build(question, slice, analysis), maxTokens = 512) match {
+      case Right(raw) => graft.gen.LlmCandidates.parse(raw)
+        .flatMap(Validator.extractSql)
+        .map(Templates.Candidate(_, 0.7, "llm"))
+      case Left(_) => Nil
+    }
+
+  /** Generation without execution (ref main.py:262-296). */
+  def nl2sql(question: String): Either[EngineError, (String, SchemaSlice)] = {
+    val (slice, ranked) = rankedCandidates(question)
     ranked.view
       .map { case (c, _) =>
         Validator.validate(spark, c.sql, tables.toSet,
@@ -274,7 +299,6 @@ final class Engine(
     * candidate that survives validation and the cost gate. */
   def ask(question: String, limit: Int = Executor.DefaultLimit,
       timeoutMs: Long = Executor.DefaultTimeoutMs): Either[EngineError, QueryResult] = {
-    val schema = lightweightSchema
     // NL→document dispatch (ref routes_ai.py:150-159 routes Mongo URLs to
     // the nl2mongo generator): when a registered COLLECTION outscores
     // every SQL table on the N3 fuzzy link, the question is served by the
@@ -288,7 +312,7 @@ final class Engine(
         val ds = docSchemas
         val docScore = ds.map { case (c, fs) => Fuzzy.tableScore(question, c, fs) }
           .maxOption.getOrElse(0)
-        val sqlScore = schema.map { case (t, cs) => Fuzzy.tableScore(question, t, cs) }
+        val sqlScore = lightweightSchema.map { case (t, cs) => Fuzzy.tableScore(question, t, cs) }
           .maxOption.getOrElse(0)
         if (docScore > sqlScore) Some(askDocsWith(ds, question, limit)) else None
       } catch { case scala.util.control.NonFatal(_) => None }
@@ -305,19 +329,7 @@ final class Engine(
     // reach this path at all.
     serveFromSketches(question, limit, timeoutMs, requireMarker = true)
       .foreach(r => return Right(r))
-    val slice = Fuzzy.selectRelevant(question, schema)
-    val analysis = Intent.analyze(question, tables)
-
-    val llmCands = llm.chatComplete(
-      system = "Generate SQL candidates prefixed QUERY: for the user question.",
-      user = Prompting.build(question, slice, analysis), maxTokens = 512) match {
-      case Right(raw) => graft.gen.LlmCandidates.parse(raw)
-        .flatMap(Validator.extractSql)
-        .map(Templates.Candidate(_, 0.7, "llm"))
-      case Left(_) => Nil
-    }
-    val cands = llmCands ++ Templates.candidates(slice, fks, analysis, question, valueDomains, fullSlice)
-    val ranked = Ranker.rank(cands, slice.tables.keySet)
+    val (_, ranked) = rankedCandidates(question, llmCandidates(question, _, _))
     if (ranked.isEmpty) return Left(SqlSafetyError("No candidates generated"))
 
     val needsAgg = Intent.needsAggregation(question)

@@ -6,8 +6,8 @@ import java.util.concurrent.atomic.AtomicBoolean
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.InnerLike
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, HintInfo, Join, JoinHint, LeafNode, LogicalPlan,
-  Project, Repartition, SHUFFLE_HASH, SHUFFLE_REPLICATE_NL}
+import org.apache.spark.sql.catalyst.plans.logical.{Expand, Filter, HintInfo, Join, JoinHint, LeafNode,
+  LogicalPlan, Project, Repartition, SHUFFLE_HASH, SHUFFLE_REPLICATE_NL}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.graft.{interop, localTask}
@@ -33,10 +33,11 @@ import graft.safety.Validator.Validated
  * partition ([[onePartition]]), planned once without adaptive execution
  * ([[interop.planned]]: with no exchange there is no stage to re-plan),
  * interpreted and in process, for that one execution only. One partition:
- * every scan and join, the joins the optimizer made from IN, EXISTS,
- * EXCEPT or a correlated scalar subquery included, sits behind a narrow
- * coalesce and joins are hinted not to broadcast, so the planner inserts
- * no exchange, where scheduling the jobs of a shuffle, a range-partition
+ * every scan, join and `Expand` (the joins the optimizer made from IN,
+ * EXISTS, EXCEPT or a correlated scalar subquery included, and a distinct
+ * aggregate's or a ROLLUP's `Expand`) sits behind a narrow coalesce and
+ * joins are hinted not to broadcast, so the planner inserts no exchange,
+ * where scheduling the jobs of a shuffle, a range-partition
  * sample or a broadcast would cost more than the rows. Interpreted:
  * whole-stage codegen off and interpreted expression factories, because
  * compiling a query's generated classes with Janino costs more than it
@@ -50,9 +51,7 @@ import graft.safety.Validator.Validated
  * and each hash aggregate runs as an object hash aggregate, which cleans
  * no closure and holds up to 128 groups without reserving a memory page
  * ([[interop.planned]]). What still runs jobs: an outer or anti join with
- * no equality, whose only plans broadcast; a distinct aggregate, whose
- * `Expand` above the coalesce makes the planner shuffle; and inputs above
- * the bound. The narrow-lineage guard is a correctness rule, not a tuning
+ * no equality, whose only plans broadcast, and inputs above the bound. The narrow-lineage guard is a correctness rule, not a tuning
  * one: a shuffle's map side runs only as a stage the scheduler runs first,
  * and a plan that shuffles, computed in process where nothing had run that
  * stage, returned wrong rows with no error. A plain small frame handed to
@@ -134,11 +133,11 @@ object Executor {
   private val ShuffleHash = Some(HintInfo(strategy = Some(SHUFFLE_HASH)))
   private val ReplicateNl = Some(HintInfo(strategy = Some(SHUFFLE_REPLICATE_NL)))
 
-  /** The plan a small input runs: an optimized plan with every scan and
-    * every join, subquery plans included, behind a narrow coalesce to one
-    * partition (`Repartition(1, shuffle = false)`, no shuffle), placed
-    * above the projections and filters over what it coalesces so that a
-    * file scan still prunes columns and pushes filters. A child in one
+  /** The plan a small input runs: an optimized plan with every scan, every
+    * join and every `Expand`, subquery plans included, behind a narrow
+    * coalesce to one partition (`Repartition(1, shuffle = false)`, no
+    * shuffle), placed above the projections and filters over what it
+    * coalesces so that a file scan still prunes columns and pushes filters. A child in one
     * partition satisfies every distribution that a sort, an aggregate, a
     * window or a join requires, so the planner inserts no exchange. A
     * join's own output is not one partition to the planner (it is the pair
@@ -148,10 +147,11 @@ object Executor {
     * as a local hash join (SHUFFLE_HASH on both sides), an inner join with
     * no equality as a cartesian product (SHUFFLE_REPLICATE_NL, which reads
     * both one-partition sides in place); an outer or anti join with no
-    * equality has no such plan and still broadcasts. A distinct
-    * aggregate's `Expand` is not coalesced, so its aggregate still
-    * shuffles. The rows are the same: a coalesce moves no row, a hint
-    * changes only the join's strategy. */
+    * equality has no such plan and still broadcasts. An `Expand` (a
+    * distinct aggregate's or a ROLLUP's) reports an unknown partitioning,
+    * so the aggregate above it would shuffle without the coalesce above it.
+    * The rows are the same: a coalesce moves no row, a hint changes only
+    * the join's strategy. */
   private[exec] def onePartition(plan: LogicalPlan): LogicalPlan = plan.transformUpWithSubqueries {
     case leaf: LeafNode => coalesced(leaf)
     case p @ (_: Project | _: Filter) => p.children.head match {
@@ -163,6 +163,7 @@ object Executor {
     case j: Join if j.joinType.isInstanceOf[InnerLike] =>
       coalesced(j.copy(hint = JoinHint(ReplicateNl, ReplicateNl)))
     case j: Join => coalesced(j)
+    case e: Expand => coalesced(e)
   }
 
   private def coalesced(plan: LogicalPlan): LogicalPlan = Repartition(1, shuffle = false, plan)

@@ -9,6 +9,25 @@ import graft.link.Intent.Analysis
  * `app/models/inference.py:215-246`, `app/models/trainer.py:275-303`) —
  * the offline-testable generation path the reference falls back to when no
  * LLM is configured.
+ *
+ * Slot rules the generators share, one resolver each:
+ *  - [[isKeyish]]: a key column is named `*_id`, `id` or `*key`.
+ *  - [[yearOrDate]]: a period column's name holds "year" or "date".
+ *  - [[gradeColumn]]: a dimension's grade column is its first named `grade*`.
+ *  - [[soleMeasure]]: a fact's measure is its only column that is not a
+ *    key, not a string domain and not excluded; zero or several give none.
+ *  - [[edgesInto]]: a dimension's facts are the sliced tables with an FK
+ *    into it, in FK order.
+ *  - [[otherEdges]]: a fact's other dimensions are its FKs into other
+ *    sliced tables, in FK order.
+ *  - [[bridges]]: a bridge fact between two dimensions is a table with an
+ *    FK into each; every FK into the first is paired with the table's
+ *    first FK into the second, in FK order ([[bridgesWhere]] for a second
+ *    side given by a test).
+ *  - [[sumOrAvg]]: "total" and "sum" name SUM, any other aggregate word AVG.
+ *  - [[countWord]]: a count is "one" to "five" or digits.
+ *  - [[ordinalOffset]]: an ordinal ([[ordinals]] "first" to "twelfth", or
+ *    "23rd") is a 0-based offset.
  */
 object Templates extends TemplatesShapes1 with TemplatesShapes2
     with TemplatesShapes3 with TemplatesShapes4 with TemplatesShapes5
@@ -135,16 +154,30 @@ object Templates extends TemplatesShapes1 with TemplatesShapes2
     (raw"(?i)\b(?:the\s+)?(second|third|fourth|fifth|\d+(?:st|nd|rd|th))[-\s]+" +
       raw"(highest|largest|biggest|greatest|lowest|smallest)\s+" +
       raw"(?!(?:average|avg|mean|total|sum)\b)([a-z_][a-z0-9_]*)\b").r
-  private[gen] val ordinalWords = Map(
-    "second" -> 2, "third" -> 3, "fourth" -> 4, "fifth" -> 5)
+  /** Ordinal words to their numbers, "first" to "twelfth". */
+  private[gen] val ordinals = Map("first" -> 1, "second" -> 2, "third" -> 3, "fourth" -> 4,
+    "fifth" -> 5, "sixth" -> 6, "seventh" -> 7, "eighth" -> 8, "ninth" -> 9,
+    "tenth" -> 10, "eleventh" -> 11, "twelfth" -> 12)
   /** "second"/"23rd" → 0-based OFFSET. Covers every numeric ordinal the
     * intent layer's superlative-suppression regex matches — a question it
     * suppresses the aggregate for must always reach a serving template
     * (the round-4 advisor found "6th highest" losing both paths). */
   private[gen] def ordinalOffset(word: String): Int = {
     val w = word.toLowerCase
-    ordinalWords.get(w).orElse(raw"(\d+)".r.findFirstIn(w).map(_.toInt))
+    ordinals.get(w).orElse(raw"(\d+)".r.findFirstIn(w).map(_.toInt))
       .map(n => math.max(0, n - 1)).getOrElse(1)
+  }
+
+  /** A count written as a word ("one" to "five") or in digits. */
+  private[gen] def countWord(word: String): Int = word.toLowerCase match {
+    case "one" => 1; case "two" => 2; case "three" => 3; case "four" => 4; case "five" => 5
+    case d => d.toInt
+  }
+
+  /** The aggregate an aggregate word names: SUM for "total" or "sum", else AVG. */
+  private[gen] def sumOrAvg(word: String): String = word.toLowerCase match {
+    case "total" | "sum" => "SUM"
+    case _ => "AVG"
   }
   // "scores above the average score" — rows compared against a scalar
   // aggregate of the same column: col OP (SELECT AVG(col) FROM t)
@@ -220,14 +253,58 @@ object Templates extends TemplatesShapes1 with TemplatesShapes2
     * total order. */
   private[gen] def keyishColumn(table: String, cols: Seq[String]): String = {
     val singular = (if (table.endsWith("s")) table.dropRight(1) else table).toLowerCase
-    val keyish = cols.filter { c =>
-      val l = c.toLowerCase
-      l.endsWith("_id") || l == "id" || l.endsWith("key")
-    }
+    val keyish = cols.filter(isKeyish)
     keyish.find(_.toLowerCase.contains(singular))
       .orElse(keyish.sorted.headOption)
       .getOrElse(cols.headOption.getOrElse("1"))
   }
+
+  /** A key column by name: `*_id`, `id` or `*key`. */
+  private[gen] def isKeyish(col: String): Boolean = {
+    val l = col.toLowerCase
+    l.endsWith("_id") || l == "id" || l.endsWith("key")
+  }
+
+  /** A period column by name: it holds "year" or "date". */
+  private[gen] def yearOrDate(col: String): Boolean = {
+    val l = col.toLowerCase
+    l.contains("year") || l.contains("date")
+  }
+
+  /** The one measure column of a fact table: the only column of `cols`
+    * that is not key-ish, not a string-domain column (`stringCols`, the
+    * table's `values` keys) and not `excluded`; none when there are zero
+    * or several. */
+  private[gen] def soleMeasure(cols: Seq[String], stringCols: Set[String],
+      excluded: String => Boolean): Seq[String] =
+    cols.filter(c => !isKeyish(c) && !stringCols.contains(c) && !excluded(c)) match {
+      case Seq(one) => Seq(one)
+      case _ => Seq.empty
+    }
+
+  /** The FK edges into `dim` from a sliced table, in `fks` order. */
+  private[gen] def edgesInto(slice: SchemaSlice, fks: Seq[FkEdge], dim: String): Seq[FkEdge] =
+    fks.filter(e => e.toTable == dim && slice.tables.contains(e.fromTable))
+
+  /** The other FK edges of `edge`'s table, into sliced tables other than
+    * `edge`'s, in `fks` order. */
+  private[gen] def otherEdges(slice: SchemaSlice, fks: Seq[FkEdge], edge: FkEdge): Seq[FkEdge] =
+    fks.filter(e => e.fromTable == edge.fromTable && e.toTable != edge.toTable &&
+      slice.tables.contains(e.toTable))
+
+  /** The bridge fact tables between two dimensions: each FK into `dimE`
+    * whose table also has an FK into `dimJ`, paired with the first such
+    * edge, in `fks` order. */
+  private[gen] def bridges(fks: Seq[FkEdge], dimE: String, dimJ: String): Seq[(FkEdge, FkEdge)] =
+    bridgesWhere(fks, dimE, _ == dimJ)
+
+  /** [[bridges]] into any table `isJ` accepts. */
+  private[gen] def bridgesWhere(fks: Seq[FkEdge], dimE: String,
+      isJ: String => Boolean): Seq[(FkEdge, FkEdge)] =
+    for {
+      e <- fks if e.toTable == dimE
+      j <- fks.find(e2 => e2.fromTable == e.fromTable && isJ(e2.toTable))
+    } yield (e, j)
 
   /** Strong link: the word names exactly one column (full-word match,
     * score >= 100 with a clear margin over the runner-up). */
@@ -818,6 +895,11 @@ object Templates extends TemplatesShapes1 with TemplatesShapes2
     * "name" (students → student_name); the shape is skipped without one. */
   private[gen] def nameishColumn(cols: Seq[String]): Option[String] =
     cols.find(_.toLowerCase.contains("name"))
+
+  /** The grade column of a dimension: the first whose name starts with
+    * "grade" (students → grade_level). */
+  private[gen] def gradeColumn(cols: Seq[String]): Option[String] =
+    cols.find(_.toLowerCase.startsWith("grade"))
 
   /** Full deterministic candidate set, ordered by confidence desc.
     *

@@ -241,7 +241,7 @@ private[gen] trait TemplatesConjunctive { this: Templates.type =>
       .collectFirst { case Some(t) if fks.exists(e =>
         e.toTable == t && slice.tables.contains(e.fromTable)) => t }
     val entity = entityOpt.getOrElse(return Seq.empty)
-    val facts = fks.filter(e => e.toTable == entity && slice.tables.contains(e.fromTable))
+    val facts = edgesInto(slice, fks, entity)
       .map(_.fromTable).distinct
 
     def resolve(fact: String): Option[(Seq[ConjConstraint], Seq[FkEdge])] = {

@@ -50,7 +50,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
         val op = if (Set("above", "over", "more than", "greater than")(m.group(3).toLowerCase)) ">" else "<"
         (for {
           dim1 <- uniqueTable(slice, m.group(1)).toSeq
-          e1 <- fks.filter(e => e.toTable == dim1 && slice.tables.contains(e.fromTable))
+          e1 <- edgesInto(slice, fks, dim1)
           fact = e1.fromTable
           numCol <- strongColumn(m.group(2), slice.tables(fact)).toSeq
           e2 <- fks.filter(e => e.fromTable == fact && e.toTable != dim1 &&
@@ -85,9 +85,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
         dim1 <- uniqueTable(slice, m.group(1)).toSeq
         dim2 <- uniqueTable(slice, m.group(4)).toSeq
         if dim1 != dim2
-        e1 <- fks.find(e => e.toTable == dim1 && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dim2)).toSeq
-        e2 <- fks.find(e => e.fromTable == e1.fromTable && e.toTable == dim2).toSeq
+        (e1, e2) <- bridges(fks, dim1, dim2).take(1)
       } yield Candidate(
         s"SELECT COUNT(*) AS agg_value FROM (SELECT f.${e1.fromColumn} FROM ${e1.fromTable} f " +
           s"GROUP BY f.${e1.fromColumn} HAVING COUNT(DISTINCT f.${e2.fromColumn}) $op ${m.group(3)}) t",
@@ -110,10 +108,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
   def aggOfAggCandidates(slice: SchemaSlice, fks: Seq[FkEdge], question: String): Seq[Candidate] =
     aggOfAggRe.findFirstMatchIn(question).toSeq.flatMap { m =>
       val outer = if (Set("lowest", "smallest", "minimum", "min")(m.group(1).toLowerCase)) "MIN" else "MAX"
-      val inner = m.group(2).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val inner = sumOrAvg(m.group(2))
       slice.tables.toSeq.flatMap { case (t, cols) =>
         for {
           aggCol <- strongColumn(m.group(3), cols).toSeq
@@ -161,7 +156,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
         dim <- uniqueTable(slice, m.group(2)).toSeq
         groupCol <- strongColumn(m.group(1), slice.tables(dim)).toSeq
         nameCol <- nameishColumn(slice.tables(dim)).toSeq
-        e <- fks.filter(e => e.toTable == dim && slice.tables.contains(e.fromTable))
+        e <- edgesInto(slice, fks, dim)
         aggCol <- strongColumn(m.group(5), slice.tables(e.fromTable)).toSeq
       } yield Candidate(
         s"SELECT $groupCol, $nameCol FROM (SELECT d.$groupCol, d.$nameCol, " +
@@ -188,22 +183,18 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
   def havingScalarCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     havingScalarRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      def aggOf(word: String) = word.toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
       // group side and scalar side carry their OWN aggregate words:
       // "whose TOTAL score is above the overall AVERAGE" compares each
       // group's SUM to the ungrouped AVG — collapsing both onto the
       // group-side word would compare one group's total against the
       // whole table's total (vacuously false for positive values)
-      val groupAgg = aggOf(m.group(2))
-      val scalarAgg = aggOf(m.group(5))
+      val groupAgg = sumOrAvg(m.group(2))
+      val scalarAgg = sumOrAvg(m.group(5))
       val op = if (Set("above", "over", "more than", "greater than")(m.group(4).toLowerCase)) ">" else "<"
       (for {
         dim <- uniqueTable(slice, m.group(1)).toSeq
         nameCol <- nameishColumn(slice.tables(dim)).toSeq
-        e <- fks.filter(e => e.toTable == dim && slice.tables.contains(e.fromTable))
+        e <- edgesInto(slice, fks, dim)
         aggCol <- strongColumn(m.group(3), slice.tables(e.fromTable)).toSeq
       } yield Candidate(
         s"SELECT d.$nameCol AS $nameCol FROM ${e.fromTable} f " +
@@ -321,9 +312,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
         dim1 <- uniqueTable(slice, m.group(2)).toSeq
         dim2 <- uniqueTable(slice, m.group(4)).toSeq
         if dim1 != dim2
-        e1 <- fks.find(e => e.toTable == dim1 && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dim2)).toSeq
-        e2 <- fks.find(e => e.fromTable == e1.fromTable && e.toTable == dim2).toSeq
+        (e1, e2) <- bridges(fks, dim1, dim2).take(1)
         nameCol <- nameishColumn(slice.tables(dim1)).toSeq
       } yield Candidate(
         s"SELECT d.$nameCol AS $nameCol, COUNT(DISTINCT f.${e2.fromColumn}) AS agg_value " +
@@ -354,9 +343,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
         dimE <- uniqueTable(slice, m.group(2)).toSeq
         if dimJ != dimE
-        eJ <- fks.find(e => e.toTable == dimJ && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimE)).toSeq
-        eE <- fks.find(e => e.fromTable == eJ.fromTable && e.toTable == dimE).toSeq
+        (eJ, eE) <- bridges(fks, dimJ, dimE).take(1)
       } yield Candidate(
         s"SELECT AVG(c) AS agg_value FROM " +
           s"(SELECT COUNT(DISTINCT ${eJ.fromColumn}) AS c FROM ${eJ.fromTable} " +
@@ -403,9 +390,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
         dim1 <- uniqueTable(slice, m.group(1)).toSeq
         dim2 <- uniqueTable(slice, m.group(6)).toSeq
         if dim1 != dim2
-        e1 <- fks.find(e => e.toTable == dim1 && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dim2)).toSeq
-        e2 <- fks.find(e => e.fromTable == e1.fromTable && e.toTable == dim2).toSeq
+        (e1, e2) <- bridges(fks, dim1, dim2).take(1)
         numCol <- strongColumn(m.group(2), slice.tables(e1.fromTable)).toSeq
         nameCol <- nameishColumn(slice.tables(dim1)).toSeq
       } yield Candidate(
@@ -470,12 +455,8 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
     * above" keeps groups ≥ scalar+N, "at least N below" ≤ scalar−N. */
   def deviationHavingCandidates(slice: SchemaSlice, fks: Seq[FkEdge], question: String): Seq[Candidate] =
     deviationHavingRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      def aggOf(word: String) = word.toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
-      val groupAgg = aggOf(m.group(2))
-      val scalarAgg = aggOf(m.group(7))
+      val groupAgg = sumOrAvg(m.group(2))
+      val scalarAgg = sumOrAvg(m.group(7))
       val above = m.group(6).toLowerCase == "above"
       val strict = Set("more than", "over")(m.group(4).toLowerCase.replaceAll("\\s+", " "))
       val op = (above, strict) match {
@@ -488,7 +469,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
       (for {
         dim <- uniqueTable(slice, m.group(1)).toSeq
         nameCol <- nameishColumn(slice.tables(dim)).toSeq
-        e <- fks.filter(e => e.toTable == dim && slice.tables.contains(e.fromTable))
+        e <- edgesInto(slice, fks, dim)
         aggCol <- strongColumn(m.group(3), slice.tables(e.fromTable)).toSeq
       } yield Candidate(
         s"SELECT d.$nameCol AS $nameCol FROM ${e.fromTable} f " +
@@ -554,17 +535,13 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
     groupedArgmax2Re.findFirstMatchIn(question).toSeq.flatMap { m =>
       val lowest = Set("lowest", "smallest", "minimum", "min")(m.group(3).toLowerCase)
       val dir = if (lowest) "ASC" else "DESC"
-      val agg = m.group(4).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(4))
       (for {
         dimE <- uniqueTable(slice, m.group(2)).toSeq
         // single-dimension questions belong to the round-6 template
         if strongColumn(m.group(1), slice.tables(dimE)).isEmpty
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
-        eG <- fks.filter(e => e.fromTable == eE.fromTable && e.toTable != dimE &&
-          slice.tables.contains(e.toTable))
+        eE <- edgesInto(slice, fks, dimE)
+        eG <- otherEdges(slice, fks, eE)
         groupCol <- strongColumn(m.group(1), slice.tables(eG.toTable)).toSeq
         numCol <- strongColumn(m.group(5), slice.tables(eE.fromTable)).toSeq
       } yield Candidate(
@@ -609,9 +586,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimJ <- uniqueTable(slice, m.group(3)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
         whereSql <- Option(m.group(2)).map(_.trim).filter(_.nonEmpty) match {
           case None => Seq("")
@@ -656,10 +631,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
     nthAggRe.findFirstMatchIn(question).toSeq.flatMap { m =>
       val n = ordinalOffset(m.group(2)) + 1
       val dir = if (Set("lowest", "smallest")(m.group(3).toLowerCase)) "ASC" else "DESC"
-      val agg = m.group(4).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(4))
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         e <- fks.find(e => e.toTable == dimE && slice.tables.contains(e.fromTable) &&
@@ -731,10 +703,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
   def trendCompareCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     trendCompareRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val agg = m.group(2).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(2))
       val cmp = m.group(4).toLowerCase.replaceAll("\\s+", " ") match {
         case "decreased" | "declined" | "dropped" | "fell" => "<"
         case _ => ">"
@@ -787,9 +756,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(2)).toSeq
         dimJ <- uniqueTable(slice, m.group(5)).toSeq
         if dimE != dimJ
-        eE <- fks.find(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ)).toSeq
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ).take(1)
       } yield Candidate(
         s"SELECT ROUND($scale * SUM(CASE WHEN c $op ${m.group(4)} THEN 1 ELSE 0 END) " +
           s"/ COUNT(*), 2) AS agg_value FROM " +
@@ -822,9 +789,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
         if dimE != dimJ
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
-        eE <- fks.find(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ)).toSeq
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ).take(1)
       } yield Candidate(
         s"SELECT DISTINCT d2.$nameCol FROM " +
           s"(SELECT f.${eJ.fromColumn} AS jk, f.${eE.fromColumn} AS ek " +
@@ -864,8 +829,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
           strongColumn(m.group(3), slice.tables(e.fromTable)).isDefined).toSeq
         numCol <- strongColumn(m.group(3), slice.tables(e.fromTable)).toSeq
         noTable <- uniqueTable(slice, m.group(2)).toSeq
-        if noTable == e.fromTable || fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == noTable)
+        if noTable == e.fromTable || bridges(fks, dimE, noTable).exists(_._1 == e)
       } yield Candidate(
         s"SELECT d.$nameCol FROM $dimE d " +
           s"JOIN ${e.fromTable} f ON f.${e.fromColumn} = d.${e.toColumn} " +
@@ -894,10 +858,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
   def absPeriodDeltaCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     absDeltaRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val agg = m.group(2).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(2))
       val (y1, y2) = (m.group(4), m.group(5))
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
@@ -937,10 +898,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
   def universalPeriodCountCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     universalPeriodRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val agg = m.group(3).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(3))
       val op = m.group(5).toLowerCase.replaceAll("\\s+", " ") match {
         case "above" | "over" => ">"
         case "at least" => ">="
@@ -1032,11 +990,9 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
       (for {
         dimJ <- uniqueTable(slice, jWord).toSeq
         nameCol <- nameishColumn(slice.tables(dimJ)).toSeq
-        eJ <- fks.find(e => e.toTable == dimJ && slice.tables.contains(e.fromTable) &&
-          fks.exists(e2 => e2.fromTable == e.fromTable && e2.toTable != dimJ &&
-            eWord.forall(w => uniqueTable(slice, w).contains(e2.toTable)))).toSeq
-        eE <- fks.find(e => e.fromTable == eJ.fromTable && e.toTable != dimJ &&
-          eWord.forall(w => uniqueTable(slice, w).contains(e.toTable))).toSeq
+        (eJ, eE) <- bridgesWhere(fks, dimJ, t => t != dimJ &&
+          eWord.forall(w => uniqueTable(slice, w).contains(t)))
+          .filter(p => slice.tables.contains(p._1.fromTable)).take(1)
       } yield Candidate(
         s"SELECT j1.$nameCol AS ${nameCol}_a, j2.$nameCol AS ${nameCol}_b " +
           s"FROM ${eJ.fromTable} f1 JOIN ${eJ.fromTable} f2 " +
@@ -1157,9 +1113,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
         if dimE != dimJ
         attrCol <- abbrevColumn(m.group(3), slice.tables(dimJ)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
       } yield Candidate(
         s"SELECT d.$nameCol FROM ${eE.fromTable} f " +
@@ -1278,9 +1232,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
         dimE <- uniqueTable(slice, m.group(4)).toSeq
         if dimE != dimJ
-        eJ <- fks.filter(e => e.toTable == dimJ && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimE))
-        eE <- fks.find(e => e.fromTable == eJ.fromTable && e.toTable == dimE).toSeq
+        (eJ, eE) <- bridges(fks, dimJ, dimE)
         nameCol <- nameishColumn(slice.tables(dimJ)).toSeq
       } yield Candidate(
         s"SELECT j.$nameCol FROM ${eJ.fromTable} f " +
@@ -1317,9 +1269,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimG <- uniqueTable(slice, m.group(4)).toSeq
         if dimE != dimG
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimG))
-        eG <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimG).toSeq
+        (eE, eG) <- bridges(fks, dimE, dimG)
         numCol <- strongColumn(valueWord, slice.tables(eE.fromTable)).toSeq
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
       } yield Candidate(
@@ -1349,10 +1299,6 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
   def deviationArgmaxCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     deviationArgmaxRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      def aggOf(word: String) = word.toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
       val dir = if (m.group(4).toLowerCase == "most") "DESC" else "ASC"
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
@@ -1361,8 +1307,8 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
         numCol <- strongColumn(m.group(3), slice.tables(e.fromTable)).toSeq
       } yield Candidate(
         s"SELECT ${e.fromColumn} FROM (SELECT ${e.fromColumn}, " +
-          s"ABS(${aggOf(m.group(2))}($numCol) - " +
-          s"(SELECT ${aggOf(m.group(5))}($numCol) FROM ${e.fromTable})) AS dev " +
+          s"ABS(${sumOrAvg(m.group(2))}($numCol) - " +
+          s"(SELECT ${sumOrAvg(m.group(5))}($numCol) FROM ${e.fromTable})) AS dev " +
           s"FROM ${e.fromTable} GROUP BY ${e.fromColumn}) t " +
           s"ORDER BY dev $dir, ${e.fromColumn} LIMIT 1",
         0.9, "template_deviation_argmax")).take(1)
@@ -1385,10 +1331,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
     groupedArgmax2Re.findFirstMatchIn(question).toSeq.flatMap { m =>
       val lowest = Set("lowest", "smallest", "minimum", "min")(m.group(3).toLowerCase)
       val dir = if (lowest) "ASC" else "DESC"
-      val agg = m.group(4).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(4))
       val attrWord = m.group(1).trim.replaceAll("\\s+", "_")
       (for {
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
@@ -1469,10 +1412,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
         case (true, false) => "ASC"
         case (true, true) => "DESC"
       }
-      val agg = m.group(4).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(4))
       (for {
         fact <- slice.tables.keys.toSeq.sorted
           .find(t => strongColumn(m.group(1), slice.tables(t)).isDefined &&
@@ -1510,10 +1450,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
   def monotonicTrendCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     monotonicTrendRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val agg = m.group(2).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(2))
       val up = Set("improved", "increased", "rose", "grew")(
         m.group(4).toLowerCase.replaceAll("\\s+", " ")) ||
         m.group(4).toLowerCase.startsWith("went up")
@@ -1569,9 +1506,8 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimJ <- uniqueTable(slice, m.group(4)).toSeq
         if dimE != dimJ && uniqueTable(slice, m.group(5)).contains(dimJ)
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable) &&
-          fks.exists(e2 => e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
+        if slice.tables.contains(eE.fromTable)
         numCol <- stems.flatMap(s => strongColumn(s, slice.tables(eE.fromTable))).headOption.toSeq
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
       } yield Candidate(
@@ -1611,9 +1547,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
       } yield {
         val anchor = s"FROM ${eE.fromTable} af JOIN $dimE a " +
@@ -1660,9 +1594,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
         dimE <- uniqueTable(slice, m.group(4)).toSeq
         if dimE != dimJ
-        eJ <- fks.filter(e => e.toTable == dimJ && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimE))
-        eE <- fks.find(e => e.fromTable == eJ.fromTable && e.toTable == dimE).toSeq
+        (eJ, eE) <- bridges(fks, dimJ, dimE)
         attrCol <- prefixColumn(m.group(2), slice.tables(dimE)).toSeq
         jName <- nameishColumn(slice.tables(dimJ)).toSeq
       } yield Candidate(
@@ -1741,10 +1673,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
   def pairArgminAggCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     pairArgminAggRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val agg = m.group(2).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(2))
       val word = m.group(3)
       val vWord = if (word.endsWith("s")) word.dropRight(1) else word
       (for {
@@ -1827,9 +1756,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
           eSingular == m.group(3).toLowerCase
         dimJ <- uniqueTable(slice, jSingular).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
       } yield Candidate(
         s"WITH sets AS (SELECT ${eE.fromColumn} AS k, " +
@@ -1864,18 +1791,13 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
       values: String => Map[String, Seq[String]] = _ => Map.empty): Seq[Candidate] =
     entityArgmaxAttrRe.findFirstMatchIn(question).toSeq.flatMap { m =>
       val dir = if (m.group(2).toLowerCase == "best") "DESC" else "ASC"
-      val agg = m.group(4).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(4))
       val value = m.group(6)
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimJ <- uniqueTable(slice, m.group(3)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         numCol <- strongColumn(m.group(5), slice.tables(eE.fromTable)).toSeq
         attrCol <- abbrevColumn(m.group(7), slice.tables(dimJ)).toSeq
         // the value must belong to the attribute column's mined domain
@@ -1913,10 +1835,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
   def trendShareCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     trendShareRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val agg = m.group(4).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(4))
       val cmp = m.group(3).toLowerCase match {
         case "decreased" | "declined" | "dropped" | "lowered" => "<"
         case _ => ">"
@@ -1963,9 +1882,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(2)).toSeq
         if dimE != dimJ
         attrCol <- abbrevColumn(attrWord, slice.tables(dimE)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimE))
-        eE <- fks.find(e => e.fromTable == eJ.fromTable && e.toTable == dimE).toSeq
+        (eJ, eE) <- bridges(fks, dimJ, dimE)
         jName <- nameishColumn(slice.tables(dimJ)).toSeq
       } yield Candidate(
         s"SELECT j.$jName FROM ${eJ.fromTable} f " +
@@ -1996,10 +1913,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
   def joinedPairArgmaxCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     joinedPairArgmaxRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val agg = m.group(2).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(2))
       val aWord = {
         val w = m.group(1)
         if (w.endsWith("s")) w.dropRight(1) else w
@@ -2047,9 +1961,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
         if uniqueTable(slice, m.group(4)).contains(dimE)
         dimJ <- uniqueTable(slice, m.group(3)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
       } yield {
         val grouped = s"SELECT ${eE.fromColumn}, COUNT(DISTINCT ${eJ.fromColumn}) AS n " +
@@ -2222,7 +2134,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
       (for {
         dimE <- uniqueTable(slice, m.group(3)).toSeq
         attrCol <- strongColumn(m.group(2), slice.tables(dimE)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         candidateDims = fks.filter(e => e.fromTable == eE.fromTable && e.toTable != dimE &&
           slice.tables.contains(e.toTable) &&
           nameishColumn(slice.tables(e.toTable)).isDefined)
@@ -2271,7 +2183,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
       (for {
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
         jName <- nameishColumn(slice.tables(dimJ)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         eE <- fks.find(e => e.fromTable == eJ.fromTable && e.toTable != dimJ &&
           slice.tables.contains(e.toTable) &&
           abbrevColumn(attrWord, slice.tables(e.toTable)).isDefined).toSeq
@@ -2341,10 +2253,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
   def nestedGroupDeviationCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     nestedGroupDeviationRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val agg = m.group(2).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(2))
       (for {
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
         jName <- nameishColumn(slice.tables(dimJ)).toSeq
@@ -2390,9 +2299,7 @@ private[gen] trait TemplatesShapes1 { this: Templates.type =>
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
         if dimE != dimJ
         attrCol <- abbrevColumn(m.group(4), slice.tables(dimJ)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
       } yield Candidate(
         s"SELECT d.$nameCol FROM (SELECT f.${eE.fromColumn} AS k, " +

@@ -67,9 +67,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
         dimE <- uniqueTable(slice, m.group(2)).toSeq
         if dimE != dimJ
-        eJ <- fks.filter(e => e.toTable == dimJ && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimE))
-        eE <- fks.find(e => e.fromTable == eJ.fromTable && e.toTable == dimE).toSeq
+        (eJ, eE) <- bridges(fks, dimJ, dimE)
         numCol <- stems.flatMap(s => strongColumn(s, slice.tables(eJ.fromTable))).headOption.toSeq
         jName <- nameishColumn(slice.tables(dimJ)).toSeq
       } yield Candidate(
@@ -131,10 +129,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
   def universalGroupAggCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     universalGroupAggRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val agg = m.group(3).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(3))
       val op = if (Set("above", "over")(m.group(5).toLowerCase)) ">" else "<"
       (for {
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
@@ -185,18 +180,11 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       val (y1, y2) = (m.group(3), m.group(4))
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
-        e <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        e <- edgesInto(slice, fks, dimE)
         factCols = slice.tables(e.fromTable)
         periodCol <- factCols.find(_.toLowerCase.contains("year")).toSeq
         stringCols = values(e.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          c != periodCol && !l.endsWith("_id") && l != "id" && !l.endsWith("key") &&
-            !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty // ambiguous or none: fire nothing
-        }
+        measure <- soleMeasure(factCols, stringCols, _ == periodCol)
       } yield Candidate(
         s"SELECT ${e.fromColumn} FROM (" +
           s"SELECT ${e.fromColumn}, " +
@@ -227,9 +215,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
         dimE <- uniqueTable(slice, m.group(2)).toSeq
         if dimJ != dimE
-        eJ <- fks.find(e => e.toTable == dimJ && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimE)).toSeq
-        eE <- fks.find(e => e.fromTable == eJ.fromTable && e.toTable == dimE).toSeq
+        (eJ, eE) <- bridges(fks, dimJ, dimE).take(1)
       } yield Candidate(
         s"SELECT MEDIAN(c) AS agg_value FROM " +
           s"(SELECT COUNT(DISTINCT ${eJ.fromColumn}) AS c FROM ${eJ.fromTable} " +
@@ -259,19 +245,10 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimJ <- uniqueTable(slice, m.group(3)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         factCols = slice.tables(eE.fromTable)
         stringCols = values(eE.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          !l.endsWith("_id") && l != "id" && !l.endsWith("key") &&
-            !l.contains("year") && !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, _.toLowerCase.contains("year"))
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
       } yield Candidate(
         s"SELECT d.$nameCol FROM (" +
@@ -303,10 +280,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
   def minimaxArgmaxCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     minimaxArgmaxRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val agg = m.group(4).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(4))
       val innerBest = Set("best", "strongest")(m.group(2).toLowerCase)
       val inner = if (innerBest) "MAX" else "MIN"
       val outerDir =
@@ -356,7 +330,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
         entityWord <- Option(m.group(1)).toSeq
         dimE <- uniqueTable(slice, entityWord).toSeq
         a <- strongColumn(w1, slice.tables(dimE)).toSeq
-        e <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        e <- edgesInto(slice, fks, dimE)
         b <- strongColumn(w2, slice.tables(e.fromTable)).toSeq
       } yield Candidate(
         s"SELECT ROUND(CORR(d.$a, f.$b), 4) AS agg_value " +
@@ -422,7 +396,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       (for {
         dimJ <- slice.tables.keys.toSeq.sorted
         groupCol <- abbrevColumn(m.group(1), slice.tables(dimJ)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         numCol <- measureWords.flatMap(w =>
           strongColumn(w, slice.tables(eJ.fromTable))).headOption.toSeq
       } yield Candidate(
@@ -463,9 +437,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
         groupCol <- abbrevColumn(m.group(3), slice.tables(dimA)).toSeq
         dimE <- uniqueTable(slice, m.group(4)).toSeq
         if dimE != dimA
-        eA <- fks.filter(e => e.toTable == dimA && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimE))
-        eE <- fks.find(e => e.fromTable == eA.fromTable && e.toTable == dimE).toSeq
+        (eA, eE) <- bridges(fks, dimA, dimE)
       } yield Candidate(
         s"SELECT c.$groupCol, COUNT(DISTINCT s.${eE.fromColumn}) AS agg_value " +
           s"FROM ${eA.fromTable} s " +
@@ -494,15 +466,12 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       values: String => Map[String, Seq[String]] = _ => Map.empty): Seq[Candidate] =
     filteredPeriodArgmaxRe.findFirstMatchIn(question).toSeq.flatMap { m =>
       val dir = if (Set("lowest", "worst", "smallest")(m.group(4).toLowerCase)) "ASC" else "DESC"
-      val agg = m.group(5).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(5))
       (for {
         dimJ <- slice.tables.keys.toSeq.sorted
         attrCol <- abbrevColumn(m.group(3), slice.tables(dimJ)).toSeq
         if values(dimJ).get(attrCol).exists(_.contains(m.group(2)))
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         periodCol <- strongColumn(m.group(1), slice.tables(eJ.fromTable)).toSeq
         numCol <- strongColumn(m.group(6), slice.tables(eJ.fromTable)).toSeq
         if periodCol != numCol
@@ -570,9 +539,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimJ <- uniqueTable(slice, m.group(5)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         numCol <- strongColumn(m.group(3), slice.tables(eE.fromTable)).toSeq
         attrCol <- slice.tables(dimJ).find(c =>
           values(dimJ).get(c).exists(_.contains(m.group(4)))).toSeq
@@ -602,10 +569,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
   def countIncreasingCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     countIncreasingRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val agg = m.group(2).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(2))
       val up = Set("increased", "rose", "grew", "improved")(
         m.group(4).toLowerCase) || m.group(4).toLowerCase.startsWith("went up")
       val op = if (up) ">" else "<"
@@ -646,9 +610,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(5)).toSeq
         if dimE != dimJ && uniqueTable(slice, m.group(8)).contains(dimE) &&
           m.group(3).equalsIgnoreCase(m.group(6))
-        eJ <- fks.filter(e => e.toTable == dimJ && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimE))
-        eE <- fks.find(e => e.fromTable == eJ.fromTable && e.toTable == dimE).toSeq
+        (eJ, eE) <- bridges(fks, dimJ, dimE)
         attrCol <- prefixColumn(m.group(3), slice.tables(dimE)).toSeq
         jName <- nameishColumn(slice.tables(dimJ)).toSeq
       } yield Candidate(
@@ -682,15 +644,12 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
     trendArgmaxAttrRe.findFirstMatchIn(question).toSeq.flatMap { m =>
       val rising = Set("improved", "increased", "grew", "gained")(m.group(2).toLowerCase)
       val dir = if (rising) "DESC" else "ASC"
-      val agg = m.group(3).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(3))
       val (y1, y2) = (m.group(5), m.group(6))
       (for {
         dimJ <- slice.tables.keys.toSeq.sorted
         groupCol <- abbrevColumn(m.group(1), slice.tables(dimJ)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         numCol <- strongColumn(m.group(4), slice.tables(eJ.fromTable)).toSeq
         periodCol <- slice.tables(eJ.fromTable).find(_.toLowerCase.contains("year")).toSeq
         if periodCol != numCol
@@ -726,9 +685,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
         dimE <- uniqueTable(slice, m.group(3)).toSeq
         if dimJ != dimE
-        eJ <- fks.find(e => e.toTable == dimJ && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimE)).toSeq
-        eE <- fks.find(e => e.fromTable == eJ.fromTable && e.toTable == dimE).toSeq
+        (eJ, eE) <- bridges(fks, dimJ, dimE).take(1)
       } yield Candidate(
         s"SELECT $outer(c) AS agg_value FROM " +
           s"(SELECT COUNT(DISTINCT ${eJ.fromColumn}) AS c FROM ${eJ.fromTable} " +
@@ -819,10 +776,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
   def rangeOfGroupAggsCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     rangeOfGroupAggsRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val agg = m.group(5).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(5))
       (for {
         dimJ <- uniqueTable(slice, m.group(4)).toSeq
         eJ <- fks.find(e => e.toTable == dimJ && slice.tables.contains(e.fromTable) &&
@@ -885,16 +839,12 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       question: String): Seq[Candidate] =
     superlativeAdjArgmaxRe.findFirstMatchIn(question).toSeq.flatMap { m =>
       val dir = if (m.group(1).equalsIgnoreCase("easiest")) "DESC" else "ASC"
-      val agg = m.group(4).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(4))
       val attrWord = m.group(3).trim.replaceAll("\\s+", "_")
       (for {
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
-        eG <- fks.filter(e => e.fromTable == eJ.fromTable && e.toTable != dimJ &&
-          slice.tables.contains(e.toTable))
+        eJ <- edgesInto(slice, fks, dimJ)
+        eG <- otherEdges(slice, fks, eJ)
         groupCol <- abbrevColumn(attrWord, slice.tables(eG.toTable)).toSeq
         numCol <- strongColumn(m.group(5), slice.tables(eJ.fromTable)).toSeq
         jName <- nameishColumn(slice.tables(dimJ)).toSeq
@@ -940,22 +890,14 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       val (y1, y2) = (m.group(6), m.group(7))
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
-        eJ <- fks.filter(e => e.fromTable == eE.fromTable && e.toTable != dimE &&
-          slice.tables.contains(e.toTable))
+        eE <- edgesInto(slice, fks, dimE)
+        eJ <- otherEdges(slice, fks, eE)
         attrCol <- slice.tables(eJ.toTable).find(c =>
           values(eJ.toTable).get(c).exists(d => d.contains(v1) && d.contains(v2))).toSeq
         factCols = slice.tables(eE.fromTable)
         periodCol <- factCols.find(_.toLowerCase.contains("year")).toSeq
         stringCols = values(eE.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          c != periodCol && !l.endsWith("_id") && l != "id" && !l.endsWith("key") &&
-            !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, _ == periodCol)
       } yield {
         def cond(v: String, o: String) =
           s"AVG(CASE WHEN c.$attrCol = ${sqlLit(v)} AND s.$periodCol = $y2 " +
@@ -989,10 +931,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
   def medianEntityArgmaxCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     medianEntityArgmaxRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val agg = m.group(3).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(3))
       (for {
         dimE <- uniqueTable(slice, m.group(2)).toSeq
         e <- fks.find(e => e.toTable == dimE && slice.tables.contains(e.fromTable) &&
@@ -1027,10 +966,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       val falling = Set("drop", "decline", "fall")(m.group(3).toLowerCase)
       val smallest = m.group(2).equalsIgnoreCase("smallest")
       val dir = if (falling ^ smallest) "ASC" else "DESC"
-      val agg = m.group(4).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(4))
       (for {
         fact <- slice.tables.keys.toSeq.sorted
           .find(t => strongColumn(m.group(1), slice.tables(t)).isDefined &&
@@ -1067,9 +1003,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimJ <- uniqueTable(slice, m.group(3)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         attrCol <- slice.tables(dimJ).find(c =>
           values(dimJ).get(c).exists(_.contains(m.group(2)))).toSeq
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
@@ -1146,7 +1080,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       (for {
         n <- wordToInt(m.group(3)).toSeq
         dimE <- uniqueTable(slice, m.group(1)).toSeq
-        e <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        e <- edgesInto(slice, fks, dimE)
         catCol <- strongColumn(m.group(4), slice.tables(e.fromTable)).toSeq
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
       } yield Candidate(
@@ -1174,14 +1108,11 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
   def recentKAverageCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     recentKAverageRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val agg = m.group(1).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(1))
       (for {
         k <- wordToInt(m.group(4)).toSeq
         dimE <- uniqueTable(slice, m.group(3)).toSeq
-        e <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        e <- edgesInto(slice, fks, dimE)
         numCol <- strongColumn(m.group(2), slice.tables(e.fromTable)).toSeq
         periodCol <- slice.tables(e.fromTable)
           .find(_.toLowerCase.contains("year")).toSeq
@@ -1243,10 +1174,9 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       val dir = if (m.group(3).equalsIgnoreCase("least")) "ASC" else "DESC"
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         numCol <- strongColumn(m.group(2), slice.tables(eE.fromTable)).toSeq
-        eJ <- fks.filter(e => e.fromTable == eE.fromTable && e.toTable != dimE &&
-          slice.tables.contains(e.toTable))
+        eJ <- otherEdges(slice, fks, eE)
         attrCol <- abbrevColumn(m.group(4), slice.tables(eJ.toTable)).toSeq
       } yield Candidate(
         s"SELECT ${eE.fromColumn} FROM (" +
@@ -1312,18 +1242,11 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
     strictImprovementRe.findFirstMatchIn(question).toSeq.flatMap { m =>
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
-        e <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        e <- edgesInto(slice, fks, dimE)
         factCols = slice.tables(e.fromTable)
         periodCol <- strongColumn(m.group(3), factCols).toSeq
         stringCols = values(e.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          c != periodCol && !l.endsWith("_id") && l != "id" && !l.endsWith("key") &&
-            !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, _ == periodCol)
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
       } yield Candidate(
         s"SELECT st.$nameCol FROM (SELECT ${e.fromColumn} FROM (" +
@@ -1355,14 +1278,11 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       question: String): Seq[Candidate] =
     attrPairArgminRe.findFirstMatchIn(question).toSeq.flatMap { m =>
       val dir = if (m.group(4).equalsIgnoreCase("least")) "ASC" else "DESC"
-      val agg = m.group(2).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(2))
       (for {
         dimJ <- slice.tables.keys.toSeq.sorted
         attrCol <- abbrevColumn(m.group(1), slice.tables(dimJ)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         numCol <- strongColumn(m.group(3), slice.tables(eJ.fromTable)).toSeq
       } yield {
         val grouped = s"SELECT c.$attrCol, $agg(s.$numCol) AS av " +
@@ -1397,20 +1317,12 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       val op = if (Set("above", "over")(m.group(2).toLowerCase)) ">" else "<"
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
-        eJ <- fks.filter(e => e.fromTable == eE.fromTable && e.toTable != dimE &&
-          slice.tables.contains(e.toTable))
+        eE <- edgesInto(slice, fks, dimE)
+        eJ <- otherEdges(slice, fks, eE)
         attrCol <- abbrevColumn(m.group(3), slice.tables(eJ.toTable)).toSeq
         factCols = slice.tables(eE.fromTable)
         stringCols = values(eE.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          !l.endsWith("_id") && l != "id" && !l.endsWith("key") &&
-            !l.contains("year") && !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, _.toLowerCase.contains("year"))
       } yield Candidate(
         s"SELECT COUNT(*) AS agg_value FROM (" +
           s"SELECT sd.${eE.fromColumn} FROM (" +
@@ -1476,20 +1388,12 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       val dir = if (Set("narrowest", "smallest")(m.group(3).toLowerCase)) "ASC" else "DESC"
       (for {
         dimE <- uniqueTable(slice, m.group(2)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
-        eJ <- fks.filter(e => e.fromTable == eE.fromTable && e.toTable != dimE &&
-          slice.tables.contains(e.toTable))
+        eE <- edgesInto(slice, fks, dimE)
+        eJ <- otherEdges(slice, fks, eE)
         attrCol <- abbrevColumn(m.group(1), slice.tables(eJ.toTable)).toSeq
         factCols = slice.tables(eE.fromTable)
         stringCols = values(eE.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          !l.endsWith("_id") && l != "id" && !l.endsWith("key") &&
-            !l.contains("year") && !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, _.toLowerCase.contains("year"))
       } yield Candidate(
         s"SELECT $attrCol FROM (" +
           s"SELECT x.$attrCol, MAX(sa) - MIN(sa) AS g FROM (" +
@@ -1519,18 +1423,11 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
     floorOverPeriodsRe.findFirstMatchIn(question).toSeq.flatMap { m =>
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
-        e <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        e <- edgesInto(slice, fks, dimE)
         factCols = slice.tables(e.fromTable)
         periodCol <- strongColumn(m.group(2), factCols).toSeq
         stringCols = values(e.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          c != periodCol && !l.endsWith("_id") && l != "id" && !l.endsWith("key") &&
-            !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, _ == periodCol)
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
       } yield Candidate(
         s"SELECT st.$nameCol FROM (SELECT ${e.fromColumn} FROM (" +
@@ -1597,7 +1494,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         attrCol <- strongColumn(m.group(2), slice.tables(dimE)).toSeq
-        e <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        e <- edgesInto(slice, fks, dimE)
         measure <- strongColumn(m.group(3), slice.tables(e.fromTable)).toSeq
       } yield Candidate(
         s"SELECT ROUND(CORR(d.$attrCol, t.a), 4) AS agg_value FROM (" +
@@ -1630,7 +1527,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       val (cmp, ext) = if (above) (">", "MAX") else ("<", "MIN")
       (for {
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
-        e <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        e <- edgesInto(slice, fks, dimJ)
         measure <- strongColumn(m.group(2), slice.tables(e.fromTable)).toSeq
         dCol <- abbrevColumn(m.group(3), slice.tables(dimJ)).toSeq
       } yield Candidate(
@@ -1650,10 +1547,6 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       raw"(improved|increased|declined|decreased|worsened)\s+" +
       raw"([a-z_][a-z0-9_]*)\s+between\s+(\d{4})\s+and\s+(\d{4})\b").r
 
-  private[gen] val ordinalOffsets = Map(
-    "second" -> 1, "2nd" -> 1, "third" -> 2, "3rd" -> 2,
-    "fourth" -> 3, "4th" -> 3, "fifth" -> 4, "5th" -> 4)
-
   /** Nth trend argmax: "the second most improved E between Y1 and Y2"
     * → the [[trendArgmaxEntityCandidates]] delta ranking with the
     * ordinal as `LIMIT 1 OFFSET n-1` — still TakeOrderedAndProject
@@ -1665,24 +1558,17 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       question: String,
       values: String => Map[String, Seq[String]] = _ => Map.empty): Seq[Candidate] =
     nthTrendArgmaxRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val offset = ordinalOffsets(m.group(1).toLowerCase)
+      val offset = ordinalOffset(m.group(1))
       val rising = Set("improved", "increased")(m.group(2).toLowerCase)
       val dir = if (rising) "DESC" else "ASC"
       val (y1, y2) = (m.group(4), m.group(5))
       (for {
         dimE <- uniqueTable(slice, m.group(3)).toSeq
-        e <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        e <- edgesInto(slice, fks, dimE)
         factCols = slice.tables(e.fromTable)
         periodCol <- factCols.find(_.toLowerCase.contains("year")).toSeq
         stringCols = values(e.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          c != periodCol && !l.endsWith("_id") && l != "id" && !l.endsWith("key") &&
-            !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty // ambiguous or none: fire nothing
-        }
+        measure <- soleMeasure(factCols, stringCols, _ == periodCol)
       } yield Candidate(
         s"SELECT ${e.fromColumn} FROM (" +
           s"SELECT ${e.fromColumn}, " +
@@ -1718,7 +1604,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         attrCol <- strongColumn(attrWord, slice.tables(dimE)).toSeq
-        e <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        e <- edgesInto(slice, fks, dimE)
         measure <- strongColumn(m.group(3), slice.tables(e.fromTable)).toSeq
       } yield Candidate(
         s"SELECT d.$attrCol AS $attrCol, COUNT(*) AS n FROM (" +
@@ -1749,20 +1635,12 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       val dir = if (Set("lowest", "smallest")(m.group(2).toLowerCase)) "ASC" else "DESC"
       (for {
         dimE <- uniqueTable(slice, m.group(3)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
-        eJ <- fks.filter(e => e.fromTable == eE.fromTable && e.toTable != dimE &&
-          slice.tables.contains(e.toTable))
+        eE <- edgesInto(slice, fks, dimE)
+        eJ <- otherEdges(slice, fks, eE)
         attrCol <- abbrevColumn(m.group(1), slice.tables(eJ.toTable)).toSeq
         factCols = slice.tables(eE.fromTable)
         stringCols = values(eE.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          !l.endsWith("_id") && l != "id" && !l.endsWith("key") &&
-            !l.contains("year") && !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, _.toLowerCase.contains("year"))
       } yield Candidate(
         s"SELECT $attrCol FROM (" +
           s"SELECT x.$attrCol, MEDIAN(a) AS md FROM (" +
@@ -1799,10 +1677,9 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       val higher = Set("higher", "greater", "better")(m.group(5).toLowerCase)
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         measure <- strongColumn(m.group(2), slice.tables(eE.fromTable)).toSeq
-        eJ <- fks.filter(e => e.fromTable == eE.fromTable && e.toTable != dimE &&
-          slice.tables.contains(e.toTable))
+        eJ <- otherEdges(slice, fks, eE)
         catCol <- slice.tables(eJ.toTable).filter(c =>
           values(eJ.toTable).get(c).exists(d => d.contains(v1) && d.contains(v2))).toSeq
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
@@ -1845,7 +1722,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       val (y1, y2) = (m.group(5), m.group(6))
       (for {
         dimI <- uniqueTable(slice, m.group(3)).toSeq
-        eI <- fks.filter(e => e.toTable == dimI && slice.tables.contains(e.fromTable))
+        eI <- edgesInto(slice, fks, dimI)
         eJ <- fks.filter(e => e.fromTable == eI.fromTable && slice.tables.contains(e.toTable))
         attrCol <- abbrevColumn(m.group(1), slice.tables(eJ.toTable)).toSeq
         factCols = slice.tables(eI.fromTable)
@@ -1883,7 +1760,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       val v = m.group(1)
       (for {
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
-        e <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        e <- edgesInto(slice, fks, dimJ)
         measure <- strongColumn(m.group(3), slice.tables(e.fromTable)).toSeq
         nameCol <- nameishColumn(slice.tables(dimJ)).toSeq
         if values(dimJ).get(nameCol).exists(_.contains(v))
@@ -1975,15 +1852,12 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
         case "at most" => "<="
         case _ => ">="
       }
-      val n = m.group(4).toLowerCase match {
-        case "two" => 2; case "three" => 3; case "four" => 4; case "five" => 5
-        case d => d.toInt
-      }
+      val n = countWord(m.group(4))
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
         if dimJ != dimE
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         eJ <- fks.filter(e => e.fromTable == eE.fromTable && e.toTable == dimJ)
         attrCol <- abbrevColumn(m.group(5), slice.tables(dimJ)).toSeq
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
@@ -2023,14 +1897,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
         factCols = slice.tables(eJ.fromTable)
         periodCol <- strongColumn(m.group(1), factCols).toSeq
         stringCols = values(eJ.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          c != periodCol && !l.endsWith("_id") && l != "id" && !l.endsWith("key") &&
-            !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, _ == periodCol)
       } yield Candidate(
         s"SELECT yr FROM (SELECT x.yr, STDDEV_SAMP(a) AS sd FROM (" +
           s"SELECT s.$periodCol AS yr, c.$attrCol, AVG(s.$measure) AS a " +
@@ -2065,7 +1932,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       (for {
         dimE <- uniqueTable(slice, m.group(2)).toSeq
         if abbrevColumn(attrWord, slice.tables(dimE)).isEmpty
-        e <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        e <- edgesInto(slice, fks, dimE)
         catCol <- abbrevColumn(attrWord, slice.tables(e.fromTable)).toSeq
         numCol <- strongColumn(m.group(4), slice.tables(dimE)).toSeq
       } yield Candidate(
@@ -2100,7 +1967,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
         dimG <- uniqueTable(slice, m.group(1)).toSeq
         dimE <- uniqueTable(slice, m.group(4)).toSeq
         if dimE != dimG
-        eG <- fks.filter(e => e.toTable == dimG && slice.tables.contains(e.fromTable))
+        eG <- edgesInto(slice, fks, dimG)
         eE <- fks.filter(e => e.fromTable == eG.fromTable && e.toTable == dimE)
         measure <- strongColumn(m.group(3), slice.tables(eG.fromTable)).toSeq
       } yield Candidate(
@@ -2163,7 +2030,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       val agg = if (Set("total", "sum")(m.group(2).toLowerCase)) "SUM" else "AVG"
       (for {
         dimG <- uniqueTable(slice, m.group(1)).toSeq
-        eG <- fks.filter(e => e.toTable == dimG && slice.tables.contains(e.fromTable))
+        eG <- edgesInto(slice, fks, dimG)
         measure <- strongColumn(m.group(3), slice.tables(eG.fromTable)).toSeq
       } yield Candidate(
         s"SELECT ROUND(MAX(CASE WHEN r = 1 THEN a END) - " +
@@ -2198,21 +2065,8 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimJ <- uniqueTable(slice, m.group(3)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
-        factCols = slice.tables(eE.fromTable)
-        periodCols = factCols.filter(c => c.toLowerCase.contains("year") ||
-          c.toLowerCase.contains("date")).toSet
-        stringCols = values(eE.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          !periodCols.contains(c) && !l.endsWith("_id") && l != "id" &&
-            !l.endsWith("key") && !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
+        measure <- soleMeasure(slice.tables(eE.fromTable), values(eE.fromTable).keySet, yearOrDate)
         attrCol <- values(dimJ).collectFirst {
           case (c, dom) if dom.contains(value) => c
         }.toSeq
@@ -2283,9 +2137,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         attrCol <- abbrevColumn(m.group(3), slice.tables(dimJ)).toSeq
       } yield Candidate(
         s"SELECT c.$attrCol, ROUND(AVG(n), 2) AS avg_cnt FROM " +
@@ -2315,7 +2167,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       val agg = if (m.group(1).toLowerCase == "median") "MEDIAN" else "AVG"
       (for {
         dimJ <- uniqueTable(slice, m.group(4)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         attrCol <- abbrevColumn(m.group(3), slice.tables(dimJ)).toSeq
         measure <- strongColumn(m.group(2), slice.tables(eJ.fromTable)).toSeq
       } yield Candidate(
@@ -2344,7 +2196,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       (for {
         dimE <- uniqueTable(slice, m.group(2)).toSeq
         if abbrevColumn(attrWord, slice.tables(dimE)).isEmpty
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         if abbrevColumn(attrWord, slice.tables(eE.fromTable)).isEmpty
         eJ <- fks.filter(e => e.fromTable == eE.fromTable &&
           e.toTable != dimE && slice.tables.contains(e.toTable))
@@ -2382,7 +2234,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       val (y1, y2) = (m.group(3), m.group(4))
       (for {
         dimG <- uniqueTable(slice, m.group(1)).toSeq
-        eG <- fks.filter(e => e.toTable == dimG && slice.tables.contains(e.fromTable))
+        eG <- edgesInto(slice, fks, dimG)
         periodCol <- slice.tables(eG.fromTable)
           .find(_.toLowerCase.contains("year")).toSeq
       } yield Candidate(
@@ -2452,7 +2304,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
         "MIN" else "MAX"
       (for {
         dimG <- uniqueTable(slice, m.group(3)).toSeq
-        eG <- fks.filter(e => e.toTable == dimG && slice.tables.contains(e.fromTable))
+        eG <- edgesInto(slice, fks, dimG)
         measure <- strongColumn(m.group(2), slice.tables(eG.fromTable)).toSeq
       } yield Candidate(
         s"SELECT $outer(mx - mn) AS agg_value FROM " +
@@ -2480,9 +2332,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
       } yield Candidate(
         s"SELECT ROUND(CAST(COUNT(DISTINCT CASE WHEN ${eJ.fromColumn} = " +
           s"(SELECT ${eJ.fromColumn} FROM ${eE.fromTable} " +
@@ -2513,7 +2363,7 @@ private[gen] trait TemplatesShapes2 { this: Templates.type =>
       val value = m.group(3)
       (for {
         dimG <- uniqueTable(slice, m.group(1)).toSeq
-        eG <- fks.filter(e => e.toTable == dimG && slice.tables.contains(e.fromTable))
+        eG <- edgesInto(slice, fks, dimG)
         catCol <- strongColumn(m.group(4), slice.tables(eG.fromTable)).toSeq
         if values(eG.fromTable).get(catCol).exists(_.contains(value))
       } yield Candidate(

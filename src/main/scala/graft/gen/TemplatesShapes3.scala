@@ -31,7 +31,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       val ext = if (m.group(4).toLowerCase == "first") "MIN" else "MAX"
       (for {
         dimE <- uniqueTable(slice, m.group(3)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         factCols = slice.tables(eE.fromTable)
         measure <- strongColumn(m.group(2), factCols).toSeq
         periodCol <- strongColumn(m.group(5), factCols).toSeq
@@ -63,19 +63,12 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       val (y1, y2) = (m.group(4), m.group(5))
       (for {
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         attrCol <- abbrevColumn(m.group(3), slice.tables(dimJ)).toSeq
         factCols = slice.tables(eJ.fromTable)
         periodCol <- factCols.find(_.toLowerCase.contains("year")).toSeq
         stringCols = values(eJ.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          c != periodCol && !l.endsWith("_id") && l != "id" && !l.endsWith("key") &&
-            !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, _ == periodCol)
       } yield Candidate(
         s"SELECT grp, jk FROM (SELECT grp, jk, ROW_NUMBER() OVER " +
           s"(PARTITION BY grp ORDER BY d $dir, jk) AS r FROM " +
@@ -111,9 +104,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimJ <- uniqueTable(slice, m.group(4)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         attrCol <- values(dimJ).collectFirst {
           case (c, dom) if dom.contains(value) => c
         }.toSeq
@@ -179,7 +170,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       val attrWord = m.group(4).trim.replaceAll("\\s+", "_")
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         measure <- strongColumn(m.group(2), slice.tables(eE.fromTable)).toSeq
         attrCol <- abbrevColumn(attrWord, slice.tables(dimE)).toSeq
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
@@ -236,15 +227,12 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
   def bottomkAggAvgCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     bottomkAggAvgRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val n = m.group(2).toLowerCase match {
-        case "two" => 2; case "three" => 3; case "four" => 4; case "five" => 5
-        case d => d.toInt
-      }
+      val n = countWord(m.group(2))
       val dir = if (Set("hardest", "worst", "bottom", "weakest")(m.group(3).toLowerCase))
         "ASC" else "DESC"
       (for {
         dimG <- uniqueTable(slice, m.group(4)).toSeq
-        eG <- fks.filter(e => e.toTable == dimG && slice.tables.contains(e.fromTable))
+        eG <- edgesInto(slice, fks, dimG)
         measure <- strongColumn(m.group(1), slice.tables(eG.fromTable)).toSeq
       } yield Candidate(
         s"SELECT ROUND(AVG(a), 4) AS agg_value FROM " +
@@ -274,9 +262,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(3)).toSeq
         dimC <- uniqueTable(slice, m.group(4)).toSeq
         if dimE != dimC
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimC))
-        eC <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimC).toSeq
+        (eE, eC) <- bridges(fks, dimE, dimC)
         catCol <- abbrevColumn(m.group(1), slice.tables(dimC)).toSeq
         numCol <- strongColumn(m.group(2), slice.tables(dimE)).toSeq
       } yield Candidate(
@@ -303,10 +289,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
   def countThresholdEntitiesCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     countThresholdEntitiesRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val n = m.group(3).toLowerCase match {
-        case "two" => 2; case "three" => 3; case "four" => 4; case "five" => 5
-        case d => d.toInt
-      }
+      val n = countWord(m.group(3))
       val attrWord = m.group(4).trim.replaceAll("\\s+", "_")
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
@@ -362,7 +345,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       val dir = if (m.group(2).toLowerCase == "most") "ASC" else "DESC"
       (for {
         dimG <- uniqueTable(slice, m.group(1)).toSeq
-        eG <- fks.filter(e => e.toTable == dimG && slice.tables.contains(e.fromTable))
+        eG <- edgesInto(slice, fks, dimG)
         periodCol <- strongColumn(m.group(3), slice.tables(eG.fromTable)).toSeq
         if periodCol != eG.fromColumn
       } yield Candidate(
@@ -534,7 +517,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       val value = m.group(1)
       (for {
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         measure <- strongColumn(m.group(4), slice.tables(eJ.fromTable)).toSeq
         attrCol <- values(dimJ).collectFirst {
           case (c, dom) if dom.contains(value) => c
@@ -609,7 +592,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
     harmonicMeanGroupsRe.findFirstMatchIn(question).toSeq.flatMap { m =>
       (for {
         dimG <- uniqueTable(slice, m.group(1)).toSeq
-        eG <- fks.filter(e => e.toTable == dimG && slice.tables.contains(e.fromTable))
+        eG <- edgesInto(slice, fks, dimG)
         measure <- strongColumn(m.group(2), slice.tables(eG.fromTable)).toSeq
       } yield Candidate(
         s"SELECT ROUND(1.0 / AVG(1.0 / a), 4) AS agg_value FROM " +
@@ -634,7 +617,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       val dir = if (Set("highest", "largest")(m.group(3).toLowerCase)) "DESC" else "ASC"
       (for {
         dimE <- uniqueTable(slice, m.group(2)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         periodCol <- strongColumn(m.group(1), slice.tables(eE.fromTable)).toSeq
       } yield Candidate(
         s"SELECT $periodCol FROM ${eE.fromTable} GROUP BY $periodCol " +
@@ -662,18 +645,11 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       val (y1, y2) = (m.group(3), m.group(4))
       (for {
         dimG <- uniqueTable(slice, m.group(1)).toSeq
-        eG <- fks.filter(e => e.toTable == dimG && slice.tables.contains(e.fromTable))
+        eG <- edgesInto(slice, fks, dimG)
         factCols = slice.tables(eG.fromTable)
         periodCol <- factCols.find(_.toLowerCase.contains("year")).toSeq
         stringCols = values(eG.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          c != periodCol && !l.endsWith("_id") && l != "id" && !l.endsWith("key") &&
-            !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, _ == periodCol)
       } yield Candidate(
         s"SELECT ${eG.fromColumn}, ROUND(d, 4) AS delta FROM " +
           s"(SELECT ${eG.fromColumn}, " +
@@ -705,7 +681,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       val dir = if (m.group(4).toLowerCase == "highest") "DESC" else "ASC"
       (for {
         dimE <- uniqueTable(slice, m.group(2)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         measure <- strongColumn(m.group(5), slice.tables(eE.fromTable)).toSeq
         attrCol <- strongColumn(m.group(1), slice.tables(dimE)).toSeq
       } yield Candidate(
@@ -735,17 +711,12 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
   def filteredAntiCountCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     filteredAntiCountRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val ordinals = Map("first" -> 1, "second" -> 2, "third" -> 3, "fourth" -> 4,
-        "fifth" -> 5, "sixth" -> 6, "seventh" -> 7, "eighth" -> 8, "ninth" -> 9,
-        "tenth" -> 10, "eleventh" -> 11, "twelfth" -> 12)
       val n = ordinals.getOrElse(m.group(2).toLowerCase, m.group(2).toInt)
       (for {
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
-        eE <- fks.filter(e => e.fromTable == eJ.fromTable && e.toTable != dimJ &&
-          slice.tables.contains(e.toTable))
-        gradeCol <- slice.tables(eE.toTable)
-          .find(_.toLowerCase.startsWith("grade")).toSeq
+        eJ <- edgesInto(slice, fks, dimJ)
+        eE <- otherEdges(slice, fks, eJ)
+        gradeCol <- gradeColumn(slice.tables(eE.toTable)).toSeq
       } yield Candidate(
         s"SELECT COUNT(*) AS agg_value FROM $dimJ c WHERE NOT EXISTS " +
           s"(SELECT 1 FROM ${eJ.fromTable} s " +
@@ -775,9 +746,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
         dimE <- uniqueTable(slice, m.group(3)).toSeq
         if dimE != dimJ
-        eJ <- fks.filter(e => e.toTable == dimJ && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimE))
-        eE <- fks.find(e => e.fromTable == eJ.fromTable && e.toTable == dimE).toSeq
+        (eJ, eE) <- bridges(fks, dimJ, dimE)
       } yield Candidate(
         s"SELECT a.${eJ.fromColumn} AS c1, b.${eJ.fromColumn} AS c2 " +
           s"FROM ${eJ.fromTable} a JOIN ${eJ.fromTable} b " +
@@ -856,19 +825,10 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
     avgRankSpacingRe.findFirstMatchIn(question).toSeq.flatMap { m =>
       (for {
         dimG <- uniqueTable(slice, m.group(1)).toSeq
-        eG <- fks.filter(e => e.toTable == dimG && slice.tables.contains(e.fromTable))
+        eG <- edgesInto(slice, fks, dimG)
         factCols = slice.tables(eG.fromTable)
-        periodCols = factCols.filter(c => c.toLowerCase.contains("year") ||
-          c.toLowerCase.contains("date")).toSet
         stringCols = values(eG.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          !periodCols.contains(c) && !l.endsWith("_id") && l != "id" &&
-            !l.endsWith("key") && !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, yearOrDate)
       } yield Candidate(
         s"SELECT ROUND(AVG(d), 4) AS agg_value FROM (SELECT a - LAG(a) OVER " +
           s"(ORDER BY a) AS d FROM (SELECT AVG($measure) AS a FROM " +
@@ -899,10 +859,9 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       val value = m.group(3)
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         measure <- strongColumn(m.group(2), slice.tables(eE.fromTable)).toSeq
-        eJ <- fks.filter(e => e.fromTable == eE.fromTable && e.toTable != dimE &&
-          slice.tables.contains(e.toTable))
+        eJ <- otherEdges(slice, fks, eE)
         attrCol <- values(eJ.toTable).collectFirst {
           case (c, dom) if dom.contains(value) => c
         }.toSeq
@@ -969,7 +928,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       val target = if (m.group(2).toLowerCase == "top") 1 else n
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         measure <- strongColumn(m.group(4), slice.tables(eE.fromTable)).toSeq
       } yield Candidate(
         s"SELECT COUNT(*) AS agg_value FROM (SELECT ${eE.fromColumn}, " +
@@ -1020,7 +979,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       val value = m.group(2)
       (for {
         dimJ <- uniqueTable(slice, m.group(3)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         measure <- strongColumn(m.group(1), slice.tables(eJ.fromTable)).toSeq
         attrCol <- values(dimJ).collectFirst {
           case (c, dom) if dom.contains(value) => c
@@ -1067,7 +1026,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       val op = if (m.group(3).toLowerCase.endsWith("below")) "<" else ">"
       (for {
         dimG <- uniqueTable(slice, m.group(1)).toSeq
-        eG <- fks.filter(e => e.toTable == dimG && slice.tables.contains(e.fromTable))
+        eG <- edgesInto(slice, fks, dimG)
         measure <- strongColumn(m.group(2), slice.tables(eG.fromTable)).toSeq
       } yield Candidate(
         s"SELECT ROUND(CAST(SUM(CASE WHEN med $op mean THEN 1 ELSE 0 END) " +
@@ -1120,7 +1079,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
     varianceExplainedRe.findFirstMatchIn(question).toSeq.flatMap { m =>
       (for {
         dimG <- uniqueTable(slice, m.group(2)).toSeq
-        eG <- fks.filter(e => e.toTable == dimG && slice.tables.contains(e.fromTable))
+        eG <- edgesInto(slice, fks, dimG)
         measure <- strongColumn(m.group(1), slice.tables(eG.fromTable)).toSeq
       } yield Candidate(
         s"SELECT ROUND(SUM(n * POWER(ga - (SELECT AVG($measure) FROM " +
@@ -1150,21 +1109,10 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimJ <- uniqueTable(slice, m.group(4)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         factCols = slice.tables(eE.fromTable)
-        periodCols = factCols.filter(c => c.toLowerCase.contains("year") ||
-          c.toLowerCase.contains("date")).toSet
         stringCols = values(eE.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          !periodCols.contains(c) && !l.endsWith("_id") && l != "id" &&
-            !l.endsWith("key") && !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, yearOrDate)
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
       } yield Candidate(
         s"SELECT st.$nameCol FROM ((SELECT ${eE.fromColumn} FROM " +
@@ -1192,7 +1140,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
     weightedGroupMedianRe.findFirstMatchIn(question).toSeq.flatMap { m =>
       (for {
         dimG <- uniqueTable(slice, m.group(1)).toSeq
-        eG <- fks.filter(e => e.toTable == dimG && slice.tables.contains(e.fromTable))
+        eG <- edgesInto(slice, fks, dimG)
         measure <- strongColumn(m.group(2), slice.tables(eG.fromTable)).toSeq
       } yield Candidate(
         s"SELECT ROUND(SUM(n * med) / SUM(n), 4) AS agg_value FROM " +
@@ -1215,7 +1163,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
     giniEnrollmentRe.findFirstMatchIn(question).toSeq.flatMap { m =>
       (for {
         dimG <- uniqueTable(slice, m.group(1)).toSeq
-        eG <- fks.filter(e => e.toTable == dimG && slice.tables.contains(e.fromTable))
+        eG <- edgesInto(slice, fks, dimG)
       } yield Candidate(
         s"WITH e AS (SELECT COUNT(*) AS n FROM ${eG.fromTable} " +
           s"GROUP BY ${eG.fromColumn}), " +
@@ -1245,9 +1193,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
       } yield Candidate(
         s"SELECT COUNT(DISTINCT s.${eE.fromColumn}) AS agg_value " +
@@ -1279,9 +1225,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
         dimE <- uniqueTable(slice, m.group(4)).toSeq
         if dimE != dimJ
-        eJ <- fks.filter(e => e.toTable == dimJ && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimE))
-        eE <- fks.find(e => e.fromTable == eJ.fromTable && e.toTable == dimE).toSeq
+        (eJ, eE) <- bridges(fks, dimJ, dimE)
         attrCol <- abbrevColumn(m.group(1), slice.tables(dimJ)).toSeq
       } yield Candidate(
         s"SELECT COUNT(*) AS agg_value FROM (SELECT grp FROM " +
@@ -1335,9 +1279,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
         dimE <- uniqueTable(slice, m.group(2)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         attrCol <- abbrevColumn(attrWord, slice.tables(dimE)).toSeq
       } yield Candidate(
         s"SELECT ROUND(CAST(SUM(shared) AS DOUBLE) / SUM(pairs), 4) " +
@@ -1372,19 +1314,14 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
   def cohortGapFilterCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     cohortGapFilterRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val ordinals = Map("first" -> 1, "second" -> 2, "third" -> 3, "fourth" -> 4,
-        "fifth" -> 5, "sixth" -> 6, "seventh" -> 7, "eighth" -> 8, "ninth" -> 9,
-        "tenth" -> 10, "eleventh" -> 11, "twelfth" -> 12)
       val (n1, n2) = (ordinals(m.group(3).toLowerCase), ordinals(m.group(4).toLowerCase))
       val op = if (m.group(5).toLowerCase.endsWith("below")) "<" else ">"
       (for {
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         measure <- strongColumn(m.group(2), slice.tables(eJ.fromTable)).toSeq
-        eE <- fks.filter(e => e.fromTable == eJ.fromTable && e.toTable != dimJ &&
-          slice.tables.contains(e.toTable))
-        gradeCol <- slice.tables(eE.toTable)
-          .find(_.toLowerCase.startsWith("grade")).toSeq
+        eE <- otherEdges(slice, fks, eJ)
+        gradeCol <- gradeColumn(slice.tables(eE.toTable)).toSeq
       } yield Candidate(
         s"SELECT s.${eJ.fromColumn} FROM ${eJ.fromTable} s " +
           s"JOIN ${eE.toTable} st ON st.${eE.toColumn} = s.${eE.fromColumn} " +
@@ -1417,21 +1354,10 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimJ <- uniqueTable(slice, m.group(3)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         factCols = slice.tables(eE.fromTable)
-        periodCols = factCols.filter(c => c.toLowerCase.contains("year") ||
-          c.toLowerCase.contains("date")).toSet
         stringCols = values(eE.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          !periodCols.contains(c) && !l.endsWith("_id") && l != "id" &&
-            !l.endsWith("key") && !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, yearOrDate)
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
       } yield Candidate(
         s"SELECT st.$nameCol FROM (SELECT s.${eE.fromColumn} FROM " +
@@ -1463,7 +1389,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       val p = m.group(1).toInt / 100.0
       (for {
         dimE <- uniqueTable(slice, m.group(2)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         measure <- strongColumn(m.group(3), slice.tables(eE.fromTable)).toSeq
       } yield Candidate(
         s"SELECT ROUND(PERCENTILE(a, $p), 4) AS agg_value FROM " +
@@ -1488,7 +1414,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       val op = if (m.group(2).toLowerCase == "above") ">" else "<"
       (for {
         dimG <- uniqueTable(slice, m.group(1)).toSeq
-        eG <- fks.filter(e => e.toTable == dimG && slice.tables.contains(e.fromTable))
+        eG <- edgesInto(slice, fks, dimG)
       } yield Candidate(
         s"SELECT ${eG.fromColumn} FROM ${eG.fromTable} " +
           s"GROUP BY ${eG.fromColumn} HAVING COUNT(*) $op " +
@@ -1525,7 +1451,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       val vWord = { val w = m.group(2); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         measure <- strongColumn(vWord, slice.tables(eE.fromTable)).toSeq
         other <- fks.find(e => e.fromTable == eE.fromTable && e.toTable != dimE).toSeq
       } yield Candidate(
@@ -1597,18 +1523,11 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       val (y1, y2) = (m.group(3), m.group(4))
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         factCols = slice.tables(eE.fromTable)
         period <- factCols.find(_.toLowerCase.contains("year")).toSeq
         stringCols = values(eE.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          c != period && !l.endsWith("_id") && l != "id" && !l.endsWith("key") &&
-            !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, _ == period)
       } yield Candidate(
         s"WITH r AS (SELECT $period, ${eE.fromColumn}, RANK() OVER " +
           s"(PARTITION BY $period ORDER BY AVG($measure) DESC) AS rk " +
@@ -1633,9 +1552,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
   def zscoreBandShareCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     zscoreBandShareRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val k = m.group(2).toLowerCase match {
-        case "one" => 1; case "two" => 2; case "three" => 3; case d => d.toInt
-      }
+      val k = countWord(m.group(2))
       val vWord = { val w = m.group(1); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         tbl <- slice.tables.keys.toSeq.sorted
@@ -1667,9 +1584,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
         dimG <- uniqueTable(slice, m.group(1)).toSeq
         dimE <- uniqueTable(slice, m.group(2)).toSeq
         if dimG != dimE
-        eG <- fks.filter(e => e.toTable == dimG && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimE))
-        eE <- fks.find(e => e.fromTable == eG.fromTable && e.toTable == dimE).toSeq
+        (eG, eE) <- bridges(fks, dimG, dimE)
       } yield {
         val (fact, g, mem) = (eG.fromTable, eG.fromColumn, eE.fromColumn)
         Candidate(
@@ -1702,28 +1617,15 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       values: String => Map[String, Seq[String]] = _ => Map.empty): Seq[Candidate] =
     multiTopRankCountRe.findFirstMatchIn(question).toSeq.flatMap { m =>
       val n = m.group(2).toInt
-      val k = m.group(3).toLowerCase match {
-        case "one" => 1; case "two" => 2; case "three" => 3; case d => d.toInt
-      }
+      val k = countWord(m.group(3))
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimG <- uniqueTable(slice, m.group(4)).toSeq
         if dimE != dimG
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimG))
-        eG <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimG).toSeq
+        (eE, eG) <- bridges(fks, dimE, dimG)
         factCols = slice.tables(eE.fromTable)
-        periodCols = factCols.filter(c => c.toLowerCase.contains("year") ||
-          c.toLowerCase.contains("date")).toSet
         stringCols = values(eE.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          !periodCols.contains(c) && !l.endsWith("_id") && l != "id" &&
-            !l.endsWith("key") && !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, yearOrDate)
       } yield Candidate(
         s"SELECT COUNT(*) AS agg_value FROM (SELECT ${eE.fromColumn} FROM " +
           s"(SELECT ${eE.fromColumn}, ${eG.fromColumn}, RANK() OVER " +
@@ -1753,9 +1655,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(2)).toSeq
         dimJ <- uniqueTable(slice, m.group(4)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         measure <- strongColumn(m.group(1), slice.tables(eE.fromTable)).toSeq
       } yield Candidate(
         s"WITH ca AS (SELECT ${eJ.fromColumn}, AVG($measure) AS cavg " +
@@ -1788,30 +1688,16 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       question: String,
       values: String => Map[String, Seq[String]] = _ => Map.empty): Seq[Candidate] =
     universalArgmaxAttrRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val ordinals = Map("first" -> 1, "second" -> 2, "third" -> 3, "fourth" -> 4,
-        "fifth" -> 5, "sixth" -> 6, "seventh" -> 7, "eighth" -> 8, "ninth" -> 9,
-        "tenth" -> 10, "eleventh" -> 11, "twelfth" -> 12)
       val n = ordinals.getOrElse(m.group(4).toLowerCase, m.group(4).toInt)
       (for {
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
         groupCol <- abbrevColumn(m.group(1), slice.tables(dimJ)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
-        eE <- fks.filter(e => e.fromTable == eJ.fromTable && e.toTable != dimJ &&
-          slice.tables.contains(e.toTable))
-        gradeCol <- slice.tables(eE.toTable)
-          .find(_.toLowerCase.startsWith("grade")).toSeq
+        eJ <- edgesInto(slice, fks, dimJ)
+        eE <- otherEdges(slice, fks, eJ)
+        gradeCol <- gradeColumn(slice.tables(eE.toTable)).toSeq
         factCols = slice.tables(eJ.fromTable)
-        periodCols = factCols.filter(c => c.toLowerCase.contains("year") ||
-          c.toLowerCase.contains("date")).toSet
         stringCols = values(eJ.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          !periodCols.contains(c) && !l.endsWith("_id") && l != "id" &&
-            !l.endsWith("key") && !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, yearOrDate)
       } yield Candidate(
         s"WITH top AS (SELECT ${eJ.fromColumn}, ${eE.fromColumn} FROM " +
           s"(SELECT ${eJ.fromColumn}, ${eE.fromColumn}, ROW_NUMBER() OVER " +
@@ -1881,7 +1767,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       (for {
         dimE <- uniqueTable(slice, m.group(2)).toSeq
         attr <- strongColumn(attrWord, slice.tables(dimE)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         measure <- strongColumn(vWord, slice.tables(eE.fromTable)).toSeq
       } yield Candidate(
         s"SELECT gl FROM (SELECT st.$attr AS gl, MAX(a) - MIN(a) AS r " +
@@ -1909,29 +1795,15 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       values: String => Map[String, Seq[String]] = _ => Map.empty): Seq[Candidate] =
     aboveAvgMultiCountRe.findFirstMatchIn(question).toSeq.flatMap { m =>
       val op = if (Set("above", "over")(m.group(2).toLowerCase)) ">" else "<"
-      val k = m.group(4).toLowerCase match {
-        case "one" => 1; case "two" => 2; case "three" => 3
-        case "four" => 4; case "five" => 5; case d => d.toInt
-      }
+      val k = countWord(m.group(4))
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimJ <- uniqueTable(slice, m.group(3)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         factCols = slice.tables(eE.fromTable)
-        periodCols = factCols.filter(c => c.toLowerCase.contains("year") ||
-          c.toLowerCase.contains("date")).toSet
         stringCols = values(eE.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          !periodCols.contains(c) && !l.endsWith("_id") && l != "id" &&
-            !l.endsWith("key") && !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, yearOrDate)
       } yield Candidate(
         s"SELECT COUNT(*) AS agg_value FROM (SELECT s.${eE.fromColumn} " +
           s"FROM ${eE.fromTable} s JOIN (SELECT ${eJ.fromColumn}, " +
@@ -1959,18 +1831,13 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
   def dualCohortCoverageCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     dualCohortCoverageRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val ordinals = Map("first" -> 1, "second" -> 2, "third" -> 3, "fourth" -> 4,
-        "fifth" -> 5, "sixth" -> 6, "seventh" -> 7, "eighth" -> 8, "ninth" -> 9,
-        "tenth" -> 10, "eleventh" -> 11, "twelfth" -> 12)
       val n1 = ordinals.getOrElse(m.group(2).toLowerCase, m.group(2).toInt)
       val n2 = ordinals.getOrElse(m.group(3).toLowerCase, m.group(3).toInt)
       (for {
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
-        eE <- fks.filter(e => e.fromTable == eJ.fromTable && e.toTable != dimJ &&
-          slice.tables.contains(e.toTable))
-        gradeCol <- slice.tables(eE.toTable)
-          .find(_.toLowerCase.startsWith("grade")).toSeq
+        eJ <- edgesInto(slice, fks, dimJ)
+        eE <- otherEdges(slice, fks, eJ)
+        gradeCol <- gradeColumn(slice.tables(eE.toTable)).toSeq
       } yield Candidate(
         s"SELECT ROUND(CAST(COUNT(*) AS DOUBLE) / " +
           s"(SELECT COUNT(*) FROM $dimJ), 4) AS agg_value FROM " +
@@ -2001,7 +1868,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       val vWord = { val w = m.group(4); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         measure <- strongColumn(vWord, slice.tables(eJ.fromTable)).toSeq
         period <- slice.tables(eJ.fromTable)
           .find(_.toLowerCase.contains(pWord.toLowerCase)).toSeq
@@ -2039,7 +1906,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       val vWord = { val w = m.group(2); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         measure <- strongColumn(vWord, slice.tables(eE.fromTable)).toSeq
         eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable != dimE &&
           slice.tables.contains(e.toTable) &&
@@ -2077,7 +1944,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       val vWord = { val w = m.group(2); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         measure <- strongColumn(vWord, slice.tables(eJ.fromTable)).toSeq
       } yield Candidate(
         s"SELECT ROUND(CORR(n, a), 4) AS agg_value FROM " +
@@ -2107,7 +1974,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(2)).toSeq
         ageCol <- slice.tables(dimE).find(_.toLowerCase == "age").toSeq
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         measure <- strongColumn(vWord, slice.tables(eE.fromTable)).toSeq
       } yield Candidate(
         s"SELECT $nameCol FROM (SELECT st.$nameCol, st.$ageCol " +
@@ -2159,7 +2026,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       val attrWord = m.group(1).toLowerCase.replace(' ', '_')
       (for {
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         eE <- fks.filter(e => e.fromTable == eJ.fromTable && e.toTable != dimJ &&
           slice.tables.contains(e.toTable) &&
           strongColumn(attrWord, slice.tables(e.toTable)).isDefined)
@@ -2193,7 +2060,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       val vWord = { val w = m.group(3); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         measure <- strongColumn(vWord, slice.tables(eE.fromTable)).toSeq
       } yield Candidate(
         s"SELECT COUNT(*) AS agg_value FROM (SELECT ${eE.fromColumn} " +
@@ -2218,7 +2085,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       val vWord = { val w = m.group(1); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         valueCol <- strongColumn(vWord, slice.tables(eJ.fromTable)).toSeq
       } yield Candidate(
         s"SELECT ROUND(AVG(d), 4) AS agg_value FROM " +
@@ -2246,9 +2113,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
       } yield Candidate(
         s"SELECT $nameCol FROM (SELECT st.${eE.toColumn} AS sid, " +
@@ -2281,7 +2146,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       val vWord = { val w = m.group(1); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         measure <- strongColumn(vWord, slice.tables(eJ.fromTable)).toSeq
       } yield Candidate(
         s"SELECT ROUND(AVG($measure), 4) AS agg_value FROM ${eJ.fromTable} " +
@@ -2305,18 +2170,14 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
   def cohortSumShareCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     cohortSumShareRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val ordinals = Map("first" -> 1, "second" -> 2, "third" -> 3, "fourth" -> 4,
-        "fifth" -> 5, "sixth" -> 6, "seventh" -> 7, "eighth" -> 8, "ninth" -> 9,
-        "tenth" -> 10, "eleventh" -> 11, "twelfth" -> 12)
       val n = ordinals.getOrElse(m.group(2).toLowerCase, m.group(2).toInt)
       val vWord = { val w = m.group(1); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         fact <- slice.tables.keys.toSeq.sorted
         measure <- strongColumn(vWord, slice.tables(fact)).toSeq
         eE <- fks.filter(e => e.fromTable == fact && slice.tables.contains(e.toTable) &&
-          slice.tables(e.toTable).exists(_.toLowerCase.startsWith("grade")))
-        gradeCol <- slice.tables(eE.toTable)
-          .find(_.toLowerCase.startsWith("grade")).toSeq
+          gradeColumn(slice.tables(e.toTable)).isDefined)
+        gradeCol <- gradeColumn(slice.tables(eE.toTable)).toSeq
       } yield Candidate(
         s"SELECT ROUND(CAST(SUM(CASE WHEN st.$gradeCol = $n THEN s.$measure " +
           s"ELSE 0 END) AS DOUBLE) / SUM(s.$measure), 4) AS agg_value " +
@@ -2342,7 +2203,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         valueCol <- strongColumn(vWord, slice.tables(eE.fromTable)).toSeq
       } yield Candidate(
         s"SELECT st.$nameCol FROM (SELECT ${eE.fromColumn} FROM " +
@@ -2402,21 +2263,10 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         factCols = slice.tables(eE.fromTable)
-        periodCols = factCols.filter(c => c.toLowerCase.contains("year") ||
-          c.toLowerCase.contains("date")).toSet
         stringCols = values(eE.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          !periodCols.contains(c) && !l.endsWith("_id") && l != "id" &&
-            !l.endsWith("key") && !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, yearOrDate)
       } yield Candidate(
         s"SELECT ${eJ.fromColumn}, COUNT(*) AS n FROM " +
           s"(SELECT ${eE.fromColumn}, ${eJ.fromColumn} FROM " +
@@ -2442,19 +2292,10 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
     uniqueArgmaxCountRe.findFirstMatchIn(question).toSeq.flatMap { m =>
       (for {
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         factCols = slice.tables(eJ.fromTable)
-        periodCols = factCols.filter(c => c.toLowerCase.contains("year") ||
-          c.toLowerCase.contains("date")).toSet
         stringCols = values(eJ.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          !periodCols.contains(c) && !l.endsWith("_id") && l != "id" &&
-            !l.endsWith("key") && !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, yearOrDate)
       } yield Candidate(
         s"SELECT COUNT(*) AS agg_value FROM (SELECT s.${eJ.fromColumn} " +
           s"FROM ${eJ.fromTable} s JOIN (SELECT ${eJ.fromColumn} AS cid, " +
@@ -2479,7 +2320,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
     top2CountGapRe.findFirstMatchIn(question).toSeq.flatMap { m =>
       (for {
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
       } yield Candidate(
         s"SELECT MAX(n) - MIN(n) AS agg_value FROM (SELECT COUNT(*) AS n " +
           s"FROM ${eJ.fromTable} GROUP BY ${eJ.fromColumn} " +
@@ -2511,23 +2352,14 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
           dimE <- uniqueTable(slice, m.group(1)).toSeq
           dimJ <- uniqueTable(slice, m.group(3)).toSeq
           if dimE != dimJ
-          eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-            e2.fromTable == e.fromTable && e2.toTable == dimJ))
-          eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+          (eE, eJ) <- bridges(fks, dimE, dimJ)
           attr <- values(dimJ).collectFirst {
             case (c, dom) if dom.contains(v1) && dom.contains(v2) => c
           }.toSeq
           nameCol <- nameishColumn(slice.tables(dimE)).toSeq
           factCols = slice.tables(eE.fromTable)
           stringCols = values(eE.fromTable).keySet
-          measure <- factCols.filter { c =>
-            val l = c.toLowerCase
-            !l.contains("year") && !l.contains("date") && !l.endsWith("_id") &&
-              l != "id" && !l.endsWith("key") && !stringCols.contains(c)
-          } match {
-            case Seq(one) => Seq(one)
-            case _ => Seq.empty
-          }
+          measure <- soleMeasure(factCols, stringCols, yearOrDate)
         } yield Candidate(
           s"SELECT st.$nameCol FROM (SELECT s.${eE.fromColumn} FROM " +
             s"${eE.fromTable} s JOIN $dimJ c " +
@@ -2560,7 +2392,7 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       val vWord = { val w = m.group(3); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimE <- uniqueTable(slice, m.group(2)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         valueCol <- strongColumn(vWord, slice.tables(eE.fromTable)).toSeq
         domain = values(eE.fromTable).getOrElse(valueCol, Seq.empty)
         if domain.nonEmpty && domain.forall(_.length == 1) && domain.contains(v)
@@ -2589,28 +2421,16 @@ private[gen] trait TemplatesShapes3 { this: Templates.type =>
       question: String,
       values: String => Map[String, Seq[String]] = _ => Map.empty): Seq[Candidate] =
     cohortGroupArgminRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val ordinals = Map("first" -> 1, "second" -> 2, "third" -> 3, "fourth" -> 4,
-        "fifth" -> 5, "sixth" -> 6, "seventh" -> 7, "eighth" -> 8, "ninth" -> 9,
-        "tenth" -> 10, "eleventh" -> 11, "twelfth" -> 12)
       val n = ordinals.getOrElse(m.group(3).toLowerCase, m.group(3).toInt)
       val dir = if (m.group(1).toLowerCase == "easiest") "DESC" else "ASC"
       (for {
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
-        eE <- fks.filter(e => e.fromTable == eJ.fromTable && e.toTable != dimJ &&
-          slice.tables.contains(e.toTable))
-        gradeCol <- slice.tables(eE.toTable)
-          .find(_.toLowerCase.startsWith("grade")).toSeq
+        eJ <- edgesInto(slice, fks, dimJ)
+        eE <- otherEdges(slice, fks, eJ)
+        gradeCol <- gradeColumn(slice.tables(eE.toTable)).toSeq
         factCols = slice.tables(eJ.fromTable)
         stringCols = values(eJ.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          !l.contains("year") && !l.contains("date") && !l.endsWith("_id") &&
-            l != "id" && !l.endsWith("key") && !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, yearOrDate)
       } yield Candidate(
         s"SELECT s.${eJ.fromColumn} FROM ${eJ.fromTable} s " +
           s"JOIN ${eE.toTable} st ON st.${eE.toColumn} = s.${eE.fromColumn} " +

@@ -32,18 +32,11 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val pWord = { val w = m.group(3); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         factCols = slice.tables(eE.fromTable)
         period <- factCols.find(_.toLowerCase.contains(pWord.toLowerCase)).toSeq
         stringCols = values(eE.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          c != period && !l.endsWith("_id") && l != "id" && !l.endsWith("key") &&
-            !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, _ == period)
       } yield Candidate(
         s"WITH ya AS (SELECT ${eE.fromColumn}, $period, AVG($measure) AS a " +
           s"FROM ${eE.fromTable} GROUP BY ${eE.fromColumn}, $period), " +
@@ -74,9 +67,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
         dimE <- uniqueTable(slice, m.group(2)).toSeq
         if dimE != dimJ
-        eJ <- fks.filter(e => e.toTable == dimJ && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimE))
-        eE <- fks.find(e => e.fromTable == eJ.fromTable && e.toTable == dimE).toSeq
+        (eJ, eE) <- bridges(fks, dimJ, dimE)
       } yield Candidate(
         s"WITH n AS (SELECT ${eJ.fromColumn}, COUNT(*) AS en FROM " +
           s"${eJ.fromTable} GROUP BY ${eJ.fromColumn}) " +
@@ -103,9 +94,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
         dimE <- uniqueTable(slice, m.group(2)).toSeq
         if dimE != dimJ
-        eJ <- fks.filter(e => e.toTable == dimJ && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimE))
-        eE <- fks.find(e => e.fromTable == eJ.fromTable && e.toTable == dimE).toSeq
+        (eJ, eE) <- bridges(fks, dimJ, dimE)
       } yield Candidate(
         s"SELECT CAST((SELECT COUNT(*) FROM $dimJ) * " +
           s"((SELECT COUNT(*) FROM $dimJ) - 1) / 2 AS BIGINT) - COUNT(*) " +
@@ -133,7 +122,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         measure <- strongColumn(vWord, slice.tables(eE.fromTable)).toSeq
       } yield Candidate(
         s"SELECT st.$nameCol FROM (SELECT ${eE.fromColumn} FROM " +
@@ -167,20 +156,11 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(2)).toSeq
         dimJ <- uniqueTable(slice, m.group(3)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         jName <- nameishColumn(slice.tables(dimJ)).toSeq
         factCols = slice.tables(eE.fromTable)
         stringCols = values(eE.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          !l.contains("year") && !l.contains("date") && !l.endsWith("_id") &&
-            l != "id" && !l.endsWith("key") && !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, yearOrDate)
       } yield Candidate(
         s"SELECT ROUND(AVG(rk), 4) AS agg_value FROM " +
           s"(SELECT s.${eE.fromColumn}, RANK() OVER " +
@@ -205,7 +185,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val vWord = { val w = m.group(1); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         measure <- strongColumn(vWord, slice.tables(eJ.fromTable)).toSeq
       } yield Candidate(
         s"SELECT COUNT(*) AS agg_value FROM (SELECT $measure FROM " +
@@ -301,7 +281,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       }
       (for {
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         period <- slice.tables(eJ.fromTable)
           .find(_.toLowerCase.contains("year")).toSeq
       } yield Candidate(
@@ -328,7 +308,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val stems = Seq(verb, verb.stripSuffix("d"), verb.stripSuffix("ed")).distinct
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         measure <- stems.flatMap(strongColumn(_, slice.tables(eE.fromTable))).headOption.toSeq
       } yield {
         val (agg, cmp) = if (below) ("MIN", ">=") else ("MAX", "<=")
@@ -357,7 +337,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       (for {
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
         attr <- abbrevColumn(attrWord, slice.tables(dimJ)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
       } yield Candidate(
         s"SELECT $attr, CAST(MEDIAN(n) AS DOUBLE) AS med FROM " +
           s"(SELECT c.$attr, s.${eJ.fromColumn}, COUNT(*) AS n FROM " +
@@ -385,7 +365,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val vWord = { val w = m.group(1); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         measure <- strongColumn(vWord, slice.tables(eJ.fromTable)).toSeq
       } yield Candidate(
         s"WITH n AS (SELECT ${eJ.fromColumn}, COUNT(*) AS en, " +
@@ -414,18 +394,13 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
   def cohortCountCompareCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     cohortCountCompareRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val ordinals = Map("first" -> 1, "second" -> 2, "third" -> 3, "fourth" -> 4,
-        "fifth" -> 5, "sixth" -> 6, "seventh" -> 7, "eighth" -> 8, "ninth" -> 9,
-        "tenth" -> 10, "eleventh" -> 11, "twelfth" -> 12)
       val n1 = ordinals.getOrElse(m.group(2).toLowerCase, m.group(2).toInt)
       val n2 = ordinals.getOrElse(m.group(3).toLowerCase, m.group(3).toInt)
       (for {
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
-        eE <- fks.filter(e => e.fromTable == eJ.fromTable && e.toTable != dimJ &&
-          slice.tables.contains(e.toTable))
-        gradeCol <- slice.tables(eE.toTable)
-          .find(_.toLowerCase.startsWith("grade")).toSeq
+        eJ <- edgesInto(slice, fks, dimJ)
+        eE <- otherEdges(slice, fks, eJ)
+        gradeCol <- gradeColumn(slice.tables(eE.toTable)).toSeq
       } yield Candidate(
         s"SELECT COUNT(*) AS agg_value FROM (SELECT s.${eJ.fromColumn} " +
           s"FROM ${eJ.fromTable} s JOIN ${eE.toTable} st " +
@@ -451,7 +426,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val vWord = { val w = m.group(2); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         measure <- strongColumn(vWord, slice.tables(eE.fromTable)).toSeq
       } yield Candidate(
         s"SELECT ROUND(AVG(md), 4) AS agg_value FROM " +
@@ -478,9 +453,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimJ <- uniqueTable(slice, m.group(4)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         measure <- strongColumn(vWord, slice.tables(eE.fromTable)).toSeq
       } yield Candidate(
         s"SELECT COUNT(DISTINCT s.${eE.fromColumn}) AS agg_value FROM " +
@@ -509,7 +482,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val vWord = { val w = m.group(2); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         measure <- strongColumn(vWord, slice.tables(eE.fromTable)).toSeq
         other <- fks.find(e => e.fromTable == eE.fromTable && e.toTable != dimE).toSeq
       } yield Candidate(
@@ -542,9 +515,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
         dimJ <- uniqueTable(slice, m.group(4)).toSeq
         if dimE != dimJ
         attr <- strongColumn(m.group(1), slice.tables(dimE)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
       } yield Candidate(
         s"SELECT ROUND(AVG(mx), 4) AS agg_value FROM " +
           s"(SELECT s.${eJ.fromColumn}, $agg(st.$attr) AS mx FROM " +
@@ -569,7 +540,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val pWord = { val w = m.group(1); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         period <- slice.tables(eJ.fromTable)
           .find(_.toLowerCase.contains(pWord.toLowerCase)).toSeq
       } yield Candidate(
@@ -599,9 +570,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
         dimJ <- uniqueTable(slice, m.group(3)).toSeq
         if dimE != dimJ
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         measure <- strongColumn(vWord, slice.tables(eE.fromTable)).toSeq
       } yield Candidate(
         s"SELECT $nameCol FROM (SELECT s.${eE.fromColumn}, COUNT(*) AS c " +
@@ -630,7 +599,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val vWord = { val w = m.group(2); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         measure <- strongColumn(vWord, slice.tables(eJ.fromTable)).toSeq
       } yield Candidate(
         s"SELECT ROUND(AVG(mx - md), 4) AS agg_value FROM " +
@@ -694,9 +663,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
         if dimE != dimJ
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         attr <- abbrevColumn(attrWord, slice.tables(dimJ)).toSeq
         negCol <- values(eE.fromTable).collectFirst {
           case (c, dom) if dom.contains(v) => c
@@ -731,7 +698,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val vWord = { val w = m.group(1); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimE <- uniqueTable(slice, m.group(3)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         measure <- strongColumn(vWord, slice.tables(eE.fromTable)).toSeq
       } yield Candidate(
         s"WITH a AS (SELECT ${eE.fromColumn}, AVG($measure) AS av FROM " +
@@ -761,8 +728,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(2)).toSeq
         if dimE != dimJ
         attr <- strongColumn(attrWord, slice.tables(dimE)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
+        (eE, _) <- bridges(fks, dimE, dimJ)
       } yield Candidate(
         s"SELECT gl, ROUND(AVG(c), 4) AS a FROM (SELECT st.$attr AS gl, " +
           s"s.${eE.fromColumn}, COUNT(*) AS c FROM ${eE.fromTable} s " +
@@ -788,7 +754,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val vWord = { val w = m.group(1); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimE <- uniqueTable(slice, m.group(3)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         measure <- strongColumn(vWord, slice.tables(eE.fromTable)).toSeq
       } yield Candidate(
         s"WITH b AS (SELECT ${eE.fromColumn} FROM ${eE.fromTable} " +
@@ -817,7 +783,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val pWord = { val w = m.group(4); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimJ <- uniqueTable(slice, m.group(3)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         measure <- strongColumn(vWord, slice.tables(eJ.fromTable)).toSeq
         period <- slice.tables(eJ.fromTable)
           .find(_.toLowerCase.contains(pWord.toLowerCase)).toSeq
@@ -877,7 +843,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val vWord = { val w = m.group(1); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimE <- uniqueTable(slice, m.group(2)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         measure <- strongColumn(vWord, slice.tables(eE.fromTable)).toSeq
       } yield Candidate(
         s"SELECT mn FROM (SELECT ${eE.fromColumn}, $agg($measure) AS mn " +
@@ -904,7 +870,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val pWord = { val w = m.group(4); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimE <- uniqueTable(slice, m.group(2)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         measure <- strongColumn(vWord, slice.tables(eE.fromTable)).toSeq
         period <- slice.tables(eE.fromTable)
           .find(_.toLowerCase.contains(pWord.toLowerCase)).toSeq
@@ -969,7 +935,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         attr <- strongColumn(attrWord, slice.tables(dimE)).toSeq
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         measure <- strongColumn(vWord, slice.tables(eE.fromTable)).toSeq
       } yield Candidate(
         s"SELECT $nameCol FROM (SELECT st.$nameCol, ROW_NUMBER() OVER " +
@@ -994,7 +960,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
     yoyActiveDeltaRe.findFirstMatchIn(question).toSeq.flatMap { m =>
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         period <- slice.tables(eE.fromTable)
           .find(_.toLowerCase.contains("year")).toSeq
       } yield Candidate(
@@ -1024,7 +990,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val vWord = { val w = m.group(2); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         measure <- strongColumn(vWord, slice.tables(eE.fromTable)).toSeq
         period <- slice.tables(eE.fromTable)
           .find(_.toLowerCase.contains("year")).toSeq
@@ -1053,7 +1019,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
     deptTopStudentShareRe.findFirstMatchIn(question).toSeq.flatMap { m =>
       (for {
         dimE <- uniqueTable(slice, m.group(3)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable != dimE &&
           slice.tables.contains(e.toTable) &&
           abbrevColumn(m.group(1), slice.tables(e.toTable)).isDefined).toSeq
@@ -1091,9 +1057,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
         dimJ <- uniqueTable(slice, m.group(3)).toSeq
         if dimE != dimJ
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         measure <- strongColumn(vWord, slice.tables(eE.fromTable)).toSeq
       } yield {
         def side(agg: String) =
@@ -1128,21 +1092,14 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val dir = if (m.group(3).toLowerCase == "smallest") "ASC" else "DESC"
       (for {
         dimE <- uniqueTable(slice, m.group(2)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable != dimE &&
           slice.tables.contains(e.toTable) &&
           abbrevColumn(m.group(1), slice.tables(e.toTable)).isDefined).toSeq
         attr <- abbrevColumn(m.group(1), slice.tables(eJ.toTable)).toSeq
         factCols = slice.tables(eE.fromTable)
         stringCols = values(eE.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          !l.contains("year") && !l.contains("date") && !l.endsWith("_id") &&
-            l != "id" && !l.endsWith("key") && !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, yearOrDate)
       } yield Candidate(
         s"WITH a AS (SELECT c.$attr, s.${eE.fromColumn}, " +
           s"AVG(s.$measure) AS av FROM ${eE.fromTable} s " +
@@ -1175,18 +1132,11 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         factCols = slice.tables(eE.fromTable)
         period <- factCols.find(_.toLowerCase.contains("year")).toSeq
         stringCols = values(eE.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          c != period && !l.endsWith("_id") && l != "id" && !l.endsWith("key") &&
-            !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, _ == period)
       } yield Candidate(
         s"SELECT st.$nameCol FROM (SELECT ${eE.fromColumn} FROM " +
           s"${eE.fromTable} WHERE $period IN (${m.group(2)}, ${m.group(4)}) " +
@@ -1216,18 +1166,11 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val pWord = { val w = m.group(3); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         factCols = slice.tables(eJ.fromTable)
         period <- factCols.find(_.toLowerCase.contains(pWord.toLowerCase)).toSeq
         stringCols = values(eJ.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          c != period && !l.endsWith("_id") && l != "id" && !l.endsWith("key") &&
-            !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, _ == period)
       } yield Candidate(
         s"SELECT ROUND(CAST(SUM(CASE WHEN y0 = ${m.group(4)} THEN 1 " +
           s"ELSE 0 END) AS DOUBLE) / COUNT(*), 4) AS agg_value FROM " +
@@ -1253,28 +1196,15 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       question: String,
       values: String => Map[String, Seq[String]] = _ => Map.empty): Seq[Candidate] =
     rankProximityPairsRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val k = m.group(2).toLowerCase match {
-        case "one" => 1; case "two" => 2; case "three" => 3; case d => d.toInt
-      }
+      val k = countWord(m.group(2))
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimJ <- uniqueTable(slice, m.group(3)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         factCols = slice.tables(eE.fromTable)
-        periodCols = factCols.filter(c => c.toLowerCase.contains("year") ||
-          c.toLowerCase.contains("date")).toSet
         stringCols = values(eE.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          !periodCols.contains(c) && !l.endsWith("_id") && l != "id" &&
-            !l.endsWith("key") && !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, yearOrDate)
       } yield Candidate(
         s"WITH r AS (SELECT ${eJ.fromColumn}, ${eE.fromColumn}, RANK() " +
           s"OVER (PARTITION BY ${eJ.fromColumn} ORDER BY $measure DESC) " +
@@ -1309,9 +1239,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
         dimE <- uniqueTable(slice, m.group(4)).toSeq
         if dimE != dimJ
-        eJ <- fks.filter(e => e.toTable == dimJ && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimE))
-        eE <- fks.find(e => e.fromTable == eJ.fromTable && e.toTable == dimE).toSeq
+        (eJ, eE) <- bridges(fks, dimJ, dimE)
         measure <- strongColumn(vWord, slice.tables(eJ.fromTable)).toSeq
       } yield Candidate(
         s"SELECT ROUND(AVG(c), 4) AS agg_value FROM (SELECT " +
@@ -1342,18 +1270,11 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val pWord = { val w = m.group(1); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         factCols = slice.tables(eJ.fromTable)
         period <- factCols.find(_.toLowerCase.contains(pWord.toLowerCase)).toSeq
         stringCols = values(eJ.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          c != period && !l.endsWith("_id") && l != "id" && !l.endsWith("key") &&
-            !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, _ == period)
       } yield Candidate(
         s"WITH ya AS (SELECT ${eJ.fromColumn}, $period, AVG($measure) AS a " +
           s"FROM ${eJ.fromTable} GROUP BY ${eJ.fromColumn}, $period), " +
@@ -1380,7 +1301,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val cap = m.group(2)
       (for {
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
       } yield Candidate(
         s"SELECT CAST(SUM(CASE WHEN n > $cap THEN n - $cap ELSE 0 END) " +
           s"AS BIGINT) AS agg_value FROM (SELECT COUNT(*) AS n FROM " +
@@ -1406,9 +1327,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimJ <- uniqueTable(slice, m.group(3)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         period <- slice.tables(eE.fromTable)
           .find(_.toLowerCase.contains(pWord.toLowerCase)).toSeq
       } yield Candidate(
@@ -1480,9 +1399,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
         dimJ <- uniqueTable(slice, m.group(3)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
       } yield Candidate(
         s"SELECT DISTINCT st.$nameCol FROM ${eE.fromTable} s " +
           s"JOIN $dimE st ON st.${eE.toColumn} = s.${eE.fromColumn} " +
@@ -1510,10 +1427,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
   def trimmedRangeCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     trimmedRangeRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val k = m.group(2).toLowerCase match {
-        case "one" => 1; case "two" => 2; case "three" => 3
-        case "four" => 4; case "five" => 5; case d => d.toInt
-      }
+      val k = countWord(m.group(2))
       val vWord = { val w = m.group(1); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         tbl <- slice.tables.keys.toSeq.sorted
@@ -1548,9 +1462,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(2)).toSeq
         if dimE != dimJ
         attr <- strongColumn(attrWord, slice.tables(dimE)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
       } yield Candidate(
         s"WITH cc AS (SELECT s.${eJ.fromColumn}, st.$attr, COUNT(*) AS n " +
           s"FROM ${eE.fromTable} s JOIN $dimE st " +
@@ -1583,7 +1495,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val vWord = { val w = m.group(1); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         measure <- strongColumn(vWord, slice.tables(eJ.fromTable)).toSeq
         eE <- fks.find(e => e.fromTable == eJ.fromTable && e.toTable != dimJ).toSeq
       } yield Candidate(
@@ -1616,21 +1528,10 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
         if dimE != dimJ
         nameCol <- nameishColumn(slice.tables(dimE)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         factCols = slice.tables(eE.fromTable)
-        periodCols = factCols.filter(c => c.toLowerCase.contains("year") ||
-          c.toLowerCase.contains("date")).toSet
         stringCols = values(eE.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          !periodCols.contains(c) && !l.endsWith("_id") && l != "id" &&
-            !l.endsWith("key") && !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, yearOrDate)
       } yield Candidate(
         s"WITH o AS (SELECT ${eE.fromColumn}, RANK() OVER (ORDER BY " +
           s"AVG($measure) DESC) AS ork FROM ${eE.fromTable} " +
@@ -1662,7 +1563,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val vWord = { val w = m.group(1); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimE <- uniqueTable(slice, m.group(2)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         measure <- strongColumn(vWord, slice.tables(eE.fromTable)).toSeq
       } yield Candidate(
         s"WITH s AS (SELECT ${eE.fromColumn}, SUM($measure) AS tot FROM " +
@@ -1694,9 +1595,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
         dimE <- uniqueTable(slice, m.group(2)).toSeq
         if dimE != dimJ
-        eJ <- fks.filter(e => e.toTable == dimJ && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimE))
-        eE <- fks.find(e => e.fromTable == eJ.fromTable && e.toTable == dimE).toSeq
+        (eJ, eE) <- bridges(fks, dimJ, dimE)
       } yield Candidate(
         s"SELECT a.${eJ.fromColumn} FROM ${eJ.fromTable} a " +
           s"JOIN ${eJ.fromTable} b ON a.${eE.fromColumn} = b.${eE.fromColumn} " +
@@ -1723,7 +1622,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val vWord = { val w = m.group(1); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         measure <- strongColumn(vWord, slice.tables(eJ.fromTable)).toSeq
       } yield Candidate(
         s"WITH q AS (SELECT ${eJ.fromColumn}, PERCENTILE($measure, 0.25) " +
@@ -1756,21 +1655,10 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimJ <- uniqueTable(slice, m.group(4)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
         factCols = slice.tables(eE.fromTable)
-        periodCols = factCols.filter(c => c.toLowerCase.contains("year") ||
-          c.toLowerCase.contains("date")).toSet
         stringCols = values(eE.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          !periodCols.contains(c) && !l.endsWith("_id") && l != "id" &&
-            !l.endsWith("key") && !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, yearOrDate)
       } yield Candidate(
         s"WITH r AS (SELECT ${eE.fromColumn}, ${eJ.fromColumn}, " +
           s"PERCENT_RANK() OVER (PARTITION BY ${eJ.fromColumn} ORDER BY " +
@@ -1796,9 +1684,6 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
   def periodCohortShareListCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     periodCohortShareListRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val ordinals = Map("first" -> 1, "second" -> 2, "third" -> 3, "fourth" -> 4,
-        "fifth" -> 5, "sixth" -> 6, "seventh" -> 7, "eighth" -> 8, "ninth" -> 9,
-        "tenth" -> 10, "eleventh" -> 11, "twelfth" -> 12)
       val n = ordinals.getOrElse(m.group(3).toLowerCase, m.group(3).toInt)
       val pWord = { val w = m.group(1); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
@@ -1806,9 +1691,8 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
         period <- slice.tables(fact)
           .find(_.toLowerCase.contains(pWord.toLowerCase)).toSeq
         eE <- fks.filter(e => e.fromTable == fact && slice.tables.contains(e.toTable) &&
-          slice.tables(e.toTable).exists(_.toLowerCase.startsWith("grade")))
-        gradeCol <- slice.tables(eE.toTable)
-          .find(_.toLowerCase.startsWith("grade")).toSeq
+          gradeColumn(slice.tables(e.toTable)).isDefined)
+        gradeCol <- gradeColumn(slice.tables(eE.toTable)).toSeq
       } yield Candidate(
         s"SELECT $period, ROUND(CAST(SUM(CASE WHEN st.$gradeCol = $n " +
           s"THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*), 4) AS sh FROM " +
@@ -1834,19 +1718,10 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val agg = if (m.group(1).toLowerCase == "smallest") "MIN" else "MAX"
       (for {
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         factCols = slice.tables(eJ.fromTable)
-        periodCols = factCols.filter(c => c.toLowerCase.contains("year") ||
-          c.toLowerCase.contains("date")).toSet
         stringCols = values(eJ.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          !periodCols.contains(c) && !l.endsWith("_id") && l != "id" &&
-            !l.endsWith("key") && !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, yearOrDate)
       } yield Candidate(
         s"SELECT ROUND($agg(a - prev), 4) AS agg_value FROM (SELECT a, " +
           s"LAG(a) OVER (ORDER BY a) AS prev FROM (SELECT AVG($measure) " +
@@ -1876,9 +1751,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimJ <- uniqueTable(slice, m.group(2)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
       } yield Candidate(
         s"SELECT COUNT(DISTINCT s1) AS agg_value FROM (SELECT " +
           s"a.${eE.fromColumn} AS s1, b.${eE.fromColumn} AS s2, " +
@@ -1911,7 +1784,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
         val pWord = { val w = m.group(1); if (w.endsWith("s")) w.dropRight(1) else w }
         (for {
           dimE <- uniqueTable(slice, m.group(2)).toSeq
-          eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+          eE <- edgesInto(slice, fks, dimE)
           period <- slice.tables(eE.fromTable)
             .find(_.toLowerCase.contains(pWord.toLowerCase)).toSeq
         } yield Candidate(
@@ -1946,17 +1819,12 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val frac = m.group(2).toLowerCase match {
         case "quarter" => 0.25; case "third" => 1.0 / 3; case _ => 0.5
       }
-      val ordinals = Map("first" -> 1, "second" -> 2, "third" -> 3, "fourth" -> 4,
-        "fifth" -> 5, "sixth" -> 6, "seventh" -> 7, "eighth" -> 8, "ninth" -> 9,
-        "tenth" -> 10, "eleventh" -> 11, "twelfth" -> 12)
       val n = ordinals.getOrElse(m.group(4).toLowerCase, m.group(4).toInt)
       (for {
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
-        eE <- fks.filter(e => e.fromTable == eJ.fromTable && e.toTable != dimJ &&
-          slice.tables.contains(e.toTable))
-        gradeCol <- slice.tables(eE.toTable)
-          .find(_.toLowerCase.startsWith("grade")).toSeq
+        eJ <- edgesInto(slice, fks, dimJ)
+        eE <- otherEdges(slice, fks, eJ)
+        gradeCol <- gradeColumn(slice.tables(eE.toTable)).toSeq
       } yield Candidate(
         s"SELECT COUNT(*) AS agg_value FROM (SELECT s.${eJ.fromColumn} " +
           s"FROM ${eJ.fromTable} s JOIN ${eE.toTable} st " +
@@ -1983,7 +1851,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val cWord = { val w = m.group(3); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         catCol <- strongColumn(cWord, slice.tables(eJ.fromTable)).toSeq
       } yield Candidate(
         s"SELECT ${eJ.fromColumn} FROM (SELECT ${eJ.fromColumn}, " +
@@ -2038,23 +1906,14 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
     bestDeptDistributionRe.findFirstMatchIn(question).toSeq.flatMap { m =>
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable != dimE &&
           slice.tables.contains(e.toTable) &&
           abbrevColumn(m.group(2), slice.tables(e.toTable)).isDefined).toSeq
         attr <- abbrevColumn(m.group(2), slice.tables(eJ.toTable)).toSeq
         factCols = slice.tables(eE.fromTable)
-        periodCols = factCols.filter(c => c.toLowerCase.contains("year") ||
-          c.toLowerCase.contains("date")).toSet
         stringCols = values(eE.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          !periodCols.contains(c) && !l.endsWith("_id") && l != "id" &&
-            !l.endsWith("key") && !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, yearOrDate)
       } yield Candidate(
         s"WITH da AS (SELECT s.${eE.fromColumn}, c.$attr, " +
           s"AVG(s.$measure) AS a FROM ${eE.fromTable} s " +
@@ -2086,9 +1945,6 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       values: String => Map[String, Seq[String]] = _ => Map.empty): Seq[Candidate] =
     conditionalCohortProbRe.findFirstMatchIn(question).toSeq.flatMap { m =>
       val v = m.group(1)
-      val ordinals = Map("first" -> 1, "second" -> 2, "third" -> 3, "fourth" -> 4,
-        "fifth" -> 5, "sixth" -> 6, "seventh" -> 7, "eighth" -> 8, "ninth" -> 9,
-        "tenth" -> 10, "eleventh" -> 11, "twelfth" -> 12)
       val n = ordinals.getOrElse(m.group(3).toLowerCase, m.group(3).toInt)
       (for {
         fact <- slice.tables.keys.toSeq.sorted
@@ -2096,9 +1952,8 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
           case (c, dom) if dom.contains(v) => c
         }.toSeq
         eE <- fks.filter(e => e.fromTable == fact && slice.tables.contains(e.toTable) &&
-          slice.tables(e.toTable).exists(_.toLowerCase.startsWith("grade")))
-        gradeCol <- slice.tables(eE.toTable)
-          .find(_.toLowerCase.startsWith("grade")).toSeq
+          gradeColumn(slice.tables(e.toTable)).isDefined)
+        gradeCol <- gradeColumn(slice.tables(eE.toTable)).toSeq
       } yield Candidate(
         s"SELECT ROUND(CAST(SUM(CASE WHEN st.$gradeCol = $n THEN 1 " +
           s"ELSE 0 END) AS DOUBLE) / COUNT(*), 4) AS agg_value FROM " +
@@ -2129,11 +1984,8 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
         dimE <- uniqueTable(slice, m.group(2)).toSeq
         if dimE != dimJ
-        gradeCol <- slice.tables(dimE)
-          .find(_.toLowerCase.startsWith("grade")).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimE))
-        eE <- fks.find(e => e.fromTable == eJ.fromTable && e.toTable == dimE).toSeq
+        gradeCol <- gradeColumn(slice.tables(dimE)).toSeq
+        (eJ, eE) <- bridges(fks, dimJ, dimE)
       } yield Candidate(
         s"WITH p AS (SELECT a.${eE.fromColumn} AS s1, b.${eE.fromColumn} " +
           s"AS s2, COUNT(*) AS inter FROM ${eJ.fromTable} a " +
@@ -2202,9 +2054,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
         dimE <- uniqueTable(slice, m.group(2)).toSeq
         if dimE != dimJ
         attr <- strongColumn(attrWord, slice.tables(dimE)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimE))
-        eE <- fks.find(e => e.fromTable == eJ.fromTable && e.toTable == dimE).toSeq
+        (eJ, eE) <- bridges(fks, dimJ, dimE)
       } yield Candidate(
         s"WITH p AS (SELECT a.${eE.fromColumn} AS s1, b.${eE.fromColumn} " +
           s"AS s2, COUNT(*) AS c FROM ${eJ.fromTable} a " +
@@ -2236,7 +2086,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       val vWord = { val w = m.group(2); if (w.endsWith("s")) w.dropRight(1) else w }
       (for {
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
         measure <- strongColumn(vWord, slice.tables(eJ.fromTable)).toSeq
       } yield Candidate(
         s"SELECT ${eJ.fromColumn} FROM (SELECT ${eJ.fromColumn}, " +
@@ -2257,16 +2107,12 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
   def exactOverlapPairCountCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     exactOverlapPairCountRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val k = m.group(2).toLowerCase match {
-        case "one" => 1; case "two" => 2; case "three" => 3; case d => d.toInt
-      }
+      val k = countWord(m.group(2))
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         dimJ <- uniqueTable(slice, m.group(3)).toSeq
         if dimE != dimJ
-        eE <- fks.filter(e => e.toTable == dimE && fks.exists(e2 =>
-          e2.fromTable == e.fromTable && e2.toTable == dimJ))
-        eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable == dimJ).toSeq
+        (eE, eJ) <- bridges(fks, dimE, dimJ)
       } yield Candidate(
         s"SELECT COUNT(*) AS agg_value FROM (SELECT a.${eE.fromColumn}, " +
           s"b.${eE.fromColumn} AS s2 FROM ${eE.fromTable} a " +
@@ -2297,23 +2143,14 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
       (for {
         dimE <- uniqueTable(slice, m.group(1)).toSeq
         cohortCol <- strongColumn(cohortWord, slice.tables(dimE)).toSeq
-        eE <- fks.filter(e => e.toTable == dimE && slice.tables.contains(e.fromTable))
+        eE <- edgesInto(slice, fks, dimE)
         eJ <- fks.find(e => e.fromTable == eE.fromTable && e.toTable != dimE &&
           slice.tables.contains(e.toTable) &&
           abbrevColumn(m.group(2), slice.tables(e.toTable)).isDefined).toSeq
         attr <- abbrevColumn(m.group(2), slice.tables(eJ.toTable)).toSeq
         factCols = slice.tables(eE.fromTable)
-        periodCols = factCols.filter(c => c.toLowerCase.contains("year") ||
-          c.toLowerCase.contains("date")).toSet
         stringCols = values(eE.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          !periodCols.contains(c) && !l.endsWith("_id") && l != "id" &&
-            !l.endsWith("key") && !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, yearOrDate)
       } yield Candidate(
         s"WITH da AS (SELECT s.${eE.fromColumn}, c.$attr, " +
           s"AVG(s.$measure) AS a FROM ${eE.fromTable} s " +
@@ -2352,7 +2189,7 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
     paretoCountRe.findFirstMatchIn(question).toSeq.flatMap { m =>
       (for {
         dimJ <- uniqueTable(slice, m.group(1)).toSeq
-        eJ <- fks.filter(e => e.toTable == dimJ && slice.tables.contains(e.fromTable))
+        eJ <- edgesInto(slice, fks, dimJ)
       } yield Candidate(
         s"WITH n AS (SELECT ${eJ.fromColumn}, COUNT(*) AS c FROM " +
           s"${eJ.fromTable} GROUP BY ${eJ.fromColumn}), " +
@@ -2412,17 +2249,8 @@ private[gen] trait TemplatesShapes4 { this: Templates.type =>
           strongColumn(m.group(1), slice.tables(e.toTable)).isDefined)
         attr <- strongColumn(m.group(1), slice.tables(eE.toTable)).toSeq
         factCols = slice.tables(eE.fromTable)
-        periodCols = factCols.filter(c => c.toLowerCase.contains("year") ||
-          c.toLowerCase.contains("date")).toSet
         stringCols = values(eE.fromTable).keySet
-        measure <- factCols.filter { c =>
-          val l = c.toLowerCase
-          !periodCols.contains(c) && !l.endsWith("_id") && l != "id" &&
-            !l.endsWith("key") && !stringCols.contains(c)
-        } match {
-          case Seq(one) => Seq(one)
-          case _ => Seq.empty
-        }
+        measure <- soleMeasure(factCols, stringCols, yearOrDate)
       } yield Candidate(
         s"WITH q AS (SELECT ${eE.fromColumn} FROM (SELECT " +
           s"${eE.fromColumn}, PERCENT_RANK() OVER (ORDER BY a DESC) AS pr " +

@@ -325,9 +325,7 @@ private[gen] trait TemplatesShapes5 { this: Templates.type =>
         // keyishColumn first (id/_id/key names); crawled schemas also
         // use "…code" keys (travelcode) — never fall back to the
         // slice's relevance-first column, which is the MEASURE here
-        cols.find { c =>
-          val l = c.toLowerCase; l.endsWith("_id") || l == "id" || l.endsWith("key")
-        }.orElse(cols.find(_.toLowerCase.endsWith("code")))
+        cols.find(isKeyish).orElse(cols.find(_.toLowerCase.endsWith("code")))
           .getOrElse(cols.head)
       def identityProjection(entity: String, col: String): Seq[String] = {
         val cols = slice.tables(entity)
@@ -351,7 +349,7 @@ private[gen] trait TemplatesShapes5 { this: Templates.type =>
         0.9, "template_tie_argmax")
       val joined = for {
         entity <- entities
-        e <- fks.filter(e => e.toTable == entity && slice.tables.contains(e.fromTable))
+        e <- edgesInto(slice, fks, entity)
         col <- measureOn(slice.tables(e.fromTable)).toSeq
         name <- nameishColumn(slice.tables(entity)).toSeq
       } yield Candidate(
@@ -408,10 +406,7 @@ private[gen] trait TemplatesShapes5 { this: Templates.type =>
   def groupAggThresholdCandidates(slice: SchemaSlice,
       question: String): Seq[Candidate] =
     groupAggThresholdRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val agg = m.group(2).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(2))
       val op = if (Set("above", "over", "more than", "greater than")(
         m.group(4).toLowerCase)) ">" else "<"
       (for {
@@ -443,17 +438,13 @@ private[gen] trait TemplatesShapes5 { this: Templates.type =>
   def aboveOverallAvgCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     aboveOverallRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      def aggOf(w: String) = w.toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
-      val gAgg = aggOf(m.group(2)); val sAgg = aggOf(m.group(5))
+      val gAgg = sumOrAvg(m.group(2)); val sAgg = sumOrAvg(m.group(5))
       val op = if (Set("above", "over", "more than", "greater than")(
         m.group(4).toLowerCase)) ">" else "<"
       val colPhrase = m.group(3).trim
       (for {
         entity <- uniqueTable(slice, m.group(1)).toSeq
-        e <- fks.filter(e => e.toTable == entity && slice.tables.contains(e.fromTable))
+        e <- edgesInto(slice, fks, entity)
         fCols = slice.tables(e.fromTable)
         v <- (strongColumn(colPhrase, fCols) orElse
           colPhrase.split("\\s+").flatMap(w => strongColumn(w, fCols)).headOption).toSeq
@@ -513,7 +504,7 @@ private[gen] trait TemplatesShapes5 { this: Templates.type =>
       singleGrounding(for {
         entity <- strongTables(slice, m.group(1))
         name <- nameishColumn(slice.tables(entity)).toSeq
-        e <- fks.filter(e => e.toTable == entity && slice.tables.contains(e.fromTable))
+        e <- edgesInto(slice, fks, entity)
         fCols = slice.tables(e.fromTable)
         // the money-column fallback ONLY under a money reading ("spent
         // the most", "paid the most money") — "the most orders" is a
@@ -544,10 +535,7 @@ private[gen] trait TemplatesShapes5 { this: Templates.type =>
   def multiAggPerGroupCandidates(slice: SchemaSlice,
       question: String): Seq[Candidate] =
     multiAggRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val agg = m.group(2).toLowerCase match {
-        case "total" | "sum" => "SUM"
-        case _ => "AVG"
-      }
+      val agg = sumOrAvg(m.group(2))
       (for {
         t <- slice.tables.keys.toSeq.sorted
         cols = slice.tables(t)
@@ -767,7 +755,7 @@ private[gen] trait TemplatesShapes5 { this: Templates.type =>
         entity <- strongTables(slice, m.group(2))
         name <- nameishColumn(slice.tables(entity)).toSeq
         // hop 1: mid → entity; hop 2: leaf → mid carrying the measure
-        e1 <- fks.filter(e => e.toTable == entity && slice.tables.contains(e.fromTable))
+        e1 <- edgesInto(slice, fks, entity)
         mid = e1.fromTable
         e2 <- fks.filter(e => e.toTable == mid && slice.tables.contains(e.fromTable) &&
           e.fromTable != entity)
@@ -904,7 +892,7 @@ private[gen] trait TemplatesShapes5 { this: Templates.type =>
         leaf <- strongTables(slice, leafWord)
         if leaf != mid
         // bridge: one table carrying FKs into BOTH mid and leaf
-        e1 <- fks.filter(e => e.toTable == mid && slice.tables.contains(e.fromTable))
+        e1 <- edgesInto(slice, fks, mid)
         e2 <- fks.filter(e => e.fromTable == e1.fromTable && e.toTable == leaf)
         filters = domainFilters(question, leaf, values)
         // a named modifier that grounds nowhere must kill the shape,

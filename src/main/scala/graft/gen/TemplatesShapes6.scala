@@ -233,9 +233,7 @@ private[gen] trait TemplatesShapes6 { this: Templates.type =>
         if g != v
         // identity key, never the measure/group: id-ish, then the
         // crawled "…code" convention, then the first remaining column
-        key <- (cols.find { c =>
-          val l = c.toLowerCase; l.endsWith("_id") || l == "id" || l.endsWith("key")
-        } orElse cols.find(_.toLowerCase.endsWith("code")) orElse
+        key <- (cols.find(isKeyish) orElse cols.find(_.toLowerCase.endsWith("code")) orElse
           cols.find(c => c != v && c != g)).filter(c => c != v && c != g).toSeq
       } yield Candidate(
         s"SELECT f.$key FROM $t f JOIN " +

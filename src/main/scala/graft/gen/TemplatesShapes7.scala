@@ -95,9 +95,7 @@ private[gen] trait TemplatesShapes7 { this: Templates.type =>
   /** Row identity key: id-ish, the crawled "…code" idiom, then the
     * crawled "…no" idiom (invoiceno), then the first column. */
   private[gen] def identityRowKey(cols: Seq[String]): String =
-    cols.find { c =>
-      val l = c.toLowerCase; l.endsWith("_id") || l == "id" || l.endsWith("key")
-    }.orElse(cols.find(_.toLowerCase.endsWith("code")))
+    cols.find(isKeyish).orElse(cols.find(_.toLowerCase.endsWith("code")))
       .orElse(cols.find(_.toLowerCase.endsWith("no")))
       .getOrElse(cols.head)
 

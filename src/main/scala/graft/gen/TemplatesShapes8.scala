@@ -96,13 +96,6 @@ private[gen] trait TemplatesShapes8 { this: Templates.type =>
     }
   }
 
-  /** Key-ish tie-break columns in schema order (for total orders on
-    * row-limited imperative results). */
-  private def keyishCols(cols: Seq[String]): Seq[String] =
-    cols.filter { c =>
-      val l = c.toLowerCase; l.endsWith("_id") || l == "id" || l.endsWith("key")
-    }
-
   /** Resolve a possibly-directional column: a noun that uniquely links
     * one column wins outright; a tie across several (fcity/tcity both
     * carry "city") resolves through the direction hint — a to/dest
@@ -246,7 +239,7 @@ private[gen] trait TemplatesShapes8 { this: Templates.type =>
       // tie-break with the key-ish columns; a table without any falls
       // back to EVERY remaining column — the LIMIT window must always
       // sit on a total order, and an empty ORDER BY is invalid SQL
-      val ties = { val k = keyishCols(cols); if (k.nonEmpty) k else cols }
+      val ties = { val k = cols.filter(isKeyish); if (k.nonEmpty) k else cols }
         .filterNot(sortCol.contains)
       val orderCols = (sortCol.map(_ + dir).toSeq ++ ties).mkString(", ")
       val whereSql = if (filters.isEmpty) "" else filters.mkString(" WHERE ", " AND ", "")
@@ -343,7 +336,7 @@ private[gen] trait TemplatesShapes8 { this: Templates.type =>
         // coverage, fabricating the superlative
         ageCol <- cols.find(_.toLowerCase == "age")
           .orElse(cols.find(_.toLowerCase.split("_").contains("age"))).toSeq
-        e <- fks.filter(e => e.toTable == entity && slice.tables.contains(e.fromTable))
+        e <- edgesInto(slice, fks, entity)
         // the never-phrase must name the FACT — as a noun ("placed an
         // ORDER") or by its action verb ("never ENROLLED" → enrollments)
         if neverWords.exists(w => strongTables(slice, w).contains(e.fromTable) ||
@@ -410,10 +403,7 @@ private[gen] trait TemplatesShapes8 { this: Templates.type =>
   def groupTopkCandidates(slice: SchemaSlice, fks: Seq[FkEdge],
       question: String): Seq[Candidate] =
     groupTopkRe.findFirstMatchIn(question).toSeq.flatMap { m =>
-      val k = m.group(2).toLowerCase match {
-        case "two" => 2; case "three" => 3; case "four" => 4; case "five" => 5
-        case d => d.toInt
-      }
+      val k = countWord(m.group(2))
       val countedNoun = Option(m.group(4)).orElse(Option(m.group(5))).getOrElse("")
       singleGrounding(for {
         fact <- strongTables(slice, countedNoun)

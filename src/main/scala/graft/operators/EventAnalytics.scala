@@ -241,7 +241,7 @@ object EventAnalytics {
    * suffix slice (r19; replaces the basket-key self-join, which paid
    * a join exchange plus a k² generate-and-filter per basket — the
    * combination form measured ~1.2× at the 10× fixture with identical
-   * output, ProbeR19Cooc). Fan-out per basket stays bounded by
+   * output, OPTIMIZATION_r19.md §4). Fan-out per basket stays bounded by
    * |types|²; supports come from |types|-row and single-row aggregates
    * reused across the output.
    */
@@ -341,7 +341,7 @@ object EventAnalytics {
    *
    * The KEY-sized median frame is shared via lazy localCheckpoint
    * (r19): it feeds both the MAD pass and the final filter, and
-   * Catalyst does NOT reuse the two broadcast subtrees (ProbeR19Mad:
+   * Catalyst does NOT reuse the two broadcast subtrees (OPTIMIZATION_r19.md §3:
    * no ReusedExchange, the median percentile aggregation ran twice —
    * a full extra corpus scan + percentile pass). Sharing |keys| rows
    * is the cheap side of the recompute-vs-materialize rule; the

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
  * frame `(key…, gid, g, members)` — the minimal id, the member count
  * (null ids included) and the non-null member ids — and expands its
  * result back to member ids at the end. Verbatim copies, the dominant
- * redundancy of a crawl, then cost one row each (ProbeR19Ngram:
+ * redundancy of a crawl, then cost one row each (OPTIMIZATION_r19.md §1:
  * `ngramJaccardPairs` on the 10×-copied force fixture 11.4 s → 1.1 s;
  * on sf0.1, where texts are 99.8% distinct, the text-keyed exchange
  * and the two member joins cost ~0.3 s).

@@ -178,7 +178,7 @@ object Pipelines {
    * after the LSH signature halved (64 hashes): with hashing cheaper,
    * shingling's relative weight doubled and the shared form now WINS —
    * 2.07s vs 2.56s min-of-5, row-identical output
-   * (ProbeR18CurateAB asserts set equality) — so this is the audit
+   * (OPTIMIZATION_r18.md §5a) — so this is the audit
    * twin's composition: shingle ONCE (lazy localCheckpoint, no session
    * cache entry), thread the distinct-shingle arrays through LSH
    * ([[Dedup.minhashNearDuplicatesPreShingled]]) and decontamination

@@ -10,8 +10,8 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Repartition}
-import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, QueryExecution, SimpleMode,
-  WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{CoalesceExec, ExpandExec, FileSourceScanExec, QueryExecution,
+  SimpleMode, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -600,6 +600,28 @@ class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(jobs == 0, s"$sql ran $jobs jobs\n${r.explain}")
       assert(exchanges(df) == 0, s"$sql\n${r.explain}")
       assert(coalesces(df) > 0, sql)
+      val expected = spark.sql(sql).collect().toSeq.map(_.toSeq.map(Executor.jsonSafe))
+      assert(expected.nonEmpty && expected.size <= Executor.DefaultLimit, sql)
+      assert(sorted(r.rows) == sorted(expected), sql)
+    }
+  }
+
+  /** Two distinct aggregates (the optimizer's `RewriteDistinctAggregates`
+    * plans an `Expand` under them, as in school/149) and a ROLLUP (an
+    * `Expand` of its own) aggregate over an `Expand`, whose partitioning is
+    * unknown to the planner; coalesced above the `Expand`, they plan no
+    * exchange and run no job. */
+  test("an aggregate over an Expand runs in one partition and no job") {
+    school
+    Seq(
+      "SELECT ROUND(COUNT(DISTINCT CASE WHEN course_id = 1 THEN student_id END) * 1.0 / " +
+        "COUNT(DISTINCT student_id), 4) AS share FROM scores",
+      "SELECT course_id, grade, COUNT(*) AS n FROM scores WHERE course_id <= 2 GROUP BY ROLLUP(course_id, grade)"
+    ).foreach { sql =>
+      val ((df, r), jobs) = withExecJobs(executeOn(sql, school))
+      assert(jobs == 0, s"$sql ran $jobs jobs\n${r.explain}")
+      assert(exchanges(df) == 0, s"$sql\n${r.explain}")
+      assert(collect(df.queryExecution.executedPlan) { case e: ExpandExec => e }.nonEmpty, r.explain)
       val expected = spark.sql(sql).collect().toSeq.map(_.toSeq.map(Executor.jsonSafe))
       assert(expected.nonEmpty && expected.size <= Executor.DefaultLimit, sql)
       assert(sorted(r.rows) == sorted(expected), sql)

@@ -2335,4 +2335,40 @@ class TemplatesSpec extends AnyFunSuite {
         FkEdge("enrollment_audit", "student_id", "students", "id")),
       "Who is the oldest student that never enrolled in any course?").isEmpty)
   }
+
+  test("soleMeasure: the one column that is no key, no string domain and not excluded") {
+    val cols = Seq("score_id", "id", "o_orderkey", "student_id", "grade", "year", "score")
+    assert(Templates.soleMeasure(cols, Set("grade"), Templates.yearOrDate) == Seq("score"))
+    assert(Templates.soleMeasure(cols, Set("grade"), _ == "year") == Seq("score"))
+    // "o_orderkey" ends in "key": a key, never a measure
+    assert(Templates.soleMeasure(Seq("o_orderkey", "o_totalprice"), Set.empty, _ => false) == Seq("o_totalprice"))
+  }
+
+  test("soleMeasure: an ambiguous or missing measure gives none") {
+    val cols = Seq("score_id", "grade", "score", "year")
+    // "year" is not excluded, so it competes with "score"
+    assert(Templates.soleMeasure(cols, Set("grade"), _ => false).isEmpty)
+    // "grade" is not a string domain here, so it competes too
+    assert(Templates.soleMeasure(cols, Set.empty, Templates.yearOrDate).isEmpty)
+    // everything left is excluded
+    assert(Templates.soleMeasure(cols, Set("grade"), c => c == "score" || c == "year").isEmpty)
+    assert(Templates.soleMeasure(Seq("student_id", "id"), Set.empty, _ => false).isEmpty)
+  }
+
+  test("bridges: FKs into the first dimension, in FK order, each with its table's first FK into the second") {
+    val edges = Seq(
+      FkEdge("scores", "course_id", "courses", "course_id"),
+      FkEdge("enrolled", "student_id", "students", "student_id"),
+      FkEdge("scores", "student_id", "students", "student_id"),
+      FkEdge("enrolled", "course_id", "courses", "course_id"),
+      FkEdge("enrolled", "alt_course_id", "courses", "course_id"),
+      FkEdge("visits", "student_id", "students", "student_id"))
+    // "visits" has no FK into courses, so it bridges nothing
+    assert(Templates.bridges(edges, "students", "courses") == Seq(
+      edges(1) -> edges(3), // enrolled's first FK into courses, not alt_course_id
+      edges(2) -> edges(0)))
+    assert(Templates.bridges(edges, "students", "region").isEmpty)
+    assert(Templates.bridges(edges, "courses", "students") == Seq(
+      edges(0) -> edges(2), edges(3) -> edges(1), edges(4) -> edges(1)))
+  }
 }
